@@ -508,18 +508,6 @@ def q_reads_inside_targets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.groupBy("contig").agg(F.count(F.lit(1)).alias("n_reads"))
 
 
-def q_nearest_broadcast_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # A5 big-build scale path: broadcast the (small) probe side, scan the
-    # build side with a per-batch argmin kernel, reduce per-batch winners
-    # with a global (distance, start, end) argmin — the build side is never
-    # collected or shuffled (nearest_join.py broadcast_probe docstring)
-    return nearest_join(
-        _reads(spark, sf_dir, with_id=False),
-        _targets(spark, sf_dir).where(F.col("t_id") % 10 == 7),
-        on="contig", **_IVL, algorithm="broadcast_probe",
-    )
-
-
 def q_reads_marked_by_target(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mark join (the LeftMark member of the reference's declared join-type
     # enum, joins/utils.rs:496-521): every read kept, boolean overlap mark;
@@ -650,18 +638,6 @@ def q_nearest_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         _reads(spark, sf_dir, with_id=False),
         _targets(spark, sf_dir).where(F.col("t_id") % 10 == 5),
         on="contig", **_IVL, algorithm="partitioned",
-    )
-
-
-def q_nearest_range_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # A5 cluster-scale path (r6): coordinate-chunked nearest — parallelism
-    # keys × chunks instead of keys, flank witnesses for sparse regions;
-    # bit-identical to partitioned (tests) and hash-green inside the
-    # nearest_algorithms composite
-    return nearest_join(
-        _reads(spark, sf_dir, with_id=False),
-        _targets(spark, sf_dir).where(F.col("t_id") % 10 == 5),
-        on="contig", **_IVL, algorithm="range_partitioned",
     )
 
 
@@ -3159,24 +3135,22 @@ _NEAREST_COLS = ["contig", "r_start", "r_end", "contig_r", "t_start", "t_end", "
 
 
 def q_nearest_algorithms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """r5 composite (VERDICT r4 item 1), r6: + the ``range_partitioned``
-    path. The four scale paths of A5 — ``partitioned`` (cogroup per key, no
-    driver collect), ``broadcast_probe`` (small probe broadcast, build-side
-    scan with per-batch argmin), ``range_partitioned`` (coordinate-chunked
-    two-phase: keys × chunks parallelism, flank witnesses for sparse
-    regions), and the SQL-text route under ``CoitreesNearest`` — as one
-    tagged union, each over its own (disjoint) target sample so the merged
-    oracle stays the original twins verbatim. Replaces the standalone
-    ``nearest_partitioned`` / ``nearest_broadcast_probe`` / ``nearest_sql``
-    rows (functions remain for bench)."""
+    """The scale paths of A5 — ``partitioned`` (cogroup per key, no driver
+    collect), ``broadcast_probe`` (small probe broadcast, build-side scan
+    with per-batch argmin), ``index`` (broadcast build arrays) and the
+    SQL-text route under ``CoitreesNearest`` — as one tagged union, each
+    over its own (disjoint) target sample so the merged oracle stays the
+    original twins verbatim. Replaces the standalone
+    ``nearest_partitioned`` / ``nearest_sql`` rows (functions remain for
+    bench)."""
     reads = _reads(spark, sf_dir, with_id=False)
     parts = []
     for tag, algo, mod in [
         ("partitioned", "partitioned", 5),
         ("broadcast_probe", "broadcast_probe", 7),
-        # r6: the chunked coordinate-range path (keys × chunks parallelism;
-        # closes the documented few-key scale limit) — same twin, mod 3
-        ("range", "range_partitioned", 3),
+        # 'range' is only a sample label now: it named the removed chunked
+        # path, and the tag stays so the oracle_sql twin is unchanged
+        ("range", "index", 3),
     ]:
         nj = nearest_join(
             reads, _targets(spark, sf_dir).where(F.col("t_id") % 10 == mod),
@@ -3292,7 +3266,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- past-the-cap block: rows-only checks (no ANSI-SQL twin by
         # nature — seeded LSH, iterative k-means, recall harnesses;
         # semantics unit-pinned) ---------------------------------------------
-        "nearest_range_partitioned": q_nearest_range_partitioned,
         "minhash_near_dups_fast": q_minhash_near_dups_fast,
         "multimodal_topk": q_multimodal_topk,
         "multimodal_phash_dups": q_multimodal_phash_dups,

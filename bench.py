@@ -53,7 +53,6 @@ HEADLINE = [
     "cluster_sizes",              # bedtools cluster -d (r5)
     "nearest_target_read",        # nearest-interval join (broadcast index)
     "nearest_partitioned",        # nearest-interval join (cogroup, no collect)
-    "nearest_range_partitioned",  # chunked nearest (keys x chunks tasks, r6)
     "doc_bpe_stats",              # BPE train (bounded sample) + apply (r6)
     "doc_corpus_report",          # data card: exact histogram percentiles (r6)
     "overlap_left_outer",         # left-outer overlap join (bedtools -loj)

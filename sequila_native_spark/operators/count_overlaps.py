@@ -139,7 +139,8 @@ def count_overlaps(
 
     lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict, check)
 
-    if algo == "index" and wants_frac:
+    if algo == "index" and (wants_frac or sides.mixed_keys):
+        # the kernel answers plain overlap on same-family keys only
         algo = "binning"
 
     if algo == "index":
@@ -263,14 +264,17 @@ def _mask_counts(
     return np.zeros(len(qs), dtype=np.int64)
 
 
-def _arrow_simple_key(dt) -> bool:
-    """True when a key of this Spark type round-trips through Arrow
-    ``.as_py()`` to the same hashable python value that the pandas groupby
-    path produces (str/int/bool families). Timestamps/decimals/etc. keep
-    the pandas path so mixed build/probe paths can never disagree on the
-    dict key representation."""
-    return isinstance(
-        dt, (StringType, IntegerType, LongType, ShortType, ByteType, BooleanType)
+def _arrow_keys(build: DataFrame, keys) -> bool:
+    """Arrow probe gate for the index kernels: at most one key, of a type
+    that round-trips through Arrow ``.as_py()`` to the same hashable python
+    value that the pandas groupby path produces (str/int/bool families).
+    Timestamps/decimals/etc. keep the pandas path so mixed build/probe paths
+    can never disagree on the dict key representation. Callers route
+    mixed-family key pairs (``IntervalSides.mixed_keys``) to binning first,
+    so the build side's key type speaks for the probe side's too."""
+    simple = (StringType, IntegerType, LongType, ShortType, ByteType, BooleanType)
+    return len(keys) <= 1 and all(
+        isinstance(build.schema[k].dataType, simple) for k in keys
     )
 
 
@@ -400,11 +404,7 @@ def _index_count(
     pandas round trip of the payload) and the count column is appended.
     """
     rb = _with_bounds(right_orig, right_start, right_end, _RS, _RE, strict, check)
-    use_arrow = len(l_keys) <= 1 and all(
-        _arrow_simple_key(lb.schema[k].dataType)
-        and _arrow_simple_key(right_orig.schema[rk].dataType)
-        for k, rk in zip(l_keys, r_keys)
-    )
+    use_arrow = _arrow_keys(lb, l_keys)
     index = _build_count_index(lb, l_keys, single_job=True, use_arrow=use_arrow)
 
     bc = lb.sparkSession.sparkContext.broadcast(index)
@@ -542,20 +542,20 @@ def overlap_count_agg(
     lb = _with_bounds(left_p, left_start, left_end, _LS, _LE, strict, check)
     # Arrow fast path (guide §4.2): viable for 0/1 simple-typed key, where
     # the arrow and pandas key representations provably agree.
-    use_arrow = len(l_keys) <= 1 and all(
-        _arrow_simple_key(left_p.schema[k].dataType)
-        and _arrow_simple_key(right_p.schema[rk].dataType)
-        for k, rk in zip(l_keys, r_keys)
-    )
+    use_arrow = _arrow_keys(left_p, l_keys)
 
-    try:
-        index = _build_count_index(
-            lb.select(*l_keys, _LS, _LE), l_keys, single_job=True,
-            use_arrow=use_arrow,
-        )
-    except BuildSideTooLargeError:
-        # accounted-memory fallback: the binned pair join + groupBy — the
-        # exact expression this operator replaces
+    index = None
+    if not sides.mixed_keys:
+        try:
+            index = _build_count_index(
+                lb.select(*l_keys, _LS, _LE), l_keys, single_job=True,
+                use_arrow=use_arrow,
+            )
+        except BuildSideTooLargeError:
+            pass
+    if index is None:
+        # accounted-memory or mixed-key fallback: the binned pair join +
+        # groupBy — the exact expression this operator replaces
         from sequila_native_spark.operators.interval_join import overlap_join
 
         oj = overlap_join(

@@ -154,16 +154,12 @@ def _index_coverage(
     import pyarrow.compute as pc
 
     from sequila_native_spark.operators.count_overlaps import (
-        _arrow_simple_key,
+        _arrow_keys,
         _build_count_index,
     )
 
     rb = _with_bounds(right_orig, right_start, right_end, _RS, _RE, strict, check)
-    use_arrow = len(l_keys) <= 1 and all(
-        _arrow_simple_key(lb.schema[k].dataType)
-        and _arrow_simple_key(right_orig.schema[rk].dataType)
-        for k, rk in zip(l_keys, r_keys)
-    )
+    use_arrow = _arrow_keys(lb, l_keys)
     index = _build_count_index(
         lb, l_keys, single_job=True, use_arrow=use_arrow,
         entry_from_sorted=_cov_entry_from_sorted,
@@ -307,6 +303,8 @@ def coverage(
 
     lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict, check)
 
+    if algo == "index" and sides.mixed_keys:
+        algo = "binning"  # the kernel's dict lookup cannot coerce 1 = '1'
     if algo == "index":
         try:
             return _index_coverage(

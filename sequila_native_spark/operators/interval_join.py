@@ -544,6 +544,8 @@ def overlap_join(
     check = conf.check_int32_bounds if check_bounds is None else check_bounds
 
     sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
+    if algo in ("index", "partitioned") and sides.mixed_keys:
+        algo = "binning"  # the kernels' key lookups cannot coerce 1 = '1'
     if algo == "binning":
         # outer joins on index/partitioned no longer resolve eagerly: the
         # width is only consumed if the broadcast guard trips into the

@@ -19,7 +19,7 @@ argument validation (SURVEY.md A4).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -43,10 +43,27 @@ class IntervalSides:
     left_end: str
     right_start: str
     right_end: str
-    extra_keys: tuple[str, ...] = field(default_factory=tuple)
+    # (left name, left type, right name, right type) for every key pair whose
+    # types fall in different families (see :func:`_key_family`): Spark's
+    # join coerces such pairs (``1 = '1'``), the index kernels' dict lookups
+    # cannot, so those kernels must not run on them
+    mixed_keys: tuple[tuple[str, str, str, str], ...] = ()
 
 
 _INTEGRAL_TYPES = {"tinyint", "smallint", "int", "bigint"}
+
+
+def _key_family(dtype: str) -> str:
+    """Family of a Spark type name. Within one family, key values that
+    Spark's ``=`` finds equal are also equal as python dict keys, so the
+    index kernels' lookups agree with the join; across families Spark
+    coerces (``1 = '1'``) and a lookup cannot. All integral widths are one
+    family, all decimals another; any other type is its own family."""
+    if dtype in _INTEGRAL_TYPES:
+        return "integral"
+    if dtype.startswith("decimal"):
+        return "decimal"
+    return dtype
 
 
 def validate_sides(
@@ -58,7 +75,8 @@ def validate_sides(
     right_start: str,
     right_end: str,
 ) -> IntervalSides:
-    """Validate columns exist and bounds are integral.
+    """Validate columns exist and bounds are integral, and record the key
+    pairs whose types are in different families (``mixed_keys``).
 
     Rejecting non-column bound expressions mirrors the reference parser
     rejecting compound expressions like ``(b.e - a.s) >= a.s``
@@ -93,7 +111,12 @@ def validate_sides(
                     "strict-inequality normalization are integer-only, "
                     "intervals.rs:67-69)"
                 )
-    return IntervalSides(keys, left_start, left_end, right_start, right_end)
+    mixed = tuple(
+        (lk, ltypes[lk], rk, rtypes[rk])
+        for lk, rk in keys
+        if _key_family(ltypes[lk]) != _key_family(rtypes[rk])
+    )
+    return IntervalSides(keys, left_start, left_end, right_start, right_end, mixed)
 
 
 def checked_i32(col: Column, name: str) -> Column:

@@ -454,9 +454,7 @@ def map_intervals(
     rb = _with_bounds(right_pruned, right_start, right_end, _RS, _RE, strict, check)
 
     if algo == "index":
-        from sequila_native_spark.operators.count_overlaps import (
-            _arrow_simple_key,
-        )
+        from sequila_native_spark.operators.count_overlaps import _arrow_keys
 
         rtypes = dict(right.dtypes)
         kernel_ok = (
@@ -465,12 +463,9 @@ def map_intervals(
                 rtypes[v] in _INTEGRAL_SPARK
                 for _, v in aggs.values() if v is not None
             )
-            and len(l_keys) <= 1
-            and all(
-                _arrow_simple_key(left.schema[k].dataType)
-                and _arrow_simple_key(right.schema[rk].dataType)
-                for k, rk in zip(l_keys, r_keys)
-            )
+            # mixed key families: only the binned join coerces 1 = '1'
+            and not sides.mixed_keys
+            and _arrow_keys(left, l_keys)
         )
         if kernel_ok:
             frac_args = None

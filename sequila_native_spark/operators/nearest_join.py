@@ -56,47 +56,10 @@ Algorithms:
     per-batch argmin is associative with the global one, so the two-level
     reduce is exact, ties included. Guarded by
     ``spark.sequila.maxBroadcastBuildRows`` on the probe side.
-
-``range_partitioned`` (few keys × many cores — the cluster scale path)
-    ``partitioned``'s parallelism is bounded by the distinct-key count
-    (~25 genomic contigs), which wastes a 1000-core cluster; probe-salting
-    lifts it only at the cost of a full ``salt ×`` build replication
-    (measured net-negative at local scale, see DESIGN.md). This path chunks
-    the COORDINATE axis instead and is exact for every k and flag
-    combination:
-
-    1. **Local candidates**: both sides replicate binning-style into the
-       fixed-width chunks their span overlaps; a per-``(key, chunk)``
-       cogroup runs the same vectorized kernels and emits compact candidate
-       rows ``(probe_id, build_id, distance, start, end)`` — parallelism is
-       keys × chunks.
-    2. **Flank witnesses**: a probe's nearest build can live many chunks
-       away across a sparse region. Per ``(key, chunk)``, the top-k builds
-       by ``(end desc, start asc)`` BELOW the chunk and by ``(start asc,
-       end asc)`` ABOVE it are gathered from per-chunk summary tables
-       (tiny: ≤ keys × chunks × k rows; gathered via a prefix-min window
-       for k=1 and a two-level super-chunk hierarchy for k>1 — see
-       ``flank_witnesses``). Within each flank class that ordering
-       equals the ``(distance, start, end)`` ordering for EVERY probe in
-       the chunk — distance is ``qs − end`` (resp. ``start − qe``) with the
-       class boundary fixed — so the witness set provably contains the
-       class's true top-k; witness distance is computed in-plan, no kernel.
-    3. **Global reduce**: union, dedup ``(probe, build)`` (a pair can meet
-       in several shared chunks), ``row_number ≤ k`` over ``(distance,
-       start, end, build_id)``, then payload rehydration: when the left
-       output columns are exactly equi-keys + bounds (the common genomic
-       shape) the winner struct and the probe row already carry every
-       value and no join is needed (r12); wider payloads keep the compact
-       id-equi rehydrate join. Probes with no candidate anywhere get
-       null-left padding from the final left join. Per-chunk top-k →
-       global top-k is exact: any globally top-k build sharing a chunk
-       with the probe is top-k within that chunk (local order is a
-       restriction of the global order).
 """
 
 from __future__ import annotations
 
-import math
 from typing import Iterator
 
 import numpy as np
@@ -126,7 +89,6 @@ from sequila_native_spark.session import SequilaConf, parse_algorithm
 from sequila_native_spark.util import ensure_parallel, stamp_row_id
 
 _PID = "__sq_probe_id"
-_SALT = "__sq_nearest_salt"
 _I64_MIN = np.iinfo(np.int64).min
 _I64_MAX = np.iinfo(np.int64).max
 
@@ -205,20 +167,12 @@ def nearest_join(
     raw = algorithm.strip().lower() if algorithm else None
     if raw in ("broadcast_probe", "probe_broadcast"):
         algo = "broadcast_probe"
-    elif raw in ("range_partitioned", "rangepartitioned"):
-        algo = "range_partitioned"
     elif raw == "coitreesnearest":
         # the reference name selects nearest semantics; here we ARE the
         # nearest join — use its default index structure
         algo = "index"
     else:
         algo = parse_algorithm(algorithm) if algorithm else conf.algorithm
-        if not algorithm and conf.raw_algorithm in (
-            "range_partitioned", "rangepartitioned"
-        ):
-            # parse_algorithm maps the name onto binning for overlap joins;
-            # for the nearest join it selects the chunked two-phase path
-            algo = "range_partitioned"
     if algo == "binning":
         # binning has no nearest analogue; partitioned is the distributed
         # equivalent (same shuffle-by-key distribution requirement)
@@ -226,6 +180,15 @@ def nearest_join(
     check = conf.check_int32_bounds if check_bounds is None else check_bounds
 
     sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
+    if sides.mixed_keys:
+        # the naive plan would coerce (1 = '1') while the kernels compare
+        # python values; no path answers until the caller picks the cast
+        lk, lt, rk, rt = sides.mixed_keys[0]
+        raise ValueError(
+            f"nearest_join equi-key {lk!r} ({lt}) and {rk!r} ({rt}) have "
+            "types of different families; cast one side so both keys "
+            "have the same type"
+        )
     right, renames = _disambiguate(left, right, rsuffix)
     r_start = renames.get(right_start, right_start)
     r_end = renames.get(right_end, right_end)
@@ -236,20 +199,10 @@ def nearest_join(
     lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict, check)
     rb = _with_bounds(right, r_start, r_end, _RS, _RE, strict, check)
 
-    salt = max(1, int(conf.nearest_salt))
     if algo == "naive":
         out = _naive_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
     elif algo == "partitioned":
-        out = _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags, salt)
-    elif algo == "range_partitioned":
-        raw_chunks = conf.nearest_chunks
-        out = _range_partitioned_nearest(
-            lb, rb, l_keys, r_keys, out_cols, k, flags,
-            conf.resolve_nearest_chunks(spark),
-            adaptive=isinstance(raw_chunks, str)
-            and raw_chunks.strip().lower() == "auto",
-            payload=(left_start, left_end, strict, check),
-        )
+        out = _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
     elif algo == "broadcast_probe":
         out = _probe_broadcast_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
     else:
@@ -263,7 +216,7 @@ def nearest_join(
             except BuildSideTooLargeError:
                 if not l_keys:
                     raise
-                out = _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags, salt)
+                out = _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
     if distance_col:
         shrink = 1 if strict else 0
         le_n = F.col(left_end) - F.lit(shrink)
@@ -292,7 +245,12 @@ def _distance_col(ls, le, rs, re):
 
 def _naive_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
     probe = rb.withColumn(_PID, F.monotonically_increasing_id())
-    cond = F.lit(True)
+    # a null bound on either side never matches (the kernels skip such rows);
+    # without this the distance expression reads a null comparison as 0
+    cond = (
+        lb[_LS].isNotNull() & lb[_LE].isNotNull()
+        & probe[_RS].isNotNull() & probe[_RE].isNotNull()
+    )
     for lk, rk in zip(l_keys, r_keys):
         cond = cond & (lb[lk] == probe[rk])
     if flags is not None and any(flags):
@@ -559,23 +517,13 @@ def _nearest_out_schema(lb, rb, left_cols, right_cols) -> StructType:
     )
 
 
-def _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None, salt=1):
+def _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
     """Cogroup-per-key nearest: the Partitioned-mode analogue.
 
     Shuffles both sides once on the equi-keys; each task builds the sorted
     index for its key groups and probes it — no driver collect, no broadcast.
     Keyless calls degenerate to one group, so route them to the broadcast
     index instead (same memory shape, full probe parallelism).
-
-    ``salt`` > 1 (``spark.sequila.nearestSalt``): cogroup parallelism is
-    bounded by the distinct-key count, which for genomic contigs (~25) sits
-    far below a cluster's core count. Salting hash-splits each key's PROBES
-    into ``salt`` buckets and replicates the key's BUILD rows into every
-    bucket, so every probe still sees its key's full build set — results
-    are bit-identical to ``salt=1`` (k>1 and flags included) while the
-    cogroup fans out to ``n_keys x salt`` tasks. Cost: a ``salt x``
-    build-side shuffle; keep 1 when key cardinality already covers the
-    cores.
     """
     if not l_keys:
         return _index_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
@@ -584,19 +532,6 @@ def _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None, salt
     # rows with null keys stay: their group cogroups against an empty build
     # side and emits null-left rows (matching the index path's behavior).
     lb = lb.na.drop(subset=list(l_keys))
-
-    if salt > 1:
-        # deterministic probe bucket (hash of the normalized bounds — no RNG,
-        # no row-id dependence, so retries and re-plans land identically);
-        # build rows explode to all buckets so each bucket is self-contained
-        lb = lb.withColumn(
-            _SALT, F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-        )
-        rb = rb.withColumn(
-            _SALT, F.pmod(F.hash(F.col(_RS), F.col(_RE)), F.lit(salt)).cast("int")
-        )
-        l_keys = [*l_keys, _SALT]
-        r_keys = [*r_keys, _SALT]
 
     left_cols = [c for c in out_cols if c in lb.columns]
     right_cols = [c for c in out_cols if c not in lb.columns]
@@ -660,527 +595,7 @@ def _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None, salt
     )
 
 
-def _estimated_rows(df: DataFrame) -> int:
-    """Catalyst plan-statistics row estimate — ZERO jobs: ``sizeInBytes``
-    of the optimized plan divided by the schema's per-row default size
-    (the ``resolve_binned_join_partitions`` idiom). Used only for
-    parallelism heuristics, never for correctness; returns 0 when the
-    optimizer has no usable estimate."""
-    try:
-        b = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return 0
-    if not (0 < b < (1 << 50)):  # huge sentinel = "unknown"
-        return 0
-    # Catalyst defaultSize per field (PySpark doesn't expose it): 8 for
-    # the fixed-width numerics/timestamps, 20 for strings/binary, 16 as
-    # the conservative catch-all for nested/other types.
-    from pyspark.sql.types import (
-        BooleanType, ByteType, DateType, DoubleType, FloatType, IntegerType,
-        LongType, ShortType, StringType, TimestampType,
-    )
-
-    def fsize(dt) -> int:
-        if isinstance(dt, (ByteType, BooleanType)):
-            return 1
-        if isinstance(dt, ShortType):
-            return 2
-        if isinstance(dt, (IntegerType, FloatType, DateType)):
-            return 4
-        if isinstance(dt, (LongType, DoubleType, TimestampType)):
-            return 8
-        if isinstance(dt, StringType):
-            return 20
-        return 16
-
-    width = max(1, sum(fsize(f.dataType) for f in df.schema.fields))
-    return max(1, b // width)
-
-
 _DIST = "__sq_dist"
-_BID = "__sq_build_id"
-_CH = "__sq_chunk"
-_PCH = "__sq_probe_chunk"
-_SUP = "__sq_sup"
-_PSUP = "__sq_probe_sup"
-
-
-def _range_partitioned_nearest(
-    lb, rb, l_keys, r_keys, out_cols, k=1, flags=None, n_chunks=32,
-    adaptive=False, payload=None,
-):
-    """Coordinate-chunked nearest: parallelism = keys × chunks (module
-    docstring has the full design + exactness argument).
-
-    Scale shape: the corpus-wide shuffles carry (a) binning-style chunk
-    replication of the pruned ``(keys, id, bounds)`` projections into the
-    cogroup, (b) candidate rows — ≤ (k + 2k) × chunks-spanned per probe,
-    compact fixed-width rows, and (c) two id-equi joins to rehydrate
-    payloads. The witness gather touches only SUMMARY rows: a prefix-min
-    window (O(chunks) per key) at k=1, a two-level super-chunk hierarchy
-    (O(chunks^1.5·k)) at k>1 — no quadratic term remains (r7);
-    ``NEAREST_MAX_CHUNKS`` now only bounds the chunk-domain grid.
-
-    ``payload`` = ``(left_start, left_end, strict, checked)`` from the
-    caller enables the r12 build-payload fast path: when the left output
-    columns are exactly the equi-keys plus the bound columns (the common
-    genomic shape), the winner's payload is reconstructed from the values
-    the candidate rows already carry — key from the probe row (equi-join
-    equality), bounds from the winning struct (+1 on the end under strict
-    normalization; exact because ``checked`` guarantees the normalized
-    bounds equal the originals) — and the build side is never rescanned
-    for rehydration. Wider build payloads keep the id-equi rehydrate join.
-    """
-    left_cols = [c for c in out_cols if c in lb.columns]
-    right_cols = [c for c in out_cols if c not in lb.columns]
-
-    # build rows with null keys or bounds can never be candidates
-    drop_subset = [*l_keys, _LS, _LE]
-    lb = lb.na.drop(subset=drop_subset)
-
-    # Chunk geometry from the BUILD side only (r13, guide §2.4/§5): the
-    # former stats job unioned full-scan aggregates of BOTH sides — at
-    # corpus scale a full pass of the (large) probe side, and locally a
-    # 0.6-0.9 s blocking collect in front of the whole stage chain. The
-    # build-side min/max now span the grid, and chunk ids CLAMP into
-    # [0, n_chunks): rows outside the build span pile into the boundary
-    # chunks. Exact for ANY monotone chunk map that keeps every row inside
-    # the witness-grid domain: (a) an overlapping pair always shares the
-    # chunk of a common coordinate (monotonicity), so local capture is
-    # unchanged; (b) the flank-witness class arguments compare CHUNK ids
-    # only (membership: chunk(build end) < probe chunk still implies
-    # build end < probe start for non-overlapping members — the proof
-    # never used that the grid spans the probes); (c) results are
-    # chunk-geometry-invariant (pinned: test_nearest_count.py invariance
-    # tests + the new out-of-span clamp test).
-    stats = lb.agg(
-        F.min(_LS).alias("a"), F.max(_LE).alias("b"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    lo = int(stats["a"]) if stats["a"] is not None else 0
-    hi = int(stats["b"]) if stats["b"] is not None else 0
-    if hi < lo:
-        hi = lo  # inverted-only build rows: a degenerate 1-chunk grid
-    if adaptive:
-        # "auto" also adapts DOWN to the data: below ~20k rows per chunk
-        # the per-group kernel / stage overheads outweigh the parallelism
-        # (measured at sf0.1: 128 chunks 4.3-4.9 s vs the row-scaled count;
-        # the conf cap still bounds it above for cluster-width inputs).
-        # The probe side's row count is ESTIMATED from Catalyst plan
-        # statistics (zero jobs — the resolve_binned_join_partitions
-        # idiom) instead of counted with a full scan; results are
-        # geometry-invariant, so estimation error only moves parallelism
-        # within the measured-flat 8-128 band (r12 sensitivity sweep).
-        est_probe = _estimated_rows(rb)
-        if est_probe > 0:
-            total_rows = int(stats["n"]) + est_probe
-            n_chunks = max(1, min(int(n_chunks), total_rows // 20_000))
-        # unknown probe size: keep the resolved chunk count (results are
-        # geometry-invariant; at worst extra chunks in the flat band)
-    width = max(1, -(-(int(hi) - int(lo) + 1) // max(1, int(n_chunks))))
-    n_ch = int((int(hi) - int(lo)) // width) + 1
-
-    def chunk_of(name):
-        # exact integer chunk math (long DIV): double division would round
-        # coordinates beyond 2^53 onto chunk ids with no witness-domain row,
-        # silently dropping flanks (advisor, r6). The checked-int32 bounds
-        # contract (tests/test_nearest_count.py::
-        # test_huge_coordinates_raise_int32_guard) already keeps such values
-        # out of every path; integer math removes the hazard structurally.
-        # DIV truncates toward zero, which is monotone non-decreasing in
-        # the coordinate even for the (now possible) negative numerators
-        # of out-of-span probe bounds, and the greatest/least clamp keeps
-        # every row inside the witness-grid domain [0, n_ch).
-        raw = F.expr(
-            f"CAST((CAST(`{name}` AS BIGINT) - {int(lo)}) "
-            f"DIV {int(width)} AS BIGINT)"
-        )
-        return F.greatest(
-            F.lit(0).cast("long"),
-            F.least(raw, F.lit(int(n_ch) - 1).cast("long")),
-        )
-
-    lbid = stamp_row_id(lb, _BID)
-    rbid = stamp_row_id(rb, _PID)
-
-    # ---- stage 1: per-(key, chunk) build sets with flank witnesses -----
-    chs_l = chunk_of(_LS)
-    che_l = F.greatest(chs_l, chunk_of(_LE))
-    lch = lbid.select(*l_keys, _BID, _LS, _LE).withColumn(
-        _CH, F.explode(F.sequence(chs_l, che_l))
-    )
-
-    # A probe's nearest build can live many chunks away across a sparse
-    # region, so each chunk's build set is augmented with per-key flank
-    # WITNESSES: the top-k builds by (end desc, start asc) strictly below
-    # the chunk and by (start asc, end asc) strictly above it. Within each
-    # flank class that ordering equals the (distance, start, end) ordering
-    # for EVERY probe in the chunk (distance = qs − end resp. start − qe
-    # with the class boundary fixed), so the witness set provably contains
-    # the class's true top-k. Witnesses are ordinary build rows to the
-    # kernel — no separate probe pass, no special-cased distance math; they
-    # never duplicate local replication (their span lies entirely outside
-    # the target chunk). Volume: ≤ keys × chunks × 2k summary-sized rows;
-    # gathered by prefix-min window (k=1) / two-level hierarchy (k>1).
-    # Key domain for the witness grid (r13, advisor items 1+2): derived
-    # from a BUILD-side source. The pre-r12 build-derived domain is
-    # value-identical to r12's probe-derived one (probe-only keys yield
-    # all-null grid minima dropped by the notNull filter; build-only keys
-    # add grid rows no probe ever meets), and deriving it from the tiny
-    # per-(key, chunk) SUMMARY frames — already aggregated from the one
-    # build scan the witnesses need — costs neither the probe-corpus
-    # distinct (r12's trade, net-negative when the probe is the 100 TB
-    # side) nor a second build scan. It also removes the probe→build key
-    # CAST whose silent null-out on mismatched key types could drop all
-    # flank witnesses (advisor item 2) — the domain now carries build-side
-    # key values verbatim.
-    def grid_dom(key_src):
-        return key_src.select(*l_keys).distinct().select(
-            *l_keys,
-            F.explode(
-                F.sequence(F.lit(0).cast("long"), F.lit(n_ch - 1).cast("long"))
-            ).alias(_PCH),
-        )
-
-    def witnesses_from_minima(s, below, dom):
-        # prefix/suffix MIN WINDOW over the (key, chunk) grid: within a
-        # flank class min() is associative, so min over {chunks < p}
-        # equals the running min of per-chunk minima. O(keys × chunks)
-        # rows total and no inequality join at all (r7; the former
-        # chunk-domain × summaries join was the documented O(chunks²)
-        # term). The window sorts ≤ chunks summary rows per key.
-        s = s.alias("__sq_s")
-        d = dom.alias("__sq_d")
-        sc = lambda c: F.col(f"__sq_s.{c}")  # noqa: E731
-        dc = lambda c: F.col(f"__sq_d.{c}")  # noqa: E731
-        cond = sc(_CH) == dc(_PCH)
-        for lk in l_keys:
-            cond = cond & (sc(lk) == dc(lk))
-        grid = d.join(s, cond, "left").select(
-            *[dc(lk) for lk in l_keys], dc(_PCH),
-            sc("__sq_m").alias("__sq_m"),
-        )
-        w = Window.partitionBy(*l_keys).orderBy(F.col(_PCH).asc())
-        w = (
-            w.rowsBetween(Window.unboundedPreceding, -1) if below
-            else w.rowsBetween(1, Window.unboundedFollowing)
-        )
-        return (
-            grid.withColumn("__sq_pm", F.min("__sq_m").over(w))
-            .where(F.col("__sq_pm").isNotNull())
-            .select(
-                *l_keys,
-                F.col("__sq_pm.b").alias(_BID),
-                F.col("__sq_pm.s").alias(_LS),
-                F.col("__sq_pm.e").alias(_LE),
-                F.col(_PCH).alias(_CH),
-            )
-        )
-
-    def flank_witnesses(summary_chunk, below, order_by, min_struct):
-        base = lbid.select(*l_keys, _BID, _LS, _LE).withColumn(
-            _CH, summary_chunk
-        )
-        if k == 1:
-            # top-1 per (key, chunk) via min(struct) — map-side combinable
-            # partial aggregation, NO full build-side sort shuffle
-            s = (
-                base.groupBy(*l_keys, _CH)
-                .agg(F.min(min_struct).alias("__sq_m"))
-            )
-            return witnesses_from_minima(s, below, grid_dom(s))
-
-        # k > 1: two-level chunk hierarchy (r7, DESIGN.md). Builds strictly
-        # below chunk p split into (a) whole super-chunks below p's and
-        # (b) p's own super-chunk's chunks below p. Top-k is associative
-        # over that partition of the flank, and per-chunk / per-super-chunk
-        # top-k restrictions preserve membership (the same argument as the
-        # global reduce) — so the union of the two gathers provably
-        # contains the flank's true top-k. Gather volume: the super-level
-        # inequality join is O(n_sup² · k) = O(chunks · k) and the
-        # same-super join fans out ≤ G·k per chunk — O(chunks^1.5 · k)
-        # total, replacing the flat O(chunks² · k) join.
-        s = (
-            base.withColumn("__sq_rn", F.row_number().over(
-                Window.partitionBy(*l_keys, _CH).orderBy(*order_by)
-            ))
-            .where(F.col("__sq_rn") <= k)
-            .drop("__sq_rn")
-        )
-        G = max(1, math.isqrt(n_ch))
-        sup_of = lambda c: F.floor(c / F.lit(G)).cast("long")  # noqa: E731
-        s = s.withColumn(_SUP, sup_of(F.col(_CH)))
-        s_sup = (
-            s.withColumn("__sq_rn", F.row_number().over(
-                Window.partitionBy(*l_keys, _SUP).orderBy(*order_by)
-            ))
-            .where(F.col("__sq_rn") <= k)
-            .drop("__sq_rn")
-        )
-        dom_ps = grid_dom(s).withColumn(_PSUP, sup_of(F.col(_PCH)))
-        dom_sup = dom_ps.select(*l_keys, _PSUP).distinct()
-
-        def keyed(cond, a, b):
-            for lk in l_keys:
-                cond = cond & (F.col(f"{a}.{lk}") == F.col(f"{b}.{lk}"))
-            return cond
-
-        # level A: per-(key, super) prefix top-k over the tiny per-super
-        # summaries (≤ keys × n_sup × k rows each side)
-        sa, da = s_sup.alias("__sq_sa"), dom_sup.alias("__sq_da")
-        supc, psupc = F.col(f"__sq_sa.{_SUP}"), F.col(f"__sq_da.{_PSUP}")
-        ga = da.join(
-            sa, keyed(supc < psupc if below else supc > psupc,
-                      "__sq_sa", "__sq_da"),
-        ).select(
-            *[F.col(f"__sq_da.{lk}") for lk in l_keys],
-            F.col(f"__sq_da.{_PSUP}"),
-            F.col(f"__sq_sa.{_BID}").alias(_BID),
-            F.col(f"__sq_sa.{_LS}").alias(_LS),
-            F.col(f"__sq_sa.{_LE}").alias(_LE),
-        )
-        sup_prefix = (
-            ga.withColumn("__sq_rn", F.row_number().over(
-                Window.partitionBy(*l_keys, _PSUP).orderBy(*order_by)
-            ))
-            .where(F.col("__sq_rn") <= k)
-            .drop("__sq_rn")
-        )
-        # level B1: every chunk inherits its super's prefix top-k (equi)
-        b1 = dom_ps.alias("__sq_db").join(
-            sup_prefix.alias("__sq_pb"),
-            keyed(F.col(f"__sq_db.{_PSUP}") == F.col(f"__sq_pb.{_PSUP}"),
-                  "__sq_pb", "__sq_db"),
-        ).select(
-            *[F.col(f"__sq_db.{lk}") for lk in l_keys],
-            F.col(f"__sq_db.{_PCH}"),
-            F.col(f"__sq_pb.{_BID}").alias(_BID),
-            F.col(f"__sq_pb.{_LS}").alias(_LS),
-            F.col(f"__sq_pb.{_LE}").alias(_LE),
-        )
-        # level B2: same-super chunks strictly on the flank side — an
-        # equi-join on (key, super) with the chunk inequality as residual;
-        # fan-out ≤ G·k per chunk
-        sb, db = s.alias("__sq_sb"), dom_ps.alias("__sq_d2")
-        chc, pchc = F.col(f"__sq_sb.{_CH}"), F.col(f"__sq_d2.{_PCH}")
-        b2 = db.join(
-            sb,
-            keyed(
-                (F.col(f"__sq_sb.{_SUP}") == F.col(f"__sq_d2.{_PSUP}"))
-                & (chc < pchc if below else chc > pchc),
-                "__sq_sb", "__sq_d2",
-            ),
-        ).select(
-            *[F.col(f"__sq_d2.{lk}") for lk in l_keys],
-            F.col(f"__sq_d2.{_PCH}"),
-            F.col(f"__sq_sb.{_BID}").alias(_BID),
-            F.col(f"__sq_sb.{_LS}").alias(_LS),
-            F.col(f"__sq_sb.{_LE}").alias(_LE),
-        )
-        return (
-            b1.unionByName(b2)
-            .withColumn("__sq_rn", F.row_number().over(
-                Window.partitionBy(*l_keys, _PCH).orderBy(*order_by)
-            ))
-            .where(F.col("__sq_rn") <= k)
-            .select(*l_keys, _BID, _LS, _LE, F.col(_PCH).alias(_CH))
-        )
-
-    io, iu, idn = flags if flags is not None else (False, False, False)
-    # a single chunk has no cross-chunk flanks — skip the witness stages
-    # (the gather would join empty anyway, but the plan would still carry
-    # its shuffles)
-    if n_ch <= 1:
-        iu = idn = True
-    below_struct = F.struct(
-        F.negative(F.col(_LE)).alias("o1"),
-        F.col(_LS).alias("s"), F.col(_BID).alias("b"),
-        F.col(_LE).alias("e"),
-    )
-    above_struct = F.struct(
-        F.col(_LS).alias("s"), F.col(_LE).alias("e"),
-        F.col(_BID).alias("b"),
-    )
-    if k == 1 and not iu and not idn:
-        # Both flanks needed at k=1 (the common case): ONE pass over the
-        # build side computes both flank minima (r12, guide §2.4). Grouping
-        # by (key, end-chunk, start-chunk) then re-aggregating per flank
-        # chunk column is exact — min() is associative and the (ce, cs)
-        # groups partition each flank's (key, chunk) group — and the two
-        # tiny re-aggregations consume the SAME shuffled aggregate, so the
-        # build scan + partial agg + exchange run once (ReusedExchange),
-        # replacing two independent full-scan aggregations.
-        g = (
-            lbid.select(*l_keys, _BID, _LS, _LE)
-            .withColumn("__sq_ce", chunk_of(_LE))
-            .withColumn("__sq_cs", chunk_of(_LS))
-            .groupBy(*l_keys, "__sq_ce", "__sq_cs")
-            .agg(
-                F.min(below_struct).alias("__sq_mb"),
-                F.min(above_struct).alias("__sq_ma"),
-            )
-        )
-        s_below = (
-            g.select(*l_keys, F.col("__sq_ce").alias(_CH), "__sq_mb")
-            .groupBy(*l_keys, _CH)
-            .agg(F.min("__sq_mb").alias("__sq_m"))
-        )
-        s_above = (
-            g.select(*l_keys, F.col("__sq_cs").alias(_CH), "__sq_ma")
-            .groupBy(*l_keys, _CH)
-            .agg(F.min("__sq_ma").alias("__sq_m"))
-        )
-        lch = lch.unionByName(
-            witnesses_from_minima(s_below, below=True, dom=grid_dom(g))
-        ).unionByName(
-            witnesses_from_minima(s_above, below=False, dom=grid_dom(g))
-        )
-    else:
-        if not iu:
-            lch = lch.unionByName(flank_witnesses(
-                chunk_of(_LE), below=True,
-                order_by=[
-                    F.col(_LE).desc(), F.col(_LS).asc(), F.col(_BID).asc(),
-                ],
-                min_struct=below_struct,
-            ))
-        if not idn:
-            lch = lch.unionByName(flank_witnesses(
-                chunk_of(_LS), below=False,
-                order_by=[
-                    F.col(_LS).asc(), F.col(_LE).asc(), F.col(_BID).asc(),
-                ],
-                min_struct=above_struct,
-            ))
-
-    chs_r = chunk_of(_RS)
-    che_r = F.greatest(chs_r, chunk_of(_RE))
-    # probes with ANY null bound can't probe (greatest() would mask a null
-    # end and feed the kernel a garbage int64 via the NaN conversion) —
-    # drop them here; the final left join null-pads them, matching the
-    # partitioned path's notna() handling
-    rch = (
-        rbid.select(*r_keys, _PID, _RS, _RE)
-        .na.drop(subset=[_RS, _RE])
-        .withColumn(_CH, F.explode(F.sequence(chs_r, che_r)))
-    )
-    cand_schema = StructType([
-        StructField(_PID, LongType(), False),
-        StructField(_BID, LongType(), False),
-        StructField(_DIST, LongType(), False),
-        StructField(_LS, LongType(), False),
-        StructField(_LE, LongType(), False),
-    ])
-    cand_cols = [_PID, _BID, _DIST, _LS, _LE]
-
-    def cand_group(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(r_pdf) or not len(l_pdf):
-            return pd.DataFrame(columns=cand_cols)
-        starts, ends, runmax, argmax_first, order = _build_nearest_arrays(
-            l_pdf[_LS].to_numpy(np.int64), l_pdf[_LE].to_numpy(np.int64)
-        )
-        bids = l_pdf[_BID].to_numpy(np.int64)
-        qs = r_pdf[_RS].to_numpy(np.int64)
-        qe = r_pdf[_RE].to_numpy(np.int64)
-        pids = r_pdf[_PID].to_numpy(np.int64)
-        if k == 1:
-            take = _nearest_take(starts, ends, runmax, argmax_first, qs, qe, flags)
-            good = take >= 0
-            tk, tqs, tqe, tp = take[good], qs[good], qe[good], pids[good]
-        else:
-            top, valid = _nearest_take_topk(starts, ends, runmax, qs, qe, k)
-            flat = valid.ravel()
-            tk = top.ravel()[flat]
-            rep = np.repeat(np.arange(len(qs)), k)[flat]
-            tqs, tqe, tp = qs[rep], qe[rep], pids[rep]
-        if not len(tk):
-            return pd.DataFrame(columns=cand_cols)
-        ls, le = starts[tk], ends[tk]
-        dist = np.where(ls > tqe, ls - tqe, np.where(le < tqs, tqs - le, 0))
-        return pd.DataFrame({
-            _PID: tp, _BID: bids[order[tk]], _DIST: dist, _LS: ls, _LE: le,
-        })
-
-    cands = (
-        lch.groupBy(*l_keys, _CH)
-        .cogroup(rch.groupBy(*r_keys, _CH))
-        .applyInPandas(cand_group, schema=cand_schema)
-    )
-
-    # ---- stage 2: global exact reduce + payload rehydration ------------
-    # one map-side-combinable groupBy(probe) replaces a dedup shuffle + a
-    # ranking window: min/collect_set over (dist, start, end, build_id)
-    # structs — struct comparison IS the lexicographic tie-break, and a
-    # (probe, build) pair meeting in several shared chunks collapses inside
-    # min()/collect_set() instead of needing dropDuplicates
-    cstruct = F.struct(
-        F.col(_DIST).alias("d"), F.col(_LS).alias("s"),
-        F.col(_LE).alias("e"), F.col(_BID).alias("b"),
-    )
-    # Build-payload fast path (r12, guide §2.4/§8): when the left output
-    # columns are exactly equi-keys + bounds, the winning struct already
-    # holds everything the payload needs — bounds from (s, e) (de-normalized
-    # by the strict shrink; exact because checked bounds equal originals),
-    # keys from the probe row (candidates share the probe's equi-key by
-    # construction, and the build side na-drops null keys, so matched rows
-    # always have a non-null probe key). The id-equi rehydrate join — and
-    # its full build-side rescan — disappears. Selection order is untouched:
-    # the same (d, s, e, b) struct min picks the same winner.
-    l_start_name, l_end_name, strict, checked = payload or (
-        None, None, False, False
-    )
-    bound_names = {l_start_name, l_end_name}
-    simple_payload = (
-        l_start_name is not None
-        and checked
-        and len(bound_names) == 2
-        and not bound_names & set(l_keys)
-        and set(left_cols) <= set(l_keys) | bound_names
-    )
-    win_extra = (
-        [F.col("__sq_w.s").alias("__sq_ws"), F.col("__sq_w.e").alias("__sq_we")]
-        if simple_payload else []
-    )
-    if k == 1:
-        winners = (
-            cands.groupBy(_PID)
-            .agg(F.min(cstruct).alias("__sq_w"))
-            .select(_PID, F.col("__sq_w.b").alias(_BID), *win_extra)
-        )
-    else:
-        winners = (
-            cands.groupBy(_PID)
-            .agg(
-                F.slice(
-                    F.array_sort(F.collect_set(cstruct)), 1, k
-                ).alias("__sq_w")
-            )
-            .select(_PID, F.explode("__sq_w").alias("__sq_w"))
-            .select(_PID, F.col("__sq_w.b").alias(_BID), *win_extra)
-        )
-    if simple_payload:
-        shrink = 1 if strict else 0
-        lkt = {f.name: f.dataType for f in lb.schema.fields}
-        rk_of = dict(zip(l_keys, r_keys))
-        matched = F.col(_BID).isNotNull()
-        sel = []
-        for c in out_cols:
-            if c not in left_cols:
-                sel.append(F.col(c))
-            elif c == l_start_name:
-                sel.append(F.col("__sq_ws").cast(lkt[c]).alias(c))
-            elif c == l_end_name:
-                sel.append(
-                    (F.col("__sq_we") + F.lit(shrink)).cast(lkt[c]).alias(c)
-                )
-            else:  # equi-key: copy the probe's value on matched rows
-                sel.append(
-                    F.when(matched, F.col(rk_of[c]))
-                    .otherwise(F.lit(None)).cast(lkt[c]).alias(c)
-                )
-        return rbid.join(winners, _PID, "left").select(*sel)
-    winpay = winners.join(lbid.select(*left_cols, _BID), _BID).drop(_BID)
-    return rbid.join(winpay, _PID, "left").select(*out_cols)
 
 
 def _probe_broadcast_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):

@@ -35,8 +35,6 @@ CHECK_INT32_BOUNDS = "spark.sequila.checkInt32Bounds"
 MAX_BROADCAST_BUILD_ROWS = "spark.sequila.maxBroadcastBuildRows"
 BINNED_JOIN_PARTITIONS = "spark.sequila.binnedJoinPartitions"
 NEAREST_K = "spark.sequila.nearestK"
-NEAREST_SALT = "spark.sequila.nearestSalt"
-NEAREST_CHUNKS = "spark.sequila.nearestChunks"
 # Staleness-retry window for probes racing compact_index_table's two-RENAME
 # swap (util._await_index_table). The in-memory catalog swaps in
 # milliseconds; a loaded external metastore can take longer — widen these
@@ -94,29 +92,6 @@ DEFAULT_BINNED_JOIN_PARTITIONS: int | str = "auto"
 # the balance point moves as sqrt.
 BINNED_JOIN_WIDTH_SQ_BYTES = 4096
 BINNED_JOIN_MAX_PARTITIONS = 4096
-# Probe-salting factor for the partitioned (cogroup) nearest join. The
-# cogroup's parallelism is bounded by the number of distinct equi-key groups
-# — for genomic data that is the contig count (~25), far below a cluster's
-# core count. salt=S splits each key's PROBES into S hash buckets and
-# replicates the key's BUILD rows to every bucket (exploded salt column), so
-# parallelism becomes n_keys x S at the cost of an S x build-side shuffle.
-# Each probe still sees its key's FULL build set, so results (k>1 and
-# candidate-class flags included) are bit-identical to salt=1. Default 1
-# (off): when key cardinality already exceeds the core count — the common
-# cluster case for high-cardinality keys — replication is pure overhead.
-DEFAULT_NEAREST_SALT = 1
-# Chunk count for the range_partitioned nearest join (the scale path that
-# lifts parallelism past the distinct-key bound WITHOUT salting's full
-# build-side replication — only per-chunk flank witnesses replicate).
-# "auto" = max(32, 4 * defaultParallelism), capped below. The witness
-# gather is a prefix-min window for k=1 (O(chunks) summary rows per key)
-# and a two-level super-chunk hierarchy for k>1 (O(chunks^1.5 x k) — r7,
-# replacing the flat O(chunks^2) join that motivated the old 4096 cap).
-# The cap now only bounds the chunk-domain explode (keys x chunks grid
-# rows) against absurd settings.
-DEFAULT_NEAREST_CHUNKS: int | str = "auto"
-NEAREST_MAX_CHUNKS = 262_144
-
 # Reference algorithm enum (session_context.rs:62-72) → our implementations.
 # All reference index flavors are output-equivalent; they differ only in the
 # native index data structure, which in Spark collapses to one numpy index.
@@ -132,11 +107,6 @@ _ALGORITHM_ALIASES = {
     "arrayintervaltree": "index",
     "lapper": "index",
     "superintervals": "index",
-    # range partitioning IS what the binned overlap join does; for the
-    # nearest join the raw name selects the chunked two-phase path (the
-    # dispatch checks SequilaConf.raw_algorithm / its own algorithm arg)
-    "range_partitioned": "binning",
-    "rangepartitioned": "binning",
 }
 
 
@@ -189,9 +159,6 @@ class SequilaConf:
     max_broadcast_build_rows: int = DEFAULT_MAX_BROADCAST_BUILD_ROWS
     binned_join_partitions: int | str = DEFAULT_BINNED_JOIN_PARTITIONS
     nearest_k: int = 1  # bedtools closest -k for the CoitreesNearest route
-    nearest_salt: int = DEFAULT_NEAREST_SALT  # cogroup probe-salt factor
-    nearest_chunks: int | str = DEFAULT_NEAREST_CHUNKS  # range_partitioned chunk count
-    raw_algorithm: str = ""  # pre-parse name, for nearest-only algorithm names
 
     @classmethod
     def from_spark(cls, spark: SparkSession) -> "SequilaConf":
@@ -199,8 +166,8 @@ class SequilaConf:
             return spark.conf.get(key, default)
 
         prefer = _get(PREFER_INTERVAL_JOIN, "true").lower() == "true"
-        raw_algorithm = _get(INTERVAL_JOIN_ALGORITHM, DEFAULT_ALGORITHM)
-        join_mode, algorithm = parse_algorithm_or_mode(raw_algorithm)
+        name = _get(INTERVAL_JOIN_ALGORITHM, DEFAULT_ALGORITHM)
+        join_mode, algorithm = parse_algorithm_or_mode(name)
         if not prefer:
             # sequila.prefer_interval_join=false ⇒ vanilla join plan
             # (sequila_physical_planner.rs:36-39).
@@ -237,31 +204,7 @@ class SequilaConf:
             ),
             binned_join_partitions=raw_parts,
             nearest_k=int(_get(NEAREST_K, "1")),
-            nearest_salt=int(_get(NEAREST_SALT, str(DEFAULT_NEAREST_SALT))),
-            nearest_chunks=_get(NEAREST_CHUNKS, str(DEFAULT_NEAREST_CHUNKS)),
-            raw_algorithm=raw_algorithm.strip().lower(),
         )
-
-    def resolve_nearest_chunks(self, spark: SparkSession) -> int:
-        """Concrete chunk count for the range_partitioned nearest join."""
-        raw = self.nearest_chunks
-        if isinstance(raw, str):
-            raw = raw.strip().lower()
-            if raw == "auto":
-                return min(
-                    NEAREST_MAX_CHUNKS,
-                    max(32, 4 * spark.sparkContext.defaultParallelism),
-                )
-            try:
-                raw = int(raw)
-            except ValueError:
-                raise ValueError(
-                    f"{NEAREST_CHUNKS} must be a positive integer or 'auto', "
-                    f"got {self.nearest_chunks!r}"
-                ) from None
-        if raw < 1:
-            raise ValueError(f"{NEAREST_CHUNKS} must be >= 1, got {raw}")
-        return min(NEAREST_MAX_CHUNKS, raw)
 
     def resolve_binned_join_partitions(self, spark: SparkSession, frames=()) -> int:
         """Concrete shuffle width for the binned join (0 = inherit session).

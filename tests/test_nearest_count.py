@@ -9,7 +9,7 @@ from sequila_native_spark import count_overlaps, nearest_join, overlap_join
 from tests.conftest import rows_set
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe", "range_partitioned"])
+@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe"])
 def test_nearest_golden(spark, nearest_a, nearest_b, algorithm):
     # integration_test.rs:352-399 (strict-inequality query, CoitreesNearest):
     # every probe (b) row emits exactly one row; rows whose (contig, strand)
@@ -30,7 +30,7 @@ def test_nearest_golden(spark, nearest_a, nearest_b, algorithm):
     assert dict(got) == expected
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe", "range_partitioned"])
+@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe"])
 def test_nearest_overlap_first(spark, algorithm):
     # overlap wins over a closer-by-distance... overlap distance is 0;
     # deterministic tie-break picks min (start, end) among overlapping.
@@ -49,7 +49,7 @@ def test_nearest_overlap_first(spark, algorithm):
     assert (row["start"], row["end"]) == (1, 100)
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe", "range_partitioned"])
+@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe"])
 def test_nearest_true_minimum_not_reference_heuristic(spark, algorithm):
     # The reference's binary-search heuristic (interval_join.rs:926-951) would
     # return (50,60) here; the true nearest is (0,100) (distance 50 vs 90).
@@ -288,7 +288,7 @@ def test_nearest_k_via_conf(spark):
     assert nearest_join(build, probe, **args).count() == 1
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe", "range_partitioned"])
+@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe"])
 def test_nearest_distance_col(spark, algorithm):
     """closest -d: 0 for overlap, gap otherwise, null for padded rows."""
     build = spark.createDataFrame(
@@ -367,7 +367,7 @@ def _closest_brute(flags):
     return out
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe", "range_partitioned"])
+@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe"])
 @pytest.mark.parametrize(
     "flags",
     [(True, False, False), (False, True, False), (False, False, True),
@@ -408,31 +408,6 @@ def test_closest_flags_validation(spark):
         nearest_join(build, probe, **kw, k=2, ignore_overlaps=True)
 
 
-@pytest.mark.parametrize("salt", [2, 5])
-def test_nearest_salt_bit_identical(spark, salt):
-    """spark.sequila.nearestSalt replicates build rows across probe hash
-    buckets — results must be bit-identical to salt=1, including k>1,
-    candidate-class flags, and empty-group null padding."""
-    build = spark.createDataFrame(_CL_BUILD, "contig string, start int, end int")
-    probe = spark.createDataFrame(
-        [(c, s, e, i) for i, (c, s, e) in enumerate(_CL_PROBE)],
-        "contig string, p_start int, p_end int, pid int",
-    )
-    kw = dict(on="contig", left_start="start", left_end="end",
-              right_start="p_start", right_end="p_end",
-              algorithm="partitioned")
-    variants = [dict(), dict(k=2), dict(ignore_overlaps=True)]
-    try:
-        for extra in variants:
-            spark.conf.set("spark.sequila.nearestSalt", "1")
-            base = rows_set(nearest_join(build, probe, **kw, **extra))
-            spark.conf.set("spark.sequila.nearestSalt", str(salt))
-            salted = rows_set(nearest_join(build, probe, **kw, **extra))
-            assert salted == base, extra
-    finally:
-        spark.conf.unset("spark.sequila.nearestSalt")
-
-
 def test_closest_io_with_distance_col(spark):
     build = spark.createDataFrame(_CL_BUILD, "contig string, start int, end int")
     probe = spark.createDataFrame(
@@ -450,7 +425,7 @@ def test_closest_io_with_distance_col(spark):
             assert r["dist"] > 0  # -io never returns an overlap
 
 
-# --- range_partitioned nearest (r6: the chunked cluster-scale path) --------
+# --- every path vs naive on random tables with nulls and sparse islands ----
 
 
 def _rp_random_tables(spark, seed, n_build=120, n_probe=90):
@@ -458,7 +433,8 @@ def _rp_random_tables(spark, seed, n_build=120, n_probe=90):
     cannot differ by payload across algorithms (the tie-break is
     (distance, start, end) everywhere; payloads of tied bounds are not
     ordered). Includes sparse coordinate regions, long spans, null bounds,
-    null keys, and a probe-only key."""
+    null keys, and a probe-only key — inputs the hypothesis generators of
+    test_property_agreement.py never produce."""
     import random
 
     rng = random.Random(seed)
@@ -467,7 +443,7 @@ def _rp_random_tables(spark, seed, n_build=120, n_probe=90):
     while len(build) < n_build:
         key = rng.choice(["c1", "c2", "c3"])
         # clustered + sparse: most intervals in [0, 2000], a far island at
-        # [90000, 92000] so flank witnesses must cross many empty chunks
+        # [90000, 92000] so a nearest build can lie across a wide gap
         base = 90000 if rng.random() < 0.1 else 0
         s = base + rng.randrange(0, 2000)
         e = s + (rng.randrange(0, 3000) if rng.random() < 0.05
@@ -494,6 +470,9 @@ def _rp_random_tables(spark, seed, n_build=120, n_probe=90):
     return b, p
 
 
+_NEAREST_PATHS = ("index", "partitioned", "broadcast_probe")
+
+
 @pytest.mark.parametrize("seed", [1, 2])
 @pytest.mark.parametrize(
     "extra",
@@ -501,141 +480,53 @@ def _rp_random_tables(spark, seed, n_build=120, n_probe=90):
      dict(ignore_downstream=True), dict(ignore_overlaps=True, ignore_upstream=True),
      dict(strict=True)],
 )
-def test_range_partitioned_matches_partitioned_random(spark, seed, extra):
+def test_nearest_paths_match_naive_random(spark, seed, extra):
     build, probe = _rp_random_tables(spark, seed)
     kw = dict(on="contig", left_start="start", left_end="end",
               right_start="p_start", right_end="p_end")
-    base = rows_set(nearest_join(build, probe, **kw, **extra,
-                                 algorithm="partitioned"))
-    got = rows_set(nearest_join(build, probe, **kw, **extra,
-                                algorithm="range_partitioned"))
-    assert got == base, extra
+    base = rows_set(nearest_join(build, probe, **kw, **extra, algorithm="naive"))
+    for algo in _NEAREST_PATHS:
+        got = rows_set(nearest_join(build, probe, **kw, **extra, algorithm=algo))
+        assert got == base, (algo, extra)
 
 
-@pytest.mark.parametrize(
-    "extra",
-    [dict(), dict(strict=True), dict(k=3), dict(ignore_overlaps=True)],
-)
-def test_range_partitioned_payload_fast_path(spark, extra):
-    """r12 build-payload fast path: when the build side's output columns are
-    exactly equi-keys + bounds, the payload is reconstructed from the winner
-    struct + probe key instead of a build-side rehydrate join. Pin it
-    value-identical to the partitioned oracle — strict exercises the end
-    de-normalization (+1), k=3 the exploded-winners variant."""
-    build, probe = _rp_random_tables(spark, seed=11)
-    build = build.drop("bid")  # payload == (contig, start, end) → fast path
-    kw = dict(on="contig", left_start="start", left_end="end",
-              right_start="p_start", right_end="p_end")
-    base = rows_set(nearest_join(build, probe, **kw, **extra,
-                                 algorithm="partitioned"))
-    got = rows_set(nearest_join(build, probe, **kw, **extra,
-                                algorithm="range_partitioned"))
-    assert got == base, extra
-
-
-def test_range_partitioned_payload_fast_path_keyless(spark):
-    """Keyless fast path: no key columns to reconstruct, bounds only."""
-    build = spark.createDataFrame(
-        [(10, 20), (400, 410), (90000, 90005)], "s int, e int"
-    )
-    probe = spark.createDataFrame(
-        [(15, 16, 0), (430, 431, 1), (50000, 50001, 2)], "ps int, pe int, pid int"
-    )
-    out = nearest_join(build, probe, on=None, left_start="s", left_end="e",
-                       right_start="ps", right_end="pe",
-                       algorithm="range_partitioned", distance_col="d")
-    got = {r["pid"]: (r["s"], r["e"], r["d"]) for r in out.collect()}
-    assert got == {0: (10, 20, 0), 1: (400, 410, 20), 2: (90000, 90005, 39999)}
-
-
-@pytest.mark.parametrize(
-    "extra",
-    [dict(), dict(k=3), dict(strict=True), dict(ignore_overlaps=True)],
-)
-def test_range_partitioned_probes_outside_build_span(spark, extra):
-    """r13: chunk geometry comes from the BUILD side only and probe chunk
-    ids clamp into the grid — probes far below/above the whole build span
-    (and ones straddling it) must still find their true nearest, exactly
-    as the partitioned algorithm does."""
-    build = spark.createDataFrame(
-        [("c1", 1000, 1050, 0), ("c1", 1060, 1200, 1), ("c1", 5000, 5010, 2),
-         ("c2", 2000, 2001, 3), ("c2", 2500, 2600, 4)],
-        "contig string, start int, end int, bid int",
-    )
-    probe = spark.createDataFrame(
-        [("c1", -50_000, -49_990, 0),   # far below lo
-         ("c1", 0, 5, 1),               # below lo
-         ("c1", 999_999, 1_000_050, 2),  # far above hi
-         ("c1", -10_000, 10_000, 3),    # straddles the whole span
-         ("c1", 1055, 1058, 4),         # in-span gap
-         ("c2", 1, 2, 5), ("c2", 90_000, 90_001, 6),
-         ("c3", 7, 8, 7)],               # key with no build rows
-        "contig string, p_start int, p_end int, pid int",
-    )
-    kw = dict(on="contig", left_start="start", left_end="end",
-              right_start="p_start", right_end="p_end")
-    base = rows_set(nearest_join(build, probe, **kw, **extra,
-                                 algorithm="partitioned"))
-    got = rows_set(nearest_join(build, probe, **kw, **extra,
-                                algorithm="range_partitioned"))
-    assert got == base, extra
-
-
-@pytest.mark.parametrize("chunks", [1, 7, 1000])
-def test_range_partitioned_chunk_count_invariant(spark, chunks):
-    """Results must not depend on the chunk geometry — 1 chunk (degenerate,
-    everything local), a few (flanks dominate), and far more chunks than
-    coordinates (most chunks empty)."""
-    build, probe = _rp_random_tables(spark, seed=7)
-    kw = dict(on="contig", left_start="start", left_end="end",
-              right_start="p_start", right_end="p_end")
-    base = rows_set(nearest_join(build, probe, **kw, algorithm="partitioned", k=2))
-    try:
-        spark.conf.set("spark.sequila.nearestChunks", str(chunks))
-        got = rows_set(nearest_join(build, probe, **kw,
-                                    algorithm="range_partitioned", k=2))
-    finally:
-        spark.conf.unset("spark.sequila.nearestChunks")
-    assert got == base
-
-
-def test_range_partitioned_keyless(spark):
-    """on=None: the chunk IS the cogroup key."""
+def test_nearest_keyless(spark):
+    """on=None: one build set for every probe, on every path."""
     build = spark.createDataFrame(
         [(10, 20, 0), (400, 410, 1), (90000, 90005, 2)], "s int, e int, bid int"
     )
     probe = spark.createDataFrame(
         [(15, 16, 0), (430, 431, 1), (50000, 50001, 2)], "ps int, pe int, pid int"
     )
-    out = nearest_join(build, probe, on=None, left_start="s", left_end="e",
-                       right_start="ps", right_end="pe",
-                       algorithm="range_partitioned", distance_col="d")
-    got = {r["pid"]: (r["s"], r["e"], r["d"]) for r in out.collect()}
-    assert got == {0: (10, 20, 0), 1: (400, 410, 20), 2: (90000, 90005, 39999)}
+    for algo in ("naive", *_NEAREST_PATHS):
+        out = nearest_join(build, probe, on=None, left_start="s", left_end="e",
+                           right_start="ps", right_end="pe",
+                           algorithm=algo, distance_col="d")
+        got = {r["pid"]: (r["s"], r["e"], r["d"]) for r in out.collect()}
+        assert got == {
+            0: (10, 20, 0), 1: (400, 410, 20), 2: (90000, 90005, 39999)
+        }, algo
 
 
-def test_range_partitioned_conf_name_routes(spark):
-    """SET spark.sequila.intervalJoinAlgorithm=range_partitioned selects the
-    chunked nearest path AND keeps overlap joins on binning."""
-    build, probe = _rp_random_tables(spark, seed=3, n_build=40, n_probe=30)
+def test_range_partitioned_name_rejected(spark):
+    """The chunked range_partitioned nearest path was removed; its name is
+    now an unknown algorithm, as argument and as session conf."""
+    build, probe = _rp_random_tables(spark, seed=3, n_build=4, n_probe=3)
     kw = dict(on="contig", left_start="start", left_end="end",
               right_start="p_start", right_end="p_end")
-    base = rows_set(nearest_join(build, probe, **kw, algorithm="partitioned"))
+    with pytest.raises(ValueError, match="Unknown interval join algorithm"):
+        nearest_join(build, probe, **kw, algorithm="range_partitioned")
     try:
         spark.conf.set("spark.sequila.intervalJoinAlgorithm", "range_partitioned")
-        got = rows_set(nearest_join(build, probe, **kw))
-        ov = overlap_join(build, probe, **kw)  # must not error; binning route
-        assert ov.count() > 0
+        with pytest.raises(ValueError, match="Unknown interval join algorithm"):
+            nearest_join(build, probe, **kw)
     finally:
         spark.conf.unset("spark.sequila.intervalJoinAlgorithm")
-    assert got == base
 
 
 def test_huge_coordinates_raise_int32_guard(spark):
-    """Coordinates beyond int32 (and a fortiori beyond double-exact 2^53,
-    where floating chunk arithmetic would silently drop flank witnesses —
-    advisor, r6) must RAISE via the checked-int32 bounds contract before
-    any chunk math runs, on the chunked path like every other."""
+    """Coordinates beyond int32 (and a fortiori beyond double-exact 2^53)
+    must RAISE via the checked-int32 bounds contract on every path."""
     base_c = 1 << 60
     build = spark.createDataFrame(
         [("c1", base_c + 10, base_c + 20, 0)],
@@ -647,26 +538,6 @@ def test_huge_coordinates_raise_int32_guard(spark):
     )
     kw = dict(on="contig", left_start="start", left_end="end",
               right_start="p_start", right_end="p_end")
-    with pytest.raises(Exception, match="[Cc]ast"):
-        nearest_join(build, probe, **kw,
-                     algorithm="range_partitioned").collect()
-
-
-@pytest.mark.parametrize("extra", [dict(), dict(k=3)])
-def test_range_partitioned_beyond_old_chunk_cap(spark, extra):
-    """Chunk counts beyond the old 4096 cap (pre-r7 the quadratic witness
-    gather made them impractical; the prefix-window / two-level hierarchy
-    removed the term) must stay bit-identical to the flat partitioned
-    path."""
-    build, probe = _rp_random_tables(spark, seed=11)
-    kw = dict(on="contig", left_start="start", left_end="end",
-              right_start="p_start", right_end="p_end")
-    base = rows_set(nearest_join(build, probe, **kw, **extra,
-                                 algorithm="partitioned"))
-    try:
-        spark.conf.set("spark.sequila.nearestChunks", "8192")
-        got = rows_set(nearest_join(build, probe, **kw, **extra,
-                                    algorithm="range_partitioned"))
-    finally:
-        spark.conf.unset("spark.sequila.nearestChunks")
-    assert got == base
+    for algo in ("naive", *_NEAREST_PATHS):
+        with pytest.raises(Exception, match="[Cc]ast"):
+            nearest_join(build, probe, **kw, algorithm=algo).collect()

@@ -6,6 +6,7 @@ predicate join as ground truth.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -86,7 +87,6 @@ def test_nearest_algorithms_agree_with_naive(spark, tabs):
     assert run("index") == truth
     assert run("partitioned") == truth
     assert run("broadcast_probe") == truth
-    assert run("range_partitioned") == truth
 
 
 @settings(
@@ -175,7 +175,7 @@ def test_k_nearest_algorithms_agree_with_naive(spark, tabs, k):
     args = dict(on="contig", left_start="start", left_end="end",
                 right_start="s", right_end="e", k=k)
     want = rows_set(nearest_join(left, right, algorithm="naive", **args))
-    for algo in ("index", "partitioned", "broadcast_probe", "range_partitioned"):
+    for algo in ("index", "partitioned", "broadcast_probe"):
         got = rows_set(nearest_join(left, right, algorithm=algo, **args))
         assert got == want, (algo, k)
 
@@ -246,7 +246,6 @@ def test_closest_flags_algorithms_agree_with_naive(spark, tabs, flags):
     assert run("index") == truth
     assert run("partitioned") == truth
     assert run("broadcast_probe") == truth
-    assert run("range_partitioned") == truth
 
 
 @settings(
@@ -280,6 +279,51 @@ def test_map_intervals_consistent_with_count_overlaps(spark, tabs):
     got_m = {r["lid"]: r["n"] for r in m.collect()}
     got_c = {r["lid"]: r["n"] for r in c.collect()}
     assert got_m == got_c
+
+
+@pytest.mark.parametrize("flip", [False, True], ids=["int_build", "string_build"])
+def test_mixed_key_families_agree_or_raise(spark, flip):
+    # an int key against a string key: Spark's join coerces 1 = '1', the
+    # index kernels' dict lookups cannot — so overlap_join, count_overlaps,
+    # coverage, map_intervals and overlap_count_agg must fall back to
+    # binning and agree with naive, and every nearest_join path must raise
+    from sequila_native_spark import (
+        count_overlaps, coverage, map_intervals, overlap_count_agg,
+    )
+
+    ints = spark.createDataFrame(
+        [(1, 10, 20, 1), (1, 30, 40, 2), (2, 10, 20, 3), (None, 10, 20, 4)],
+        "contig int, start int, end int, v int",
+    )
+    strs = spark.createDataFrame(
+        [("1", 15, 35, 1), ("2", 0, 5, 2), ("3", 10, 20, 3), (None, 10, 20, 4)],
+        "contig string, start int, end int, v int",
+    )
+    left, right = (strs, ints) if flip else (ints, strs)
+    kw = dict(on="contig", left_start="start", left_end="end",
+              right_start="start", right_end="end")
+
+    for op, extra in (
+        (overlap_join, {}),
+        (count_overlaps, {}),
+        (coverage, {}),
+        (map_intervals, dict(aggs={"n": ("count", None), "vs": ("sum", "v")})),
+    ):
+        truth = rows_set(op(left, right, **kw, **extra, algorithm="naive"))
+        assert any(r[-1] for r in truth), op.__name__  # 1 = '1' did match
+        for algo in ("binning", "index", "partitioned"):
+            got = rows_set(op(left, right, **kw, **extra, algorithm=algo))
+            assert got == truth, (op.__name__, algo)
+
+    want = rows_set(
+        overlap_join(left, right, **kw, algorithm="naive").groupBy("contig").count()
+    )
+    got = rows_set(overlap_count_agg(left, right, **kw, alias="count"))
+    assert got == want
+
+    for algo in ("naive", "index", "partitioned", "broadcast_probe"):
+        with pytest.raises(ValueError, match=r"\(int\).*\(string\)|\(string\).*\(int\)"):
+            nearest_join(left, right, **kw, algorithm=algo)
 
 
 # --- r6 prep-op laws under random corpora -------------------------------

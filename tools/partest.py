@@ -31,17 +31,20 @@ import time
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 
-# Measured single-process durations (seconds, r11 host) — used only to
-# balance shards; an unlisted file gets the default weight. Re-measure
-# with `pytest --durations=0` if the balance drifts.
+# Measured single-process durations (seconds, r11 host;
+# test_nearest_count.py and test_property_agreement.py re-measured on a
+# 4-vCPU host) — used only to balance shards; an unlisted file gets the
+# default weight. Re-measure with `pytest --durations=0` if the balance
+# drifts.
 WEIGHTS = {
+    "test_property_agreement.py": 400,
     "test_similarity_multimodal.py": 232,
+    "test_nearest_count.py": 190,
     "test_plans.py": 164,
     "test_text_dedup.py": 158,
     "test_sql_frontend.py": 132,
     "test_overlap_join.py": 85,
     "test_sources_streaming.py": 85,
-    "test_nearest_count.py": 70,
     "test_lm.py": 60,
     "test_golden_parity.py": 50,
     "test_coverage_ivf.py": 45,
