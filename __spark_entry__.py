@@ -259,8 +259,7 @@ def q_overlap_selective_algorithms(spark: SparkSession, sf_dir: str) -> DataFram
     (cogroup) algorithms over the SAME selective build side, counted per
     contig and joined into one hash-checked frame — the same merge trick as
     ``overlap_count_algorithms``. Replaces the two standalone rows
-    ``overlap_small_build_index`` / ``overlap_partitioned_selective`` (their
-    functions remain; bench.py still times them individually)."""
+    ``overlap_small_build_index`` / ``overlap_partitioned_selective``."""
     build = _targets(spark, sf_dir).where(F.col("t_id") % 101 == 0)
     probe = _reads(spark, sf_dir, with_id=False)
 
@@ -276,35 +275,6 @@ def q_overlap_selective_algorithms(spark: SparkSession, sf_dir: str) -> DataFram
     return cnt("index", "n_pairs_index").join(
         cnt("partitioned", "n_pairs_partitioned"), "contig"
     )
-
-
-def q_overlap_small_build_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the index algorithm's design point (reference CollectLeft mode):
-    # small build side broadcast as per-key sorted arrays, large probe
-    # streamed through mapInPandas with zero shuffle
-    build = _targets(spark, sf_dir).where(F.col("t_id") % 101 == 0)
-    probe = _reads(spark, sf_dir, with_id=False)
-    oj = overlap_join(
-        build, probe, on="contig",
-        left_start="t_start", left_end="t_end",
-        right_start="r_start", right_end="r_end",
-        algorithm="index",
-    )
-    return oj.groupBy("contig").agg(F.count(F.lit(1)).alias("n_pairs"))
-
-
-def q_overlap_partitioned_selective(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # partitioned algorithm on a selective build side: the shape it serves
-    # at scale (build too big to broadcast per key, bounded output)
-    build = _targets(spark, sf_dir).where(F.col("t_id") % 101 == 0)
-    probe = _reads(spark, sf_dir, with_id=False)
-    oj = overlap_join(
-        build, probe, on="contig",
-        left_start="t_start", left_end="t_end",
-        right_start="r_start", right_end="r_end",
-        algorithm="partitioned",
-    )
-    return oj.groupBy("contig").agg(F.count(F.lit(1)).alias("n_pairs"))
 
 
 def q_range_only_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -338,18 +308,6 @@ def q_count_overlaps_per_target(spark: SparkSession, sf_dir: str) -> DataFrame:
     return count_overlaps(
         _reads(spark, sf_dir, with_id=False), _targets(spark, sf_dir),
         on="contig", **_IVL, algorithm="index", count_col="n_overlaps",
-    )
-
-
-def q_coverage_per_target(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # A12 coverage kernel as an operator: overlap count + clipped-base sum.
-    # r12: index algorithm — binary searches + prefix sums per probe
-    # against the broadcast build (integer-exact identity, see
-    # coverage._cov_counts), zero shuffle, no pair emission; binning twin
-    # equality pinned in tests/test_coverage_ivf.py.
-    return coverage(
-        _reads(spark, sf_dir, with_id=False), _targets(spark, sf_dir),
-        on="contig", **_IVL, algorithm="index",
     )
 
 
@@ -400,7 +358,7 @@ def q_map_reads_per_target(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_frac_right=0.5,
         # r13 (guide §2.4/§3.1): count/sum/min/max are batch-decomposable,
         # so the broadcast-index kernel computes them from per-batch
-        # partials — the pair-sized exchange disappears (plans/r13).
+        # partials — the pair-sized exchange disappears.
         # Falls back to the binned pair join past the broadcast budget.
         algorithm="index",
     )
@@ -482,19 +440,6 @@ def q_reads_in_out_targets(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("n_inside"), F.lit(0)).cast("bigint").alias("n_inside"),
         F.coalesce(F.col("n_outside"), F.lit(0)).cast("bigint").alias("n_outside"),
     )
-
-
-def q_reads_outside_targets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # anti overlap filter (bedtools intersect -v): reads overlapping no
-    # sampled target region, aggregated per contig
-    regions = _targets(spark, sf_dir).where(F.col("t_id") % 11 == 0)
-    kept = filter_by_overlap(
-        _reads(spark, sf_dir), regions, on="contig",
-        df_start="r_start", df_end="r_end",
-        regions_start="t_start", regions_end="t_end",
-        negate=True,
-    )
-    return kept.groupBy("contig").agg(F.count(F.lit(1)).alias("n_reads"))
 
 
 def q_reads_inside_targets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -628,16 +573,6 @@ def q_overlap_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.when(F.col("r_start").isNull(), 1).otherwise(0)).alias("n_no_read"),
         F.sum(F.when(F.col("t_start").isNull(), 1).otherwise(0)).alias("n_no_target"),
-    )
-
-
-def q_nearest_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # A5 scale path: cogroup-per-key nearest — one shuffle per side, no
-    # driver-side build collect, per-task memory bounded by the key group
-    return nearest_join(
-        _reads(spark, sf_dir, with_id=False),
-        _targets(spark, sf_dir).where(F.col("t_id") % 10 == 5),
-        on="contig", **_IVL, algorithm="partitioned",
     )
 
 
@@ -820,12 +755,6 @@ def q_events_stateful_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # LLM-data-pipeline operators (north-star extensions)
 # ---------------------------------------------------------------------------
-
-def q_doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    feats = quality_features(F.col("text"))
-    return docs.select(F.col("doc_id"), *[v.alias(k) for k, v in feats.items()])
-
 
 def q_doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Gopher-style repetition quality rules (dup-line fraction, modal-bigram
@@ -1106,15 +1035,6 @@ def q_filtered_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_exact_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup_clusters(_t(spark, sf_dir, "documents"))
-
-
-def q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # md5 family: bit-identical to the DuckDB oracle; the engine default is
-    # the vectorized numeric family (hash_family="fast", ~10x signatures)
-    return minhash_pairs(
-        _t(spark, sf_dir, "documents"), k=8, bands=4, threshold_milli=200,
-        hash_family="md5",
-    )
 
 
 def q_minhash_near_dups_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1880,38 +1800,6 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lang")
 
 
-def q_dedup_keep_best_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BENCH-ONLY twin of ``dedup_keep_best`` on the PRODUCTION hash family
-    (r9 — VERDICT r8 item 7): the driver row deliberately keeps the md5
-    family because its clusters tie to the hash-green ``near_dup_clusters``
-    oracle; this row shows users the cost of the same keep-best pipeline
-    on the vectorized ``fast`` family (cf. ``minhash_near_dups_fast`` vs
-    ``minhash_near_dups``). Same laws in-row; family agreement is pinned
-    in tests/test_text_dedup.py."""
-    from sequila_native_spark.functions import (
-        dedup_clusters,
-        keep_best_per_cluster,
-        minhash_pairs,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_pairs(docs, hash_family="fast")
-    labels = dedup_clusters(
-        pairs.select("id_a", "id_b"), nodes=docs.select("doc_id")
-    )
-    # r12 (guide §2.4): the cluster-max audit column rides keep_best's own
-    # window pass (same exchange+sort) instead of a second docs-labels join
-    # + aggregate + kept-mx join — values identical (the DuckDB twin still
-    # computes the law independently); measured ~10% off this row.
-    chk = keep_best_per_cluster(docs, labels, "n_chars", max_col="__sq_mx")
-    return chk.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_kept"),
-        F.sum(F.when(F.col("n_chars") != F.col("__sq_mx"), 1).otherwise(0))
-        .cast("bigint").alias("n_quality_violations"),
-        F.sum("n_chars").cast("bigint").alias("kept_chars"),
-    ).orderBy("lang")
-
-
 def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail bucketing (r8 — Wenzek et al. 2020 §4.4: the
     per-language perplexity-tertile split that IS the published CCNet
@@ -2062,34 +1950,6 @@ def _stamp_bench_table(spark: SparkSession, t: str, sf_dir: str) -> None:
     )
 
 
-def q_persisted_gate_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BENCH-ONLY row (not in ``queries()``): probe the PERSISTED bucketed
-    band index through the streaming dedup gate. The index is built once
-    per session and reused across bench samples, so min-of-samples times
-    the at-rest PROBE alone — the 100 TB daily-ingest step: no corpus
-    re-signing, no corpus-side shuffle (plan asserted in
-    tests/test_plans.py). Output equality with the in-plan index is the
-    driver row ``persisted_index_gates``."""
-    from sequila_native_spark.functions.dedup import (
-        corpus_band_index,
-        stream_dedup_against_corpus,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    db = docs.where(F.col("doc_id") % 5 == 0)
-    dc = docs.where(F.col("doc_id") % 5 != 0)
-    t = "sq_bench_band_idx"
-    if _bench_table_stale(spark, t, sf_dir):
-        (corpus_band_index(dc, k=8, bands=4, hash_family="md5")
-         .write.bucketBy(8, "band_hash").sortBy("band_hash")
-         .saveAsTable(t))
-        _stamp_bench_table(spark, t, sf_dir)
-    return stream_dedup_against_corpus(
-        db, dc, k=8, bands=4, hash_family="md5",
-        corpus_index=spark.table(t),
-    )
-
-
 def _docs_10x(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10x documents: replica 0 is the real text, replicas 1-9 get a
     per-replica consonant substitution (``translate`` — pure codegen) so
@@ -2114,58 +1974,14 @@ def _docs_10x(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), reps)
 
 
-def _gate_corpus_10x(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """10x corpus for the at-rest gate scale row: :func:`_docs_10x` minus
-    the probe batch's ids (replica offsets are multiples of 5, so the
-    filter commutes with replication — same rows as filtering first).
-    The corpus grows 10x while the probe's candidate set stays ~flat —
-    corpus-size dependence isolated from output-size dependence."""
-    return _docs_10x(spark, sf_dir).where(F.col("doc_id") % 5 != 0)
-
-
-def q_persisted_gate_probe_10x(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BENCH-ONLY scale-trend row (VERDICT r7 item 6): the SAME probe batch
-    against a persisted band index over a 10x corpus. The at-rest claim is
-    that probe cost does not pay the corpus again: no re-signing (the only
-    Python/Arrow stage runs on the batch), no corpus-side exchange (bucket
-    layout feeds the candidate join). What remains corpus-sized is scan
-    only — the bucketed index scan and the verification text scan, both
-    columnar, shuffle-free, and broadcast-joined against batch-sized
-    sides — so the probe floor should grow FAR sublinearly vs the 10x
-    corpus (expected low single-digit ratio vs ``persisted_gate_probe``;
-    measured ratio recorded in DESIGN.md). Index built+persisted in
-    sample 1; later samples time the pure probe — min-of-samples is the
-    probe floor, the ``persisted_gate_probe`` methodology."""
-    from sequila_native_spark.functions.dedup import (
-        corpus_band_index,
-        stream_dedup_against_corpus,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    db = docs.where(F.col("doc_id") % 5 == 0)
-    dc10 = _gate_corpus_10x(spark, sf_dir)
-    t = "sq_bench_band_idx10"
-    if _bench_table_stale(spark, t, sf_dir):
-        (corpus_band_index(dc10, k=8, bands=4, hash_family="md5")
-         .write.bucketBy(8, "band_hash").sortBy("band_hash")
-         .saveAsTable(t))
-        _stamp_bench_table(spark, t, sf_dir)
-    return stream_dedup_against_corpus(
-        db, dc10, k=8, bands=4, hash_family="md5",
-        corpus_index=spark.table(t),
-    )
-
-
 def q_minhash_near_dups_10x(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BENCH-ONLY scale-trend row (VERDICT r11 item 2): the headline
     MinHash-LSH near-dup miner over a 10x corpus (:func:`_docs_10x` —
     replicas shingle-decorrelated, so candidates grow ~10x, never
-    all-pairs). Candidate generation is a banded equi-join on band hash —
-    the same shape DuckDB-green at 1x in ``minhash_near_dups`` — so the
-    expected 10x/1x ratio sits in the sublinear-to-linear band (fixed
-    Arrow/scheduling costs amortize; the reference's analogous size sweep
-    is ``databio_benchmark.rs:148-203``). The measured ratio is recorded
-    in the bench detail's ``scale_trend`` block each run."""
+    all-pairs). Candidate generation is a banded equi-join on band hash,
+    so the expected 10x/1x ratio sits in the sublinear-to-linear band
+    (fixed Arrow/scheduling costs amortize; the reference's analogous size
+    sweep is ``databio_benchmark.rs:148-203``)."""
     return minhash_pairs(
         _docs_10x(spark, sf_dir), k=8, bands=4, threshold_milli=200,
         hash_family="md5",
@@ -2205,8 +2021,7 @@ def q_embedding_near_dups_10x(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-corpus mining scales with corpus mass (10x blocks, unchanged
     block size), while the corpus-delta probe pays the bigger corpus
     only as a scan (batch fixed at replica 0's ids, broadcast side
-    unchanged). Measured 10x/1x ratio recorded in the bench detail's
-    ``scale_trend`` block."""
+    unchanged)."""
     from sequila_native_spark.functions import embedding_dups_against_corpus
 
     emb10 = _emb_10x(spark, sf_dir)
@@ -2286,20 +2101,6 @@ def _bench_ann_table(spark: SparkSession, sf_dir: str) -> str:
     return t
 
 
-def q_ann_index_topk_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BENCH-ONLY row: the pure SERVING side of ``ann_index_topk`` — top-k
-    off the persisted index alone (no in-plan comparison re-rank). Index
-    built+persisted in sample 1; later samples time serving only —
-    min-of-samples is the at-rest serving floor."""
-    from sequila_native_spark.functions import ann_topk_against_index
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") % 137 == 0)
-    opts = dict(n_planes=6, n_tables=4, seed=11)
-    t = _bench_ann_table(spark, sf_dir)
-    return ann_topk_against_index(queries, spark.table(t), 5, **opts)
-
-
 def _bench_ivf_tables(spark: SparkSession, sf_dir: str) -> None:
     """Build-and-persist the IVF pair (cells bucketed by cell, centroids
     model table) once per (session, sf_dir) — shared by the self-checking
@@ -2359,22 +2160,6 @@ def q_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint").alias("n_only_index"),
         F.sum(F.when(F.col("__sq_s").isNull(), 1).otherwise(0))
         .cast("bigint").alias("n_only_inplan"),
-    )
-
-
-def q_ivf_index_topk_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BENCH-ONLY row: pure IVF serving off the persisted pair — sample 1
-    trains+persists, later samples time serving only (min = the at-rest
-    IVF serving floor; compare `ivf_ann_topk` which retrains + reassigns
-    the corpus per call)."""
-    from sequila_native_spark.functions import ivf_topk_against_index
-
-    _bench_ivf_tables(spark, sf_dir)
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") % 137 == 0)
-    return ivf_topk_against_index(
-        queries, "sq_bench_ivf_idx", spark.table("sq_bench_ivf_cent"),
-        5, n_probe=4,
     )
 
 
@@ -2449,40 +2234,6 @@ def q_ivf_cell_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = row if out is None else out.unionAll(row)
     return out.orderBy("variant")
-
-
-def q_ivf_skew_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BENCH-ONLY scale row (r9): IVF serving against a PERSISTED index
-    over the SKEWED corpus, built with the cell-size guard
-    (``max_cell_frac=0.10``) — the output-matched twin of
-    ``ivf_index_topk_probe`` (same query set, same k, same corpus size).
-    The claim: with the guard, a dense embedding region does not turn one
-    cell into a straggler every probe scans, so the skewed probe floor
-    stays within ~1.3x of the uniform one. Sample 1 trains+persists;
-    later samples time the pure probe."""
-    from sequila_native_spark.functions import append_ivf_index, ivf_topk_against_index
-    from sequila_native_spark.functions.similarity import (
-        _train_centroids,
-        centroids_to_table,
-    )
-
-    skewed = _skewed_embeddings(spark, sf_dir)
-    corpus = skewed.where(F.col("vec_id") % 10 != 0)
-    queries = skewed.where(F.col("vec_id") % 137 == 0)
-    t = "sq_bench_ivf_skew_idx"
-    if _bench_table_stale(spark, t, sf_dir):
-        _clear_bench_table(spark, "sq_bench_ivf_skew_cent")
-        centers = _train_centroids(
-            corpus, "embedding", 16, 11, stable_id_col="vec_id",
-            max_cell_frac=0.10,
-        )
-        append_ivf_index(corpus, t, centers, buckets=8)
-        (centroids_to_table(spark, centers)
-         .write.mode("overwrite").saveAsTable("sq_bench_ivf_skew_cent"))
-        _stamp_bench_table(spark, t, sf_dir)
-    return ivf_topk_against_index(
-        queries, t, spark.table("sq_bench_ivf_skew_cent"), 5, n_probe=4,
-    )
 
 
 def q_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2970,7 +2721,7 @@ def q_overlap_count_10x(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_overlap_count_50x(spark: SparkSession, sf_dir: str) -> DataFrame:
     """50x scale trend (VERDICT r3 item 7): bench-only early-warning row —
     superlinearity shows up here two rounds before it could reach the
-    flagship. No oracle (bench.py runs it outside the headline total)."""
+    flagship. No oracle: past the cap, rows-only checked."""
     return _replicated_overlap_count(spark, sf_dir, 50)
 
 

@@ -171,6 +171,13 @@ def score_documents(
     broadcast strategy trusts the model table, as validating lazily would
     force an extra job per call). Every input document appears in the
     output — gramless docs score (0, 0).
+
+    ``id_col`` must be unique per row. The broadcast strategy groups by it
+    and joins the sum back, so rows sharing an id share one combined score;
+    ``inline`` and ``arrow`` score each row on its own.
+
+    ``inline`` and ``arrow`` collect the model table when called: one eager
+    Spark job before the returned frame's first action.
     """
     if strategy not in ("broadcast", "inline", "arrow"):
         raise ValueError(f"unknown strategy {strategy!r}")
@@ -280,23 +287,23 @@ def _score_documents_arrow(
     cap = SequilaConf.from_spark(spark).max_broadcast_build_rows
     if cap is not None and 0 < cap < int(buckets):
         return None
+    # Arrow keeps a nullable bigint exact; pandas would make it float64
     rows = (
-        weights.select("bucket", "weight_milli")
-        .limit(int(buckets) + 1).toPandas()
+        weights.select(
+            F.col("bucket").cast("bigint"), F.col("weight_milli").cast("bigint")
+        ).limit(int(buckets) + 1).toArrow()
     )
-    if len(rows) > int(buckets):
+    if rows.num_rows > int(buckets):
         return None  # more rows than declared buckets: trust the join plan
     wsum = np.zeros(int(buckets), dtype=np.int64)
     nrow = np.zeros(int(buckets), dtype=np.int64)
-    b_arr = rows["bucket"].to_numpy()
-    w_arr = rows["weight_milli"].to_numpy()
+    b_arr = rows.column("bucket").fill_null(-1).to_numpy()
+    w_arr = rows.column("weight_milli").fill_null(0).to_numpy()
     # a model row with a valid bucket joins (and counts) even when its
     # weight is null (coalesced to 0 by the join plan)
-    ok_b = pd.notna(b_arr) & (b_arr >= 0) & (b_arr < int(buckets))
-    np.add.at(nrow, b_arr[ok_b].astype(np.int64), 1)
-    ok_w = ok_b & pd.notna(w_arr)
-    np.add.at(wsum, b_arr[ok_w].astype(np.int64),
-              w_arr[ok_w].astype(np.int64))
+    ok_b = (b_arr >= 0) & (b_arr < int(buckets))
+    np.add.at(nrow, b_arr[ok_b], 1)
+    np.add.at(wsum, b_arr[ok_b], w_arr[ok_b])
     # a gram whose bucket has no (or a null-weight) model row still counts
     # once through the left join; k matched rows count k times
     contrib_n = np.maximum(nrow, 1)

@@ -186,8 +186,7 @@ def drop_stale_persisted(spark, *, only_tracked: bool = True) -> int:
     unpersist for checkpoints, so in a long-lived session those blocks
     accumulate until JVM eviction. Call this BETWEEN unrelated queries (never
     while a checkpointed frame from a still-live result is in use) to keep
-    block-manager memory flat; returns the number of RDDs dropped. bench.py
-    calls it per query.
+    block-manager memory flat; returns the number of RDDs dropped.
 
     By default only RDDs the library registered are touched — user
     ``.persist()``ed RDDs and user local checkpoints survive.

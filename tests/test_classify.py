@@ -3,6 +3,8 @@ Python reference, strategy equivalence, plan purity, invariances."""
 
 from __future__ import annotations
 
+import hashlib
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -88,14 +90,19 @@ def test_arrow_equals_broadcast(corpus, weights, word_ngrams):
 def test_arrow_handles_duplicate_and_null_model_rows(spark, corpus):
     """A malformed model (duplicate buckets, null weight, out-of-range
     bucket) must score identically through arrow and broadcast — the join
-    double-counts duplicates and the arrow twin reproduces that."""
+    double-counts duplicates and the arrow twin reproduces that. A weight
+    past 2^53 beside a null one stays exact: a float64 collect would round
+    it."""
+    big = 2**53 + 1
+    solo = int(hashlib.md5(f"{SEED}:solo".encode()).hexdigest()[:8], 16) % BUCKETS
     w = spark.createDataFrame(
-        [(3, 100), (3, 7), (5, None), (9999, 1), (None, 2), (7, -40)],
+        [(3, 100), (3, 7), (5, None), (9999, 1), (None, 2), (7, -40), (solo, big)],
         "bucket int, weight_milli bigint",
     )
     a = _spark_scores(corpus, w, strategy="arrow")
     b = _spark_scores(corpus, w, strategy="broadcast")
     assert a == b
+    assert a[5] == (1, big)
 
 
 def test_arrow_over_budget_falls_back_to_broadcast(spark, corpus, weights):

@@ -116,12 +116,16 @@ def test_ci_workflow_runs_the_real_gates():
     assert "License-File" in runs  # metadata carries the license wiring
 
 
-def test_benchmark_workflow_gates_at_150pct():
+def test_benchmark_workflow_gates_on_seqbench():
+    """CI runs the benchmark of record on parent and change and gates on
+    BENCHMARK.json's bounds; the retired harness is gone from it."""
     runs = "\n".join(s.get("run", "")
                      for s in _workflow("benchmark.yml")["jobs"]
                      ["benchmark"]["steps"])
-    assert "bench.py" in runs
-    assert "compare_bench.py" in runs and "--gate 1.5" in runs
+    assert "seqbench/run.py" in runs and "--trace 0" in runs
+    assert "tools/bench_gate.py" in runs
+    assert "BENCHMARK.json" in runs
+    assert "bench.py" not in runs and "compare_bench" not in runs
 
 
 def test_find_pattern_covers_all_subpackages():
