@@ -71,6 +71,7 @@ from sequila_native_spark.sql import (
     sequila_sql,
 )
 from sequila_native_spark.util import (
+    clear_index_cache,
     compact_index_table,
     drop_stale_persisted,
     index_table_file_stats,
@@ -91,6 +92,7 @@ __all__ = [
     "window_join",
     "fraction_predicate",
     "clear_bin_width_cache",
+    "clear_index_cache",
     "nearest_join",
     "count_overlaps",
     "overlap_count_agg",

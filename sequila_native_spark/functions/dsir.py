@@ -68,11 +68,19 @@ def hashed_ngram_counts(
     ``gram_array`` HOF explode — value-identical (same tokens, same md5
     recipe, integer counts are order-independent; pinned in
     tests/test_dsir.py) and measured faster interleaved. Bucket counts
-    over the accounted budget keep the explode plan."""
-    from sequila_native_spark.session import SequilaConf
+    over the accounted budget keep the explode plan: the Arrow pass holds
+    an ``8 * buckets``-byte accumulator per batch, so ``buckets`` must be
+    within ``maxBroadcastBuildRows`` and, even with that guard off, within
+    its default (an absolute ceiling)."""
+    from sequila_native_spark.session import (
+        DEFAULT_MAX_BROADCAST_BUILD_ROWS,
+        SequilaConf,
+    )
 
     cap = SequilaConf.from_spark(df.sparkSession).max_broadcast_build_rows
-    if cap is None or cap <= 0 or int(buckets) <= cap:
+    if int(buckets) <= DEFAULT_MAX_BROADCAST_BUILD_ROWS and (
+        cap is None or cap <= 0 or int(buckets) <= cap
+    ):
         return _hashed_ngram_counts_arrow(
             df, buckets=int(buckets), text_col=text_col, seed=seed,
             word_ngrams=word_ngrams,

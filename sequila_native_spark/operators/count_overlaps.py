@@ -24,6 +24,9 @@ Algorithms:
     with no per-candidate materialization — inverted intervals (start > end
     after strict normalization) route through the exact candidate-mask
     kernel instead.
+    The build is the coverage kernel's entry, kept in the session index
+    cache (``interval_join.broadcast_build``): over one unchanged file
+    input, count_overlaps and coverage share one collect and broadcast.
 
 :func:`overlap_count_agg` is the aggregated form of the same kernel:
 ``overlap_join(...).groupBy(keys).count()`` computed without emitting a
@@ -64,7 +67,9 @@ from sequila_native_spark.operators.interval_join import (
     _binned_pairs,
     _probe_spans,
     _with_bounds,
+    broadcast_build,
     compact_index_arrays,
+    guarded_build_arrow,
     guarded_build_pandas,
     resolve_bin_width,
 )
@@ -299,18 +304,64 @@ def _entry_from_sorted(starts_s: np.ndarray, ends_by_start: np.ndarray) -> tuple
     return compact_index_arrays(reg_s, reg_e, np.sort(reg_e), inv_s, inv_e)
 
 
-def _build_count_index(
-    lb: DataFrame, l_keys, *, single_job: bool = False,
-    use_arrow: bool = False, entry_from_sorted=None,
-) -> dict[tuple, tuple]:
-    """Collect the build side (guarded) into per-key index entries
-    (``entry_from_sorted`` is the per-group factory; default
-    :func:`_entry_from_sorted`, the count kernel's).
+def _cov_entry_from_sorted(starts_s: np.ndarray, ends_by_start: np.ndarray) -> tuple:
+    """Interval-sums entry from arrays already sorted by start — the
+    coverage kernel's, and a superset of the count kernel's.
 
-    ``single_job=True``: collect through ``limit(cap+1)`` — the limit caps
-    the driver materialization at cap+1 rows whatever the true build size,
-    so one bounded job replaces guarded_build_pandas' count-probe + collect
-    pair (each a full evaluation of the build projection).
+    Like :func:`_entry_from_sorted` (inverted rows split into their own
+    tiny subset) plus the two prefix-sum arrays the clipped-base identity
+    needs: ``Σ_overlaps min(le, qe) − Σ_overlaps max(ls, qs) + count``
+    decomposes over the same two prefix sets as the count (``{ls <= qe}``
+    minus ``{le < qs}``), so per probe the covered-base total is a handful
+    of binary searches + prefix-sum lookups. All-integer arithmetic —
+    exact, order-independent, identical to the pair join's
+    ``sum(clipped)``. Entry: ``(reg_starts_sorted, reg_ends_by_start,
+    reg_ends_sorted, prefix_ls, prefix_le_sorted, inv_starts_sorted,
+    inv_ends_by_start)``; :func:`_count_entry` is the count kernel's view."""
+    starts_s = starts_s.astype(np.int64, copy=False)
+    ends_by_start = ends_by_start.astype(np.int64, copy=False)
+    inv_mask = starts_s > ends_by_start
+    if inv_mask.any():
+        reg_s, reg_e = starts_s[~inv_mask], ends_by_start[~inv_mask]
+        inv_s, inv_e = starts_s[inv_mask], ends_by_start[inv_mask]
+    else:
+        reg_s, reg_e = starts_s, ends_by_start
+        inv_s = inv_e = starts_s[:0]
+    e_sorted = np.sort(reg_e)
+    ps_ls = np.zeros(len(reg_s) + 1, dtype=np.int64)
+    np.cumsum(reg_s, out=ps_ls[1:])
+    ps_le = np.zeros(len(e_sorted) + 1, dtype=np.int64)
+    np.cumsum(e_sorted, out=ps_le[1:])
+    return (reg_s, reg_e, e_sorted, ps_ls, ps_le, inv_s, inv_e)
+
+
+def _count_entry(entry: tuple) -> tuple:
+    """The count kernel's entry (see :func:`_entry_from_sorted`) inside an
+    interval-sums entry: everything but the prefix sums."""
+    reg_s, reg_e, e_sorted, _, _, inv_s, inv_e = entry
+    return reg_s, reg_e, e_sorted, inv_s, inv_e
+
+
+def _sums_index(lb: DataFrame, l_keys, use_arrow: bool):
+    """Broadcast of ``lb``'s per-key interval-sums index
+    (:func:`_cov_entry_from_sorted`). count_overlaps and coverage both
+    probe it, so over one input they share one cached build."""
+    return broadcast_build(
+        lb, ("interval_sums", tuple(l_keys)),
+        lambda: _build_count_index(
+            lb, l_keys, use_arrow=use_arrow,
+            entry_from_sorted=_cov_entry_from_sorted,
+        ),
+    )
+
+
+def _build_count_index(
+    lb: DataFrame, l_keys, *, use_arrow: bool = False, entry_from_sorted=None,
+) -> tuple[dict[tuple, tuple], int]:
+    """Collect the build side (guarded, one job) into per-key index entries
+    (``entry_from_sorted`` is the per-group factory; default
+    :func:`_entry_from_sorted`, the count kernel's). Returns the index and
+    the number of rows collected.
 
     ``use_arrow=True`` (0/1 simple key only): collect with ``toArrow`` and
     group via dictionary codes + one lexsort — no per-row python string
@@ -318,27 +369,17 @@ def _build_count_index(
     (guide §4.2: hand whole batches to vectorized native code).
     """
     entry_fn = entry_from_sorted or _entry_from_sorted
-    if use_arrow and single_job and len(l_keys) <= 1:
-        from sequila_native_spark.session import SequilaConf
-
-        cap = SequilaConf.from_spark(lb.sparkSession).max_broadcast_build_rows
-        if cap is not None and cap > 0:
-            tbl = lb.limit(cap + 1).toArrow()
-            if tbl.num_rows > cap:
-                raise BuildSideTooLargeError(
-                    f"build side has more than {cap} rows; broadcast-index "
-                    f"collect would risk a driver OOM."
-                )
-        else:
-            tbl = lb.toArrow()
+    index: dict[tuple, tuple] = {}
+    if use_arrow and len(l_keys) <= 1:
+        tbl = guarded_build_arrow(lb)
+        rows = tbl.num_rows
         ok = pc.and_(pc.is_valid(tbl[_LS]), pc.is_valid(tbl[_LE]))
         if l_keys:
             ok = pc.and_(ok, pc.is_valid(tbl[l_keys[0]]))
         if tbl.num_rows and not pc.all(ok).as_py():
             tbl = tbl.filter(ok)
-        index: dict[tuple, tuple] = {}
         if tbl.num_rows == 0:
-            return index
+            return index, rows
         starts = tbl[_LS].combine_chunks().to_numpy()
         ends = tbl[_LE].combine_chunks().to_numpy()
         if l_keys:
@@ -357,28 +398,13 @@ def _build_count_index(
         else:
             order = np.argsort(starts, kind="stable")
             index[()] = entry_fn(starts[order], ends[order])
-        return index
+        return index, rows
 
-    if single_job:
-        from sequila_native_spark.session import SequilaConf
-
-        cap = SequilaConf.from_spark(lb.sparkSession).max_broadcast_build_rows
-        if cap is not None and cap > 0:
-            left_pdf = lb.limit(cap + 1).toPandas()
-            if len(left_pdf) > cap:
-                raise BuildSideTooLargeError(
-                    f"build side has more than {cap} rows; broadcast-index "
-                    f"collect would risk a driver OOM."
-                )
-        else:
-            left_pdf = lb.toPandas()
-    else:
-        left_pdf = guarded_build_pandas(lb)
+    left_pdf = guarded_build_pandas(lb)
     valid = left_pdf[_LS].notna() & left_pdf[_LE].notna()
     for k in l_keys:
         valid &= left_pdf[k].notna()
     build = left_pdf[valid]
-    index: dict[tuple, tuple] = {}
     if len(build):
         group_iter = build.groupby(list(l_keys), sort=False) if l_keys else [((), build)]
         for key, grp in group_iter:
@@ -388,7 +414,7 @@ def _build_count_index(
                 grp[_LS].to_numpy(np.int64), grp[_LE].to_numpy(np.int64),
                 entry_fn,
             )
-    return index
+    return index, len(left_pdf)
 
 
 def _index_count(
@@ -405,9 +431,7 @@ def _index_count(
     """
     rb = _with_bounds(right_orig, right_start, right_end, _RS, _RE, strict, check)
     use_arrow = _arrow_keys(lb, l_keys)
-    index = _build_count_index(lb, l_keys, single_job=True, use_arrow=use_arrow)
-
-    bc = lb.sparkSession.sparkContext.broadcast(index)
+    bc = _sums_index(lb, l_keys, use_arrow)
     out_schema = StructType(
         list(right_orig.schema.fields) + [StructField(count_col, LongType(), False)]
     )
@@ -418,7 +442,7 @@ def _index_count(
         out_names = list(right_out_cols)
 
         def probe_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            idx_map = bc.value
+            idx_map = {k: _count_entry(e) for k, e in bc.value.items()}
             i_rs = i_re = i_k = None
             for batch in batches:
                 n = batch.num_rows
@@ -470,7 +494,7 @@ def _index_count(
         )
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx_map = bc.value
+        idx_map = {k: _count_entry(e) for k, e in bc.value.items()}
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -547,9 +571,8 @@ def overlap_count_agg(
     index = None
     if not sides.mixed_keys:
         try:
-            index = _build_count_index(
-                lb.select(*l_keys, _LS, _LE), l_keys, single_job=True,
-                use_arrow=use_arrow,
+            index, _ = _build_count_index(
+                lb.select(*l_keys, _LS, _LE), l_keys, use_arrow=use_arrow,
             )
         except BuildSideTooLargeError:
             pass

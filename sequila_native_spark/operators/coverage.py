@@ -46,36 +46,6 @@ from sequila_native_spark.util import stamp_row_id
 _PID = "__sq_probe_id"
 
 
-def _cov_entry_from_sorted(starts_s: np.ndarray, ends_by_start: np.ndarray) -> tuple:
-    """Coverage-index entry from arrays already sorted by start.
-
-    Like the count kernel's entry (inverted rows split into their own tiny
-    subset — see count_overlaps._entry_from_sorted) plus the two prefix-sum
-    arrays the clipped-base identity needs: ``Σ_overlaps min(le, qe) −
-    Σ_overlaps max(ls, qs) + count`` decomposes over the same two prefix
-    sets as the count (``{ls <= qe}`` minus ``{le < qs}``), so per probe the
-    covered-base total is a handful of binary searches + prefix-sum
-    lookups. All-integer arithmetic — exact, order-independent, identical
-    to the pair join's ``sum(clipped)``. Entry: ``(reg_starts_sorted,
-    reg_ends_by_start, reg_ends_sorted, prefix_ls, prefix_le_sorted,
-    inv_starts_sorted, inv_ends_by_start)``."""
-    starts_s = starts_s.astype(np.int64, copy=False)
-    ends_by_start = ends_by_start.astype(np.int64, copy=False)
-    inv_mask = starts_s > ends_by_start
-    if inv_mask.any():
-        reg_s, reg_e = starts_s[~inv_mask], ends_by_start[~inv_mask]
-        inv_s, inv_e = starts_s[inv_mask], ends_by_start[inv_mask]
-    else:
-        reg_s, reg_e = starts_s, ends_by_start
-        inv_s = inv_e = starts_s[:0]
-    e_sorted = np.sort(reg_e)
-    ps_ls = np.zeros(len(reg_s) + 1, dtype=np.int64)
-    np.cumsum(reg_s, out=ps_ls[1:])
-    ps_le = np.zeros(len(e_sorted) + 1, dtype=np.int64)
-    np.cumsum(e_sorted, out=ps_le[1:])
-    return (reg_s, reg_e, e_sorted, ps_ls, ps_le, inv_s, inv_e)
-
-
 def _mask_cov(
     starts_s: np.ndarray, ends_bs: np.ndarray, qs: np.ndarray, qe: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray]:
@@ -149,23 +119,19 @@ def _index_coverage(
 ):
     """Broadcast build arrays, streaming vectorized probe, zero shuffle —
     the coverage twin of count_overlaps._index_count (same Arrow probe
-    gate, same guarded single-job build collect)."""
+    gate, and the same cached index build: over one input the two
+    operators share one broadcast)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     from sequila_native_spark.operators.count_overlaps import (
         _arrow_keys,
-        _build_count_index,
+        _sums_index,
     )
 
     rb = _with_bounds(right_orig, right_start, right_end, _RS, _RE, strict, check)
     use_arrow = _arrow_keys(lb, l_keys)
-    index = _build_count_index(
-        lb, l_keys, single_job=True, use_arrow=use_arrow,
-        entry_from_sorted=_cov_entry_from_sorted,
-    )
-
-    bc = lb.sparkSession.sparkContext.broadcast(index)
+    bc = _sums_index(lb, l_keys, use_arrow)
     out_schema = StructType(
         list(right_orig.schema.fields)
         + [StructField(count_col, LongType(), False),

@@ -53,9 +53,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sequila_native_spark.operators.intervals import (
-    checked_i32,
+    I32_MAX,
+    I32_MIN,
     fraction_predicate,
-    normalize_strict,
     overlap_predicate,
     validate_sides,
 )
@@ -190,24 +190,68 @@ def compact_index_arrays(*arrays: np.ndarray) -> tuple[np.ndarray, ...]:
     return tuple(out)
 
 
-def guarded_build_pandas(df: DataFrame, max_rows: int | None = None) -> pd.DataFrame:
-    """``df.toPandas()`` with a row-count guard.
-
-    Probes ``limit(max+1).count()`` first — a cheap bounded scan — and raises
-    :class:`BuildSideTooLargeError` instead of collecting when the build side
-    exceeds ``spark.sequila.maxBroadcastBuildRows`` (≤0 disables the guard).
-    """
+def _capped_collect(df: DataFrame, max_rows: int | None, collect):
     if max_rows is None:
         max_rows = SequilaConf.from_spark(df.sparkSession).max_broadcast_build_rows
-    if max_rows is not None and max_rows > 0:
-        seen = df.limit(max_rows + 1).count()
-        if seen > max_rows:
-            raise BuildSideTooLargeError(
-                f"build side has more than {max_rows} rows; broadcast-index "
-                f"collect would risk a driver OOM. Use algorithm='partitioned' "
-                f"or 'binning', or raise spark.sequila.maxBroadcastBuildRows."
-            )
-    return df.toPandas()
+    if max_rows is None or max_rows <= 0:
+        return collect(df)
+    got = collect(df.limit(max_rows + 1))
+    if len(got) > max_rows:
+        raise BuildSideTooLargeError(_too_large(max_rows))
+    return got
+
+
+def _too_large(max_rows: int) -> str:
+    return (
+        f"build side has more than {max_rows} rows; broadcast-index "
+        f"collect would risk a driver OOM. Use algorithm='partitioned' "
+        f"or 'binning', or raise spark.sequila.maxBroadcastBuildRows."
+    )
+
+
+def guarded_build_pandas(df: DataFrame, max_rows: int | None = None) -> pd.DataFrame:
+    """``df.toPandas()`` under a row cap, in one job.
+
+    Collects ``limit(max + 1)``, so at most max + 1 rows reach the driver
+    whatever the true size, and raises :class:`BuildSideTooLargeError`
+    instead of returning when the build side exceeds
+    ``spark.sequila.maxBroadcastBuildRows`` (≤0 disables the guard). Under
+    :func:`sequila_session` the collect is an Arrow collect.
+    """
+    return _capped_collect(df, max_rows, lambda d: d.toPandas())
+
+
+def guarded_build_arrow(df: DataFrame, max_rows: int | None = None):
+    """:func:`guarded_build_pandas` returning the ``pyarrow.Table``."""
+    return _capped_collect(df, max_rows, lambda d: d.toArrow())
+
+
+_PANDAS_CONVERSION_CONFS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.execution.arrow.pyspark.enabled",
+    "spark.sql.execution.pandas.structHandlingMode",
+)
+
+
+def broadcast_build(df: DataFrame, kind: tuple, build):
+    """Broadcast the index ``build()`` makes from ``df``, built once per
+    input: ``build()`` returns ``(index, rows)`` and collects through the
+    guarded helpers above; its broadcast is served from the session index
+    cache (:func:`~sequila_native_spark.util.cached_broadcast`) while
+    ``df``'s plan and input files are unchanged. A cached entry over the
+    current row cap raises like a fresh collect would, so lowering
+    ``spark.sequila.maxBroadcastBuildRows`` still forces the fallback."""
+    from sequila_native_spark.util import cached_broadcast
+
+    # the settings toPandas converts under (time zone, Arrow, structs) shape
+    # the collected values, so they are part of the entry's identity
+    spark = df.sparkSession
+    conv = tuple(spark.conf.get(k, None) for k in _PANDAS_CONVERSION_CONFS)
+    bc, rows = cached_broadcast(df, (*kind, conv), build)
+    cap = SequilaConf.from_spark(spark).max_broadcast_build_rows
+    if cap is not None and 0 < cap < rows:
+        raise BuildSideTooLargeError(_too_large(cap))
+    return bc
 
 
 def _probe_spans(
@@ -301,24 +345,41 @@ def _with_bounds(
 
     The reference casts bounds to Int32 inside the exec via an injected
     ``CastExpr`` (``interval_join.rs:1661-1672``); output columns keep their
-    declared types. We mirror that with temp columns.
+    declared types. We mirror that with temp columns, both built in one
+    ``selectExpr``: each Column-API call pays PySpark's call-site capture,
+    and the chained form cost ~2.5x more driver time per side.
     """
-    # normalize BEFORE the i32 check, in 64-bit: the old order applied
-    # `end - 1` to the already-cast int32, which at end == I32_MIN either
-    # raises an ANSI overflow or silently wraps to +I32_MAX (an interval
-    # that strictly-overlaps nearly everything). Shrinking first makes the
-    # boundary case surface as the documented int32-bounds ERROR instead
-    # (reviewer, r7).
-    s_col: Column = F.col(start).cast("long")
-    e_col: Column = F.col(end).cast("long")
-    s_col, e_col = normalize_strict(s_col, e_col, strict)
-    if check_bounds:
-        s_col = checked_i32(s_col, s_tmp)
-        e_col = checked_i32(e_col, e_tmp)
-    else:
-        s_col = s_col.cast("int")
-        e_col = e_col.cast("int")
-    return df.withColumn(s_tmp, s_col).withColumn(e_tmp, e_col)
+    return df.selectExpr(
+        "*",
+        _bound_sql(start, s_tmp, False, check_bounds),
+        _bound_sql(end, e_tmp, strict, check_bounds),
+    )
+
+
+def _bound_sql(col: str, name: str, shrink: bool, check: bool) -> str:
+    """SQL for one int32 bound column.
+
+    Strict normalization (``intervals.rs:67-69``) shrinks the end by 1
+    BEFORE the i32 check, in 64-bit: at end == I32_MIN the shrunk value
+    must surface as the documented int32-bounds error, not an ANSI
+    overflow or a wrap to +I32_MAX. With ``check`` an out-of-range value
+    raises the reference's error (``Cast error: Can't cast value
+    2147483648 to type Int32``, ``interval_join.rs:1927-1968``) instead of
+    wrapping; ``raise_error`` keeps the check inside whole-stage codegen.
+    The quote in "Can't" is ``chr(39)``, so the text does not depend on
+    the parser's string-escape settings.
+    """
+    v = "CAST(`%s` AS BIGINT)" % col.replace("`", "``")
+    if shrink:
+        v = f"({v} - 1)"
+    if not check:
+        return f"CAST({v} AS INT) AS `{name}`"
+    return (
+        f"CASE WHEN {v} < {I32_MIN} OR {v} > {I32_MAX} THEN CAST(raise_error("
+        f"concat('Cast error: Can', chr(39), 't cast value ', CAST({v} AS STRING), "
+        f"' to type Int32 (column {name})')) AS INT) "
+        f"ELSE CAST({v} AS INT) END AS `{name}`"
+    )
 
 
 def _bin_of(col: Column, width: int) -> Column:

@@ -119,44 +119,6 @@ def validate_sides(
     return IntervalSides(keys, left_start, left_end, right_start, right_end, mixed)
 
 
-def checked_i32(col: Column, name: str) -> Column:
-    """Cast a bound to int with the reference's overflow-*error* semantics.
-
-    Vanilla Spark ``cast("int")`` wraps silently; the reference raises
-    ``Cast error: Can't cast value 2147483648 to type Int32``
-    (``interval_join.rs:1927-1968``). ``raise_error`` keeps the check inside
-    whole-stage codegen (no UDF).
-    """
-    bad = (col < F.lit(I32_MIN)) | (col > F.lit(I32_MAX))
-    return (
-        F.when(
-            bad,
-            F.raise_error(
-                F.concat(
-                    F.lit(f"Cast error: Can't cast value "),
-                    col.cast("string"),
-                    F.lit(f" to type Int32 (column {name})"),
-                )
-            ).cast("int"),
-        )
-        .otherwise(col.cast("int"))
-        .alias(name)
-    )
-
-
-def normalize_strict(start: Column, end: Column, strict: bool) -> tuple[Column, Column]:
-    """Strict→inclusive normalization (``intervals.rs:67-69``).
-
-    A strict-overlap query ``ls < re AND le > rs`` over integer coordinates
-    equals the closed-interval query on ``[ls, le-1]`` vs ``[rs, re-1]``...
-    more precisely we shrink each *end* bound by 1 so the single closed
-    kernel serves both predicate families.
-    """
-    if not strict:
-        return start, end
-    return start, end - F.lit(1)
-
-
 def overlap_predicate(
     l_start: Column, l_end: Column, r_start: Column, r_end: Column
 ) -> Column:

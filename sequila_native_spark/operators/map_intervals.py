@@ -39,6 +39,7 @@ from sequila_native_spark.operators.interval_join import (
     _binned_pairs,
     _probe_spans,
     _with_bounds,
+    guarded_build_arrow,
     resolve_bin_width,
 )
 from sequila_native_spark.operators.intervals import (
@@ -109,18 +110,7 @@ def _build_map_index(lb: DataFrame, l_keys: list[str]) -> dict[tuple, tuple]:
     the count kernel's build shape plus the stamped row id so per-batch
     partials can be re-attached to left rows. Raises
     :class:`BuildSideTooLargeError` past ``maxBroadcastBuildRows``."""
-    from sequila_native_spark.session import SequilaConf
-
-    cap = SequilaConf.from_spark(lb.sparkSession).max_broadcast_build_rows
-    if cap is not None and cap > 0:
-        tbl = lb.limit(cap + 1).toArrow()
-        if tbl.num_rows > cap:
-            raise BuildSideTooLargeError(
-                f"build side has more than {cap} rows; broadcast-index "
-                f"collect would risk a driver OOM."
-            )
-    else:
-        tbl = lb.toArrow()
+    tbl = guarded_build_arrow(lb)
     # rows with null key/bounds can never match a pair; the final left join
     # still emits them with the null-group defaults
     ok = pc.and_(pc.is_valid(tbl[_LS]), pc.is_valid(tbl[_LE]))

@@ -34,7 +34,9 @@ Algorithms:
 ``index``
     Broadcast per-key sorted arrays + ``mapInPandas`` probe (zero shuffle,
     O(log n)/row). Build side must fit in driver/executor memory — guarded by
-    ``spark.sequila.maxBroadcastBuildRows``.
+    ``spark.sequila.maxBroadcastBuildRows``. The build is collected in one
+    job and kept in the session index cache, so repeated calls over one
+    unchanged file input (any ``k`` or ``ignore_*`` flags) reuse it.
 
 ``partitioned`` (default scale path)
     The reference's Partitioned mode applied to nearest
@@ -78,6 +80,7 @@ from sequila_native_spark.operators.interval_join import (
     _disambiguate,
     _probe_spans,
     _with_bounds,
+    broadcast_build,
     compact_build_pandas,
     compact_index_arrays,
     decompose_build,
@@ -706,30 +709,36 @@ def _probe_broadcast_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
 
 
 def _index_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
-    spark = lb.sparkSession
     left_cols = [c for c in out_cols if c in lb.columns]
     right_cols = [c for c in out_cols if c not in lb.columns]
 
-    left_pdf = guarded_build_pandas(lb)
-    valid = left_pdf[_LS].notna() & left_pdf[_LE].notna()
-    for kc in l_keys:
-        valid &= left_pdf[kc].notna()
-    build = left_pdf[valid]
-    index: dict[tuple, tuple] = {}
-    if len(build):
-        group_iter = build.groupby(list(l_keys), sort=False) if l_keys else [((), build)]
-        for key, grp in group_iter:
-            if l_keys and not isinstance(key, tuple):
-                key = (key,)
-            starts, ends, runmax, argmax_first, order = _build_nearest_arrays(
-                grp[_LS].to_numpy(np.int64), grp[_LE].to_numpy(np.int64)
+    def build():
+        # one guarded collect of the whole build side (bounds + payload)
+        left_pdf = guarded_build_pandas(lb)
+        valid = left_pdf[_LS].notna() & left_pdf[_LE].notna()
+        for kc in l_keys:
+            valid &= left_pdf[kc].notna()
+        build_rows = left_pdf[valid]
+        index: dict[tuple, tuple] = {}
+        if len(build_rows):
+            group_iter = (
+                build_rows.groupby(list(l_keys), sort=False)
+                if l_keys else [((), build_rows)]
             )
-            index[key] = compact_index_arrays(
-                starts, ends, runmax, argmax_first, grp.index.to_numpy()[order]
-            )
+            for key, grp in group_iter:
+                if l_keys and not isinstance(key, tuple):
+                    key = (key,)
+                starts, ends, runmax, argmax_first, order = _build_nearest_arrays(
+                    grp[_LS].to_numpy(np.int64), grp[_LE].to_numpy(np.int64)
+                )
+                index[key] = compact_index_arrays(
+                    starts, ends, runmax, argmax_first, grp.index.to_numpy()[order]
+                )
+        return (index, compact_build_pandas(left_pdf[left_cols])), len(left_pdf)
 
-    left_out = compact_build_pandas(left_pdf[left_cols])
-    bc = spark.sparkContext.broadcast((index, left_out))
+    # left_cols is lb's columns minus the bounds, so the entry depends on lb
+    # and the keys alone — k and the ignore_* flags act in the probe
+    bc = broadcast_build(lb, ("nearest", tuple(l_keys)), build)
     out_schema = _nearest_out_schema(lb, rb, left_cols, right_cols)
     rk_list = list(r_keys)
 

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import threading
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame
 
 # Analyzed-plan node names that introduce a shuffle or other source of
@@ -130,6 +133,176 @@ def session_scoped_cache(spark, store: dict) -> dict:
 
 
 _PARTS_CACHE: dict = {}
+
+
+# Session index cache: built broadcast indexes, so repeated operator calls
+# over one unchanged input build and broadcast once — the analogue of the
+# reference's ``OnceAsync`` build shared by every probe partition. Bounded
+# by the summed array bytes of its entries; an entry larger than the whole
+# bound is used once and not kept.
+INDEX_CACHE_MAX_BYTES = 256 << 20
+_INDEX_CACHES: dict = {}
+_INDEX_LOCK = threading.Lock()
+
+
+@dataclass
+class _IndexEntry:
+    plan: object  # the build frame's analyzed plan (JVM), for sameResult
+    files: tuple  # (path, size, mtime_ns) per input file at build time
+    bc: object  # the Broadcast of the built index
+    rows: int  # build rows collected
+    nbytes: int
+
+
+def _input_files(plan) -> list[str] | None:
+    """Files every leaf of an analyzed plan reads, or None when any leaf is
+    not a file relation (``LogicalRDD``, ``LocalRelation``, ``Range``, a
+    v2 source…): only file contents can be checked for change."""
+    leaves = plan.collectLeaves()
+    files: list[str] = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if not leaf.getClass().getName().endswith(".LogicalRelation"):
+            return None
+        rel = leaf.relation()
+        if not rel.getClass().getName().endswith(".HadoopFsRelation"):
+            return None
+        files.extend(rel.location().inputFiles())
+    return files
+
+
+def _file_stats(spark, files: list[str]) -> tuple | None:
+    """``(path, size, mtime_ns)`` per file, stat'ed now (local files with
+    ``os.stat``, others through their Hadoop file system); None when a
+    file cannot be stat'ed."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    out = []
+    for f in sorted(files):
+        u = urlparse(f)
+        try:
+            if u.scheme in ("", "file"):
+                st = os.stat(unquote(u.path))
+                out.append((f, st.st_size, st.st_mtime_ns))
+            else:
+                jvm = spark.sparkContext._jvm
+                path = jvm.org.apache.hadoop.fs.Path(f)
+                st = path.getFileSystem(
+                    spark.sparkContext._jsc.hadoopConfiguration()
+                ).getFileStatus(path)
+                out.append((f, st.getLen(), st.getModificationTime()))
+        except Exception:
+            return None
+    return tuple(out)
+
+
+def _index_key(df: DataFrame, kind: tuple):
+    """``(bucket, plan, files)`` for a cacheable build frame, else None.
+
+    Cacheable means: batch, deterministic, no subquery, and every leaf a
+    file relation. The bucket is ``(kind, semanticHash)``; a hit also needs
+    ``sameResult`` on the plans and equal file stats."""
+    if df.isStreaming:
+        return None
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if not plan.deterministic() or plan.subqueriesAll().nonEmpty():
+            return None
+        files = _input_files(plan)
+        stats = None if files is None else _file_stats(df.sparkSession, files)
+        if stats is None:
+            return None
+        return (kind, plan.semanticHash()), plan, stats
+    except Exception:  # Connect or API drift: never cache
+        return None
+
+
+def _nbytes(value) -> int:
+    """Array bytes of a built index (dicts/tuples of numpy arrays and
+    pandas frames)."""
+    import numpy as np
+    import pandas as pd
+
+    if isinstance(value, np.ndarray):
+        return value.nbytes
+    if isinstance(value, pd.DataFrame):
+        return int(value.memory_usage(index=True).sum())
+    if isinstance(value, dict):
+        return sum(_nbytes(v) for v in value.values())
+    if isinstance(value, (tuple, list)):
+        return sum(_nbytes(v) for v in value)
+    return 0
+
+
+def _drop_entry(e: _IndexEntry) -> None:
+    # unpersist, never destroy: a lazy frame from an earlier call may still
+    # read this broadcast; Spark re-sends it from the driver if it does
+    try:
+        e.bc.unpersist()
+    except Exception:
+        pass
+
+
+def cached_broadcast(df: DataFrame, kind: tuple, build):
+    """``(broadcast, rows)`` of the index ``build()`` makes over ``df``,
+    built once per input.
+
+    ``build()`` collects ``df`` and returns ``(index, rows)``. Its broadcast
+    is kept in the session index cache when ``df`` is cacheable (see
+    :func:`_index_key`) and served again for any later frame with the same
+    ``kind``, the same result (``sameResult`` on the analyzed plans) and
+    unchanged input files. An entry whose plan matches but whose files
+    changed is dropped. Callers re-check ``rows`` against their row cap, so
+    a lowered cap still forces their fallback."""
+    spark = df.sparkSession
+    found = _index_key(df, kind)
+    if found:
+        key, plan, files = found
+        with _INDEX_LOCK:
+            cache = session_scoped_cache(spark, _INDEX_CACHES)
+            bucket = cache.pop(key, [])
+            for e in list(bucket):
+                if e.plan.sameResult(plan):
+                    if e.files == files:
+                        cache[key] = bucket  # re-inserted: most recently used
+                        return e.bc, e.rows
+                    bucket.remove(e)  # the files changed under this plan
+                    _drop_entry(e)
+            if bucket:
+                cache[key] = bucket
+    index, rows = build()
+    bc = spark.sparkContext.broadcast(index)
+    nbytes = _nbytes(index)
+    if found and nbytes <= INDEX_CACHE_MAX_BYTES:
+        entry = _IndexEntry(plan, files, bc, rows, nbytes)
+        with _INDEX_LOCK:
+            cache = session_scoped_cache(spark, _INDEX_CACHES)
+            cache[key] = [*cache.pop(key, []), entry]
+            total = sum(e.nbytes for b in cache.values() for e in b)
+            while total > INDEX_CACHE_MAX_BYTES:  # least recently used first
+                oldest = next(iter(cache))
+                e = cache[oldest].pop(0)
+                if not cache[oldest]:
+                    del cache[oldest]
+                total -= e.nbytes
+                _drop_entry(e)
+    return bc, rows
+
+
+def clear_index_cache(spark=None) -> None:
+    """Drop cached broadcast indexes (all sessions, or one), unpersisting
+    their broadcasts."""
+    with _INDEX_LOCK:
+        stores = (
+            list(_INDEX_CACHES.values()) if spark is None
+            else [session_scoped_cache(spark, _INDEX_CACHES)]
+        )
+        for cache in stores:
+            for bucket in cache.values():
+                for e in bucket:
+                    _drop_entry(e)
+            cache.clear()
 
 # RDD ids of the library's own localCheckpoints, per session — what
 # drop_stale_persisted is allowed to unpersist. Registered by

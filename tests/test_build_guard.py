@@ -9,9 +9,19 @@ from __future__ import annotations
 
 import pytest
 
-from sequila_native_spark import count_overlaps, nearest_join, overlap_join
+from sequila_native_spark import (
+    count_overlaps,
+    coverage,
+    map_intervals,
+    nearest_join,
+    overlap_count_agg,
+    overlap_join,
+)
 from sequila_native_spark.operators.interval_join import (
+    _LE,
+    _LS,
     BuildSideTooLargeError,
+    _with_bounds,
     guarded_build_pandas,
 )
 from sequila_native_spark.session import MAX_BROADCAST_BUILD_ROWS
@@ -64,3 +74,55 @@ def test_count_overlaps_index_falls_back_to_binning(spark, tiny_cap, reads, targ
     got = count_overlaps(reads, targets, on="contig", algorithm="index")
     want = count_overlaps(reads, targets, on="contig", algorithm="binning")
     assert rows_set(got) == rows_set(want)
+
+
+def _no_python_probe(df):
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "MapInArrow" not in plan and "MapInPandas" not in plan, plan
+    return df
+
+
+def test_coverage_index_falls_back_to_binning(spark, tiny_cap, reads, targets):
+    got = _no_python_probe(coverage(reads, targets, on="contig", algorithm="index"))
+    want = coverage(reads, targets, on="contig", algorithm="binning")
+    assert rows_set(got) == rows_set(want)
+
+
+def test_overlap_count_agg_falls_back_to_binning(spark, tiny_cap, reads, targets):
+    got = _no_python_probe(overlap_count_agg(reads, targets, on="contig"))
+    want = (
+        overlap_join(reads, targets, on="contig", algorithm="binning", rsuffix="_r")
+        .groupBy("contig").count()
+    )
+    assert rows_set(got) == rows_set(want)
+
+
+def test_map_intervals_index_falls_back_to_binning(spark, tiny_cap, reads, targets):
+    aggs = {"n": ("count", None), "s": ("sum", "pos_start")}
+    got = _no_python_probe(
+        map_intervals(reads, targets, "contig", aggs=aggs, algorithm="index")
+    )
+    want = map_intervals(reads, targets, "contig", aggs=aggs, algorithm="binning")
+    assert rows_set(got) == rows_set(want)
+
+
+@pytest.mark.parametrize("strict, start, end, value, column", [
+    (False, 1, 2**31, "2147483648", _LE),
+    (True, 1, 2**31 + 1, "2147483648", _LE),  # the end shrinks first
+    (False, -(2**31) - 1, 0, "-2147483649", _LS),
+    (True, 0, -(2**31), "-2147483649", _LE),
+])
+def test_with_bounds_int32_error_text(spark, strict, start, end, value, column):
+    df = spark.createDataFrame([(start, end)], "s long, e long")
+    with pytest.raises(
+        Exception,
+        match=rf"Cast error: Can't cast value {value} to type Int32 \(column {column}\)",
+    ):
+        _with_bounds(df, "s", "e", _LS, _LE, strict, True).collect()
+
+
+@pytest.mark.parametrize("strict", [False, True])
+def test_with_bounds_in_range_values(spark, strict):
+    df = spark.createDataFrame([(-(2**31), 2**31 - 1)], "s long, e long")
+    (row,) = _with_bounds(df, "s", "e", _LS, _LE, strict, True).collect()
+    assert (row[_LS], row[_LE]) == (-(2**31), 2**31 - 1 - strict)

@@ -114,6 +114,30 @@ def test_hashed_ngram_counts_arrow_equals_explode(spark, raw_df):
     assert arrow == explode
 
 
+def test_hashed_ngram_counts_bucket_ceiling_with_guard_off(spark, raw_df):
+    """With the broadcast guard off (cap ≤ 0), a bucket count past the
+    default cap still takes the explode plan: the Arrow pass allocates
+    ``np.zeros(buckets)`` per batch, so its ceiling does not depend on
+    the conf. Plan only — no action runs."""
+    from sequila_native_spark.session import (
+        DEFAULT_MAX_BROADCAST_BUILD_ROWS,
+        MAX_BROADCAST_BUILD_ROWS,
+    )
+
+    def plan(buckets):
+        df = hashed_ngram_counts(raw_df, buckets=buckets, seed=SEED)
+        return df._jdf.queryExecution().analyzed().toString()
+
+    spark.conf.set(MAX_BROADCAST_BUILD_ROWS, "0")
+    try:
+        over = plan(DEFAULT_MAX_BROADCAST_BUILD_ROWS + 1)
+        under = plan(BUCKETS)
+    finally:
+        spark.conf.unset(MAX_BROADCAST_BUILD_ROWS)
+    assert "Generate explode" in over and "MapInPandas" not in over
+    assert "MapInPandas" in under
+
+
 def test_dsir_weights_match_python_reference(spark, raw_df, target_df):
     got = {
         r["bucket"]: r["weight_milli"]

@@ -116,6 +116,15 @@ def test_ci_workflow_runs_the_real_gates():
     assert "License-File" in runs  # metadata carries the license wiring
 
 
+def test_ci_workflow_runs_seqbench_tests():
+    """CI and its local dry-run both run the benchmark's own tests."""
+    runs = "\n".join(s.get("run", "")
+                     for s in _workflow("ci.yml")["jobs"]["test"]["steps"])
+    assert "pytest seqbench/tests" in runs
+    dryrun = (REPO / "tools" / "ci_dryrun.sh").read_text()
+    assert "pytest seqbench/tests" in dryrun
+
+
 def test_benchmark_workflow_gates_on_seqbench():
     """CI runs the benchmark of record on parent and change and gates on
     BENCHMARK.json's bounds; the retired harness is gone from it."""

@@ -8,7 +8,7 @@
 # the metadata check here calls the PEP 517 prepare_metadata hook
 # directly. Usage:
 #
-#   tools/ci_dryrun.sh            # testdata gen + pytest + sf0.001 oracle
+#   tools/ci_dryrun.sh            # testdata gen + pytest (tests/, seqbench/tests) + sf0.001 oracle
 #   tools/ci_dryrun.sh --quick    # testdata gen + YAML lint + smoke pytest
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -55,5 +55,6 @@ if [[ "${1:-}" == "--quick" ]]; then
 fi
 
 python -m pytest tests/ -q
+python -m pytest seqbench/tests -q
 python tools/check_oracle.py "$TD/sf0.001"
 echo "ci_dryrun OK"
