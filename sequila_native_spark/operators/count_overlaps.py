@@ -24,9 +24,9 @@ Algorithms:
     with no per-candidate materialization — inverted intervals (start > end
     after strict normalization) route through the exact candidate-mask
     kernel instead.
-    The build is the coverage kernel's entry, kept in the session index
-    cache (``interval_join.broadcast_build``): over one unchanged file
-    input, count_overlaps and coverage share one collect and broadcast.
+    The build is kept in the session index cache
+    (``interval_join.broadcast_build``): over one unchanged file input,
+    count_overlaps and coverage share one collect and broadcast.
 
 :func:`overlap_count_agg` is the aggregated form of the same kernel:
 ``overlap_join(...).groupBy(keys).count()`` computed without emitting a
@@ -185,15 +185,11 @@ def count_overlaps(
     raise AssertionError(f"unreachable algorithm {algo}")
 
 
-def _build_count_entry(
-    starts: np.ndarray, ends: np.ndarray, entry_from_sorted=None
-) -> tuple:
+def _build_count_entry(starts: np.ndarray, ends: np.ndarray) -> tuple:
     """One key group's index entry from unsorted arrays (pandas build
-    path): sort by start, then apply the entry factory (default
-    :func:`_entry_from_sorted`; coverage passes its own)."""
-    fn = entry_from_sorted or _entry_from_sorted
+    path): sort by start, then :func:`_entry_from_sorted`."""
     order = np.argsort(starts, kind="stable")
-    return fn(starts[order], ends[order])
+    return _entry_from_sorted(starts[order], ends[order])
 
 
 def _as_dtype(v: np.ndarray, dt) -> np.ndarray:
@@ -304,71 +300,28 @@ def _entry_from_sorted(starts_s: np.ndarray, ends_by_start: np.ndarray) -> tuple
     return compact_index_arrays(reg_s, reg_e, np.sort(reg_e), inv_s, inv_e)
 
 
-def _cov_entry_from_sorted(starts_s: np.ndarray, ends_by_start: np.ndarray) -> tuple:
-    """Interval-sums entry from arrays already sorted by start — the
-    coverage kernel's, and a superset of the count kernel's.
-
-    Like :func:`_entry_from_sorted` (inverted rows split into their own
-    tiny subset) plus the two prefix-sum arrays the clipped-base identity
-    needs: ``Σ_overlaps min(le, qe) − Σ_overlaps max(ls, qs) + count``
-    decomposes over the same two prefix sets as the count (``{ls <= qe}``
-    minus ``{le < qs}``), so per probe the covered-base total is a handful
-    of binary searches + prefix-sum lookups. All-integer arithmetic —
-    exact, order-independent, identical to the pair join's
-    ``sum(clipped)``. Entry: ``(reg_starts_sorted, reg_ends_by_start,
-    reg_ends_sorted, prefix_ls, prefix_le_sorted, inv_starts_sorted,
-    inv_ends_by_start)``; :func:`_count_entry` is the count kernel's view."""
-    starts_s = starts_s.astype(np.int64, copy=False)
-    ends_by_start = ends_by_start.astype(np.int64, copy=False)
-    inv_mask = starts_s > ends_by_start
-    if inv_mask.any():
-        reg_s, reg_e = starts_s[~inv_mask], ends_by_start[~inv_mask]
-        inv_s, inv_e = starts_s[inv_mask], ends_by_start[inv_mask]
-    else:
-        reg_s, reg_e = starts_s, ends_by_start
-        inv_s = inv_e = starts_s[:0]
-    e_sorted = np.sort(reg_e)
-    ps_ls = np.zeros(len(reg_s) + 1, dtype=np.int64)
-    np.cumsum(reg_s, out=ps_ls[1:])
-    ps_le = np.zeros(len(e_sorted) + 1, dtype=np.int64)
-    np.cumsum(e_sorted, out=ps_le[1:])
-    return (reg_s, reg_e, e_sorted, ps_ls, ps_le, inv_s, inv_e)
-
-
-def _count_entry(entry: tuple) -> tuple:
-    """The count kernel's entry (see :func:`_entry_from_sorted`) inside an
-    interval-sums entry: everything but the prefix sums."""
-    reg_s, reg_e, e_sorted, _, _, inv_s, inv_e = entry
-    return reg_s, reg_e, e_sorted, inv_s, inv_e
-
-
-def _sums_index(lb: DataFrame, l_keys, use_arrow: bool):
-    """Broadcast of ``lb``'s per-key interval-sums index
-    (:func:`_cov_entry_from_sorted`). count_overlaps and coverage both
-    probe it, so over one input they share one cached build."""
+def _count_index(lb: DataFrame, l_keys, use_arrow: bool):
+    """Broadcast of ``lb``'s per-key count index. count_overlaps and
+    coverage both probe it (coverage adds its prefix sums per task), so
+    over one input they share one cached build."""
     return broadcast_build(
-        lb, ("interval_sums", tuple(l_keys)),
-        lambda: _build_count_index(
-            lb, l_keys, use_arrow=use_arrow,
-            entry_from_sorted=_cov_entry_from_sorted,
-        ),
+        lb, ("overlap_count", tuple(l_keys)),
+        lambda: _build_count_index(lb, l_keys, use_arrow=use_arrow),
     )
 
 
 def _build_count_index(
-    lb: DataFrame, l_keys, *, use_arrow: bool = False, entry_from_sorted=None,
+    lb: DataFrame, l_keys, *, use_arrow: bool = False,
 ) -> tuple[dict[tuple, tuple], int]:
     """Collect the build side (guarded, one job) into per-key index entries
-    (``entry_from_sorted`` is the per-group factory; default
-    :func:`_entry_from_sorted`, the count kernel's). Returns the index and
-    the number of rows collected.
+    (:func:`_entry_from_sorted`). Returns the index and the number of rows
+    collected.
 
     ``use_arrow=True`` (0/1 simple key only): collect with ``toArrow`` and
     group via dictionary codes + one lexsort — no per-row python string
     objects, no pandas groupby. Measured 10.9 s → ~3 s on a 7.5M-row build
     (guide §4.2: hand whole batches to vectorized native code).
     """
-    entry_fn = entry_from_sorted or _entry_from_sorted
     index: dict[tuple, tuple] = {}
     if use_arrow and len(l_keys) <= 1:
         tbl = guarded_build_arrow(lb)
@@ -394,10 +347,10 @@ def _build_count_index(
             for i in range(len(run_starts) - 1):
                 lo, hi = run_starts[i], run_starts[i + 1]
                 key = (enc.dictionary[int(sc[lo])].as_py(),)
-                index[key] = entry_fn(ss[lo:hi], es[lo:hi])
+                index[key] = _entry_from_sorted(ss[lo:hi], es[lo:hi])
         else:
             order = np.argsort(starts, kind="stable")
-            index[()] = entry_fn(starts[order], ends[order])
+            index[()] = _entry_from_sorted(starts[order], ends[order])
         return index, rows
 
     left_pdf = guarded_build_pandas(lb)
@@ -412,7 +365,6 @@ def _build_count_index(
                 key = (key,)
             index[key] = _build_count_entry(
                 grp[_LS].to_numpy(np.int64), grp[_LE].to_numpy(np.int64),
-                entry_fn,
             )
     return index, len(left_pdf)
 
@@ -431,7 +383,7 @@ def _index_count(
     """
     rb = _with_bounds(right_orig, right_start, right_end, _RS, _RE, strict, check)
     use_arrow = _arrow_keys(lb, l_keys)
-    bc = _sums_index(lb, l_keys, use_arrow)
+    bc = _count_index(lb, l_keys, use_arrow)
     out_schema = StructType(
         list(right_orig.schema.fields) + [StructField(count_col, LongType(), False)]
     )
@@ -442,7 +394,7 @@ def _index_count(
         out_names = list(right_out_cols)
 
         def probe_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            idx_map = {k: _count_entry(e) for k, e in bc.value.items()}
+            idx_map = bc.value
             i_rs = i_re = i_k = None
             for batch in batches:
                 n = batch.num_rows
@@ -494,7 +446,7 @@ def _index_count(
         )
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx_map = {k: _count_entry(e) for k, e in bc.value.items()}
+        idx_map = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue

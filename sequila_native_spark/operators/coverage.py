@@ -29,6 +29,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from sequila_native_spark.operators.count_overlaps import (
+    _arrow_keys,
+    _as_dtype,
+    _count_index,
+)
 from sequila_native_spark.operators.interval_join import (
     _LE,
     _LS,
@@ -44,6 +49,23 @@ from sequila_native_spark.session import SequilaConf, parse_algorithm
 from sequila_native_spark.util import stamp_row_id
 
 _PID = "__sq_probe_id"
+
+
+def _with_prefix_sums(entry: tuple) -> tuple:
+    """Coverage entry from a count entry (``count_overlaps.
+    _entry_from_sorted``): the int64 prefix sums of the sorted starts and
+    of the sorted ends, which the clipped-base identity of
+    :func:`_cov_counts` reads. Each probe task derives them once from the
+    shared broadcast: an O(n) pass is cheaper than shipping and
+    unpickling 16 more bytes per build row. Entry: ``(reg_starts_sorted,
+    reg_ends_by_start, reg_ends_sorted, prefix_ls, prefix_le_sorted,
+    inv_starts_sorted, inv_ends_by_start)``."""
+    reg_s, reg_e, e_sorted, inv_s, inv_e = entry
+    ps_ls = np.zeros(len(reg_s) + 1, dtype=np.int64)
+    np.cumsum(reg_s, dtype=np.int64, out=ps_ls[1:])
+    ps_le = np.zeros(len(e_sorted) + 1, dtype=np.int64)
+    np.cumsum(e_sorted, dtype=np.int64, out=ps_le[1:])
+    return (reg_s, reg_e, e_sorted, ps_ls, ps_le, inv_s, inv_e)
 
 
 def _mask_cov(
@@ -91,12 +113,16 @@ def _cov_counts(
         if len(reg_s):
             a = qs[p_reg].astype(np.int64, copy=False)
             b = qe[p_reg].astype(np.int64, copy=False)
-            iA = np.searchsorted(reg_s, b, side="right")
-            iB = np.searchsorted(e_sorted, a, side="left")
+            # needles in each int32-compacted haystack's dtype, as in the
+            # count kernel: a mixed-dtype searchsorted copies the haystack
+            a_s, b_s = _as_dtype(a, reg_s.dtype), _as_dtype(b, reg_s.dtype)
+            a_e, b_e = _as_dtype(a, e_sorted.dtype), _as_dtype(b, e_sorted.dtype)
+            iA = np.searchsorted(reg_s, b_s, side="right")
+            iB = np.searchsorted(e_sorted, a_e, side="left")
             c = iA - iB
-            i_le = np.searchsorted(e_sorted, b, side="right")
+            i_le = np.searchsorted(e_sorted, b_e, side="right")
             sum_min = ps_le[i_le] + b * (iA - i_le) - ps_le[iB]
-            i_lt = np.searchsorted(reg_s, a, side="left")
+            i_lt = np.searchsorted(reg_s, a_s, side="left")
             sum_max = (ps_ls[iA] - ps_ls[i_lt]) + a * (i_lt - iB)
             cnt[p_reg] = c
             cov[p_reg] = sum_min - sum_max + c
@@ -124,14 +150,9 @@ def _index_coverage(
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from sequila_native_spark.operators.count_overlaps import (
-        _arrow_keys,
-        _sums_index,
-    )
-
     rb = _with_bounds(right_orig, right_start, right_end, _RS, _RE, strict, check)
     use_arrow = _arrow_keys(lb, l_keys)
-    bc = _sums_index(lb, l_keys, use_arrow)
+    bc = _count_index(lb, l_keys, use_arrow)
     out_schema = StructType(
         list(right_orig.schema.fields)
         + [StructField(count_col, LongType(), False),
@@ -144,7 +165,7 @@ def _index_coverage(
         out_names = list(right_out_cols)
 
         def probe_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            idx_map = bc.value
+            idx_map = {k: _with_prefix_sums(e) for k, e in bc.value.items()}
             i_rs = i_re = i_k = None
             for batch in batches:
                 n = batch.num_rows
@@ -201,7 +222,7 @@ def _index_coverage(
         )
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx_map = bc.value
+        idx_map = {k: _with_prefix_sums(e) for k, e in bc.value.items()}
         for pdf in batches:
             if pdf.empty:
                 continue

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+import re
 import threading
 from dataclasses import dataclass
 
@@ -138,28 +140,39 @@ _PARTS_CACHE: dict = {}
 # Session index cache: built broadcast indexes, so repeated operator calls
 # over one unchanged input build and broadcast once — the analogue of the
 # reference's ``OnceAsync`` build shared by every probe partition. Bounded
-# by the summed array bytes of its entries; an entry larger than the whole
-# bound is used once and not kept.
+# by the summed pickled bytes of its entries' broadcasts; an entry larger
+# than the whole bound is used once and not kept.
 INDEX_CACHE_MAX_BYTES = 256 << 20
 _INDEX_CACHES: dict = {}
 _INDEX_LOCK = threading.Lock()
+
+# One file of a file index's listing as Hadoop's FileStatus.toString prints
+# it: "LocatedFileStatus{path=P; isDirectory=false; length=N; ...;
+# modification_time=M; ...}".
+_LISTED_FILE = re.compile(
+    r"\{path=(.*?); isDirectory=false; length=(\d+);.*?; modification_time=(-?\d+);"
+)
 
 
 @dataclass
 class _IndexEntry:
     plan: object  # the build frame's analyzed plan (JVM), for sameResult
-    files: tuple  # (path, size, mtime_ns) per input file at build time
+    files: tuple  # (path, size, mtime) per input file, as listed
     bc: object  # the Broadcast of the built index
     rows: int  # build rows collected
-    nbytes: int
+    nbytes: int  # pickled size of the broadcast value
 
 
-def _input_files(plan) -> list[str] | None:
-    """Files every leaf of an analyzed plan reads, or None when any leaf is
-    not a file relation (``LogicalRDD``, ``LocalRelation``, ``Range``, a
-    v2 source…): only file contents can be checked for change."""
+def _listed_files(plan) -> tuple | None:
+    """``(path, size, mtime)`` of every file the leaves of an analyzed plan
+    read, as their file indexes list them — the listing the scan itself
+    is planned from, fetched in one JVM call per leaf without touching the
+    file system. None when any leaf is not a listed file relation
+    (``LogicalRDD``, ``LocalRelation``, ``Range``, a v2 source, a
+    catalog-partitioned table's index…): only file inputs can be checked
+    for change."""
     leaves = plan.collectLeaves()
-    files: list[str] = []
+    files = []
     for i in range(leaves.size()):
         leaf = leaves.apply(i)
         if not leaf.getClass().getName().endswith(".LogicalRelation"):
@@ -167,72 +180,43 @@ def _input_files(plan) -> list[str] | None:
         rel = leaf.relation()
         if not rel.getClass().getName().endswith(".HadoopFsRelation"):
             return None
-        files.extend(rel.location().inputFiles())
-    return files
-
-
-def _file_stats(spark, files: list[str]) -> tuple | None:
-    """``(path, size, mtime_ns)`` per file, stat'ed now (local files with
-    ``os.stat``, others through their Hadoop file system); None when a
-    file cannot be stat'ed."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    out = []
-    for f in sorted(files):
-        u = urlparse(f)
-        try:
-            if u.scheme in ("", "file"):
-                st = os.stat(unquote(u.path))
-                out.append((f, st.st_size, st.st_mtime_ns))
-            else:
-                jvm = spark.sparkContext._jvm
-                path = jvm.org.apache.hadoop.fs.Path(f)
-                st = path.getFileSystem(
-                    spark.sparkContext._jsc.hadoopConfiguration()
-                ).getFileStatus(path)
-                out.append((f, st.getLen(), st.getModificationTime()))
-        except Exception:
-            return None
-    return tuple(out)
+        listing = rel.location().allFiles().mkString("\n")
+        for line in listing.split("\n") if listing else ():
+            m = _LISTED_FILE.search(line)
+            if m is None:
+                return None
+            files.append((m[1], int(m[2]), int(m[3])))
+    return tuple(sorted(files))
 
 
 def _index_key(df: DataFrame, kind: tuple):
     """``(bucket, plan, files)`` for a cacheable build frame, else None.
 
     Cacheable means: batch, deterministic, no subquery, and every leaf a
-    file relation. The bucket is ``(kind, semanticHash)``; a hit also needs
-    ``sameResult`` on the plans and equal file stats."""
+    listed file relation. The bucket is ``(kind, semanticHash)``; a hit
+    also needs ``sameResult`` on the plans and an equal file listing."""
     if df.isStreaming:
         return None
     try:
         plan = df._jdf.queryExecution().analyzed()
         if not plan.deterministic() or plan.subqueriesAll().nonEmpty():
             return None
-        files = _input_files(plan)
-        stats = None if files is None else _file_stats(df.sparkSession, files)
-        if stats is None:
+        files = _listed_files(plan)
+        if files is None:
             return None
-        return (kind, plan.semanticHash()), plan, stats
+        return (kind, plan.semanticHash()), plan, files
     except Exception:  # Connect or API drift: never cache
         return None
 
 
-def _nbytes(value) -> int:
-    """Array bytes of a built index (dicts/tuples of numpy arrays and
-    pandas frames)."""
-    import numpy as np
-    import pandas as pd
-
-    if isinstance(value, np.ndarray):
-        return value.nbytes
-    if isinstance(value, pd.DataFrame):
-        return int(value.memory_usage(index=True).sum())
-    if isinstance(value, dict):
-        return sum(_nbytes(v) for v in value.values())
-    if isinstance(value, (tuple, list)):
-        return sum(_nbytes(v) for v in value)
-    return 0
+def _broadcast_bytes(bc) -> int:
+    """Size of a driver-side broadcast's pickled value — what the driver
+    holds for it, whatever the value's types. 0 when unknown (an encrypted
+    broadcast streams its value to the JVM instead of the file)."""
+    try:
+        return os.path.getsize(bc._path)
+    except (AttributeError, OSError):
+        return 0
 
 
 def _drop_entry(e: _IndexEntry) -> None:
@@ -252,9 +236,9 @@ def cached_broadcast(df: DataFrame, kind: tuple, build):
     is kept in the session index cache when ``df`` is cacheable (see
     :func:`_index_key`) and served again for any later frame with the same
     ``kind``, the same result (``sameResult`` on the analyzed plans) and
-    unchanged input files. An entry whose plan matches but whose files
-    changed is dropped. Callers re-check ``rows`` against their row cap, so
-    a lowered cap still forces their fallback."""
+    the same input file listing. An entry whose plan matches but whose
+    files changed is dropped. Callers re-check ``rows`` against their row
+    cap, so a lowered cap still forces their fallback."""
     spark = df.sparkSession
     found = _index_key(df, kind)
     if found:
@@ -273,8 +257,8 @@ def cached_broadcast(df: DataFrame, kind: tuple, build):
                 cache[key] = bucket
     index, rows = build()
     bc = spark.sparkContext.broadcast(index)
-    nbytes = _nbytes(index)
-    if found and nbytes <= INDEX_CACHE_MAX_BYTES:
+    nbytes = _broadcast_bytes(bc)
+    if found and 0 < nbytes <= INDEX_CACHE_MAX_BYTES:
         entry = _IndexEntry(plan, files, bc, rows, nbytes)
         with _INDEX_LOCK:
             cache = session_scoped_cache(spark, _INDEX_CACHES)

@@ -186,3 +186,15 @@ def test_oldest_entry_evicted_past_byte_bound(spark, tmp_path, probe, monkeypatc
     out, jobs = _eager_jobs(spark, lambda: _count(first, probe, "index"))
     assert jobs == 1  # evicted, rebuilt
     assert rows_set(out) == rows_set(_count(first, probe, "naive"))
+
+
+def test_entry_size_counts_string_payload(spark, tmp_path, probe):
+    # a nearest entry carries the build's payload columns; sized by its
+    # pickled broadcast, a long string counts at its length, not as a pointer
+    names = pa.array([f"{i:04d}" + "x" * 2_000 for i in range(200)])
+    t = _intervals(13, 200).append_column("name", names)
+    targets = spark.read.parquet(_write(tmp_path / "s", t))
+    _check(_nearest, targets, probe)
+    cache = util.session_scoped_cache(spark, util._INDEX_CACHES)
+    (entry,) = [e for bucket in cache.values() for e in bucket]
+    assert entry.nbytes > 200 * 2_000
