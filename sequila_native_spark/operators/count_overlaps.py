@@ -16,9 +16,9 @@ Algorithms:
     the probe so zero-match rows survive. All Catalyst; shuffles on
     ``(keys…, bin)`` then on the probe id.
 
-``index`` — broadcast per-key sorted arrays; a ``mapInArrow`` probe (pandas
-    fallback for multi-key / exotic key types) computes exact counts with
-    two binary searches per probe (the superintervals ``count`` recipe,
+``index`` — broadcast per-key sorted arrays; a ``mapInArrow`` probe
+    computes exact counts with two binary searches per probe (the
+    superintervals ``count`` recipe,
     ``superintervals/src/superintervals.rs:353-446``). Zero shuffle; probe
     rows stream through unchanged with a count column appended. O(n log m)
     with no per-candidate materialization — inverted intervals (start > end
@@ -26,7 +26,9 @@ Algorithms:
     kernel instead.
     The build is kept in the session index cache
     (``interval_join.broadcast_build``): over one unchanged file input,
-    count_overlaps and coverage share one collect and broadcast.
+    count_overlaps and coverage share one collect and broadcast. Any number
+    of string, integral or boolean keys (:func:`_arrow_keys`); other key
+    types (date, timestamp, decimal, float) run ``binning``.
 
 :func:`overlap_count_agg` is the aggregated form of the same kernel:
 ``overlap_join(...).groupBy(keys).count()`` computed without emitting a
@@ -40,14 +42,12 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    AtomicType,
     BooleanType,
     ByteType,
     IntegerType,
@@ -70,11 +70,11 @@ from sequila_native_spark.operators.interval_join import (
     broadcast_build,
     compact_index_arrays,
     guarded_build_arrow,
-    guarded_build_pandas,
     resolve_bin_width,
 )
 from sequila_native_spark.util import stamp_row_id
 from sequila_native_spark.operators.intervals import (
+    I32_MIN,
     fraction_predicate,
     overlap_predicate,
     validate_sides,
@@ -144,15 +144,18 @@ def count_overlaps(
 
     lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict, check)
 
-    if algo == "index" and (wants_frac or sides.mixed_keys):
-        # the kernel answers plain overlap on same-family keys only
+    if algo == "index" and (
+        wants_frac or sides.mixed_keys or not _arrow_keys(left, l_keys)
+    ):
+        # the kernel answers plain overlap on same-family Arrow keys only
         algo = "binning"
 
     if algo == "index":
         try:
-            return _index_count(
+            return _index_probe(
                 lb, right_orig, l_keys, r_keys, right_start, right_end,
-                strict, check, count_col, right_out_cols,
+                strict, check, [count_col], dict,
+                lambda e, qs, qe: (_group_counts(e, qs, qe),),
             )
         except BuildSideTooLargeError:
             algo = "binning"  # accounted-memory fallback, never a blind collect
@@ -183,13 +186,6 @@ def count_overlaps(
         )
 
     raise AssertionError(f"unreachable algorithm {algo}")
-
-
-def _build_count_entry(starts: np.ndarray, ends: np.ndarray) -> tuple:
-    """One key group's index entry from unsorted arrays (pandas build
-    path): sort by start, then :func:`_entry_from_sorted`."""
-    order = np.argsort(starts, kind="stable")
-    return _entry_from_sorted(starts[order], ends[order])
 
 
 def _as_dtype(v: np.ndarray, dt) -> np.ndarray:
@@ -266,17 +262,69 @@ def _mask_counts(
 
 
 def _arrow_keys(build: DataFrame, keys) -> bool:
-    """Arrow probe gate for the index kernels: at most one key, of a type
-    that round-trips through Arrow ``.as_py()`` to the same hashable python
-    value that the pandas groupby path produces (str/int/bool families).
-    Timestamps/decimals/etc. keep the pandas path so mixed build/probe paths
-    can never disagree on the dict key representation. Callers route
-    mixed-family key pairs (``IntervalSides.mixed_keys``) to binning first,
-    so the build side's key type speaks for the probe side's too."""
+    """Index gate for the count family and map_intervals: every key is a
+    string, integral or boolean column, whose Arrow ``.as_py()`` value is
+    the same hashable python value on the build and the probe side.
+    Timestamps/decimals/dates/floats route to binning, where Catalyst
+    compares them. Callers route mixed-family key pairs
+    (``IntervalSides.mixed_keys``) to binning first, so the build side's
+    key types speak for the probe side's too."""
     simple = (StringType, IntegerType, LongType, ShortType, ByteType, BooleanType)
-    return len(keys) <= 1 and all(
-        isinstance(build.schema[k].dataType, simple) for k in keys
-    )
+    return all(isinstance(build.schema[k].dataType, simple) for k in keys)
+
+
+def _key_groups(
+    data, keys, bounds, sort_by: np.ndarray | None = None,
+) -> Iterator[tuple[tuple, np.ndarray]]:
+    """Split the rows of an Arrow table or record batch into equi-key
+    groups: yields ``(key tuple, row positions)``.
+
+    Each key column is dictionary-encoded and the codes are combined into
+    one group code, so grouping is one integer sort, with no per-row python
+    objects. A row with a null in any key or ``bounds`` column is in no
+    group (SQL equality never matches null). Positions ascend within a
+    group, or follow the int32 values of ``sort_by`` when given.
+    """
+    ok = np.ones(data.num_rows, dtype=bool)
+    for b in bounds:
+        ok &= pc.is_valid(_column(data, b)).to_numpy(zero_copy_only=False)
+    code = np.zeros(data.num_rows, dtype=np.int64)
+    card = 1
+    dicts = []
+    for k in keys:
+        enc = pc.dictionary_encode(_column(data, k))
+        codes = pc.fill_null(enc.indices, -1).to_numpy(zero_copy_only=False)
+        ok &= codes >= 0
+        dicts.append((enc.dictionary, codes))
+        code = code * len(enc.dictionary) + codes
+        card *= len(enc.dictionary)
+        if card >= 1 << 31:  # renumber densely: codes stay below 2^31
+            code = np.unique(code, return_inverse=True)[1].astype(np.int64)
+            card = data.num_rows
+    pos = np.flatnonzero(ok)
+    if not pos.size:
+        return
+    if sort_by is None:
+        pos = pos[np.argsort(code[pos], kind="stable")]
+    else:
+        # one int64 sort key: the group code above the int32 value
+        pos = pos[np.argsort(
+            (code[pos] << 32) | (sort_by[pos].astype(np.int64) - I32_MIN)
+        )]
+    runs = np.flatnonzero(np.diff(code[pos])) + 1
+    for grp in np.split(pos, runs):
+        first = grp[0]
+        yield tuple(d[int(c[first])].as_py() for d, c in dicts), grp
+
+
+def _column(data, name: str) -> pa.Array:
+    col = data.column(name)
+    return col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+
+
+def _ints(data, name: str) -> np.ndarray:
+    """A bound column as numpy, nulls as 0 (null rows are in no group)."""
+    return pc.fill_null(_column(data, name), 0).to_numpy(zero_copy_only=False)
 
 
 def _entry_from_sorted(starts_s: np.ndarray, ends_by_start: np.ndarray) -> tuple:
@@ -300,177 +348,79 @@ def _entry_from_sorted(starts_s: np.ndarray, ends_by_start: np.ndarray) -> tuple
     return compact_index_arrays(reg_s, reg_e, np.sort(reg_e), inv_s, inv_e)
 
 
-def _count_index(lb: DataFrame, l_keys, use_arrow: bool):
+def _count_index(lb: DataFrame, l_keys):
     """Broadcast of ``lb``'s per-key count index. count_overlaps and
     coverage both probe it (coverage adds its prefix sums per task), so
     over one input they share one cached build."""
     return broadcast_build(
         lb, ("overlap_count", tuple(l_keys)),
-        lambda: _build_count_index(lb, l_keys, use_arrow=use_arrow),
+        lambda: _build_count_index(lb, l_keys),
     )
 
 
-def _build_count_index(
-    lb: DataFrame, l_keys, *, use_arrow: bool = False,
-) -> tuple[dict[tuple, tuple], int]:
+def _build_count_index(lb: DataFrame, l_keys) -> tuple[dict[tuple, tuple], int]:
     """Collect the build side (guarded, one job) into per-key index entries
     (:func:`_entry_from_sorted`). Returns the index and the number of rows
     collected.
 
-    ``use_arrow=True`` (0/1 simple key only): collect with ``toArrow`` and
-    group via dictionary codes + one lexsort — no per-row python string
-    objects, no pandas groupby. Measured 10.9 s → ~3 s on a 7.5M-row build
-    (guide §4.2: hand whole batches to vectorized native code).
+    Collects with ``toArrow`` and groups through :func:`_key_groups` — no
+    per-row python objects, no pandas groupby. Measured 10.9 s → ~3 s on a
+    7.5M-row build against the pandas collect and groupby: whole batches
+    go to vectorized native code.
     """
-    index: dict[tuple, tuple] = {}
-    if use_arrow and len(l_keys) <= 1:
-        tbl = guarded_build_arrow(lb)
-        rows = tbl.num_rows
-        ok = pc.and_(pc.is_valid(tbl[_LS]), pc.is_valid(tbl[_LE]))
-        if l_keys:
-            ok = pc.and_(ok, pc.is_valid(tbl[l_keys[0]]))
-        if tbl.num_rows and not pc.all(ok).as_py():
-            tbl = tbl.filter(ok)
-        if tbl.num_rows == 0:
-            return index, rows
-        starts = tbl[_LS].combine_chunks().to_numpy()
-        ends = tbl[_LE].combine_chunks().to_numpy()
-        if l_keys:
-            enc = pc.dictionary_encode(tbl[l_keys[0]].combine_chunks())
-            codes = enc.indices.to_numpy()
-            order = np.lexsort((starts, codes))
-            sc = codes[order]
-            run_starts = np.concatenate(
-                ([0], np.flatnonzero(np.diff(sc)) + 1, [len(sc)])
-            )
-            ss, es = starts[order], ends[order]
-            for i in range(len(run_starts) - 1):
-                lo, hi = run_starts[i], run_starts[i + 1]
-                key = (enc.dictionary[int(sc[lo])].as_py(),)
-                index[key] = _entry_from_sorted(ss[lo:hi], es[lo:hi])
-        else:
-            order = np.argsort(starts, kind="stable")
-            index[()] = _entry_from_sorted(starts[order], ends[order])
-        return index, rows
-
-    left_pdf = guarded_build_pandas(lb)
-    valid = left_pdf[_LS].notna() & left_pdf[_LE].notna()
-    for k in l_keys:
-        valid &= left_pdf[k].notna()
-    build = left_pdf[valid]
-    if len(build):
-        group_iter = build.groupby(list(l_keys), sort=False) if l_keys else [((), build)]
-        for key, grp in group_iter:
-            if l_keys and not isinstance(key, tuple):
-                key = (key,)
-            index[key] = _build_count_entry(
-                grp[_LS].to_numpy(np.int64), grp[_LE].to_numpy(np.int64),
-            )
-    return index, len(left_pdf)
+    tbl = guarded_build_arrow(lb)
+    starts, ends = _ints(tbl, _LS), _ints(tbl, _LE)
+    index = {
+        key: _entry_from_sorted(starts[pos], ends[pos])
+        for key, pos in _key_groups(tbl, l_keys, (_LS, _LE), sort_by=starts)
+    }
+    return index, tbl.num_rows
 
 
-def _index_count(
-    lb, right_orig, l_keys, r_keys, right_start, right_end,
-    strict, check, count_col, right_out_cols,
+def _index_probe(
+    lb, right_orig, l_keys, r_keys, right_start, right_end, strict, check,
+    out_cols: list[str], prepare, kernel,
 ):
-    """Broadcast build arrays, streaming vectorized probe, zero shuffle.
+    """Broadcast build arrays, streaming vectorized probe, zero shuffle:
+    the probe of count_overlaps and coverage.
 
-    The per-batch count is two binary searches per probe
-    (:func:`_group_counts`) — no candidate arrays, no per-row Python loop.
-    With 0/1 simple-typed key the probe runs on raw Arrow batches
-    (guide §4.2): passthrough columns are re-emitted untouched (no
-    pandas round trip of the payload) and the count column is appended.
+    Probe batches stay Arrow: passthrough columns are
+    re-emitted untouched and ``out_cols`` (bigint, 0 for no match) are
+    appended. Each task maps the shared count index through ``prepare``
+    once; ``kernel(entry, qs, qe)`` returns one array per output column
+    for one key group's probe rows. Needles keep the bound columns' int32
+    dtype, which the kernels match to the build arrays (``_as_dtype``).
     """
     rb = _with_bounds(right_orig, right_start, right_end, _RS, _RE, strict, check)
-    use_arrow = _arrow_keys(lb, l_keys)
-    bc = _count_index(lb, l_keys, use_arrow)
+    bc = _count_index(lb, l_keys)
+    right_out_cols = list(right_orig.columns)
     out_schema = StructType(
-        list(right_orig.schema.fields) + [StructField(count_col, LongType(), False)]
+        list(right_orig.schema.fields)
+        + [StructField(c, LongType(), False) for c in out_cols]
     )
-    keys = list(r_keys)
 
-    if use_arrow:
-        kname = keys[0] if keys else None
-        out_names = list(right_out_cols)
-
-        def probe_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            idx_map = bc.value
-            i_rs = i_re = i_k = None
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                if i_rs is None:
-                    i_rs = batch.schema.get_field_index(_RS)
-                    i_re = batch.schema.get_field_index(_RE)
-                    i_k = (
-                        batch.schema.get_field_index(kname)
-                        if kname is not None else None
-                    )
-                counts_arr = np.zeros(n, dtype=np.int64)
-                rs_col, re_col = batch.column(i_rs), batch.column(i_re)
-                valid = pc.and_(pc.is_valid(rs_col), pc.is_valid(re_col))
-                qs = pc.fill_null(rs_col, 0).to_numpy(zero_copy_only=False)
-                qe = pc.fill_null(re_col, 0).to_numpy(zero_copy_only=False)
-                vmask = valid.to_numpy(zero_copy_only=False)
-                if i_k is not None:
-                    enc = pc.dictionary_encode(batch.column(i_k))
-                    codes = pc.fill_null(enc.indices, -1).to_numpy(
-                        zero_copy_only=False
-                    )
-                    for i in range(len(enc.dictionary)):
-                        entry = idx_map.get((enc.dictionary[i].as_py(),))
-                        if entry is None:
-                            continue
-                        pos = np.flatnonzero((codes == i) & vmask)
-                        if pos.size:
-                            counts_arr[pos] = _group_counts(
-                                entry, qs[pos], qe[pos]
-                            )
-                else:
-                    entry = idx_map.get(())
-                    if entry is not None:
-                        pos = np.flatnonzero(vmask)
-                        if pos.size:
-                            counts_arr[pos] = _group_counts(
-                                entry, qs[pos], qe[pos]
-                            )
-                sel = batch.select(out_names)
-                yield pa.RecordBatch.from_arrays(
-                    [*sel.columns, pa.array(counts_arr, type=pa.int64())],
-                    names=[*out_names, count_col],
-                )
-
-        return rb.mapInArrow(probe_arrow, schema=out_schema).select(
-            *right_out_cols, count_col
-        )
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx_map = bc.value
-        for pdf in batches:
-            if pdf.empty:
+    def probe_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        idx_map = prepare(bc.value)
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            counts_arr = np.zeros(len(pdf), dtype=np.int64)
-            qs_all = pdf[_RS].to_numpy(np.int64, na_value=0)
-            qe_all = pdf[_RE].to_numpy(np.int64, na_value=0)
-            has_null = (pdf[_RS].isna() | pdf[_RE].isna()).to_numpy()
-            groups = pdf.groupby(keys, sort=False) if keys else [((), pdf)]
-            for key, grp in groups:
-                if keys and not isinstance(key, tuple):
-                    key = (key,)
+            outs = [np.zeros(n, dtype=np.int64) for _ in out_cols]
+            qs, qe = _ints(batch, _RS), _ints(batch, _RE)
+            for key, pos in _key_groups(batch, r_keys, (_RS, _RE)):
                 entry = idx_map.get(key)
-                if entry is None:
-                    continue
-                pos = pdf.index.get_indexer(grp.index)
-                pos = pos[~has_null[pos]]
-                if not pos.size:
-                    continue
-                counts_arr[pos] = _group_counts(entry, qs_all[pos], qe_all[pos])
-            out = pdf[right_out_cols].reset_index(drop=True)
-            out[count_col] = counts_arr
-            yield out
+                if entry is not None:
+                    for out, got in zip(outs, kernel(entry, qs[pos], qe[pos])):
+                        out[pos] = got
+            sel = batch.select(right_out_cols)
+            yield pa.RecordBatch.from_arrays(
+                [*sel.columns, *(pa.array(o, type=pa.int64()) for o in outs)],
+                names=[*right_out_cols, *out_cols],
+            )
 
-    return rb.mapInPandas(probe, schema=out_schema).select(*right_out_cols, count_col)
+    return rb.mapInArrow(probe_arrow, schema=out_schema).select(
+        *right_out_cols, *out_cols
+    )
 
 
 def overlap_count_agg(
@@ -491,19 +441,19 @@ def overlap_count_agg(
 
     A count-shaped query does not need the join's output — only how many
     pairs each key group produces. Build: collect the LEFT side's
-    (keys, bounds) once (guarded by ``spark.sequila.maxBroadcastBuildRows``)
-    into per-key sorted arrays — via Arrow for 0/1 simple-typed keys (no
-    per-row python objects), pandas otherwise. Probe: ``mapInArrow`` (same
-    gate; ``mapInPandas`` fallback) over the RIGHT side pruned to
-    (keys, bounds); each batch contributes per-key partial sums of the
-    two-binary-search counts (:func:`_group_counts`), so the per-pair
-    O(pairs) emission cost of the join disappears entirely — the plan is
-    scan → probe → one tiny aggregation exchange.
+    (keys, bounds) once through Arrow (guarded by
+    ``spark.sequila.maxBroadcastBuildRows``) into per-key sorted arrays.
+    Probe: ``mapInArrow`` over the RIGHT side pruned to (keys, bounds);
+    each batch contributes per-key partial sums of the two-binary-search
+    counts (:func:`_group_counts`), so the per-pair O(pairs) emission cost
+    of the join disappears entirely — the plan is scan → probe → one tiny
+    aggregation exchange.
 
     Group semantics match the inner join's groupBy: keyed form omits keys
     with zero pairs, keyless form (``on=None``) always returns exactly one
     row. Falls back to the binned pair join + groupBy when the build side
-    exceeds the broadcast guard (accounted memory, never a blind collect).
+    exceeds the broadcast guard (accounted memory, never a blind collect),
+    and for key types outside :func:`_arrow_keys`.
     """
     spark = left.sparkSession
     conf = SequilaConf.from_spark(spark)
@@ -516,21 +466,16 @@ def overlap_count_agg(
     left_p = left.select(*dict.fromkeys([*l_keys, left_start, left_end]))
     right_p = right.select(*dict.fromkeys([*r_keys, right_start, right_end]))
     lb = _with_bounds(left_p, left_start, left_end, _LS, _LE, strict, check)
-    # Arrow fast path (guide §4.2): viable for 0/1 simple-typed key, where
-    # the arrow and pandas key representations provably agree.
-    use_arrow = _arrow_keys(left_p, l_keys)
 
     index = None
-    if not sides.mixed_keys:
+    if not sides.mixed_keys and _arrow_keys(left_p, l_keys):
         try:
-            index, _ = _build_count_index(
-                lb.select(*l_keys, _LS, _LE), l_keys, use_arrow=use_arrow,
-            )
+            index, _ = _build_count_index(lb.select(*l_keys, _LS, _LE), l_keys)
         except BuildSideTooLargeError:
             pass
     if index is None:
-        # accounted-memory or mixed-key fallback: the binned pair join +
-        # groupBy — the exact expression this operator replaces
+        # accounted-memory, key-type or mixed-key fallback: the binned pair
+        # join + groupBy — the exact expression this operator replaces
         from sequila_native_spark.operators.interval_join import overlap_join
 
         oj = overlap_join(
@@ -544,6 +489,8 @@ def overlap_count_agg(
         return grouped.agg(F.count(F.lit(1)).cast("long").alias(alias))
 
     rb = _with_bounds(right_p, right_start, right_end, _RS, _RE, strict, check)
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from sequila_native_spark.util import ensure_parallel
 
     # hash-keyed repartition (deterministic columns): parallelizes a
@@ -555,108 +502,36 @@ def overlap_count_agg(
 
     key_fields = list(left_p.select(*l_keys).schema.fields) if l_keys else []
     out_schema = StructType(key_fields + [StructField(alias, LongType(), False)])
-    keys = list(r_keys)
-    key_names = list(l_keys)
+    out_pa_schema = to_arrow_schema(out_schema)
+    key_types = [f.type for f in out_pa_schema][:-1]
 
-    if use_arrow:
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        out_pa_schema = to_arrow_schema(out_schema)
-        key_pa_type = out_pa_schema.field(0).type if key_names else None
-        kname = keys[0] if keys else None
-
-        def probe_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            idx_map = bc.value
-            i_rs = i_re = i_k = None
-            for batch in batches:
-                if batch.num_rows == 0 or not idx_map:
+    def probe_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        idx_map = bc.value
+        for batch in batches:
+            if batch.num_rows == 0 or not idx_map:
+                continue
+            qs, qe = _ints(batch, _RS), _ints(batch, _RE)
+            out_keys: list[tuple] = []
+            out_counts: list[int] = []
+            for key, pos in _key_groups(batch, r_keys, (_RS, _RE)):
+                entry = idx_map.get(key)
+                if entry is None:
                     continue
-                if i_rs is None:
-                    i_rs = batch.schema.get_field_index(_RS)
-                    i_re = batch.schema.get_field_index(_RE)
-                    i_k = (
-                        batch.schema.get_field_index(kname)
-                        if kname is not None else None
-                    )
-                ok = pc.and_(
-                    pc.is_valid(batch.column(i_rs)), pc.is_valid(batch.column(i_re))
-                )
-                if i_k is not None:
-                    ok = pc.and_(ok, pc.is_valid(batch.column(i_k)))
-                if not pc.all(ok).as_py():
-                    batch = batch.filter(ok)
-                    if batch.num_rows == 0:
-                        continue
-                qs = batch.column(i_rs).to_numpy(zero_copy_only=False)
-                qe = batch.column(i_re).to_numpy(zero_copy_only=False)
-                out_keys: list = []
-                out_counts: list[int] = []
-                if i_k is not None:
-                    enc = pc.dictionary_encode(batch.column(i_k))
-                    codes = enc.indices.to_numpy(zero_copy_only=False)
-                    for i in range(len(enc.dictionary)):
-                        entry = idx_map.get((enc.dictionary[i].as_py(),))
-                        if entry is None:
-                            continue
-                        m = codes == i
-                        total = int(_group_counts(entry, qs[m], qe[m]).sum())
-                        if total:
-                            out_keys.append(enc.dictionary[i].as_py())
-                            out_counts.append(total)
-                else:
-                    entry = idx_map.get(())
-                    if entry is not None:
-                        total = int(_group_counts(entry, qs, qe).sum())
-                        if total:
-                            out_counts.append(total)
-                if out_counts:
-                    arrays = []
-                    if key_pa_type is not None:
-                        arrays.append(pa.array(out_keys, type=key_pa_type))
-                    arrays.append(pa.array(out_counts, type=pa.int64()))
-                    yield pa.RecordBatch.from_arrays(arrays, schema=out_pa_schema)
+                total = int(_group_counts(entry, qs[pos], qe[pos]).sum())
+                if total:
+                    out_keys.append(key)
+                    out_counts.append(total)
+            if out_counts:
+                arrays = [
+                    pa.array([k[i] for k in out_keys], type=t)
+                    for i, t in enumerate(key_types)
+                ]
+                arrays.append(pa.array(out_counts, type=pa.int64()))
+                yield pa.RecordBatch.from_arrays(arrays, schema=out_pa_schema)
 
-        partials = rb.mapInArrow(probe_arrow, schema=out_schema)
-    else:
-        def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            idx_map = bc.value
-            for pdf in batches:
-                if pdf.empty or not idx_map:
-                    continue
-                ok = pdf[_RS].notna() & pdf[_RE].notna()
-                for k in keys:
-                    ok &= pdf[k].notna()
-                if not ok.all():
-                    pdf = pdf[ok]
-                if pdf.empty:
-                    continue
-                qs_all = pdf[_RS].to_numpy(np.int64)
-                qe_all = pdf[_RE].to_numpy(np.int64)
-                out_keys: list[tuple] = []
-                out_counts: list[int] = []
-                groups = pdf.groupby(keys, sort=False) if keys else [((), pdf)]
-                for key, grp in groups:
-                    if keys and not isinstance(key, tuple):
-                        key = (key,)
-                    entry = idx_map.get(key)
-                    if entry is None:
-                        continue
-                    pos = pdf.index.get_indexer(grp.index)
-                    total = int(_group_counts(entry, qs_all[pos], qe_all[pos]).sum())
-                    if total:
-                        out_keys.append(key)
-                        out_counts.append(total)
-                if out_counts:
-                    data = {
-                        name: [k[i] for k in out_keys]
-                        for i, name in enumerate(key_names)
-                    }
-                    data[alias] = out_counts
-                    yield pd.DataFrame(data)
-
-        partials = rb.mapInPandas(probe, schema=out_schema)
-    if key_names:
-        return partials.groupBy(*key_names).agg(
+    partials = rb.mapInArrow(probe_arrow, schema=out_schema)
+    if l_keys:
+        return partials.groupBy(*l_keys).agg(
             F.sum(alias).cast("long").alias(alias)
         )
     return partials.agg(

@@ -20,19 +20,15 @@ aggregation on the probe id, left join back so zero-coverage rows survive.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from sequila_native_spark.operators.count_overlaps import (
     _arrow_keys,
     _as_dtype,
-    _count_index,
+    _index_probe,
 )
 from sequila_native_spark.operators.interval_join import (
     _LE,
@@ -139,122 +135,6 @@ def _cov_counts(
     return cnt, cov
 
 
-def _index_coverage(
-    lb, right_orig, l_keys, r_keys, right_start, right_end,
-    strict, check, count_col, cover_col, right_out_cols,
-):
-    """Broadcast build arrays, streaming vectorized probe, zero shuffle —
-    the coverage twin of count_overlaps._index_count (same Arrow probe
-    gate, and the same cached index build: over one input the two
-    operators share one broadcast)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    rb = _with_bounds(right_orig, right_start, right_end, _RS, _RE, strict, check)
-    use_arrow = _arrow_keys(lb, l_keys)
-    bc = _count_index(lb, l_keys, use_arrow)
-    out_schema = StructType(
-        list(right_orig.schema.fields)
-        + [StructField(count_col, LongType(), False),
-           StructField(cover_col, LongType(), False)]
-    )
-    keys = list(r_keys)
-
-    if use_arrow:
-        kname = keys[0] if keys else None
-        out_names = list(right_out_cols)
-
-        def probe_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            idx_map = {k: _with_prefix_sums(e) for k, e in bc.value.items()}
-            i_rs = i_re = i_k = None
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                if i_rs is None:
-                    i_rs = batch.schema.get_field_index(_RS)
-                    i_re = batch.schema.get_field_index(_RE)
-                    i_k = (
-                        batch.schema.get_field_index(kname)
-                        if kname is not None else None
-                    )
-                cnt_arr = np.zeros(n, dtype=np.int64)
-                cov_arr = np.zeros(n, dtype=np.int64)
-                rs_col, re_col = batch.column(i_rs), batch.column(i_re)
-                valid = pc.and_(pc.is_valid(rs_col), pc.is_valid(re_col))
-                qs = pc.fill_null(rs_col, 0).to_numpy(zero_copy_only=False)
-                qe = pc.fill_null(re_col, 0).to_numpy(zero_copy_only=False)
-                qs = qs.astype(np.int64, copy=False)
-                qe = qe.astype(np.int64, copy=False)
-                vmask = valid.to_numpy(zero_copy_only=False)
-                if i_k is not None:
-                    enc = pc.dictionary_encode(batch.column(i_k))
-                    codes = pc.fill_null(enc.indices, -1).to_numpy(
-                        zero_copy_only=False
-                    )
-                    for i in range(len(enc.dictionary)):
-                        entry = idx_map.get((enc.dictionary[i].as_py(),))
-                        if entry is None:
-                            continue
-                        pos = np.flatnonzero((codes == i) & vmask)
-                        if pos.size:
-                            cnt_arr[pos], cov_arr[pos] = _cov_counts(
-                                entry, qs[pos], qe[pos]
-                            )
-                else:
-                    entry = idx_map.get(())
-                    if entry is not None:
-                        pos = np.flatnonzero(vmask)
-                        if pos.size:
-                            cnt_arr[pos], cov_arr[pos] = _cov_counts(
-                                entry, qs[pos], qe[pos]
-                            )
-                sel = batch.select(out_names)
-                yield pa.RecordBatch.from_arrays(
-                    [*sel.columns,
-                     pa.array(cnt_arr, type=pa.int64()),
-                     pa.array(cov_arr, type=pa.int64())],
-                    names=[*out_names, count_col, cover_col],
-                )
-
-        return rb.mapInArrow(probe_arrow, schema=out_schema).select(
-            *right_out_cols, count_col, cover_col
-        )
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx_map = {k: _with_prefix_sums(e) for k, e in bc.value.items()}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            cnt_arr = np.zeros(len(pdf), dtype=np.int64)
-            cov_arr = np.zeros(len(pdf), dtype=np.int64)
-            has_null = pdf[_RS].isna() | pdf[_RE].isna()
-            qs_all = pdf[_RS].fillna(0).to_numpy(np.int64)
-            qe_all = pdf[_RE].fillna(0).to_numpy(np.int64)
-            groups = pdf.groupby(keys, sort=False) if keys else [((), pdf)]
-            for key, grp in groups:
-                if keys and not isinstance(key, tuple):
-                    key = (key,)
-                entry = idx_map.get(key)
-                if entry is None:
-                    continue
-                pos = pdf.index.get_indexer(grp.index)
-                pos = pos[~has_null.to_numpy()[pos]]
-                if not pos.size:
-                    continue
-                cnt_arr[pos], cov_arr[pos] = _cov_counts(
-                    entry, qs_all[pos], qe_all[pos]
-                )
-            out = pdf[right_out_cols].reset_index(drop=True)
-            out[count_col] = cnt_arr
-            out[cover_col] = cov_arr
-            yield out
-
-    return rb.mapInPandas(probe, schema=out_schema).select(
-        *right_out_cols, count_col, cover_col
-    )
-
-
 def coverage(
     left: DataFrame,
     right: DataFrame,
@@ -290,13 +170,19 @@ def coverage(
 
     lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict, check)
 
-    if algo == "index" and sides.mixed_keys:
-        algo = "binning"  # the kernel's dict lookup cannot coerce 1 = '1'
+    if algo == "index" and (sides.mixed_keys or not _arrow_keys(left, l_keys)):
+        # the kernel's dict lookup cannot coerce 1 = '1', and compares
+        # only Arrow keys it can hash the same on both sides
+        algo = "binning"
     if algo == "index":
         try:
-            return _index_coverage(
-                lb, right, l_keys, r_keys, right_start, right_end,
-                strict, check, count_col, cover_col, right_out_cols,
+            # count_overlaps' probe on the same cached index build: over
+            # one input the two operators share one broadcast
+            return _index_probe(
+                lb, right, l_keys, r_keys, right_start, right_end, strict,
+                check, [count_col, cover_col],
+                lambda idx: {k: _with_prefix_sums(e) for k, e in idx.items()},
+                _cov_counts,
             )
         except BuildSideTooLargeError:
             algo = "binning"  # accounted-memory fallback, never a blind collect

@@ -29,7 +29,8 @@ cross-algorithm validation strategy):
     Catalyst-executed (shuffled hash / SMJ + AQE skew handling), so it
     partitions, spills, and scales like any Spark equi-join. This replaces
     the reference's *Partitioned* mode (``interval_join.rs:391-398``): the
-    shuffle on (key, bin) IS the partitioned index.
+    shuffle on (key, bin) IS the partitioned index, so
+    ``algorithm="partitioned"`` and its alias run this path too.
 
 ``index``
     CollectLeft analogue (``interval_join.rs:472-487``, shared build via
@@ -39,7 +40,8 @@ cross-algorithm validation strategy):
     superintervals.rs:161-307``) — and stream probe batches through
     ``mapInPandas``. Probe cost per row is two binary searches plus an
     output-sensitive scan. Use when the build side fits in executor memory;
-    parallelism = probe-side partitions, zero shuffle.
+    parallelism = probe-side partitions, zero shuffle. A build side over
+    ``spark.sequila.maxBroadcastBuildRows`` runs ``binning`` instead.
 """
 
 from __future__ import annotations
@@ -76,8 +78,10 @@ class BuildSideTooLargeError(RuntimeError):
     The reference pre-reserves and accounts build memory before collecting
     (``interval_join.rs:624-660``); collecting an unbounded build side to the
     driver would OOM instead. Callers with a distributed equivalent
-    (``partitioned`` / ``binning``) auto-fall-back; otherwise this error
-    surfaces with the knob to raise."""
+    fall back to it: ``binning`` for overlap_join, count_overlaps,
+    coverage, overlap_count_agg and map_intervals; ``broadcast_probe`` and
+    then ``partitioned`` for nearest_join. Otherwise this error surfaces
+    with the knob to raise."""
 
 
 def compact_build_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -203,9 +207,11 @@ def _capped_collect(df: DataFrame, max_rows: int | None, collect):
 
 def _too_large(max_rows: int) -> str:
     return (
-        f"build side has more than {max_rows} rows; broadcast-index "
-        f"collect would risk a driver OOM. Use algorithm='partitioned' "
-        f"or 'binning', or raise spark.sequila.maxBroadcastBuildRows."
+        f"build side has more than {max_rows} rows; collecting it for a "
+        f"broadcast index could run out of memory. Overlap and count "
+        f"operators fall back to algorithm='binning', nearest_join to "
+        f"'broadcast_probe' or 'partitioned'; or raise "
+        f"spark.sequila.maxBroadcastBuildRows."
     )
 
 
@@ -321,8 +327,8 @@ def _disambiguate(
             mapping[c] = f"{c}{rsuffix}"
     for old, new in mapping.items():
         # a suffixed name that already exists would silently shadow a
-        # column (the index/partitioned split drops the right side's data
-        # without an error — reviewer, r7); fail loudly instead
+        # column (the index path's left/right column split drops the right
+        # side's data without an error); fail loudly instead
         if new in lcols or new in rcols:
             raise ValueError(
                 f"suffixed name {new!r} (for shared column {old!r}) "
@@ -605,14 +611,15 @@ def overlap_join(
     check = conf.check_int32_bounds if check_bounds is None else check_bounds
 
     sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
-    if algo in ("index", "partitioned") and sides.mixed_keys:
-        algo = "binning"  # the kernels' key lookups cannot coerce 1 = '1'
+    if algo == "partitioned" or (algo == "index" and sides.mixed_keys):
+        # binning is the shuffle path; the index kernel's key lookups
+        # cannot coerce 1 = '1'
+        algo = "binning"
     if algo == "binning":
-        # outer joins on index/partitioned no longer resolve eagerly: the
-        # width is only consumed if the broadcast guard trips into the
-        # keyless binning fallback, and "auto" resolution is a real
-        # two-table percentile job (reviewer, r7) — _outer_overlap resolves
-        # lazily in its binning branch instead
+        # index joins do not resolve eagerly: the width is only consumed if
+        # the broadcast guard trips into the binning fallback, and "auto"
+        # resolution is a real two-table percentile job — the fallbacks
+        # resolve lazily instead
         width = resolve_bin_width(
             width, left, left_start, left_end, right, right_start, right_end
         )
@@ -667,16 +674,12 @@ def overlap_join(
         except BuildSideTooLargeError:
             # reference intent: accounted memory, never a blind collect
             # (interval_join.rs:624-660) — fall back to the distributed path
-            if l_keys:
-                return _frac_filter(
-                    _cogroup_index_join(lb, rb, l_keys, r_keys, out_cols)
-                )
+            width = resolve_bin_width(
+                width, left, left_start, left_end, right, r_start, r_end
+            )
             return _frac_filter(
                 _binning_join(lb, rb, l_keys, r_keys, width, out_cols)
             )
-
-    if algo == "partitioned":
-        return _frac_filter(_cogroup_index_join(lb, rb, l_keys, r_keys, out_cols))
 
     raise AssertionError(f"unreachable algorithm {algo}")
 
@@ -802,22 +805,20 @@ def _outer_overlap(
         try:
             pairs = _broadcast_index_join(lb2, rb2, l_keys, r_keys, inner_cols, metrics)
         except BuildSideTooLargeError:
-            algo = "partitioned" if l_keys else "binning"
+            algo = "binning"
     if algo == "binning":
         # lazy "auto" resolution on the bound-stamped frames (the eager
         # per-call resolve was a wasted two-table percentile job for the
-        # index/partitioned outers that never reach this branch)
+        # index outers that never reach this branch)
         width = resolve_bin_width(width, lb2, _LS, _LE, rb2, _RS, _RE)
         pairs = _binned_pairs(
             lb2, rb2, l_keys, r_keys, width, boost_parts=False
         ).select(*inner_cols)
-    elif algo == "partitioned":
-        pairs = _cogroup_index_join(lb2, rb2, l_keys, r_keys, inner_cols)
 
     # `pairs` feeds the output AND each pad branch's matched-id set. The pad
     # branches re-evaluate the inner join — column-pruned to ids+keys+
     # bounds on the JVM binning path (exchange reuse shares the shuffle
-    # files); on the Python-backed index/partitioned paths the Arrow stage
+    # files); on the Python-backed index path the Arrow stage
     # can't be pruned, so a single-sided outer genuinely runs the probe
     # twice (output branch + pad branch). That is still the right trade:
     # materializing the full `pairs` is a trap (the pair set is the largest
@@ -867,71 +868,6 @@ def _binning_join(
 ) -> DataFrame:
     """Pure-DataFrame binned range join (SURVEY.md §7 step 3)."""
     return _binned_pairs(lb, rb, l_keys, r_keys, width).select(*out_cols)
-
-
-def _cogroup_index_join(
-    lb: DataFrame,
-    rb: DataFrame,
-    l_keys: tuple[str, ...] | list[str],
-    r_keys: list[str],
-    out_cols: list[str],
-) -> DataFrame:
-    """Partitioned-mode analogue (``interval_join.rs:391-398,488-503``):
-    shuffle BOTH sides by the equi-keys, build a per-key index and probe it
-    inside ``cogroup().applyInPandas``.
-
-    The right algorithm when the build side is too big to broadcast but no
-    single key group dominates: per-task memory is bounded by the largest
-    key group, and there is exactly one shuffle per side (the same
-    distribution requirement the reference's Partitioned mode declares).
-    Keyless calls degenerate to one group — use ``binning`` there.
-    """
-    if not l_keys:
-        # reference injects lit(1)=lit(1) (sequila_physical_planner.rs:136),
-        # which would serialize everything into one task here — broadcast
-        # index has the same memory shape with full probe parallelism
-        return _broadcast_index_join(lb, rb, l_keys, r_keys, out_cols)
-
-    # SQL equality semantics: null keys never match — drop before cogroup
-    # (cogroup would otherwise pair the two null groups)
-    lb = lb.na.drop(subset=list(l_keys))
-    rb = rb.na.drop(subset=list(r_keys))
-
-    from pyspark.sql.types import StructType
-
-    left_cols = [c for c in out_cols if c in lb.columns]
-    right_cols = [c for c in out_cols if c not in lb.columns]
-    out_schema = StructType(
-        list(lb.select(*left_cols).schema.fields)
-        + list(rb.select(*right_cols).schema.fields)
-    )
-
-    def join_group(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(l_pdf) or not len(r_pdf):
-            return pd.DataFrame(columns=[*left_cols, *right_cols])
-        lv = l_pdf[l_pdf[_LS].notna() & l_pdf[_LE].notna()]
-        rv = r_pdf[r_pdf[_RS].notna() & r_pdf[_RE].notna()]
-        if not len(lv) or not len(rv):
-            return pd.DataFrame(columns=[*left_cols, *right_cols])
-        starts, ends, runmax, order = _sorted_build_arrays(
-            lv[_LS].to_numpy(np.int64), lv[_LE].to_numpy(np.int64)
-        )
-        cand, probe_rep = _probe_spans(
-            starts, ends, runmax,
-            rv[_RS].to_numpy(np.int64), rv[_RE].to_numpy(np.int64),
-        )
-        if not cand.size:
-            return pd.DataFrame(columns=[*left_cols, *right_cols])
-        l_part = lv[left_cols].iloc[order[cand]].reset_index(drop=True)
-        r_part = rv[right_cols].iloc[probe_rep].reset_index(drop=True)
-        return pd.concat([l_part, r_part], axis=1)
-
-    return (
-        lb.groupBy(*l_keys)
-        .cogroup(rb.groupBy(*r_keys))
-        .applyInPandas(join_group, schema=out_schema)
-        .select(*out_cols)
-    )
 
 
 def _broadcast_index_join(
@@ -1074,7 +1010,7 @@ def window_join(
 
     Pure composition: widening the LEFT side by ``window`` on both ends
     turns proximity into overlap, so the whole accelerated overlap-join
-    machinery (binning/index/partitioned, conf knobs, guards) applies
+    machinery (binning/index, conf knobs, guards) applies
     unchanged; output columns keep the ORIGINAL bounds.
     """
     if window < 0:

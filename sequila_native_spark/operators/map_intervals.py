@@ -42,6 +42,11 @@ from sequila_native_spark.operators.interval_join import (
     guarded_build_arrow,
     resolve_bin_width,
 )
+from sequila_native_spark.operators.count_overlaps import (
+    _arrow_keys,
+    _ints,
+    _key_groups,
+)
 from sequila_native_spark.operators.intervals import (
     fraction_predicate,
     overlap_predicate,
@@ -111,41 +116,16 @@ def _build_map_index(lb: DataFrame, l_keys: list[str]) -> dict[tuple, tuple]:
     partials can be re-attached to left rows. Raises
     :class:`BuildSideTooLargeError` past ``maxBroadcastBuildRows``."""
     tbl = guarded_build_arrow(lb)
-    # rows with null key/bounds can never match a pair; the final left join
-    # still emits them with the null-group defaults
-    ok = pc.and_(pc.is_valid(tbl[_LS]), pc.is_valid(tbl[_LE]))
-    for k in l_keys:
-        ok = pc.and_(ok, pc.is_valid(tbl[k]))
-    if tbl.num_rows and not pc.all(ok).as_py():
-        tbl = tbl.filter(ok)
-    index: dict[tuple, tuple] = {}
-    if tbl.num_rows == 0:
-        return index
-    starts = tbl[_LS].combine_chunks().to_numpy().astype(np.int64, copy=False)
-    ends = tbl[_LE].combine_chunks().to_numpy().astype(np.int64, copy=False)
-    aids = tbl[_AID].combine_chunks().to_numpy().astype(np.int64, copy=False)
-
-    def entry(s, e, a):
-        order = np.argsort(s, kind="stable")
-        s, e, a = s[order], e[order], a[order]
-        return (s, e, np.maximum.accumulate(e), a)
-
-    if l_keys:
-        enc = pc.dictionary_encode(tbl[l_keys[0]].combine_chunks())
-        codes = enc.indices.to_numpy()
-        order = np.lexsort((starts, codes))
-        sc = codes[order]
-        run_starts = np.concatenate(
-            ([0], np.flatnonzero(np.diff(sc)) + 1, [len(sc)])
-        )
-        ss, es, aa = starts[order], ends[order], aids[order]
-        for i in range(len(run_starts) - 1):
-            lo, hi = run_starts[i], run_starts[i + 1]
-            key = (enc.dictionary[int(sc[lo])].as_py(),)
-            index[key] = entry(ss[lo:hi], es[lo:hi], aa[lo:hi])
-    else:
-        index[()] = entry(starts, ends, aids)
-    return index
+    # rows with null key/bounds can never match a pair (they are in no key
+    # group); the final left join still emits them with the null-group
+    # defaults
+    starts = _ints(tbl, _LS).astype(np.int64, copy=False)
+    ends = _ints(tbl, _LE).astype(np.int64, copy=False)
+    aids = _ints(tbl, _AID).astype(np.int64, copy=False)
+    return {
+        key: (starts[pos], ends[pos], np.maximum.accumulate(ends[pos]), aids[pos])
+        for key, pos in _key_groups(tbl, l_keys, (_LS, _LE), sort_by=starts)
+    }
 
 
 def _index_map(
@@ -192,8 +172,7 @@ def _index_map(
         [StructField(_AID, LongType(), False)]
         + [StructField(out, LongType(), op != "count") for out, op, _ in plan]
     )
-    kname = r_keys[0] if r_keys else None
-    need_cols = [c for c in ([kname] if kname else []) + [_RS, _RE] + val_names]
+    need_cols = list(dict.fromkeys([*r_keys, _RS, _RE, *val_names]))
     from sequila_native_spark.util import ensure_parallel
 
     # hash-keyed repartition (deterministic columns): a few-split scan
@@ -208,22 +187,8 @@ def _index_map(
         for batch in batches:
             if batch.num_rows == 0 or not idx_map:
                 continue
-            rs_col = batch.column(batch.schema.get_field_index(_RS))
-            re_col = batch.column(batch.schema.get_field_index(_RE))
-            ok = pc.and_(pc.is_valid(rs_col), pc.is_valid(re_col))
-            if kname is not None:
-                k_col = batch.column(batch.schema.get_field_index(kname))
-                ok = pc.and_(ok, pc.is_valid(k_col))
-            if not pc.all(ok).as_py():
-                batch = batch.filter(ok)
-                if batch.num_rows == 0:
-                    continue
-                rs_col = batch.column(batch.schema.get_field_index(_RS))
-                re_col = batch.column(batch.schema.get_field_index(_RE))
-                if kname is not None:
-                    k_col = batch.column(batch.schema.get_field_index(kname))
-            qs = rs_col.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            qe = re_col.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+            qs = _ints(batch, _RS).astype(np.int64, copy=False)
+            qe = _ints(batch, _RE).astype(np.int64, copy=False)
             vals: dict[str, tuple[np.ndarray, np.ndarray]] = {}
             for a in val_names:
                 col = batch.column(batch.schema.get_field_index(a))
@@ -274,20 +239,10 @@ def _index_map(
                         np.ma.masked_array(acc, mask=(nn == 0))
                     )
 
-            if kname is not None:
-                enc = pc.dictionary_encode(k_col)
-                codes = enc.indices.to_numpy(zero_copy_only=False)
-                for i in range(len(enc.dictionary)):
-                    entry = idx_map.get((enc.dictionary[i].as_py(),))
-                    if entry is None:
-                        continue
-                    pos = np.flatnonzero(codes == i)
-                    if pos.size:
-                        group(entry, pos)
-            else:
-                entry = idx_map.get(())
+            for key, pos in _key_groups(batch, r_keys, (_RS, _RE)):
+                entry = idx_map.get(key)
                 if entry is not None:
-                    group(entry, np.arange(batch.num_rows))
+                    group(entry, pos)
             if out_aid:
                 arrays = [pa.array(np.concatenate(out_aid), type=pa.int64())]
                 for out, _, _ in plan:
@@ -373,12 +328,14 @@ def map_intervals(
     oracle predicate join), or ``index`` — the broadcast-index kernel
     (guarded by ``spark.sequila.maxBroadcastBuildRows``) for the
     batch-decomposable aggregates (count/sum/min/max over integral value
-    columns, ≤1 simple-typed equi-key): per-batch partial aggregates
-    replace the pair join, so no pair-sized exchange exists at all.
-    Non-decomposable aggs (mean/collect/distinct/count_distinct), exotic
-    keys, non-integral values, or an over-budget left side fall back to
-    ``binning`` (the exact pre-existing plan). ``partitioned`` routes to
-    ``binning`` — the aggregate already shuffles on the left row id.
+    columns; any number of string, integral or boolean equi-keys):
+    per-batch partial aggregates replace the pair join, so no pair-sized
+    exchange exists at all. Non-decomposable aggs
+    (mean/collect/distinct/count_distinct), other key types (date,
+    timestamp, decimal, float), non-integral values, or an over-budget
+    left side fall back to ``binning`` (the exact pre-existing plan).
+    ``partitioned`` routes to ``binning``, as it does for every overlap
+    operator.
     """
     if not aggs:
         raise ValueError("aggs must name at least one aggregate")
@@ -444,8 +401,6 @@ def map_intervals(
     rb = _with_bounds(right_pruned, right_start, right_end, _RS, _RE, strict, check)
 
     if algo == "index":
-        from sequila_native_spark.operators.count_overlaps import _arrow_keys
-
         rtypes = dict(right.dtypes)
         kernel_ok = (
             all(op in _KERNEL_OPS for op, _ in aggs.values())

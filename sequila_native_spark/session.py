@@ -100,6 +100,7 @@ _ALGORITHM_ALIASES = {
     "none": "naive",
     "binning": "binning",
     "index": "index",
+    # overlap and count operators run binning for it; nearest_join its cogroup
     "partitioned": "partitioned",
     "cogroup": "partitioned",
     "coitrees": "index",

@@ -44,8 +44,8 @@ def test_guarded_collect_passes_under_cap(spark, reads):
     assert len(guarded_build_pandas(reads.limit(2))) == 2
 
 
-def test_overlap_index_falls_back_to_partitioned(spark, tiny_cap, reads, targets):
-    got = overlap_join(reads, targets, on="contig", algorithm="index")
+def test_overlap_index_falls_back_to_binning(spark, tiny_cap, reads, targets):
+    got = _no_python_probe(overlap_join(reads, targets, on="contig", algorithm="index"))
     want = overlap_join(reads, targets, on="contig", algorithm="naive")
     assert rows_set(got) == rows_set(want)
 
@@ -78,7 +78,8 @@ def test_count_overlaps_index_falls_back_to_binning(spark, tiny_cap, reads, targ
 
 def _no_python_probe(df):
     plan = df._jdf.queryExecution().analyzed().toString()
-    assert "MapInArrow" not in plan and "MapInPandas" not in plan, plan
+    for node in ("MapInArrow", "MapInPandas", "FlatMapCoGroupsInPandas"):
+        assert node not in plan, plan
     return df
 
 

@@ -28,7 +28,7 @@ GOLDEN_EQUI = {
 }
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "binning", "index", "partitioned"])
+@pytest.mark.parametrize("algorithm", ["naive", "binning", "index"])
 def test_equi_range_exact_golden_rows(spark, reads, targets, algorithm):
     out = overlap_join(
         reads, targets, on="contig", algorithm=algorithm, bin_width=1000

@@ -77,7 +77,7 @@ _SPEC = dict(
 )
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "binning", "index", "partitioned"])
+@pytest.mark.parametrize("algorithm", ["naive", "binning", "index"])
 @pytest.mark.parametrize(
     "kw,min_f,min_F,either",
     [

@@ -2,8 +2,8 @@
 
 Pins the operator's contract against its definition: bit-identical rows to
 ``overlap_join(..., algorithm="binning").groupBy(keys).count()`` across the
-keyed/keyless/strict/null/int-key/fallback shapes, including the Arrow probe
-(0/1 simple key) and the pandas fallback (multi-key)."""
+keyed/keyless/strict/null/int-key/fallback shapes, through the Arrow probe
+for one key and for several."""
 
 from __future__ import annotations
 
@@ -93,14 +93,15 @@ def test_agg_int_key_and_multi_key(spark, sides):
     )
     want = rows_set(oj.groupBy("k").agg(F.count(F.lit(1)).cast("long").alias("n_pairs")))
     assert got == want
-    # multi key: pandas fallback path
-    got = rows_set(
-        overlap_count_agg(
-            t2, r2, on=["contig", "k"],
-            left_start="t_start", left_end="t_end",
-            right_start="r_start", right_end="r_end", alias="n_pairs",
-        )
+    # multi key: the same Arrow probe, one group per (contig, k)
+    agg = overlap_count_agg(
+        t2, r2, on=["contig", "k"],
+        left_start="t_start", left_end="t_end",
+        right_start="r_start", right_end="r_end", alias="n_pairs",
     )
+    plan = agg._jdf.queryExecution().analyzed().toString()
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+    got = rows_set(agg)
     oj = overlap_join(
         r2, t2, on=["contig", "k"],
         left_start="r_start", left_end="r_end",

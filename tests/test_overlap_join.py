@@ -15,7 +15,9 @@ from sequila_native_spark import overlap_join
 from tests.conftest import rows_set
 from _testdata import SF0_001
 
-ALGORITHMS = ["naive", "binning", "index", "partitioned"]
+# "partitioned" (and its alias "cogroup") runs binning:
+# test_partitioned_name_runs_binning
+ALGORITHMS = ["naive", "binning", "index"]
 # reference algorithm names must parse too (session_context.rs:85-104)
 REFERENCE_NAMES = ["Coitrees", "IntervalTree", "ArrayIntervalTree", "Lapper", "SuperIntervals"]
 
@@ -186,6 +188,20 @@ def test_outer_overlap_agrees_with_naive_sql(spark, reads, targets, how, algorit
     got = rows_set(overlap_join(reads, targets, algorithm=algorithm, **kwargs))
     want = rows_set(overlap_join(reads, targets, algorithm="naive", **kwargs))
     assert got == want
+
+
+@pytest.mark.parametrize("how", ["inner", "left"])
+def test_partitioned_name_runs_binning(spark, reads, targets, how):
+    # overlap_join's one shuffle path is binning: both names of the reference's
+    # Partitioned mode run it, with no cogroup in the plan
+    kw = dict(on="contig", how=how, bin_width=1000)
+    want = rows_set(overlap_join(reads, targets, algorithm="naive", **kw))
+    for name in ("partitioned", "cogroup"):
+        out = overlap_join(reads, targets, algorithm=name, **kw)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        assert "FlatMapCoGroupsInPandas" not in plan, plan
+        assert "Generate explode" in plan, plan
+        assert rows_set(out) == want
 
 
 @pytest.mark.parametrize("algorithm", ALGORITHMS)
@@ -364,7 +380,7 @@ def test_index_algorithm_with_array_payload(spark):
 
 def test_rsuffix_collision_with_existing_column_raises(spark):
     """Renaming right 'x' to 'x_r' when 'x_r' already exists would silently
-    drop the right side's data in the index/partitioned split — must raise
+    drop the right side's data in the index path's column split — must raise
     (reviewer, r7)."""
     left = spark.createDataFrame(
         [("c1", 1, 5, 7, 8)],

@@ -10,6 +10,7 @@ bounds, and every real subpackage covered by the find-include pattern.
 
 from __future__ import annotations
 
+import importlib.util
 import pathlib
 
 try:
@@ -148,3 +149,19 @@ def test_find_pattern_covers_all_subpackages():
     assert {"sequila_native_spark.operators", "sequila_native_spark.functions",
             "sequila_native_spark.sources", "sequila_native_spark.plans",
             "sequila_native_spark.streaming"} <= subpkgs
+
+
+def test_api_doc_matches_generator(tmp_path):
+    """docs/API.md is generated from the public docstrings and signatures
+    (tools/gen_api_docs.py); a change to either without regenerating the
+    page fails here."""
+    spec = importlib.util.spec_from_file_location(
+        "gen_api_docs", REPO / "tools" / "gen_api_docs.py"
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    out = tmp_path / "API.md"
+    assert gen.main([str(out)]) == 0
+    assert out.read_text() == (REPO / "docs" / "API.md").read_text(), (
+        "docs/API.md is stale: run PYTHONPATH=. python tools/gen_api_docs.py"
+    )

@@ -7,7 +7,7 @@ predicate join as ground truth.
 from __future__ import annotations
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from sequila_native_spark import nearest_join, overlap_join
@@ -54,7 +54,6 @@ def test_all_algorithms_agree_with_naive(spark, tabs):
     assert run("binning", bin_width=7) == truth
     assert run("binning", bin_width=1) == truth  # bin width must not matter
     assert run("index") == truth
-    assert run("partitioned") == truth
 
 
 @settings(
@@ -211,7 +210,6 @@ def test_fraction_algorithms_agree_with_naive(spark, tabs, frac):
     truth = run("naive")
     assert run("binning") == truth
     assert run("index") == truth
-    assert run("partitioned") == truth
 
 
 @settings(
@@ -311,7 +309,7 @@ def test_mixed_key_families_agree_or_raise(spark, flip):
     ):
         truth = rows_set(op(left, right, **kw, **extra, algorithm="naive"))
         assert any(r[-1] for r in truth), op.__name__  # 1 = '1' did match
-        for algo in ("binning", "index", "partitioned"):
+        for algo in ("binning", "index"):
             got = rows_set(op(left, right, **kw, **extra, algorithm=algo))
             assert got == truth, (op.__name__, algo)
 
@@ -324,6 +322,108 @@ def test_mixed_key_families_agree_or_raise(spark, flip):
     for algo in ("naive", "index", "partitioned", "broadcast_probe"):
         with pytest.raises(ValueError, match=r"\(int\).*\(string\)|\(string\).*\(int\)"):
             nearest_join(left, right, **kw, algorithm=algo)
+
+
+# two keys (string + int) with nulls in either key and in the bounds, and
+# negative lengths for inverted intervals; sides may be empty
+keyed_interval = st.tuples(
+    st.sampled_from(["c1", "c2", None]),
+    st.sampled_from([1, 2, None]),
+    st.one_of(st.none(), st.integers(min_value=-20, max_value=40)),
+    st.integers(min_value=-3, max_value=12),
+    st.one_of(st.none(), st.integers(min_value=-5, max_value=5)),
+)
+_TWO_KEY_ROW = ("c1", 1, 0, 10, 1)
+
+
+@settings(
+    max_examples=4,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(st.tuples(
+    st.lists(keyed_interval, min_size=0, max_size=15),
+    st.lists(keyed_interval, min_size=0, max_size=15),
+))
+@example(([], [_TWO_KEY_ROW]))  # empty build side
+@example(([_TWO_KEY_ROW], []))  # empty probe side
+def test_two_key_count_family_agrees_with_naive(spark, tabs):
+    # the one Arrow index path groups rows by every key at once: a null in
+    # either key or in a bound puts the row in no group, as SQL equality does
+    from sequila_native_spark import (
+        count_overlaps, coverage, map_intervals, overlap_count_agg,
+    )
+
+    schema = "c string, k int, s int, e int, v int"
+    left, right = (
+        spark.createDataFrame(
+            [(c, k, s, None if s is None or ln == 0 else s + ln, v)
+             for c, k, s, ln, v in rows],
+            schema,
+        )
+        for rows in tabs
+    )
+    kw = dict(on=["c", "k"], left_start="s", left_end="e",
+              right_start="s", right_end="e")
+    aggs = {"n": ("count", None), "vs": ("sum", "v"), "vmax": ("max", "v")}
+    for op, extra in (
+        (count_overlaps, {}),
+        (coverage, {}),
+        (map_intervals, dict(aggs=aggs)),
+    ):
+        out = op(left, right, **kw, **extra, algorithm="index")
+        plan = out._jdf.queryExecution().analyzed().toString()
+        assert "MapInArrow" in plan, (op.__name__, plan)
+        truth = rows_set(op(left, right, **kw, **extra, algorithm="naive"))
+        assert rows_set(out) == truth, op.__name__
+
+    want = rows_set(
+        overlap_join(left, right, **kw, algorithm="naive", rsuffix="_r")
+        .groupBy("c", "k").count()
+    )
+    assert rows_set(overlap_count_agg(left, right, **kw, alias="count")) == want
+
+
+def test_date_key_runs_binning(spark):
+    # date keys are outside the Arrow index's key types: every count-family
+    # operator runs the binning plan and gives the naive rows
+    import datetime as dt
+
+    from sequila_native_spark import (
+        count_overlaps, coverage, map_intervals, overlap_count_agg,
+    )
+
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
+    left = spark.createDataFrame(
+        [(d1, 1, 10, 5), (d1, 8, 20, 6), (d2, 1, 10, 7), (None, 1, 10, 8)],
+        "d date, s int, e int, v int",
+    )
+    right = spark.createDataFrame(
+        [(d1, 5, 9, 1), (d2, 12, 15, 2), (d2, 0, 3, 3), (None, 1, 10, 4)],
+        "d date, s int, e int, v int",
+    )
+    kw = dict(on="d", left_start="s", left_end="e",
+              right_start="s", right_end="e")
+    for op, extra in (
+        (count_overlaps, {}),
+        (coverage, {}),
+        (map_intervals, dict(aggs={"n": ("count", None), "vs": ("sum", "v")})),
+    ):
+        out = op(left, right, **kw, **extra, algorithm="index")
+        plan = out._jdf.queryExecution().analyzed().toString()
+        assert "MapInArrow" not in plan and "Generate explode" in plan, plan
+        truth = rows_set(op(left, right, **kw, **extra, algorithm="naive"))
+        assert rows_set(out) == truth, op.__name__
+        assert any(r[-1] for r in truth), op.__name__  # some rows matched
+
+    agg = overlap_count_agg(left, right, **kw, alias="count")
+    plan = agg._jdf.queryExecution().analyzed().toString()
+    assert "MapInArrow" not in plan and "Generate explode" in plan, plan
+    want = rows_set(
+        overlap_join(left, right, **kw, algorithm="naive", rsuffix="_r")
+        .groupBy("d").count()
+    )
+    assert rows_set(agg) == want
 
 
 # --- r6 prep-op laws under random corpora -------------------------------
