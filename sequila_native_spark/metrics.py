@@ -5,9 +5,10 @@ The reference tracks build/probe metrics on its exec node
 join_time, input/output rows; logged at ``interval_join.rs:1157-1184``).
 In Spark, every JVM-side operator (the ``binning``/``naive`` paths) already
 surfaces row counts and timings in the SQL UI / ``df.explain`` metrics —
-nothing to build. The pandas-backed paths (``index``) are a black box to the
-UI, so they accept an optional :class:`IntervalJoinMetrics` whose named
-accumulators mirror the reference's counters.
+nothing to build. The Python probe of overlap_join's ``index`` path
+(``mapInArrow``) is a black box to the UI, so it accepts an optional
+:class:`IntervalJoinMetrics` whose named accumulators mirror the
+reference's counters.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from pyspark.sql import SparkSession
 
 
 class IntervalJoinMetrics:
-    """Named counters for a pandas-backed interval join invocation.
+    """Named counters for one overlap_join ``index`` invocation.
 
     Accumulators aggregate across all probe tasks; read them after an action
     has materialized the join.
@@ -34,7 +35,7 @@ class IntervalJoinMetrics:
     def __init__(self, spark: SparkSession):
         sc = spark.sparkContext
         self.build_input_rows = 0          # driver-side (build is collected)
-        self.build_time_s = 0.0            # driver-side index build wall time
+        self.build_time_s = 0.0            # driver-side build or cache lookup
         self.probe_input_rows = sc.accumulator(0)
         self.probe_batches = sc.accumulator(0)
         self.output_rows = sc.accumulator(0)

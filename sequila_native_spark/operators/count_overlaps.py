@@ -26,9 +26,10 @@ Algorithms:
     kernel instead.
     The build is kept in the session index cache
     (``interval_join.broadcast_build``): over one unchanged file input,
-    count_overlaps and coverage share one collect and broadcast. Any number
-    of string, integral or boolean keys (:func:`_arrow_keys`); other key
-    types (date, timestamp, decimal, float) run ``binning``.
+    count_overlaps, coverage and overlap_count_agg share one collect and
+    broadcast. Any number of string, integral, boolean or floating keys
+    (:func:`_arrow_keys`); other key types (date, timestamp, decimal) run
+    ``binning``.
 
 :func:`overlap_count_agg` is the aggregated form of the same kernel:
 ``overlap_join(...).groupBy(keys).count()`` computed without emitting a
@@ -43,20 +44,10 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    ByteType,
-    IntegerType,
-    LongType,
-    ShortType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from sequila_native_spark.operators.interval_join import (
     _LE,
@@ -64,7 +55,11 @@ from sequila_native_spark.operators.interval_join import (
     _RE,
     _RS,
     BuildSideTooLargeError,
+    _arrow_keys,
     _binned_pairs,
+    _column,
+    _ints,
+    _key_groups,
     _probe_spans,
     _with_bounds,
     broadcast_build,
@@ -74,7 +69,6 @@ from sequila_native_spark.operators.interval_join import (
 )
 from sequila_native_spark.util import stamp_row_id
 from sequila_native_spark.operators.intervals import (
-    I32_MIN,
     fraction_predicate,
     overlap_predicate,
     validate_sides,
@@ -261,72 +255,6 @@ def _mask_counts(
     return np.zeros(len(qs), dtype=np.int64)
 
 
-def _arrow_keys(build: DataFrame, keys) -> bool:
-    """Index gate for the count family and map_intervals: every key is a
-    string, integral or boolean column, whose Arrow ``.as_py()`` value is
-    the same hashable python value on the build and the probe side.
-    Timestamps/decimals/dates/floats route to binning, where Catalyst
-    compares them. Callers route mixed-family key pairs
-    (``IntervalSides.mixed_keys``) to binning first, so the build side's
-    key types speak for the probe side's too."""
-    simple = (StringType, IntegerType, LongType, ShortType, ByteType, BooleanType)
-    return all(isinstance(build.schema[k].dataType, simple) for k in keys)
-
-
-def _key_groups(
-    data, keys, bounds, sort_by: np.ndarray | None = None,
-) -> Iterator[tuple[tuple, np.ndarray]]:
-    """Split the rows of an Arrow table or record batch into equi-key
-    groups: yields ``(key tuple, row positions)``.
-
-    Each key column is dictionary-encoded and the codes are combined into
-    one group code, so grouping is one integer sort, with no per-row python
-    objects. A row with a null in any key or ``bounds`` column is in no
-    group (SQL equality never matches null). Positions ascend within a
-    group, or follow the int32 values of ``sort_by`` when given.
-    """
-    ok = np.ones(data.num_rows, dtype=bool)
-    for b in bounds:
-        ok &= pc.is_valid(_column(data, b)).to_numpy(zero_copy_only=False)
-    code = np.zeros(data.num_rows, dtype=np.int64)
-    card = 1
-    dicts = []
-    for k in keys:
-        enc = pc.dictionary_encode(_column(data, k))
-        codes = pc.fill_null(enc.indices, -1).to_numpy(zero_copy_only=False)
-        ok &= codes >= 0
-        dicts.append((enc.dictionary, codes))
-        code = code * len(enc.dictionary) + codes
-        card *= len(enc.dictionary)
-        if card >= 1 << 31:  # renumber densely: codes stay below 2^31
-            code = np.unique(code, return_inverse=True)[1].astype(np.int64)
-            card = data.num_rows
-    pos = np.flatnonzero(ok)
-    if not pos.size:
-        return
-    if sort_by is None:
-        pos = pos[np.argsort(code[pos], kind="stable")]
-    else:
-        # one int64 sort key: the group code above the int32 value
-        pos = pos[np.argsort(
-            (code[pos] << 32) | (sort_by[pos].astype(np.int64) - I32_MIN)
-        )]
-    runs = np.flatnonzero(np.diff(code[pos])) + 1
-    for grp in np.split(pos, runs):
-        first = grp[0]
-        yield tuple(d[int(c[first])].as_py() for d, c in dicts), grp
-
-
-def _column(data, name: str) -> pa.Array:
-    col = data.column(name)
-    return col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-
-
-def _ints(data, name: str) -> np.ndarray:
-    """A bound column as numpy, nulls as 0 (null rows are in no group)."""
-    return pc.fill_null(_column(data, name), 0).to_numpy(zero_copy_only=False)
-
-
 def _entry_from_sorted(starts_s: np.ndarray, ends_by_start: np.ndarray) -> tuple:
     """Count-index entry from arrays already sorted by start.
 
@@ -349,13 +277,13 @@ def _entry_from_sorted(starts_s: np.ndarray, ends_by_start: np.ndarray) -> tuple
 
 
 def _count_index(lb: DataFrame, l_keys):
-    """Broadcast of ``lb``'s per-key count index. count_overlaps and
-    coverage both probe it (coverage adds its prefix sums per task), so
-    over one input they share one cached build."""
+    """Broadcast of ``lb``'s per-key count index. count_overlaps,
+    coverage and overlap_count_agg all probe it (coverage adds its prefix
+    sums per task), so over one input they share one cached build."""
     return broadcast_build(
         lb, ("overlap_count", tuple(l_keys)),
         lambda: _build_count_index(lb, l_keys),
-    )
+    )[0]
 
 
 def _build_count_index(lb: DataFrame, l_keys) -> tuple[dict[tuple, tuple], int]:
@@ -443,6 +371,7 @@ def overlap_count_agg(
     pairs each key group produces. Build: collect the LEFT side's
     (keys, bounds) once through Arrow (guarded by
     ``spark.sequila.maxBroadcastBuildRows``) into per-key sorted arrays.
+    The build is count_overlaps' cached count index (:func:`_count_index`).
     Probe: ``mapInArrow`` over the RIGHT side pruned to (keys, bounds);
     each batch contributes per-key partial sums of the two-binary-search
     counts (:func:`_group_counts`), so the per-pair O(pairs) emission cost
@@ -467,13 +396,13 @@ def overlap_count_agg(
     right_p = right.select(*dict.fromkeys([*r_keys, right_start, right_end]))
     lb = _with_bounds(left_p, left_start, left_end, _LS, _LE, strict, check)
 
-    index = None
+    bc = None
     if not sides.mixed_keys and _arrow_keys(left_p, l_keys):
         try:
-            index, _ = _build_count_index(lb.select(*l_keys, _LS, _LE), l_keys)
+            bc = _count_index(lb, l_keys)
         except BuildSideTooLargeError:
             pass
-    if index is None:
+    if bc is None:
         # accounted-memory, key-type or mixed-key fallback: the binned pair
         # join + groupBy — the exact expression this operator replaces
         from sequila_native_spark.operators.interval_join import overlap_join
@@ -498,7 +427,6 @@ def overlap_count_agg(
     # sort-before-repartition (guide §2.5 note; measured 0.9 → 0.6 s on the
     # 600k-row probe side). No-op when the scan already has enough splits.
     rb = ensure_parallel(rb, [*r_keys, _RS, _RE])
-    bc = spark.sparkContext.broadcast(index)
 
     key_fields = list(left_p.select(*l_keys).schema.fields) if l_keys else []
     out_schema = StructType(key_fields + [StructField(alias, LongType(), False)])
@@ -511,7 +439,7 @@ def overlap_count_agg(
             if batch.num_rows == 0 or not idx_map:
                 continue
             qs, qe = _ints(batch, _RS), _ints(batch, _RE)
-            out_keys: list[tuple] = []
+            firsts: list[int] = []
             out_counts: list[int] = []
             for key, pos in _key_groups(batch, r_keys, (_RS, _RE)):
                 entry = idx_map.get(key)
@@ -519,12 +447,16 @@ def overlap_count_agg(
                     continue
                 total = int(_group_counts(entry, qs[pos], qe[pos]).sum())
                 if total:
-                    out_keys.append(key)
+                    firsts.append(pos[0])
                     out_counts.append(total)
             if out_counts:
+                # each group's key as the probe batch holds it: the final
+                # groupBy merges -0.0 with 0.0 and NaN with NaN, as the
+                # join's groupBy does
+                rows = pa.array(firsts, type=pa.int64())
                 arrays = [
-                    pa.array([k[i] for k in out_keys], type=t)
-                    for i, t in enumerate(key_types)
+                    _column(batch, k).take(rows).cast(t)
+                    for k, t in zip(r_keys, key_types)
                 ]
                 arrays.append(pa.array(out_counts, type=pa.int64()))
                 yield pa.RecordBatch.from_arrays(arrays, schema=out_pa_schema)

@@ -25,17 +25,14 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sequila_native_spark.operators.count_overlaps import (
-    _arrow_keys,
-    _as_dtype,
-    _index_probe,
-)
+from sequila_native_spark.operators.count_overlaps import _as_dtype, _index_probe
 from sequila_native_spark.operators.interval_join import (
     _LE,
     _LS,
     _RE,
     _RS,
     BuildSideTooLargeError,
+    _arrow_keys,
     _binned_pairs,
     _probe_spans,
     _with_bounds,

@@ -37,11 +37,16 @@ cross-algorithm validation strategy):
     ``OnceAsync`` ``joins/utils.rs:73-107``): collect + broadcast the build
     (left) side as per-key sorted numpy arrays — the superintervals recipe
     (sorted starts, ends, running-max of ends; ``superintervals/src/
-    superintervals.rs:161-307``) — and stream probe batches through
-    ``mapInPandas``. Probe cost per row is two binary searches plus an
-    output-sensitive scan. Use when the build side fits in executor memory;
-    parallelism = probe-side partitions, zero shuffle. A build side over
-    ``spark.sequila.maxBroadcastBuildRows`` runs ``binning`` instead.
+    superintervals.rs:161-307``) — beside its payload as an Arrow record
+    batch, and stream probe batches through ``mapInArrow``; matched
+    payload rows are gathered with ``take``. Probe cost per row is two binary searches
+    plus an output-sensitive scan. Use when the build side fits in
+    executor memory; parallelism = probe-side partitions, zero shuffle.
+    The build is kept in the session index cache and shared with
+    ``nearest_join``'s ``index`` path (:func:`interval_index`). Any number
+    of string, integral, boolean or floating keys; other key types, and a
+    build side over ``spark.sequila.maxBroadcastBuildRows``, run
+    ``binning`` instead.
 """
 
 from __future__ import annotations
@@ -50,9 +55,21 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+)
 
 from sequila_native_spark.operators.intervals import (
     I32_MAX,
@@ -77,106 +94,13 @@ class BuildSideTooLargeError(RuntimeError):
 
     The reference pre-reserves and accounts build memory before collecting
     (``interval_join.rs:624-660``); collecting an unbounded build side to the
-    driver would OOM instead. Callers with a distributed equivalent
-    fall back to it: ``binning`` for overlap_join, count_overlaps,
-    coverage, overlap_count_agg and map_intervals; ``broadcast_probe`` and
-    then ``partitioned`` for nearest_join. Otherwise this error surfaces
-    with the knob to raise."""
-
-
-def compact_build_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Shrink a collected build-side frame before broadcasting it.
-
-    Object (string) columns become pandas categoricals — genomic keys have
-    tiny cardinality (~25 contigs), so 600k pickled Python strings collapse
-    to 2-byte codes + one category table. This cuts broadcast pickle size
-    ~5×, which is what the per-task unpickle in every probe worker pays.
-    Callers must re-expand with :func:`expand_taken` after row selection
-    (Arrow output conversion wants plain dtypes, not dictionaries).
-    """
-    out = {}
-    for c in pdf.columns:
-        s = pdf[c]
-        if s.dtype == object:
-            try:
-                out[c] = s.astype("category")
-            except TypeError:
-                # unhashable payloads (array/map/struct columns) can't be
-                # dictionary-encoded — keep them raw; decompose_build's
-                # "plain" branch handles object arrays (reviewer, r7)
-                out[c] = s
-        else:
-            out[c] = s
-    return pd.DataFrame(out, index=pdf.index)
-
-
-def expand_taken(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Undo :func:`compact_build_pandas` on an output batch (post-``take``,
-    so only emitted rows pay the expansion)."""
-    for c in pdf.columns:
-        if isinstance(pdf[c].dtype, pd.CategoricalDtype):
-            pdf[c] = pdf[c].astype(object)
-    return pdf
-
-
-def decompose_build(build_pdf: pd.DataFrame) -> dict:
-    """One-time per-task decomposition of a compacted build frame into raw
-    column arrays, so each emitted batch is a pure numpy fancy-index.
-
-    The per-batch alternative (``build_pdf.take(idx)`` on a categorical frame
-    + ``astype(object)``) re-walks the dictionary for every batch; for
-    high-match probes that decode dominates the probe kernel. Here the
-    (tiny, ~25-entry) category tables are pulled out once per task:
-    ``codes`` (int8/16 view, no copy) + ``categories`` (object array), and
-    numeric columns become zero-copy numpy views.
-    """
-    out = {}
-    for c in build_pdf.columns:
-        s = build_pdf[c]
-        if isinstance(s.dtype, pd.CategoricalDtype):
-            out[c] = ("cat", s.cat.codes.to_numpy(), s.cat.categories.to_numpy(object))
-        else:
-            out[c] = ("plain", s.to_numpy(), None)
-    return out
-
-
-def take_build_rows(
-    decomp: dict, idx: np.ndarray, null_mask: np.ndarray | None = None
-) -> pd.DataFrame:
-    """Gather build rows by position from :func:`decompose_build` output.
-
-    ``null_mask`` marks output rows that must be all-null (nearest-join
-    padding for probe rows with no build group, where ``idx`` holds ``-1``);
-    numeric columns upcast exactly like the old ``reindex`` path did.
-    """
-    n = len(idx)
-    if not decomp:
-        return pd.DataFrame(index=pd.RangeIndex(n))
-    safe = np.where(idx < 0, 0, idx) if null_mask is not None else idx
-    data = {}
-    for c, (kind, arr, cats) in decomp.items():
-        if len(arr) == 0:
-            # empty build side: every output row is padding (idx all -1)
-            data[c] = np.full(n, None, dtype=object)
-            continue
-        if kind == "cat":
-            codes = arr[safe]
-            vals = np.empty(n, dtype=object)
-            okc = codes >= 0
-            vals[okc] = cats[codes[okc]]
-            vals[~okc] = None
-            if null_mask is not None:
-                vals[null_mask] = None
-            data[c] = vals
-        else:
-            taken = arr[safe]
-            if null_mask is not None and null_mask.any():
-                s = pd.Series(taken)
-                s[null_mask] = None  # upcasts int→float NaN, like reindex
-                data[c] = s.reset_index(drop=True)
-            else:
-                data[c] = taken
-    return pd.DataFrame(data, columns=list(decomp.keys()))
+    driver would OOM instead. It is raised by a fresh collect and by a
+    cached index over the current cap alike. overlap_join, count_overlaps,
+    coverage, overlap_count_agg and map_intervals fall back to ``binning``.
+    nearest_join broadcasts the probe side instead (``broadcast_probe``)
+    and, when that is over the cap too, runs ``partitioned`` for a keyed
+    call; a keyless call over the cap on both sides raises this error,
+    naming the knob to raise."""
 
 
 def compact_index_arrays(*arrays: np.ndarray) -> tuple[np.ndarray, ...]:
@@ -232,32 +156,29 @@ def guarded_build_arrow(df: DataFrame, max_rows: int | None = None):
     return _capped_collect(df, max_rows, lambda d: d.toArrow())
 
 
-_PANDAS_CONVERSION_CONFS = (
-    "spark.sql.session.timeZone",
-    "spark.sql.execution.arrow.pyspark.enabled",
-    "spark.sql.execution.pandas.structHandlingMode",
-)
+# the settings toArrow converts under shape the collected table's types,
+# which the probe emits as they are, so they are part of an entry's identity
+_ARROW_CONVERSION_CONFS = ("spark.sql.execution.arrow.useLargeVarTypes",)
 
 
 def broadcast_build(df: DataFrame, kind: tuple, build):
-    """Broadcast the index ``build()`` makes from ``df``, built once per
-    input: ``build()`` returns ``(index, rows)`` and collects through the
-    guarded helpers above; its broadcast is served from the session index
-    cache (:func:`~sequila_native_spark.util.cached_broadcast`) while
-    ``df``'s plan and input files are unchanged. A cached entry over the
-    current row cap raises like a fresh collect would, so lowering
+    """``(broadcast, rows)`` of the index ``build()`` makes from ``df``,
+    built once per input: ``build()`` returns ``(index, rows)`` and
+    collects through :func:`guarded_build_arrow`; its broadcast is served
+    from the session index cache
+    (:func:`~sequila_native_spark.util.cached_broadcast`) while ``df``'s
+    plan and input files are unchanged. A cached entry over the current row
+    cap raises like a fresh collect would, so lowering
     ``spark.sequila.maxBroadcastBuildRows`` still forces the fallback."""
     from sequila_native_spark.util import cached_broadcast
 
-    # the settings toPandas converts under (time zone, Arrow, structs) shape
-    # the collected values, so they are part of the entry's identity
     spark = df.sparkSession
-    conv = tuple(spark.conf.get(k, None) for k in _PANDAS_CONVERSION_CONFS)
+    conv = tuple(spark.conf.get(k, None) for k in _ARROW_CONVERSION_CONFS)
     bc, rows = cached_broadcast(df, (*kind, conv), build)
     cap = SequilaConf.from_spark(spark).max_broadcast_build_rows
     if cap is not None and 0 < cap < rows:
         raise BuildSideTooLargeError(_too_large(cap))
-    return bc
+    return bc, rows
 
 
 def _probe_spans(
@@ -293,16 +214,163 @@ def _probe_spans(
 
 
 _EMPTY_I64 = np.empty(0, dtype=np.int64)
+_I64_MIN = np.iinfo(np.int64).min
 
 
-def _sorted_build_arrays(
-    starts: np.ndarray, ends: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Start-sorted arrays + running-max ends + original-order map."""
-    order = np.argsort(starts, kind="stable")
-    starts = starts[order]
-    ends = ends[order]
-    return starts, ends, np.maximum.accumulate(ends), order
+def _arrow_keys(build: DataFrame, keys) -> bool:
+    """Index gate: every key is a string, integral, boolean or floating
+    column, whose Arrow value :func:`_key_groups` turns into the same
+    hashable python value on the build and the probe side.
+    Timestamps/decimals/dates route to each operator's shuffle path, where
+    Catalyst compares them. Callers route mixed-family key pairs
+    (``IntervalSides.mixed_keys``) there first, so the build side's key
+    types speak for the probe side's too."""
+    simple = (StringType, IntegerType, LongType, ShortType, ByteType,
+              BooleanType, FloatType, DoubleType)
+    return all(isinstance(build.schema[k].dataType, simple) for k in keys)
+
+
+# The key of every NaN. Spark's join and grouping equality hold NaN = NaN,
+# but a float nan equals no other nan object, so a plain nan in a key tuple
+# would never meet its match. No floating key position holds a string.
+_NAN_KEY = "NaN"
+
+
+def _canonical_floats(col: pa.Array) -> pa.Array:
+    """-0.0 as 0.0 and every NaN as one NaN, as Spark normalizes floating
+    join and grouping keys: dictionary encoding compares bits."""
+    zero = pa.scalar(0, col.type)
+    col = pc.if_else(pc.equal(col, zero), zero, col)
+    return pc.if_else(pc.is_nan(col), pa.scalar(float("nan"), col.type), col)
+
+
+def _key_groups(
+    data, keys, bounds, sort_by: np.ndarray | None = None,
+) -> Iterator[tuple[tuple, np.ndarray]]:
+    """Split the rows of an Arrow table or record batch into equi-key
+    groups: yields ``(key tuple, row positions)``.
+
+    Each key column is dictionary-encoded and the codes are combined into
+    one group code, so grouping is one integer sort, with no per-row python
+    objects. A row with a null in any key or ``bounds`` column is in no
+    group (SQL equality never matches null). Floating keys are compared as
+    Spark compares them (:func:`_canonical_floats`, :data:`_NAN_KEY`).
+    Positions ascend within a group, or follow the int32 values of
+    ``sort_by`` when given.
+    """
+    ok = np.ones(data.num_rows, dtype=bool)
+    for b in bounds:
+        ok &= pc.is_valid(_column(data, b)).to_numpy(zero_copy_only=False)
+    code = np.zeros(data.num_rows, dtype=np.int64)
+    card = 1
+    dicts = []
+    for k in keys:
+        col = _column(data, k)
+        floating = pa.types.is_floating(col.type)
+        enc = pc.dictionary_encode(_canonical_floats(col) if floating else col)
+        codes = pc.fill_null(enc.indices, -1).to_numpy(zero_copy_only=False)
+        ok &= codes >= 0
+        values = enc.dictionary.to_pylist()
+        if floating:
+            values = [_NAN_KEY if v != v else v for v in values]
+        dicts.append((values, codes))
+        code = code * len(values) + codes
+        card *= len(values)
+        if card >= 1 << 31:  # renumber densely: codes stay below 2^31
+            code = np.unique(code, return_inverse=True)[1].astype(np.int64)
+            card = data.num_rows
+    pos = np.flatnonzero(ok)
+    if not pos.size:
+        return
+    if sort_by is None:
+        pos = pos[np.argsort(code[pos], kind="stable")]
+    else:
+        # one int64 sort key: the group code above the int32 value
+        pos = pos[np.argsort(
+            (code[pos] << 32) | (sort_by[pos].astype(np.int64) - I32_MIN)
+        )]
+    runs = np.flatnonzero(np.diff(code[pos])) + 1
+    for grp in np.split(pos, runs):
+        first = grp[0]
+        yield tuple(v[c[first]] for v, c in dicts), grp
+
+
+def _column(data, name: str) -> pa.Array:
+    col = data.column(name)
+    return col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+
+
+def _ints(data, name: str) -> np.ndarray:
+    """A bound column as numpy, nulls as 0 (null rows are in no group)."""
+    return pc.fill_null(_column(data, name), 0).to_numpy(zero_copy_only=False)
+
+
+def _lex_sorted(starts: np.ndarray, ends: np.ndarray):
+    """(start, end)-lex-sorted arrays + runmax + left-flank witness.
+
+    ``argmax_first[i]`` is the FIRST (lex-min) position achieving the running
+    max of ends over ``[0, i]`` — the deterministic left-flank witness for the
+    (distance, start, end) tie-break.  Returns
+    ``(starts, ends, runmax, argmax_first, order)`` with ``order`` mapping
+    sorted positions back to input positions.
+    """
+    order = np.lexsort((ends, starts))  # (start, end) lexicographic
+    starts, ends = starts[order], ends[order]
+    runmax = np.maximum.accumulate(ends)
+    newmax = ends > np.concatenate(([_I64_MIN], runmax[:-1]))
+    argmax_first = np.maximum.accumulate(np.where(newmax, np.arange(len(ends)), -1))
+    return starts, ends, runmax, argmax_first, order
+
+
+def interval_index(lb: DataFrame, l_keys):
+    """``(broadcast, rows)`` of ``lb``'s pair index, the build of
+    overlap_join's and nearest_join's ``index`` paths: over one unchanged
+    file input the two share one collect and broadcast.
+
+    The value is ``(index, payload)``. ``index`` maps each key tuple to its
+    :func:`_lex_sorted` arrays ``(starts, ends, runmax, argmax_first,
+    rows)``, with ``rows`` the positions of the sorted intervals in
+    ``payload``: the collected rows without their bound columns, as one
+    Arrow record batch. Lex order is start order, so :func:`_probe_spans`
+    reads the arrays the nearest kernels read.
+    """
+    return broadcast_build(
+        lb, ("interval", tuple(l_keys)),
+        lambda: _build_interval_index(lb, l_keys),
+    )
+
+
+def _build_interval_index(lb: DataFrame, l_keys) -> tuple[tuple, int]:
+    tbl = guarded_build_arrow(lb)
+    starts, ends = _ints(tbl, _LS), _ints(tbl, _LE)
+    index = {}
+    for key, pos in _key_groups(tbl, l_keys, (_LS, _LE)):
+        s, e, runmax, argmax_first, order = _lex_sorted(starts[pos], ends[pos])
+        index[key] = compact_index_arrays(s, e, runmax, argmax_first, pos[order])
+    names = [c for c in tbl.column_names if c not in (_LS, _LE)]
+    payload = pa.RecordBatch.from_arrays(
+        [_column(tbl, c) for c in names], names=names
+    )
+    return (index, payload), tbl.num_rows
+
+
+def _emit(build: pa.RecordBatch, probe: pa.RecordBatch, b_idx, p_idx,
+          names: list[str], max_batch: int) -> Iterator[pa.RecordBatch]:
+    """Output batches of build rows ``b_idx`` (a null index gives an
+    all-null build row) beside probe rows ``p_idx``. A8 analogue: at most
+    ``max_batch`` rows a batch, so huge per-batch match counts don't
+    balloon Arrow buffers (``interval_join.rs:550-555``, default 100k rows;
+    ``:1439-1540`` 1M full-mode cap)."""
+    for s in range(0, len(p_idx), max_batch):
+        left = build.take(b_idx[s:s + max_batch])
+        right = probe.take(p_idx[s:s + max_batch])
+        yield pa.RecordBatch.from_arrays(
+            [*left.columns, *right.columns], names=names
+        )
+
+
+def _max_batch(spark) -> int:
+    return 100_000 if SequilaConf.from_spark(spark).low_memory else 1_000_000
 
 
 def _disambiguate(
@@ -611,9 +679,11 @@ def overlap_join(
     check = conf.check_int32_bounds if check_bounds is None else check_bounds
 
     sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
-    if algo == "partitioned" or (algo == "index" and sides.mixed_keys):
+    if algo == "partitioned" or (algo == "index" and (
+        sides.mixed_keys or not _arrow_keys(left, [p[0] for p in sides.on])
+    )):
         # binning is the shuffle path; the index kernel's key lookups
-        # cannot coerce 1 = '1'
+        # cannot coerce 1 = '1' or compare date, timestamp or decimal keys
         algo = "binning"
     if algo == "binning":
         # index joins do not resolve eagerly: the width is only consumed if
@@ -878,51 +948,32 @@ def _broadcast_index_join(
     out_cols: list[str],
     metrics=None,
 ) -> DataFrame:
-    """CollectLeft-style broadcast index + mapInPandas probe.
+    """CollectLeft-style broadcast index + ``mapInArrow`` probe.
 
-    Build: collect the left side once, group by equi-key tuple, sort each
-    group by start and keep ``(starts, ends, running_max(ends), order)`` —
-    the superintervals layout (``superintervals.rs:161-307``): for a query
-    ``[qs, qe]`` candidates lie in ``starts[lo:hi)`` with
+    Build: :func:`interval_index` — the left side collected once, grouped
+    by equi-key tuple, each group sorted by start: the superintervals
+    layout (``superintervals.rs:161-307``). For a query ``[qs, qe]``
+    candidates lie in ``starts[lo:hi)`` with
     ``hi = searchsorted(starts, qe, 'right')`` and
     ``lo = searchsorted(running_max_ends[:hi], qs, 'left')`` (running max is
     non-decreasing ⇒ binary-searchable), then an exact ``ends >= qs`` mask.
 
-    Probe: Arrow-batched ``mapInPandas`` over the right side — no shuffle;
-    every probe partition shares the one broadcast build, the analogue of the
+    Probe: Arrow batches over the right side — no shuffle; every probe
+    partition shares the one broadcast build, the analogue of the
     reference's ``OnceAsync`` shared build (``joins/utils.rs:73-107``).
+    Build payload is gathered with ``take`` on the collected Arrow rows.
     """
     import time as _time
 
     spark = lb.sparkSession
-    conf = SequilaConf.from_spark(spark)
-    max_batch = 100_000 if conf.low_memory else 1_000_000
+    max_batch = _max_batch(spark)
     left_cols = [c for c in out_cols if c in lb.columns]
     right_cols = [c for c in out_cols if c not in lb.columns]
 
     build_t0 = _time.time()
-    left_pdf = guarded_build_pandas(lb)
-    index: dict[tuple, tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = {}
-    valid = left_pdf[_LS].notna() & left_pdf[_LE].notna()
-    for k in l_keys:
-        valid &= left_pdf[k].notna()
-    build = left_pdf[valid]
-    if len(build):
-        group_iter = (
-            build.groupby(list(l_keys), sort=False) if l_keys else [((), build)]
-        )
-        for key, grp in group_iter:
-            if l_keys and not isinstance(key, tuple):
-                key = (key,)
-            starts, ends, runmax, order = _sorted_build_arrays(
-                grp[_LS].to_numpy(np.int64), grp[_LE].to_numpy(np.int64)
-            )
-            index[key] = compact_index_arrays(
-                starts, ends, runmax, grp.index.to_numpy()[order]
-            )
-
-    left_out = compact_build_pandas(left_pdf[left_cols])
-    bc = spark.sparkContext.broadcast((index, left_out))
+    bc, rows = interval_index(lb, l_keys)
+    if metrics is not None:
+        metrics.record_build(rows, build_t0)
 
     from pyspark.sql.types import StructType
 
@@ -930,64 +981,41 @@ def _broadcast_index_join(
         list(lb.select(*left_cols).schema.fields)
         + list(rb.select(*right_cols).schema.fields)
     )
-
-    if metrics is not None:
-        metrics.record_build(len(left_pdf), build_t0)
-
+    names = [*left_cols, *right_cols]
     rk_list = list(r_keys)
     rb = _ensure_parallel(rb, [])  # round-robin: probe-side parallelism, no skew
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx_map, build_pdf = bc.value
-        build_cols = decompose_build(build_pdf)  # once per task, not per batch
-        for pdf in batches:
+    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        idx_map, build = bc.value
+        for batch in batches:
             if metrics is not None:
                 metrics.probe_batches.add(1)
-                metrics.probe_input_rows.add(len(pdf))
-            if pdf.empty or not idx_map:
+                metrics.probe_input_rows.add(batch.num_rows)
+            if batch.num_rows == 0 or not idx_map:
                 continue
-            ok = pdf[_RS].notna() & pdf[_RE].notna()
-            for k in rk_list:
-                ok &= pdf[k].notna()
-            pdf = pdf[ok]
-            if pdf.empty:
-                continue
-            qs_all = pdf[_RS].to_numpy(np.int64)
-            qe_all = pdf[_RE].to_numpy(np.int64)
+            qs, qe = _ints(batch, _RS), _ints(batch, _RE)
             build_take: list[np.ndarray] = []
             probe_take: list[np.ndarray] = []
-            groups = (
-                pdf.groupby(rk_list, sort=False) if rk_list else [((), pdf)]
-            )
-            for key, grp in groups:
-                if rk_list and not isinstance(key, tuple):
-                    key = (key,)
+            for key, pos in _key_groups(batch, rk_list, (_RS, _RE)):
                 entry = idx_map.get(key)
                 if entry is None:
                     continue
-                starts, ends, runmax, row_idx = entry
-                pos = pdf.index.get_indexer(grp.index)
-                cand, probe_rep = _probe_spans(
-                    starts, ends, runmax, qs_all[pos], qe_all[pos]
-                )
+                starts, ends, runmax, _, row_idx = entry
+                cand, probe_rep = _probe_spans(starts, ends, runmax, qs[pos], qe[pos])
                 if cand.size:
                     build_take.append(row_idx[cand])
                     probe_take.append(pos[probe_rep])
             if not build_take:
                 continue
             b_idx = np.concatenate(build_take)
-            p_idx = np.concatenate(probe_take)
             if metrics is not None:
                 metrics.output_rows.add(len(b_idx))
-            # A8 analogue: cap emitted batch size so huge per-batch match
-            # counts don't balloon Arrow buffers (interval_join.rs:550-555,
-            # default 100k rows; :1439-1540 1M full-mode cap)
-            for s in range(0, len(b_idx), max_batch):
-                l_part = take_build_rows(build_cols, b_idx[s : s + max_batch])
-                r_part = pdf[right_cols].iloc[p_idx[s : s + max_batch]].reset_index(drop=True)
-                yield pd.concat([l_part, r_part], axis=1)
+            yield from _emit(
+                build, batch.select(right_cols), b_idx,
+                np.concatenate(probe_take), names, max_batch,
+            )
 
-    return rb.mapInPandas(probe, schema=out_schema).select(*out_cols)
+    return rb.mapInArrow(probe, schema=out_schema).select(*out_cols)
 
 
 def window_join(

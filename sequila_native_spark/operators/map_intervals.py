@@ -36,16 +36,15 @@ from sequila_native_spark.operators.interval_join import (
     _RE,
     _RS,
     BuildSideTooLargeError,
-    _binned_pairs,
-    _probe_spans,
-    _with_bounds,
-    guarded_build_arrow,
-    resolve_bin_width,
-)
-from sequila_native_spark.operators.count_overlaps import (
     _arrow_keys,
+    _binned_pairs,
     _ints,
     _key_groups,
+    _probe_spans,
+    _with_bounds,
+    broadcast_build,
+    guarded_build_arrow,
+    resolve_bin_width,
 )
 from sequila_native_spark.operators.intervals import (
     fraction_predicate,
@@ -109,12 +108,12 @@ def _np_frac_mask(
     return out
 
 
-def _build_map_index(lb: DataFrame, l_keys: list[str]) -> dict[tuple, tuple]:
+def _build_map_index(lb: DataFrame, l_keys: list[str]) -> tuple[dict, int]:
     """Guarded single-job Arrow collect of the LEFT side into per-key
     ``(starts_sorted, ends_by_start, runmax, row_ids_by_start)`` arrays —
     the count kernel's build shape plus the stamped row id so per-batch
-    partials can be re-attached to left rows. Raises
-    :class:`BuildSideTooLargeError` past ``maxBroadcastBuildRows``."""
+    partials can be re-attached to left rows — and the rows collected.
+    Raises :class:`BuildSideTooLargeError` past ``maxBroadcastBuildRows``."""
     tbl = guarded_build_arrow(lb)
     # rows with null key/bounds can never match a pair (they are in no key
     # group); the final left join still emits them with the null-group
@@ -125,7 +124,7 @@ def _build_map_index(lb: DataFrame, l_keys: list[str]) -> dict[tuple, tuple]:
     return {
         key: (starts[pos], ends[pos], np.maximum.accumulate(ends[pos]), aids[pos])
         for key, pos in _key_groups(tbl, l_keys, (_LS, _LE), sort_by=starts)
-    }
+    }, tbl.num_rows
 
 
 def _index_map(
@@ -156,11 +155,12 @@ def _index_map(
     aggregate bit-for-bit while the pair-sized exchange disappears: the
     plan is scan → probe → one tiny partial-agg exchange → left join.
     """
-    index = _build_map_index(
-        lb.select(*dict.fromkeys([*l_keys, _LS, _LE, _AID])), l_keys
+    # the stamped row ids belong to one evaluation of the left side: the
+    # frame is nondeterministic, so the session index cache never keeps it
+    build = lb.select(*dict.fromkeys([*l_keys, _LS, _LE, _AID]))
+    bc, _ = broadcast_build(
+        build, ("map", tuple(l_keys)), lambda: _build_map_index(build, l_keys)
     )
-    spark = lb.sparkSession
-    bc = spark.sparkContext.broadcast(index)
 
     # (out_name, op, internal value alias or None) in aggs order
     plan = [
@@ -328,11 +328,12 @@ def map_intervals(
     oracle predicate join), or ``index`` — the broadcast-index kernel
     (guarded by ``spark.sequila.maxBroadcastBuildRows``) for the
     batch-decomposable aggregates (count/sum/min/max over integral value
-    columns; any number of string, integral or boolean equi-keys):
+    columns; any number of string, integral, boolean or floating
+    equi-keys):
     per-batch partial aggregates replace the pair join, so no pair-sized
     exchange exists at all. Non-decomposable aggs
     (mean/collect/distinct/count_distinct), other key types (date,
-    timestamp, decimal, float), non-integral values, or an over-budget
+    timestamp, decimal), non-integral values, or an over-budget
     left side fall back to ``binning`` (the exact pre-existing plan).
     ``partitioned`` routes to ``binning``, as it does for every overlap
     operator.

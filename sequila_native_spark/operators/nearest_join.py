@@ -32,11 +32,16 @@ Algorithms:
     correctness oracle).
 
 ``index``
-    Broadcast per-key sorted arrays + ``mapInPandas`` probe (zero shuffle,
-    O(log n)/row). Build side must fit in driver/executor memory — guarded by
+    Broadcast per-key sorted arrays + ``mapInArrow`` probe (zero shuffle,
+    O(log n)/row); the chosen build rows are gathered with ``take`` on the
+    collected Arrow table, and a null index null-pads a miss. Build side
+    must fit in driver/executor memory — guarded by
     ``spark.sequila.maxBroadcastBuildRows``. The build is collected in one
-    job and kept in the session index cache, so repeated calls over one
-    unchanged file input (any ``k`` or ``ignore_*`` flags) reuse it.
+    job and kept in the session index cache, shared with
+    ``overlap_join``'s ``index`` path, so repeated calls over one
+    unchanged file input (any ``k`` or ``ignore_*`` flags) reuse it. Any
+    number of string, integral, boolean or floating keys; a keyed call
+    with other key types runs ``partitioned``.
 
 ``partitioned`` (default scale path)
     The reference's Partitioned mode applied to nearest
@@ -66,33 +71,37 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from sequila_native_spark.operators.interval_join import (
+    _EMPTY_I64,
     _LE,
     _LS,
     _RE,
     _RS,
     BuildSideTooLargeError,
+    _arrow_keys,
     _disambiguate,
+    _emit,
+    _ints,
+    _key_groups,
+    _lex_sorted,
+    _max_batch,
     _probe_spans,
     _with_bounds,
-    broadcast_build,
-    compact_build_pandas,
     compact_index_arrays,
-    decompose_build,
     guarded_build_pandas,
-    take_build_rows,
+    interval_index,
 )
 from sequila_native_spark.operators.intervals import validate_sides
 from sequila_native_spark.session import SequilaConf, parse_algorithm
 from sequila_native_spark.util import ensure_parallel, stamp_row_id
 
 _PID = "__sq_probe_id"
-_I64_MIN = np.iinfo(np.int64).min
 _I64_MAX = np.iinfo(np.int64).max
 
 
@@ -208,6 +217,10 @@ def nearest_join(
         out = _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
     elif algo == "broadcast_probe":
         out = _probe_broadcast_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
+    elif l_keys and not _arrow_keys(left, l_keys):
+        # date, timestamp and decimal keys: the index kernel's lookups
+        # cannot compare them, the keyed shuffle path's groupBy can
+        out = _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
     else:
         try:
             out = _index_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
@@ -280,23 +293,6 @@ def _naive_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
         .where(F.col("__sq_rn") <= k)
         .select(*out_cols)
     )
-
-
-def _build_nearest_arrays(starts: np.ndarray, ends: np.ndarray):
-    """(start, end)-lex-sorted arrays + runmax + left-flank witness.
-
-    ``argmax_first[i]`` is the FIRST (lex-min) position achieving the running
-    max of ends over ``[0, i]`` — the deterministic left-flank witness for the
-    (distance, start, end) tie-break.  Returns
-    ``(starts, ends, runmax, argmax_first, order)`` with ``order`` mapping
-    sorted positions back to input positions.
-    """
-    order = np.lexsort((ends, starts))  # (start, end) lexicographic
-    starts, ends = starts[order], ends[order]
-    runmax = np.maximum.accumulate(ends)
-    newmax = ends > np.concatenate(([_I64_MIN], runmax[:-1]))
-    argmax_first = np.maximum.accumulate(np.where(newmax, np.arange(len(ends)), -1))
-    return starts, ends, runmax, argmax_first, order
 
 
 def _nearest_take(starts, ends, runmax, argmax_first, qs, qe, flags=None) -> np.ndarray:
@@ -551,7 +547,7 @@ def _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
         # (probe position, sorted-build position or -1) pair lists
         m = len(r_pdf)
         if len(lv):
-            starts, ends, runmax, argmax_first, order = _build_nearest_arrays(
+            starts, ends, runmax, argmax_first, order = _lex_sorted(
                 lv[_LS].to_numpy(np.int64), lv[_LE].to_numpy(np.int64)
             )
             ok = (r_pdf[_RS].notna() & r_pdf[_RE].notna()).to_numpy()
@@ -664,7 +660,7 @@ def _probe_broadcast_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
                 if entry is None:
                     continue
                 qs, qe, pids = entry
-                starts, ends, runmax, argmax_first, order = _build_nearest_arrays(
+                starts, ends, runmax, argmax_first, order = _lex_sorted(
                     grp[_LS].to_numpy(np.int64), grp[_LE].to_numpy(np.int64)
                 )
                 if k == 1:
@@ -711,96 +707,56 @@ def _probe_broadcast_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
 def _index_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
     left_cols = [c for c in out_cols if c in lb.columns]
     right_cols = [c for c in out_cols if c not in lb.columns]
-
-    def build():
-        # one guarded collect of the whole build side (bounds + payload)
-        left_pdf = guarded_build_pandas(lb)
-        valid = left_pdf[_LS].notna() & left_pdf[_LE].notna()
-        for kc in l_keys:
-            valid &= left_pdf[kc].notna()
-        build_rows = left_pdf[valid]
-        index: dict[tuple, tuple] = {}
-        if len(build_rows):
-            group_iter = (
-                build_rows.groupby(list(l_keys), sort=False)
-                if l_keys else [((), build_rows)]
-            )
-            for key, grp in group_iter:
-                if l_keys and not isinstance(key, tuple):
-                    key = (key,)
-                starts, ends, runmax, argmax_first, order = _build_nearest_arrays(
-                    grp[_LS].to_numpy(np.int64), grp[_LE].to_numpy(np.int64)
-                )
-                index[key] = compact_index_arrays(
-                    starts, ends, runmax, argmax_first, grp.index.to_numpy()[order]
-                )
-        return (index, compact_build_pandas(left_pdf[left_cols])), len(left_pdf)
-
-    # left_cols is lb's columns minus the bounds, so the entry depends on lb
-    # and the keys alone — k and the ignore_* flags act in the probe
-    bc = broadcast_build(lb, ("nearest", tuple(l_keys)), build)
+    # overlap_join's index over the same build frame: k and the ignore_*
+    # flags act in the probe, so one entry serves every call over lb
+    bc, _ = interval_index(lb, l_keys)
     out_schema = _nearest_out_schema(lb, rb, left_cols, right_cols)
+    names = [*left_cols, *right_cols]
     rk_list = list(r_keys)
+    max_batch = _max_batch(lb.sparkSession)
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx_map, build_pdf = bc.value
-        build_cols = decompose_build(build_pdf)  # once per task, not per batch
-        for pdf in batches:
-            if pdf.empty:
+    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        idx_map, build = bc.value
+        for batch in batches:
+            m = batch.num_rows
+            if m == 0:
                 continue
-            qs_all = pdf[_RS].to_numpy(np.int64, na_value=0)
-            qe_all = pdf[_RE].to_numpy(np.int64, na_value=0)
-            has_null = (pdf[_RS].isna() | pdf[_RE].isna()).to_numpy()
-            m = len(pdf)
-            hit_probe: list[np.ndarray] = []
-            hit_row: list[np.ndarray] = []
-            n_hits = np.zeros(m, dtype=np.int64)
-            groups = pdf.groupby(rk_list, sort=False, dropna=False) if rk_list else [((), pdf)]
-            for key, grp in groups:
-                if rk_list and not isinstance(key, tuple):
-                    key = (key,)
-                if any(kk is None or (isinstance(kk, float) and np.isnan(kk)) for kk in key):
-                    continue
+            # int64 needles: the kernels subtract bounds for distances
+            qs = _ints(batch, _RS).astype(np.int64)
+            qe = _ints(batch, _RE).astype(np.int64)
+            hit_probe: list[np.ndarray] = [_EMPTY_I64]
+            hit_row: list[np.ndarray] = [_EMPTY_I64]
+            for key, pos in _key_groups(batch, rk_list, (_RS, _RE)):
                 entry = idx_map.get(key)
                 if entry is None:
                     continue
                 starts, ends, runmax, argmax_first, row_idx = entry
-                pos = pdf.index.get_indexer(grp.index)
-                pos = pos[~has_null[pos]]
-                if not pos.size:
-                    continue
                 if k == 1:
                     take = _nearest_take(
-                        starts, ends, runmax, argmax_first,
-                        qs_all[pos], qe_all[pos], flags,
+                        starts, ends, runmax, argmax_first, qs[pos], qe[pos], flags
                     )
                     good = take >= 0
-                    if good.any():
-                        hit_probe.append(pos[good])
-                        hit_row.append(row_idx[take[good]])
-                        n_hits[pos[good]] += 1
+                    hit_probe.append(pos[good])
+                    hit_row.append(row_idx[take[good]])
                 else:
                     top, valid = _nearest_take_topk(
-                        starts, ends, runmax, qs_all[pos], qe_all[pos], k
+                        starts, ends, runmax, qs[pos], qe[pos], k
                     )
                     flat = valid.ravel()
-                    if flat.any():
-                        rep = np.repeat(pos, k)[flat]
-                        hit_probe.append(rep)
-                        hit_row.append(row_idx[top.ravel()[flat]])
-                        np.add.at(n_hits, rep, 1)
+                    hit_probe.append(np.repeat(pos, k)[flat])
+                    hit_row.append(row_idx[top.ravel()[flat]])
             # probes with no hits emit one all-null left row: the reference's
             # null-left padding for probe rows whose key group has no build
-            # rows (integration_test.rs:385-394).
-            miss = np.nonzero(n_hits == 0)[0]
-            probe_take = np.concatenate([*hit_probe, miss]) if hit_probe else miss
-            build_take = np.concatenate(
-                [*hit_row, np.full(len(miss), -1, dtype=np.int64)]
-            ) if hit_row else np.full(len(miss), -1, dtype=np.int64)
-            l_part = take_build_rows(build_cols, build_take, null_mask=build_take < 0)
-            r_part = pdf[right_cols].iloc[probe_take].reset_index(drop=True)
-            yield pd.concat([l_part, r_part], axis=1)
+            # rows (integration_test.rs:385-394); a null index takes nulls
+            hits = np.concatenate(hit_probe)
+            miss = np.flatnonzero(np.bincount(hits, minlength=m) == 0)
+            rows = np.concatenate([*hit_row, np.zeros(len(miss), np.int64)])
+            b_idx = pa.array(rows, mask=np.arange(len(rows)) >= len(hits))
+            yield from _emit(
+                build, batch.select(right_cols), b_idx,
+                np.concatenate([hits, miss]), names, max_batch,
+            )
 
-    # round-robin split of a single-partition probe scan: mapInPandas gets
+    # round-robin split of a single-partition probe scan: mapInArrow gets
     # real parallelism; every task shares the one broadcast build
-    return ensure_parallel(rb, []).mapInPandas(probe, schema=out_schema).select(*out_cols)
+    return ensure_parallel(rb, []).mapInArrow(probe, schema=out_schema).select(*out_cols)

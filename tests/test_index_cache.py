@@ -20,7 +20,10 @@ from sequila_native_spark import (
     clear_index_cache,
     count_overlaps,
     coverage,
+    map_intervals,
     nearest_join,
+    overlap_count_agg,
+    overlap_join,
 )
 from sequila_native_spark import util
 from sequila_native_spark.session import MAX_BROADCAST_BUILD_ROWS
@@ -70,6 +73,17 @@ def _nearest(left, right, algo):
     return nearest_join(left, right, "contig", algorithm=algo, distance_col="d")
 
 
+def _count_agg(left, right, algo):
+    if algo == "naive":
+        pairs = overlap_join(left, right, "contig", algorithm="naive")
+        return pairs.groupBy("contig").count()
+    return overlap_count_agg(left, right, "contig", alias="count")
+
+
+def _join(left, right, algo):
+    return overlap_join(left, right, "contig", algorithm=algo)
+
+
 def _check(op, left, right):
     assert rows_set(op(left, right, "index")) == rows_set(op(left, right, "naive"))
 
@@ -108,7 +122,7 @@ def test_nearest_build_is_reused(spark, tmp_path, probe):
     assert rows_set(out) == rows_set(_nearest(targets, probe, "naive"))
 
 
-@pytest.mark.parametrize("op", [_count, _coverage, _nearest])
+@pytest.mark.parametrize("op", [_count, _coverage, _nearest, _count_agg, _join])
 def test_repointed_view_rebuilds(spark, tmp_path, probe, op):
     a = _write(tmp_path / "a", _intervals(3, 300))
     b = _write(tmp_path / "b", _intervals(4, 200))
@@ -118,7 +132,7 @@ def test_repointed_view_rebuilds(spark, tmp_path, probe, op):
     _check(op, spark.table("index_cache_view"), probe)
 
 
-@pytest.mark.parametrize("op", [_count, _coverage, _nearest])
+@pytest.mark.parametrize("op", [_count, _coverage, _nearest, _count_agg, _join])
 def test_files_overwritten_in_place_rebuild(spark, tmp_path, probe, op):
     d = _write(tmp_path / "d", _intervals(5, 300))
     _check(op, spark.read.parquet(d), probe)
@@ -128,11 +142,45 @@ def test_files_overwritten_in_place_rebuild(spark, tmp_path, probe, op):
     _check(op, spark.read.parquet(d), probe)
 
 
-@pytest.mark.parametrize("op", [_count, _nearest])
+@pytest.mark.parametrize("op", [_count, _nearest, _count_agg, _join])
 def test_frames_differing_in_a_filter_do_not_share(spark, tmp_path, probe, op):
     df = spark.read.parquet(_write(tmp_path / "f", _intervals(7, 300)))
     _check(op, df.where("pos_start < 2500"), probe)
     _check(op, df.where("pos_start >= 2500"), probe)
+
+
+def test_count_agg_after_count_launches_no_eager_job(spark, tmp_path, probe):
+    reads = spark.read.parquet(_write(tmp_path / "a", _intervals(14, 400)))
+    _, built = _eager_jobs(spark, lambda: _count(reads, probe, "index"))
+    assert built == 1
+    agg, jobs = _eager_jobs(spark, lambda: _count_agg(reads, probe, "index"))
+    assert jobs == 0  # count_overlaps' count index, served from the cache
+    assert rows_set(agg) == rows_set(_count_agg(reads, probe, "naive"))
+
+
+def test_overlap_and_nearest_share_one_build(spark, tmp_path, probe):
+    targets = spark.read.parquet(_write(tmp_path / "p", _intervals(15, 300)))
+    _, built = _eager_jobs(spark, lambda: _join(targets, probe, "index"))
+    assert built == 1
+    near, jobs = _eager_jobs(spark, lambda: _nearest(targets, probe, "index"))
+    assert jobs == 0
+    assert rows_set(near) == rows_set(_nearest(targets, probe, "naive"))
+
+
+def test_map_intervals_build_is_never_cached(spark, tmp_path, probe):
+    # its build carries row ids stamped by monotonically_increasing_id,
+    # which belong to one evaluation of the left side
+    left = spark.read.parquet(_write(tmp_path / "m", _intervals(16, 300)))
+    aggs = {"n": ("count", None), "s": ("sum", "pos_start")}
+
+    def run(algo):
+        return map_intervals(left, probe, "contig", aggs=aggs, algorithm=algo)
+
+    for _ in range(2):
+        out, jobs = _eager_jobs(spark, lambda: run("index"))
+        assert jobs == 1
+        assert rows_set(out) == rows_set(run("naive"))
+    assert not util.session_scoped_cache(spark, util._INDEX_CACHES)
 
 
 def test_create_dataframe_input_is_never_cached(spark, probe):
@@ -148,6 +196,8 @@ def test_create_dataframe_input_is_never_cached(spark, probe):
     (_count, "Generate explode"),  # binning
     (_coverage, "Generate explode"),
     (_nearest, "FlatMapCoGroupsInPandas"),  # partitioned: the probe is over the cap too
+    (_count_agg, "Generate explode"),
+    (_join, "Generate explode"),
 ])
 def test_lowered_cap_forces_fallback(spark, tmp_path, probe, op, fallback):
     left = spark.read.parquet(_write(tmp_path / "c", _intervals(9, 120)))

@@ -1,4 +1,4 @@
-"""A11 metrics analogue: accumulator counters on the pandas index path."""
+"""A11 metrics analogue: accumulator counters on the Arrow index path."""
 
 from __future__ import annotations
 

@@ -1,16 +1,9 @@
-"""stamp_row_id lineage hardening (VERDICT r2 item 3) + gather helpers."""
+"""stamp_row_id lineage hardening (VERDICT r2 item 3) + session caches."""
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
-from sequila_native_spark.operators.interval_join import (
-    compact_build_pandas,
-    decompose_build,
-    take_build_rows,
-)
 from sequila_native_spark.util import _has_wide_lineage, stamp_row_id
 from tests.conftest import rows_set
 
@@ -56,35 +49,6 @@ def test_semi_filter_over_shuffled_probe(spark, reads, targets):
     )
     want = probe.alias("p").join(targets.alias("t"), cond).select("p.*").distinct()
     assert rows_set(got) == rows_set(want)
-
-
-def test_take_build_rows_matches_reindex():
-    pdf = compact_build_pandas(
-        pd.DataFrame(
-            {
-                "contig": ["chr1", "chr2", "chr1", None],
-                "pos": [10, 20, 30, 40],
-            }
-        )
-    )
-    decomp = decompose_build(pdf)
-    idx = np.array([2, 0, 3, 1])
-    out = take_build_rows(decomp, idx)
-    assert list(out["contig"]) == ["chr1", "chr1", None, "chr2"]
-    assert list(out["pos"]) == [30, 10, 40, 20]
-    # null-mask padding (nearest path): -1 rows all-null, ints upcast to NaN
-    idx2 = np.array([1, -1, 0])
-    out2 = take_build_rows(decomp, idx2, null_mask=idx2 < 0)
-    assert out2["contig"].tolist()[1] is None
-    assert np.isnan(out2["pos"].tolist()[1])
-    assert out2["pos"].tolist()[0] == 20.0
-
-
-def test_take_build_rows_empty_build():
-    decomp = decompose_build(compact_build_pandas(pd.DataFrame({"a": [], "b": []})))
-    idx = np.array([-1, -1])
-    out = take_build_rows(decomp, idx, null_mask=idx < 0)
-    assert len(out) == 2 and out["a"].isna().all() and out["b"].isna().all()
 
 
 def test_session_cache_evicts_oldest_not_all(spark):
