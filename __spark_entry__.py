@@ -503,7 +503,7 @@ def q_nearest_target_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_nearest_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bedtools closest -k extension of A5: up to 3 nearest reads per target,
     # exact (distance, start, end) ranking incl. ties, via the contiguous
-    # flank-slice top-k kernel on the cogroup (partitioned) path
+    # flank-slice top-k kernel in the Arrow cogroup (partitioned) path
     return nearest_join(
         _reads(spark, sf_dir, with_id=False),
         _targets(spark, sf_dir).where(F.col("t_id") % 50 == 0),
@@ -2886,21 +2886,20 @@ _NEAREST_COLS = ["contig", "r_start", "r_end", "contig_r", "t_start", "t_end", "
 
 
 def q_nearest_algorithms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The scale paths of A5 — ``partitioned`` (cogroup per key, no driver
-    collect), ``broadcast_probe`` (small probe broadcast, build-side scan
-    with per-batch argmin), ``index`` (broadcast build arrays) and the
-    SQL-text route under ``CoitreesNearest`` — as one tagged union, each
-    over its own (disjoint) target sample so the merged oracle stays the
-    original twins verbatim. Replaces the standalone
-    ``nearest_partitioned`` / ``nearest_sql`` rows (functions remain for
-    bench)."""
+    """The paths of A5 — ``partitioned`` (Arrow cogroup per key, no driver
+    collect), ``index`` (broadcast build arrays) and the SQL-text route
+    under ``CoitreesNearest`` — as one tagged union, each over its own
+    (disjoint) target sample so the merged oracle stays the original twins
+    verbatim. Replaces the standalone ``nearest_partitioned`` /
+    ``nearest_sql`` rows (functions remain for bench)."""
     reads = _reads(spark, sf_dir, with_id=False)
     parts = []
     for tag, algo, mod in [
         ("partitioned", "partitioned", 5),
-        ("broadcast_probe", "broadcast_probe", 7),
-        # 'range' is only a sample label now: it named the removed chunked
-        # path, and the tag stays so the oracle_sql twin is unchanged
+        # 'broadcast_probe' and 'range' are only sample labels now: they
+        # named removed paths, and the tags stay so the oracle_sql twin is
+        # unchanged
+        ("broadcast_probe", "partitioned", 7),
         ("range", "index", 3),
     ]:
         nj = nearest_join(

@@ -54,7 +54,6 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
@@ -96,11 +95,10 @@ class BuildSideTooLargeError(RuntimeError):
     (``interval_join.rs:624-660``); collecting an unbounded build side to the
     driver would OOM instead. It is raised by a fresh collect and by a
     cached index over the current cap alike. overlap_join, count_overlaps,
-    coverage, overlap_count_agg and map_intervals fall back to ``binning``.
-    nearest_join broadcasts the probe side instead (``broadcast_probe``)
-    and, when that is over the cap too, runs ``partitioned`` for a keyed
-    call; a keyless call over the cap on both sides raises this error,
-    naming the knob to raise."""
+    coverage, overlap_count_agg and map_intervals fall back to ``binning``,
+    nearest_join to ``partitioned``. A keyless nearest_join whose probe
+    side is over the cap too raises this error, naming the knob to
+    raise."""
 
 
 def compact_index_arrays(*arrays: np.ndarray) -> tuple[np.ndarray, ...]:
@@ -118,42 +116,31 @@ def compact_index_arrays(*arrays: np.ndarray) -> tuple[np.ndarray, ...]:
     return tuple(out)
 
 
-def _capped_collect(df: DataFrame, max_rows: int | None, collect):
-    if max_rows is None:
-        max_rows = SequilaConf.from_spark(df.sparkSession).max_broadcast_build_rows
-    if max_rows is None or max_rows <= 0:
-        return collect(df)
-    got = collect(df.limit(max_rows + 1))
-    if len(got) > max_rows:
-        raise BuildSideTooLargeError(_too_large(max_rows))
-    return got
-
-
 def _too_large(max_rows: int) -> str:
     return (
         f"build side has more than {max_rows} rows; collecting it for a "
         f"broadcast index could run out of memory. Overlap and count "
         f"operators fall back to algorithm='binning', nearest_join to "
-        f"'broadcast_probe' or 'partitioned'; or raise "
-        f"spark.sequila.maxBroadcastBuildRows."
+        f"'partitioned'; or raise spark.sequila.maxBroadcastBuildRows."
     )
 
 
-def guarded_build_pandas(df: DataFrame, max_rows: int | None = None) -> pd.DataFrame:
-    """``df.toPandas()`` under a row cap, in one job.
+def guarded_build_arrow(df: DataFrame, max_rows: int | None = None) -> pa.Table:
+    """``df.toArrow()`` under a row cap, in one job.
 
     Collects ``limit(max + 1)``, so at most max + 1 rows reach the driver
     whatever the true size, and raises :class:`BuildSideTooLargeError`
     instead of returning when the build side exceeds
-    ``spark.sequila.maxBroadcastBuildRows`` (≤0 disables the guard). Under
-    :func:`sequila_session` the collect is an Arrow collect.
+    ``spark.sequila.maxBroadcastBuildRows`` (≤0 disables the guard).
     """
-    return _capped_collect(df, max_rows, lambda d: d.toPandas())
-
-
-def guarded_build_arrow(df: DataFrame, max_rows: int | None = None):
-    """:func:`guarded_build_pandas` returning the ``pyarrow.Table``."""
-    return _capped_collect(df, max_rows, lambda d: d.toArrow())
+    if max_rows is None:
+        max_rows = SequilaConf.from_spark(df.sparkSession).max_broadcast_build_rows
+    if max_rows is None or max_rows <= 0:
+        return df.toArrow()
+    got = df.limit(max_rows + 1).toArrow()
+    if got.num_rows > max_rows:
+        raise BuildSideTooLargeError(_too_large(max_rows))
+    return got
 
 
 # the settings toArrow converts under shape the collected table's types,
@@ -342,16 +329,23 @@ def interval_index(lb: DataFrame, l_keys):
 
 def _build_interval_index(lb: DataFrame, l_keys) -> tuple[tuple, int]:
     tbl = guarded_build_arrow(lb)
-    starts, ends = _ints(tbl, _LS), _ints(tbl, _LE)
-    index = {}
-    for key, pos in _key_groups(tbl, l_keys, (_LS, _LE)):
-        s, e, runmax, argmax_first, order = _lex_sorted(starts[pos], ends[pos])
-        index[key] = compact_index_arrays(s, e, runmax, argmax_first, pos[order])
     names = [c for c in tbl.column_names if c not in (_LS, _LE)]
     payload = pa.RecordBatch.from_arrays(
         [_column(tbl, c) for c in names], names=names
     )
-    return (index, payload), tbl.num_rows
+    return (_lex_index(tbl, l_keys), payload), tbl.num_rows
+
+
+def _lex_index(tbl, keys) -> dict:
+    """Key tuple -> :func:`_lex_sorted` arrays ``(starts, ends, runmax,
+    argmax_first, rows)`` of an Arrow table's rows with both bounds
+    (``_LS``, ``_LE``), ``rows`` their positions in the table."""
+    starts, ends = _ints(tbl, _LS), _ints(tbl, _LE)
+    index = {}
+    for key, pos in _key_groups(tbl, keys, (_LS, _LE)):
+        s, e, runmax, argmax_first, order = _lex_sorted(starts[pos], ends[pos])
+        index[key] = compact_index_arrays(s, e, runmax, argmax_first, pos[order])
+    return index
 
 
 def _emit(build: pa.RecordBatch, probe: pa.RecordBatch, b_idx, p_idx,

@@ -43,26 +43,21 @@ Algorithms:
     number of string, integral, boolean or floating keys; a keyed call
     with other key types runs ``partitioned``.
 
-``partitioned`` (default scale path)
+``partitioned`` (default scale path; conf ``binning`` selects it)
     The reference's Partitioned mode applied to nearest
     (``interval_join.rs:391-398,488-503``): shuffle BOTH sides by the
-    equi-keys, build the per-key sorted index and probe inside
-    ``cogroup().applyInPandas``. One shuffle per side, per-task memory
+    equi-keys and run the ``index`` kernels on each key group inside
+    ``cogroup().applyInArrow``. One shuffle per side, per-task memory
     bounded by the largest key group, works for build sides of any size.
     Probe groups whose key has no build rows still flow through the cogroup
     (cogroup is full-outer on group keys) and get null-left padding —
-    no driver-side collect anywhere.
-
-``broadcast_probe`` (big build × small probe)
-    The transpose of ``index``: broadcast the (small) PROBE side, scan the
-    build side with ``mapInPandas`` computing each batch's per-probe best
-    candidate (same overlap-first kernel), then reduce the candidates with a
-    global ``(distance, start, end)`` argmin. The build side is never
-    collected, broadcast, or shuffled — on a cluster this is a pure parquet
-    scan plus a shuffle of ``|probe| × n_batches`` candidate rows. The
-    per-batch argmin is associative with the global one, so the two-level
-    reduce is exact, ties included. Guarded by
-    ``spark.sequila.maxBroadcastBuildRows`` on the probe side.
+    no driver-side collect anywhere. A keyed ``index`` call over the cap
+    runs it. A keyless call runs ``index``; over the cap it splits the
+    build into chunks, cogroups each chunk with a copy of every probe row
+    and keeps each probe's ``k`` best candidates by ``(distance, start,
+    end)``. Top-k is exact across chunks, as every chunk's top-k holds its
+    share of the global one. Each probe row is copied once per chunk, so
+    the probe side must fit ``spark.sequila.maxBroadcastBuildRows`` too.
 """
 
 from __future__ import annotations
@@ -70,12 +65,19 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import (
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegralType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from sequila_native_spark.operators.interval_join import (
     _EMPTY_I64,
@@ -89,19 +91,18 @@ from sequila_native_spark.operators.interval_join import (
     _emit,
     _ints,
     _key_groups,
-    _lex_sorted,
+    _lex_index,
     _max_batch,
     _probe_spans,
     _with_bounds,
-    compact_index_arrays,
-    guarded_build_pandas,
     interval_index,
 )
 from sequila_native_spark.operators.intervals import validate_sides
 from sequila_native_spark.session import SequilaConf, parse_algorithm
-from sequila_native_spark.util import ensure_parallel, stamp_row_id
+from sequila_native_spark.util import ensure_parallel, num_partitions
 
 _PID = "__sq_probe_id"
+_CHUNK = "__sq_chunk"
 _I64_MAX = np.iinfo(np.int64).max
 
 
@@ -177,9 +178,7 @@ def nearest_join(
             )
         flags = (bool(ignore_overlaps), bool(ignore_upstream), bool(ignore_downstream))
     raw = algorithm.strip().lower() if algorithm else None
-    if raw in ("broadcast_probe", "probe_broadcast"):
-        algo = "broadcast_probe"
-    elif raw == "coitreesnearest":
+    if raw == "coitreesnearest":
         # the reference name selects nearest semantics; here we ARE the
         # nearest join — use its default index structure
         algo = "index"
@@ -211,28 +210,20 @@ def nearest_join(
     lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict, check)
     rb = _with_bounds(right, r_start, r_end, _RS, _RE, strict, check)
 
+    args = (lb, rb, l_keys, r_keys, out_cols, k, flags)
     if algo == "naive":
-        out = _naive_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
-    elif algo == "partitioned":
-        out = _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
-    elif algo == "broadcast_probe":
-        out = _probe_broadcast_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
-    elif l_keys and not _arrow_keys(left, l_keys):
+        out = _naive_nearest(*args)
+    elif l_keys and (algo == "partitioned" or not _arrow_keys(left, l_keys)):
         # date, timestamp and decimal keys: the index kernel's lookups
         # cannot compare them, the keyed shuffle path's groupBy can
-        out = _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
+        out = _partitioned_nearest(*args)
     else:
+        # keyless calls try the index first: their cogroup is one group
+        # unless the build is over the cap and split into chunks
         try:
-            out = _index_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
+            out = _index_nearest(*args)
         except BuildSideTooLargeError:
-            # build too big to broadcast: transpose (broadcast the probe) if
-            # the probe side fits, else shuffle both sides by key
-            try:
-                out = _probe_broadcast_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
-            except BuildSideTooLargeError:
-                if not l_keys:
-                    raise
-                out = _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
+            out = _partitioned_nearest(*args)
     if distance_col:
         shrink = 1 if strict else 0
         le_n = F.col(left_end) - F.lit(shrink)
@@ -499,13 +490,6 @@ def _nearest_take_topk(
     return top, topd < _I64_MAX
 
 
-def _null_object_cols(pdf: pd.DataFrame) -> pd.DataFrame:
-    for c in pdf.columns:
-        if pdf[c].dtype == object:
-            pdf[c] = pdf[c].where(pd.notna(pdf[c]), None)
-    return pdf
-
-
 def _nearest_out_schema(lb, rb, left_cols, right_cols) -> StructType:
     # left fields forced nullable: probe groups with no build rows emit
     # null-left padding (integration_test.rs:385-394)
@@ -516,192 +500,127 @@ def _nearest_out_schema(lb, rb, left_cols, right_cols) -> StructType:
     )
 
 
-def _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
-    """Cogroup-per-key nearest: the Partitioned-mode analogue.
-
-    Shuffles both sides once on the equi-keys; each task builds the sorted
-    index for its key groups and probes it — no driver collect, no broadcast.
-    Keyless calls degenerate to one group, so route them to the broadcast
-    index instead (same memory shape, full probe parallelism).
-    """
-    if not l_keys:
-        return _index_nearest(lb, rb, l_keys, r_keys, out_cols, k, flags)
-
-    # SQL equality: null build keys never match anything — drop them. Probe
-    # rows with null keys stay: their group cogroups against an empty build
-    # side and emits null-left rows (matching the index path's behavior).
-    lb = lb.na.drop(subset=list(l_keys))
-
-    left_cols = [c for c in out_cols if c in lb.columns]
-    right_cols = [c for c in out_cols if c not in lb.columns]
-    out_schema = _nearest_out_schema(lb, rb, left_cols, right_cols)
-
-    def nearest_group(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(r_pdf):
-            # build-only key group: nearest emits one row per PROBE row only
-            return pd.DataFrame(columns=[*left_cols, *right_cols])
-        lv = (
-            l_pdf[l_pdf[_LS].notna() & l_pdf[_LE].notna()]
-            if len(l_pdf) else l_pdf
-        )
-        # (probe position, sorted-build position or -1) pair lists
-        m = len(r_pdf)
-        if len(lv):
-            starts, ends, runmax, argmax_first, order = _lex_sorted(
-                lv[_LS].to_numpy(np.int64), lv[_LE].to_numpy(np.int64)
+def _nearest_rows(idx_map: dict, probe, keys, k, flags):
+    """``(build rows, probe rows)`` of the output for the rows of an Arrow
+    ``probe`` table or batch against ``idx_map`` (:func:`_lex_index`
+    arrays per key tuple): each probe's hits, then one null build row for
+    every probe row without a hit, the reference's null-left padding for
+    probe rows whose key group has no build rows
+    (integration_test.rs:385-394). A null build row takes nulls."""
+    m = probe.num_rows
+    # int64 needles: the kernels subtract bounds for distances
+    qs = _ints(probe, _RS).astype(np.int64)
+    qe = _ints(probe, _RE).astype(np.int64)
+    hit_probe: list[np.ndarray] = [_EMPTY_I64]
+    hit_row: list[np.ndarray] = [_EMPTY_I64]
+    for key, pos in _key_groups(probe, keys, (_RS, _RE)):
+        entry = idx_map.get(key)
+        if entry is None:
+            continue
+        starts, ends, runmax, argmax_first, row_idx = entry
+        if k == 1:
+            take = _nearest_take(
+                starts, ends, runmax, argmax_first, qs[pos], qe[pos], flags
             )
-            ok = (r_pdf[_RS].notna() & r_pdf[_RE].notna()).to_numpy()
-            qs = r_pdf[_RS].to_numpy(np.int64, na_value=0)[ok]
-            qe = r_pdf[_RE].to_numpy(np.int64, na_value=0)[ok]
-            pos_ok = np.nonzero(ok)[0]
-            if k == 1:
-                take = _nearest_take(starts, ends, runmax, argmax_first, qs, qe, flags)
-                take_pos = np.full(m, -1, dtype=np.int64)
-                good = take >= 0
-                take_pos[pos_ok[good]] = order[take[good]]
-                probe_idx = np.arange(m)
-            else:
-                top, valid = _nearest_take_topk(starts, ends, runmax, qs, qe, k)
-                flat_valid = valid.ravel()
-                hit_probe = np.repeat(pos_ok, k)[flat_valid]
-                hit_pos = order[top.ravel()[flat_valid]]
-                # probes with zero hits (null bounds, or empty build) pad once
-                n_hits = np.zeros(m, dtype=np.int64)
-                if valid.size:
-                    np.add.at(n_hits, np.repeat(pos_ok, k), flat_valid)
-                miss = np.nonzero(n_hits == 0)[0]
-                probe_idx = np.concatenate([hit_probe, miss])
-                take_pos = np.concatenate(
-                    [hit_pos, np.full(len(miss), -1, dtype=np.int64)]
-                )
+            good = take >= 0
+            hit_probe.append(pos[good])
+            hit_row.append(row_idx[take[good]])
         else:
-            probe_idx = np.arange(m)
-            take_pos = np.full(m, -1, dtype=np.int64)
-        l_src = (
-            lv[left_cols].reset_index(drop=True)
-            if len(lv) else pd.DataFrame(columns=left_cols)
-        )
-        # -1 is not a label in the RangeIndex ⇒ reindex yields all-null rows
-        l_part = _null_object_cols(l_src.reindex(take_pos).reset_index(drop=True))
-        r_part = r_pdf[right_cols].iloc[probe_idx].reset_index(drop=True)
-        return pd.concat([l_part, r_part], axis=1)
-
-    return (
-        lb.groupBy(*l_keys)
-        .cogroup(rb.groupBy(*r_keys))
-        .applyInPandas(nearest_group, schema=out_schema)
-        .select(*out_cols)
-    )
+            top, valid = _nearest_take_topk(starts, ends, runmax, qs[pos], qe[pos], k)
+            flat = valid.ravel()
+            hit_probe.append(np.repeat(pos, k)[flat])
+            hit_row.append(row_idx[top.ravel()[flat]])
+    hits = np.concatenate(hit_probe)
+    miss = np.flatnonzero(np.bincount(hits, minlength=m) == 0)
+    rows = np.concatenate([*hit_row, np.zeros(len(miss), np.int64)])
+    b_idx = pa.array(rows, mask=np.arange(len(rows)) >= len(hits))
+    return b_idx, np.concatenate([hits, miss])
 
 
-_DIST = "__sq_dist"
+def _group_key(col, dtype, other):
+    """The cogroup key for one side of an equi-key pair. The cogroup
+    partitions by the key's hash but meets groups by ordering, and hashes
+    -0.0 and 0.0, or one value in two integral or decimal widths, apart:
+    so -0.0 becomes 0.0 and a pair of differing widths is cast to the one
+    type Spark's join compares them in."""
+    if isinstance(dtype, (FloatType, DoubleType)):
+        return F.when(col == 0, F.lit(0).cast(dtype)).otherwise(col)
+    if dtype == other:
+        return col
+    if isinstance(dtype, DecimalType):
+        scale = max(dtype.scale, other.scale)
+        digits = max(dtype.precision - dtype.scale, other.precision - other.scale)
+        return col.cast(DecimalType(min(38, digits + scale), scale))
+    return col.cast(LongType()) if isinstance(dtype, IntegralType) else col
 
 
-def _probe_broadcast_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
-    """Broadcast-probe nearest: scan the build side, reduce tiny candidates.
+def _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
+    """Cogroup nearest: the Partitioned-mode analogue.
 
-    Exactness of the two-level reduce: within one build batch the kernel
-    returns the argmin of ``(distance, start, end)`` over that batch's rows
-    (overlap-first is equivalent — overlaps have distance 0 and the sorted
-    scan picks the lex-min one). Argmin is associative, so the global
-    ``row_number`` over per-batch winners is the argmin over ALL build rows.
+    Keyed: shuffles both sides once on the equi-keys; each group runs the
+    ``index`` kernels on its own rows — no driver collect, no broadcast.
+    SQL equality never matches a null key, so build rows with one are
+    dropped (NaN keys stay: Spark's equality holds NaN = NaN); a probe
+    group with no build rows emits null-left rows.
+
+    Keyless: C chunks of the build, C from its partition count and
+    ``defaultParallelism``, each cogrouped with a copy of every probe row
+    under one probe id; per probe id the ``k`` least ``(distance, start,
+    end)`` candidates win, or one null-left row when no chunk has one.
     """
-    spark = lb.sparkSession
     left_cols = [c for c in out_cols if c in lb.columns]
     right_cols = [c for c in out_cols if c not in lb.columns]
-
-    # the collected copy and the final join branch re-evaluate the stamped
-    # frame; ids agree under stamp_row_id's deterministic-lineage contract
-    rbid = stamp_row_id(rb, _PID)
-    probe_pdf = guarded_build_pandas(rbid.select(*r_keys, _RS, _RE, _PID))
-    valid = probe_pdf[_RS].notna() & probe_pdf[_RE].notna()
-    for kc in r_keys:
-        valid &= probe_pdf[kc].notna()
-    probes = probe_pdf[valid]
-    probe_map: dict[tuple, tuple] = {}
-    if len(probes):
-        giter = probes.groupby(list(r_keys), sort=False) if r_keys else [((), probes)]
-        for key, grp in giter:
-            if r_keys and not isinstance(key, tuple):
-                key = (key,)
-            probe_map[key] = compact_index_arrays(
-                grp[_RS].to_numpy(np.int64),
-                grp[_RE].to_numpy(np.int64),
-                grp[_PID].to_numpy(np.int64),
+    spark = lb.sparkSession
+    if l_keys:
+        for c in l_keys:
+            lb = lb.where(lb[c].isNotNull())
+        lt = {f.name: f.dataType for f in lb.schema.fields}
+        rt = {f.name: f.dataType for f in rb.schema.fields}
+        l_group = [_group_key(lb[a], lt[a], rt[b]) for a, b in zip(l_keys, r_keys)]
+        r_group = [_group_key(rb[b], rt[b], lt[a]) for a, b in zip(l_keys, r_keys)]
+    else:
+        cap = SequilaConf.from_spark(spark).max_broadcast_build_rows
+        if cap and cap > 0 and rb.limit(cap + 1).count() > cap:
+            raise BuildSideTooLargeError(
+                f"nearest_join without equi-keys over a build side above "
+                f"spark.sequila.maxBroadcastBuildRows ({cap}) copies every "
+                f"probe row to each build chunk, and the probe side has more "
+                f"than {cap} rows too; raise the cap or join on a key."
             )
-    bc = spark.sparkContext.broadcast(probe_map)
+        chunks = max(1, min(num_partitions(lb), spark.sparkContext.defaultParallelism))
+        lb = lb.withColumn(_CHUNK, (F.monotonically_increasing_id() % chunks).cast("int"))
+        rb = rb.withColumn(_PID, F.monotonically_increasing_id()).withColumn(
+            _CHUNK, F.explode(F.sequence(F.lit(0), F.lit(chunks - 1)))
+        )
+        l_group, r_group = [_CHUNK], [_CHUNK]
+        # both sides' bounds rank the candidates; the probe id groups them
+        left_cols = [*left_cols, _LS, _LE]
+        right_cols = [*right_cols, _RS, _RE, _PID]
 
-    cand_cols = [*left_cols, _LS, _LE]
-    cand_schema = StructType(
-        [StructField(f.name, f.dataType, True)
-         for f in lb.select(*cand_cols).schema.fields]
-        + [StructField(_PID, LongType(), True),
-           StructField(_DIST, LongType(), True)]
-    )
-    lk_list = list(l_keys)
+    names = [*left_cols, *right_cols]
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pmap = bc.value
-        for pdf in batches:
-            if pdf.empty or not pmap:
-                continue
-            ok = pdf[_LS].notna() & pdf[_LE].notna()
-            for kc in lk_list:
-                ok &= pdf[kc].notna()
-            bdf = pdf[ok]
-            if not len(bdf):
-                continue
-            outs = []
-            groups = bdf.groupby(lk_list, sort=False) if lk_list else [((), bdf)]
-            for key, grp in groups:
-                if lk_list and not isinstance(key, tuple):
-                    key = (key,)
-                entry = pmap.get(key)
-                if entry is None:
-                    continue
-                qs, qe, pids = entry
-                starts, ends, runmax, argmax_first, order = _lex_sorted(
-                    grp[_LS].to_numpy(np.int64), grp[_LE].to_numpy(np.int64)
-                )
-                if k == 1:
-                    take = _nearest_take(starts, ends, runmax, argmax_first, qs, qe, flags)
-                    good = take >= 0
-                    if not good.any():
-                        continue
-                    tk = take[good]
-                    tqs, tqe = qs[good], qe[good]
-                    tpids = pids[good]
-                else:
-                    # per-batch top-k candidates; top-k is associative, so the
-                    # global row_number <= k over batch winners stays exact
-                    top, valid = _nearest_take_topk(starts, ends, runmax, qs, qe, k)
-                    flat = valid.ravel()
-                    if not flat.any():
-                        continue
-                    tk = top.ravel()[flat]
-                    rep = np.repeat(np.arange(len(qs)), k)[flat]
-                    tqs, tqe = qs[rep], qe[rep]
-                    tpids = pids[rep]
-                ls, le = starts[tk], ends[tk]
-                dist = np.where(ls > tqe, ls - tqe, np.where(le < tqs, tqs - le, 0))
-                rows = grp[cand_cols].iloc[order[tk]].reset_index(drop=True)
-                rows[_PID] = tpids
-                rows[_DIST] = dist
-                outs.append(rows)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+    def nearest_group(build: pa.Table, probe: pa.Table) -> pa.Table:
+        b_idx, p_idx = _nearest_rows(_lex_index(build, []), probe, [], k, flags)
+        left = build.select(left_cols).take(b_idx)
+        right = probe.select(right_cols).take(p_idx)
+        return pa.Table.from_arrays([*left.columns, *right.columns], names=names)
 
-    cands = ensure_parallel(lb, []).mapInPandas(scan, schema=cand_schema)
-    w = Window.partitionBy(_PID).orderBy(
-        F.col(_DIST).asc(), F.col(_LS).asc(), F.col(_LE).asc()
+    out = (
+        lb.groupBy(*l_group)
+        .cogroup(rb.groupBy(*r_group))
+        .applyInArrow(nearest_group, schema=_nearest_out_schema(lb, rb, left_cols, right_cols))
     )
-    winners = (
-        cands.withColumn("__sq_rn", F.row_number().over(w))
-        .where(F.col("__sq_rn") <= k)
-        .select(*left_cols, _PID)
-    )
-    # winners ≤ k·|probe| rows — broadcast the join back onto the probe side
-    return rbid.join(F.broadcast(winners), _PID, "left").select(*out_cols)
+    if not l_keys:
+        ls, le = F.col(_LS), F.col(_LE)
+        # null-left rows rank last, so one ranks first only when no chunk
+        # had a candidate (their distance would read 0)
+        rank = F.row_number().over(Window.partitionBy(_PID).orderBy(
+            ls.isNull(), _distance_col(ls, le, F.col(_RS), F.col(_RE)), ls, le,
+        ))
+        out = out.withColumn("__sq_rn", rank).where(
+            (F.col("__sq_rn") <= k) & (ls.isNotNull() | (F.col("__sq_rn") == 1))
+        )
+    return out.select(*out_cols)
 
 
 def _index_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
@@ -718,43 +637,11 @@ def _index_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
     def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         idx_map, build = bc.value
         for batch in batches:
-            m = batch.num_rows
-            if m == 0:
+            if batch.num_rows == 0:
                 continue
-            # int64 needles: the kernels subtract bounds for distances
-            qs = _ints(batch, _RS).astype(np.int64)
-            qe = _ints(batch, _RE).astype(np.int64)
-            hit_probe: list[np.ndarray] = [_EMPTY_I64]
-            hit_row: list[np.ndarray] = [_EMPTY_I64]
-            for key, pos in _key_groups(batch, rk_list, (_RS, _RE)):
-                entry = idx_map.get(key)
-                if entry is None:
-                    continue
-                starts, ends, runmax, argmax_first, row_idx = entry
-                if k == 1:
-                    take = _nearest_take(
-                        starts, ends, runmax, argmax_first, qs[pos], qe[pos], flags
-                    )
-                    good = take >= 0
-                    hit_probe.append(pos[good])
-                    hit_row.append(row_idx[take[good]])
-                else:
-                    top, valid = _nearest_take_topk(
-                        starts, ends, runmax, qs[pos], qe[pos], k
-                    )
-                    flat = valid.ravel()
-                    hit_probe.append(np.repeat(pos, k)[flat])
-                    hit_row.append(row_idx[top.ravel()[flat]])
-            # probes with no hits emit one all-null left row: the reference's
-            # null-left padding for probe rows whose key group has no build
-            # rows (integration_test.rs:385-394); a null index takes nulls
-            hits = np.concatenate(hit_probe)
-            miss = np.flatnonzero(np.bincount(hits, minlength=m) == 0)
-            rows = np.concatenate([*hit_row, np.zeros(len(miss), np.int64)])
-            b_idx = pa.array(rows, mask=np.arange(len(rows)) >= len(hits))
+            b_idx, p_idx = _nearest_rows(idx_map, batch, rk_list, k, flags)
             yield from _emit(
-                build, batch.select(right_cols), b_idx,
-                np.concatenate([hits, miss]), names, max_batch,
+                build, batch.select(right_cols), b_idx, p_idx, names, max_batch
             )
 
     # round-robin split of a single-partition probe scan: mapInArrow gets

@@ -27,8 +27,7 @@ _WIDE_NODE_MARKERS = (
     "Sample",
     "MapInPandas",
     "MapInArrow",
-    "FlatMapGroupsInPandas",
-    "FlatMapCoGroupsInPandas",
+    "FlatMap",  # grouped and cogrouped Python stages, Pandas or Arrow
     "GlobalLimit",
 )
 
@@ -72,23 +71,28 @@ def ensure_parallel(df: DataFrame, shuffle_cols: list[str] | None = None) -> Dat
     spark = df.sparkSession
     target = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     parallelism = spark.sparkContext.defaultParallelism
-    key = cache = None
-    try:
-        key = df._jdf.queryExecution().analyzed().semanticHash()
-        cache = session_scoped_cache(spark, _PARTS_CACHE)
-    except Exception:
-        pass
-    if cache is not None and key in cache:
-        nparts = cache[key]
-    else:
-        nparts = df.rdd.getNumPartitions()
-        if cache is not None:
-            cache[key] = nparts
-    if nparts < min(target, parallelism):
+    if num_partitions(df) < min(target, parallelism):
         if shuffle_cols:
             return df.repartition(target, *shuffle_cols)
         return df.repartition(target)
     return df
+
+
+def num_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``'s scan, memoized per (session,
+    analyzed plan): the probe costs a physical planning."""
+    key = cache = None
+    try:
+        key = df._jdf.queryExecution().analyzed().semanticHash()
+        cache = session_scoped_cache(df.sparkSession, _PARTS_CACHE)
+    except Exception:
+        pass
+    if cache is not None and key in cache:
+        return cache[key]
+    nparts = df.rdd.getNumPartitions()
+    if cache is not None:
+        cache[key] = nparts
+    return nparts
 
 
 # Per-session memo caps: a long-lived session that plans many distinct frame

@@ -1,4 +1,4 @@
-"""Build-side memory guard: collect paths must never blindly toPandas().
+"""Build-side memory guard: collect paths must never blindly toArrow().
 
 Reference behavior is *accounted* build memory (``interval_join.rs:624-660``)
 — an over-cap build errors early or falls back to a distributed plan instead
@@ -22,7 +22,7 @@ from sequila_native_spark.operators.interval_join import (
     _LS,
     BuildSideTooLargeError,
     _with_bounds,
-    guarded_build_pandas,
+    guarded_build_arrow,
 )
 from sequila_native_spark.session import MAX_BROADCAST_BUILD_ROWS
 from tests.conftest import rows_set
@@ -37,11 +37,11 @@ def tiny_cap(spark):
 
 def test_guarded_collect_raises(spark, tiny_cap, reads):
     with pytest.raises(BuildSideTooLargeError, match="maxBroadcastBuildRows"):
-        guarded_build_pandas(reads)
+        guarded_build_arrow(reads)
 
 
 def test_guarded_collect_passes_under_cap(spark, reads):
-    assert len(guarded_build_pandas(reads.limit(2))) == 2
+    assert guarded_build_arrow(reads.limit(2)).num_rows == 2
 
 
 def test_overlap_index_falls_back_to_binning(spark, tiny_cap, reads, targets):
@@ -60,14 +60,27 @@ def test_keyless_overlap_index_falls_back_to_binning(spark, tiny_cap, reads, tar
 
 def test_nearest_index_falls_back_to_partitioned(spark, tiny_cap, reads, targets):
     got = nearest_join(reads, targets, on="contig", algorithm="index")
+    assert "FlatMapCoGroupsInArrow" in _plan(got)
     want = nearest_join(reads, targets, on="contig", algorithm="naive")
     assert rows_set(got) == rows_set(want)
 
 
 def test_keyless_nearest_index_raises(spark, tiny_cap, reads, targets):
+    # build and probe both over the cap
     with pytest.raises(BuildSideTooLargeError):
         nearest_join(reads.drop("contig"), targets.drop("contig"),
                      on=None, algorithm="index").collect()
+
+
+def test_keyless_nearest_index_chunks_an_over_cap_build(spark, tiny_cap, reads):
+    # 12 build rows over the cap of 2, a probe of 2 under it
+    probe = spark.createDataFrame([(100, 190), (21000, 21500)], "ps int, pe int")
+    kw = dict(on=None, right_start="ps", right_end="pe")
+    got = nearest_join(reads.drop("contig"), probe, **kw, algorithm="index")
+    assert "FlatMapCoGroupsInArrow" in _plan(got)
+    want = nearest_join(reads.drop("contig"), probe, **kw, algorithm="naive")
+    assert rows_set(got) == rows_set(want)
+    assert len(rows_set(want)) == 2
 
 
 def test_count_overlaps_index_falls_back_to_binning(spark, tiny_cap, reads, targets):
@@ -76,9 +89,13 @@ def test_count_overlaps_index_falls_back_to_binning(spark, tiny_cap, reads, targ
     assert rows_set(got) == rows_set(want)
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
 def _no_python_probe(df):
-    plan = df._jdf.queryExecution().analyzed().toString()
-    for node in ("MapInArrow", "MapInPandas", "FlatMapCoGroupsInPandas"):
+    plan = _plan(df)
+    for node in ("MapInArrow", "MapInPandas", "FlatMapCoGroupsInArrow"):
         assert node not in plan, plan
     return df
 

@@ -195,7 +195,7 @@ def test_create_dataframe_input_is_never_cached(spark, probe):
 @pytest.mark.parametrize("op, fallback", [
     (_count, "Generate explode"),  # binning
     (_coverage, "Generate explode"),
-    (_nearest, "FlatMapCoGroupsInPandas"),  # partitioned: the probe is over the cap too
+    (_nearest, "FlatMapCoGroupsInArrow"),  # partitioned, the keyed shuffle path
     (_count_agg, "Generate explode"),
     (_join, "Generate explode"),
 ])

@@ -9,7 +9,7 @@ from sequila_native_spark import count_overlaps, nearest_join, overlap_join
 from tests.conftest import rows_set
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe"])
+@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned"])
 def test_nearest_golden(spark, nearest_a, nearest_b, algorithm):
     # integration_test.rs:352-399 (strict-inequality query, CoitreesNearest):
     # every probe (b) row emits exactly one row; rows whose (contig, strand)
@@ -30,7 +30,7 @@ def test_nearest_golden(spark, nearest_a, nearest_b, algorithm):
     assert dict(got) == expected
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe"])
+@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned"])
 def test_nearest_overlap_first(spark, algorithm):
     # overlap wins over a closer-by-distance... overlap distance is 0;
     # deterministic tie-break picks min (start, end) among overlapping.
@@ -49,7 +49,7 @@ def test_nearest_overlap_first(spark, algorithm):
     assert (row["start"], row["end"]) == (1, 100)
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe"])
+@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned"])
 def test_nearest_true_minimum_not_reference_heuristic(spark, algorithm):
     # The reference's binary-search heuristic (interval_join.rs:926-951) would
     # return (50,60) here; the true nearest is (0,100) (distance 50 vs 90).
@@ -229,7 +229,7 @@ def test_k_nearest_golden_all_paths(spark):
         ("a", 6, 7, "a", 14, 15): 1,
         (None, None, None, "c", 1, 2): 1,
     }
-    for algo in ("naive", "index", "partitioned", "broadcast_probe"):
+    for algo in ("naive", "index", "partitioned"):
         got = rows_set(
             nearest_join(
                 build, probe, on="contig",
@@ -288,7 +288,7 @@ def test_nearest_k_via_conf(spark):
     assert nearest_join(build, probe, **args).count() == 1
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe"])
+@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned"])
 def test_nearest_distance_col(spark, algorithm):
     """closest -d: 0 for overlap, gap otherwise, null for padded rows."""
     build = spark.createDataFrame(
@@ -367,7 +367,7 @@ def _closest_brute(flags):
     return out
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned", "broadcast_probe"])
+@pytest.mark.parametrize("algorithm", ["naive", "index", "partitioned"])
 @pytest.mark.parametrize(
     "flags",
     [(True, False, False), (False, True, False), (False, False, True),
@@ -470,7 +470,7 @@ def _rp_random_tables(spark, seed, n_build=120, n_probe=90):
     return b, p
 
 
-_NEAREST_PATHS = ("index", "partitioned", "broadcast_probe")
+_NEAREST_PATHS = ("index", "partitioned")
 
 
 @pytest.mark.parametrize("seed", [1, 2])
@@ -509,19 +509,21 @@ def test_nearest_keyless(spark):
 
 
 def test_range_partitioned_name_rejected(spark):
-    """The chunked range_partitioned nearest path was removed; its name is
-    now an unknown algorithm, as argument and as session conf."""
+    """The chunked range_partitioned and the probe-broadcast nearest paths
+    were removed; their names are now unknown algorithms, as argument and
+    as session conf."""
     build, probe = _rp_random_tables(spark, seed=3, n_build=4, n_probe=3)
     kw = dict(on="contig", left_start="start", left_end="end",
               right_start="p_start", right_end="p_end")
-    with pytest.raises(ValueError, match="Unknown interval join algorithm"):
-        nearest_join(build, probe, **kw, algorithm="range_partitioned")
-    try:
-        spark.conf.set("spark.sequila.intervalJoinAlgorithm", "range_partitioned")
+    for name in ("range_partitioned", "broadcast_probe", "probe_broadcast"):
         with pytest.raises(ValueError, match="Unknown interval join algorithm"):
-            nearest_join(build, probe, **kw)
-    finally:
-        spark.conf.unset("spark.sequila.intervalJoinAlgorithm")
+            nearest_join(build, probe, **kw, algorithm=name)
+        try:
+            spark.conf.set("spark.sequila.intervalJoinAlgorithm", name)
+            with pytest.raises(ValueError, match="Unknown interval join algorithm"):
+                nearest_join(build, probe, **kw)
+        finally:
+            spark.conf.unset("spark.sequila.intervalJoinAlgorithm")
 
 
 def test_huge_coordinates_raise_int32_guard(spark):

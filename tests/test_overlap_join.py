@@ -199,7 +199,7 @@ def test_partitioned_name_runs_binning(spark, reads, targets, how):
     for name in ("partitioned", "cogroup"):
         out = overlap_join(reads, targets, algorithm=name, **kw)
         plan = out._jdf.queryExecution().analyzed().toString()
-        assert "FlatMapCoGroupsInPandas" not in plan, plan
+        assert "FlatMapCoGroups" not in plan, plan
         assert "Generate explode" in plan, plan
         assert rows_set(out) == want
 

@@ -99,7 +99,7 @@ def test_empty_build_side_matches_naive(spark, reads, op):
 
 @pytest.mark.parametrize("op, shuffle_node", [
     ("overlap", "Generate explode"),  # binning
-    ("nearest", "FlatMapCoGroupsInPandas"),  # partitioned
+    ("nearest", "FlatMapCoGroupsInArrow"),  # partitioned
 ])
 def test_date_key_runs_the_shuffle_path(spark, op, shuffle_node):
     d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
@@ -117,6 +117,34 @@ def test_date_key_runs_the_shuffle_path(spark, op, shuffle_node):
     plan = _plan(out)
     assert shuffle_node in plan and "MapInArrow" not in plan, plan
     assert _rows(out) == _rows(run(left, right, "naive"))
+
+
+@pytest.mark.parametrize("ltype, rtype", [
+    ("int", "bigint"), ("decimal(10,2)", "decimal(12,3)"),
+])
+def test_key_pair_of_two_widths_runs_the_shuffle_path(spark, ltype, rtype):
+    # the cogroup partitions by hash, which differs between two widths of
+    # one value; the naive join compares the pair in one type. Coalescing
+    # would put every group in one partition and hide a mismatch
+    conv = Decimal if ltype.startswith("decimal") else int
+    left = spark.createDataFrame(
+        [(conv(i), 1, 10, i) for i in range(1, 40)], f"k {ltype}, s int, e int, v int"
+    )
+    right = spark.createDataFrame(
+        [(conv(i), 2, 3) for i in range(1, 41)] + [(None, 2, 3)],
+        f"k {rtype}, s int, e int",
+    )
+    kw = dict(on="k", left_start="s", left_end="e",
+              right_start="s", right_end="e")
+    out = nearest_join(left, right, **kw, algorithm="partitioned")
+    assert "FlatMapCoGroupsInArrow" in _plan(out)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        got = _rows(out)
+    finally:
+        spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    assert got == _rows(nearest_join(left, right, **kw, algorithm="naive"))
+    assert sum(n for r, n in got.items() if r.startswith("(None")) == 2  # 40, null
 
 
 def test_float_keys_match_naive(spark):
@@ -154,3 +182,18 @@ def test_float_keys_match_naive(spark):
     # both special keys did match: two NaN pairs, and 0.0 pairs of either sign
     got = {("nan" if k != k else k): n for k, n in want.collect()}
     assert got == {"nan": 2, 0.0: 2}
+
+    # the keyed shuffle path: a -0.0 build key against a 0.0 probe key
+    # once aborted its cogroup, and a NaN key lost its match
+    build = spark.createDataFrame([(nan, 1, 10), (-0.0, 5, 20)], "k double, s int, e int")
+    probe = spark.createDataFrame([(nan, 2, 3), (0.0, 6, 7)], "k double, s int, e int")
+    for k in (1, 2):
+        out = nearest_join(build, probe, **kw, k=k, algorithm="partitioned")
+        assert "FlatMapCoGroupsInArrow" in _plan(out)
+        assert _rows(out) == _rows(
+            nearest_join(build, probe, **kw, k=k, algorithm="naive")
+        ), k
+        # both probes matched, and the probe's own NaN key stays NaN
+        (nan_row,) = [r for r in out.collect() if r["s_r"] == 2]
+        assert nan_row["k"] != nan_row["k"] and nan_row["k_r"] != nan_row["k_r"]
+        assert out.where("k IS NULL").count() == 0

@@ -11,6 +11,7 @@ from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from sequila_native_spark import nearest_join, overlap_join
+from sequila_native_spark.session import MAX_BROADCAST_BUILD_ROWS
 from tests.conftest import rows_set
 
 # small coordinate domain → lots of overlaps, touching bounds, point
@@ -65,8 +66,8 @@ def test_all_algorithms_agree_with_naive(spark, tabs):
 def test_nearest_algorithms_agree_with_naive(spark, tabs):
     # nearest is deterministic ((distance, start, end) tie-break), so exact
     # row-multiset equality must hold across every algorithm — including the
-    # batch-partial + global-reduce path (broadcast_probe), whose correctness
-    # rests on the argmin being associative across build batches
+    # keyless chunked cogroup, whose correctness rests on the argmin being
+    # associative across build chunks
     lrows = [(c, s, s + ln) for c, s, ln in tabs[0]]
     rrows = [(c, s, s + ln) for c, s, ln in tabs[1]]
     left = spark.createDataFrame(lrows, "contig string, start int, end int")
@@ -85,7 +86,30 @@ def test_nearest_algorithms_agree_with_naive(spark, tabs):
     truth = run("naive")
     assert run("index") == truth
     assert run("partitioned") == truth
-    assert run("broadcast_probe") == truth
+    _check_keyless_over_cap(spark, lrows, rrows)
+
+
+def _check_keyless_over_cap(spark, lrows, rrows, **kw):
+    """Keyless nearest with the build over ``maxBroadcastBuildRows`` and
+    the probe under it runs the chunked cogroup: each chunk's best
+    candidates, then the global best per probe. The build repeats its rows
+    until it outgrows the probe; a repeat of a (start, end)-only row is the
+    same output row, so naive's answer holds whichever copy wins."""
+    build = spark.createDataFrame(
+        [(s, e) for _, s, e in lrows] * (len(rrows) // len(lrows) + 1),
+        "start int, end int",
+    ).repartition(3)
+    probe = spark.createDataFrame([(s, e) for _, s, e in rrows], "s int, e int")
+    args = dict(on=None, left_start="start", left_end="end",
+                right_start="s", right_end="e", **kw)
+    spark.conf.set(MAX_BROADCAST_BUILD_ROWS, str(len(rrows)))
+    try:
+        out = nearest_join(build, probe, algorithm="index", **args)
+        assert "FlatMapCoGroupsInArrow" in out._jdf.queryExecution().analyzed().toString()
+        got = rows_set(out)
+    finally:
+        spark.conf.unset(MAX_BROADCAST_BUILD_ROWS)
+    assert got == rows_set(nearest_join(build, probe, algorithm="naive", **args)), kw
 
 
 @settings(
@@ -174,9 +198,10 @@ def test_k_nearest_algorithms_agree_with_naive(spark, tabs, k):
     args = dict(on="contig", left_start="start", left_end="end",
                 right_start="s", right_end="e", k=k)
     want = rows_set(nearest_join(left, right, algorithm="naive", **args))
-    for algo in ("index", "partitioned", "broadcast_probe"):
+    for algo in ("index", "partitioned"):
         got = rows_set(nearest_join(left, right, algorithm=algo, **args))
         assert got == want, (algo, k)
+    _check_keyless_over_cap(spark, lrows, rrows, k=k)
 
 
 @settings(
@@ -243,7 +268,6 @@ def test_closest_flags_algorithms_agree_with_naive(spark, tabs, flags):
     truth = run("naive")
     assert run("index") == truth
     assert run("partitioned") == truth
-    assert run("broadcast_probe") == truth
 
 
 @settings(
@@ -319,7 +343,7 @@ def test_mixed_key_families_agree_or_raise(spark, flip):
     got = rows_set(overlap_count_agg(left, right, **kw, alias="count"))
     assert got == want
 
-    for algo in ("naive", "index", "partitioned", "broadcast_probe"):
+    for algo in ("naive", "index", "partitioned"):
         with pytest.raises(ValueError, match=r"\(int\).*\(string\)|\(string\).*\(int\)"):
             nearest_join(left, right, **kw, algorithm=algo)
 
