@@ -9,27 +9,33 @@ arrays, and it has zero test coverage (SURVEY.md A6). We implement the
 intervals overlapping it within its equi-key group — 0 when none (matching
 the declared one-row-per-probe-row contract).
 
-Algorithms:
+One per-row overlap aggregate (:func:`_per_row_overlaps`) answers "how
+many build rows overlap this probe row" for four operators: this one,
+``coverage`` (which adds the clipped bases), and the semi/anti/mark
+filters of ``overlap_filter`` (``count > 0``, ``count == 0``, and the
+mark). Its two plans:
 
 ``binning`` (default, scale path) — binned inner overlap join (each pair
-    emitted exactly once) → ``groupBy(probe id).count()`` → left join back to
-    the probe so zero-match rows survive. All Catalyst; shuffles on
-    ``(keys…, bin)`` then on the probe id.
+    emitted exactly once), optional overlap-fraction filter →
+    ``groupBy(probe id)`` → left join back to the probe so zero-match rows
+    survive. All Catalyst; shuffles on ``(keys…, bin)`` then on the probe
+    id. ``naive`` is the same plan over the predicate join.
 
 ``index`` — broadcast per-key sorted arrays; a ``mapInArrow`` probe
     computes exact counts with two binary searches per probe (the
     superintervals ``count`` recipe,
-    ``superintervals/src/superintervals.rs:353-446``). Zero shuffle; probe
-    rows stream through unchanged with a count column appended. O(n log m)
-    with no per-candidate materialization — inverted intervals (start > end
-    after strict normalization) route through the exact candidate-mask
-    kernel instead.
+    ``superintervals/src/superintervals.rs:353-446``), or counts and
+    clipped bases from prefix sums (:func:`_cov_counts`). Zero shuffle;
+    probe rows stream through unchanged with the output columns appended.
+    O(n log m) with no per-candidate materialization — inverted intervals
+    (start > end after strict normalization) route through the exact
+    candidate-mask kernel instead.
     The build is kept in the session index cache
     (``interval_join.broadcast_build``): over one unchanged file input,
-    count_overlaps, coverage and overlap_count_agg share one collect and
-    broadcast. Any number of string, integral, boolean or floating keys
-    (:func:`_arrow_keys`); other key types (date, timestamp, decimal) run
-    ``binning``.
+    every caller of the aggregate and overlap_count_agg share one collect
+    and broadcast. Any number of string, integral, boolean or floating keys
+    (:func:`_arrow_keys`); other key types (date, timestamp, decimal),
+    mixed key families and overlap fractions run ``binning``.
 
 :func:`overlap_count_agg` is the aggregated form of the same kernel:
 ``overlap_join(...).groupBy(keys).count()`` computed without emitting a
@@ -45,7 +51,7 @@ from typing import Iterator
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -107,79 +113,131 @@ def count_overlaps(
     ``binning`` when fractions are requested (the count kernel's two binary
     searches answer plain overlap only).
     """
-    wants_frac = (
-        min_frac_left is not None or min_frac_right is not None
-        or reciprocal or either
+    return _per_row_overlaps(
+        left, right, on, left_start, left_end, right_start, right_end,
+        strict=strict, algorithm=algorithm, bin_width=bin_width,
+        check_bounds=check_bounds, count_col=count_col,
+        frac=dict(min_frac_left=min_frac_left, min_frac_right=min_frac_right,
+                  reciprocal=reciprocal, either=either),
     )
-    if wants_frac and strict:
+
+
+def _per_row_overlaps(
+    left: DataFrame,
+    right: DataFrame,
+    on,
+    left_start: str,
+    left_end: str,
+    right_start: str,
+    right_end: str,
+    *,
+    strict: bool,
+    algorithm: str | None,
+    bin_width: int | str | None,
+    check_bounds: bool | None,
+    count_col: str,
+    cover_col: str | None = None,
+    frac: dict | None = None,
+) -> DataFrame:
+    """The per-row overlap aggregate behind count_overlaps, coverage and
+    the semi/anti/mark filters: ``right`` plus ``count_col``, the number
+    of overlapping ``left`` rows in its equi-key group, and with
+    ``cover_col`` their total clipped overlap in bases (0 when none).
+    ``frac`` holds :func:`~.intervals.fraction_predicate`'s keywords.
+
+    ``index`` probes the cached count index (:func:`_index_probe`) with
+    the count kernel, or the coverage kernel for ``cover_col``; it runs
+    for plain overlap on same-family Arrow keys. Every other call, and an
+    index over the broadcast guard, runs one shuffle plan: stamp the probe
+    id, pair it with the overlapping build rows (:func:`_overlap_pairs`),
+    aggregate per id and left-join the aggregates back.
+    """
+    conf = SequilaConf.from_spark(left.sparkSession)
+    algo = parse_algorithm(algorithm) if algorithm else conf.algorithm
+    check = conf.check_int32_bounds if check_bounds is None else check_bounds
+    sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
+    out_cols = [count_col] if cover_col is None else [count_col, cover_col]
+    for c in out_cols:
+        if c in right.columns:
+            raise ValueError(f"output column {c!r} already exists on right side")
+    # no Column call unless asked: the first one in a driver process pays
+    # PySpark's call-site capture, which imports IPython when installed
+    frac = {
+        k: v for k, v in (frac or {}).items() if v is not None and v is not False
+    }
+    frac_pred = fraction_predicate(
+        F.col(_LS), F.col(_LE), F.col(_RS), F.col(_RE), **frac
+    ) if frac else None
+    if frac_pred is not None and strict:
         raise ValueError(
             "overlap fractions are defined on the closed input intervals; "
             "strict=True would shrink them — not supported together"
         )
-    spark = left.sparkSession
-    conf = SequilaConf.from_spark(spark)
-    algo = parse_algorithm(algorithm) if algorithm else conf.algorithm
-    width = bin_width if bin_width is not None else conf.bin_width
-    check = conf.check_int32_bounds if check_bounds is None else check_bounds
-
-    sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
-    if count_col in right.columns:
-        raise ValueError(f"count column {count_col!r} already exists on right side")
-    # Only the left's key/bound columns are needed — prune before any join.
     l_keys = [p[0] for p in sides.on]
     r_keys = [p[1] for p in sides.on]
-    left = left.select(*dict.fromkeys([*l_keys, left_start, left_end]))
-    right_out_cols = list(right.columns)
-    right_orig = right
-    if algo in ("binning", "partitioned"):
-        width = resolve_bin_width(
-            width, left, left_start, left_end, right, right_start, right_end
-        )
+    # only the left's key and bound columns are needed
+    build = left.select(*dict.fromkeys([*l_keys, left_start, left_end]))
+    lb = _with_bounds(build, left_start, left_end, _LS, _LE, strict, check)
 
-    lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict, check)
-
-    if algo == "index" and (
-        wants_frac or sides.mixed_keys or not _arrow_keys(left, l_keys)
-    ):
-        # the kernel answers plain overlap on same-family Arrow keys only
-        algo = "binning"
-
-    if algo == "index":
+    # the kernels answer plain overlap, and their dict lookups can neither
+    # coerce 1 = '1' nor hash keys outside the Arrow key types
+    if (algo == "index" and frac_pred is None and not sides.mixed_keys
+            and _arrow_keys(build, l_keys)):
+        if cover_col is None:
+            prepare = dict
+            kernel = lambda e, qs, qe: (_group_counts(e, qs, qe),)  # noqa: E731
+        else:
+            prepare = lambda idx: {k: _with_prefix_sums(e) for k, e in idx.items()}  # noqa: E731
+            kernel = _cov_counts
         try:
             return _index_probe(
-                lb, right_orig, l_keys, r_keys, right_start, right_end,
-                strict, check, [count_col], dict,
-                lambda e, qs, qe: (_group_counts(e, qs, qe),),
+                lb, right, l_keys, r_keys, right_start, right_end,
+                strict, check, out_cols, prepare, kernel,
             )
         except BuildSideTooLargeError:
-            algo = "binning"  # accounted-memory fallback, never a blind collect
+            pass  # accounted-memory fallback, never a blind collect
 
-    if algo in ("naive", "binning", "partitioned"):
-        right = stamp_row_id(right, _PID)
-        rb = _with_bounds(right, right_start, right_end, _RS, _RE, strict, check)
-        if algo == "naive":
-            cond = overlap_predicate(lb[_LS], lb[_LE], rb[_RS], rb[_RE])
-            for lk, rk in zip(l_keys, r_keys):
-                cond = (lb[lk] == rb[rk]) & cond
-            pairs = rb.join(lb, cond, "inner")
-        else:
-            pairs = _binned_pairs(lb, rb, l_keys, r_keys, width)
-        if wants_frac:
-            pairs = pairs.where(
-                fraction_predicate(
-                    F.col(_LS), F.col(_LE), F.col(_RS), F.col(_RE),
-                    min_frac_left=min_frac_left, min_frac_right=min_frac_right,
-                    reciprocal=reciprocal, either=either,
-                )
-            )
-        counts = pairs.groupBy(_PID).agg(F.count(F.lit(1)).alias(count_col))
-        return (
-            right.join(counts, _PID, "left_outer")
-            .withColumn(count_col, F.coalesce(F.col(count_col), F.lit(0)))
-            .select(*right_out_cols, count_col)
+    width = None if algo == "naive" else resolve_bin_width(
+        conf.bin_width if bin_width is None else bin_width,
+        left, left_start, left_end, right, right_start, right_end,
+    )
+    probe = stamp_row_id(right, _PID)
+    rb = _with_bounds(probe, right_start, right_end, _RS, _RE, strict, check)
+    aggs = [F.count(F.lit(1)).alias(count_col)]
+    if cover_col is not None:
+        # in bigint: int32 bounds further apart than 2^31 overflow an int
+        le, re_, ls, rs = (F.col(c).cast("bigint") for c in (_LE, _RE, _LS, _RS))
+        aggs.append(
+            F.sum(F.least(le, re_) - F.greatest(ls, rs) + 1).alias(cover_col)
         )
+    per_id = _overlap_pairs(lb, rb, l_keys, r_keys, width, frac_pred).groupBy(
+        _PID
+    ).agg(*aggs)
+    return probe.join(per_id, _PID, "left_outer").select(
+        *right.columns, *(F.coalesce(F.col(c), F.lit(0)).alias(c) for c in out_cols)
+    )
 
-    raise AssertionError(f"unreachable algorithm {algo}")
+
+def _overlap_pairs(
+    lb: DataFrame,
+    rb: DataFrame,
+    l_keys: list[str],
+    r_keys: list[str],
+    width: int | None,
+    frac: Column | None = None,
+) -> DataFrame:
+    """Every overlapping pair of bound-stamped rows in one equi-key group,
+    with all columns of both sides: the binned join at ``width``, or the
+    naive predicate join when ``width`` is None; ``frac`` (a
+    :func:`~.intervals.fraction_predicate`) filters the pairs."""
+    if width is None:
+        cond = overlap_predicate(lb[_LS], lb[_LE], rb[_RS], rb[_RE])
+        for lk, rk in zip(l_keys, r_keys):
+            cond = (lb[lk] == rb[rk]) & cond
+        pairs = rb.join(lb, cond, "inner")
+    else:
+        pairs = _binned_pairs(lb, rb, l_keys, r_keys, width)
+    return pairs if frac is None else pairs.where(frac)
 
 
 def _as_dtype(v: np.ndarray, dt) -> np.ndarray:
@@ -209,7 +267,7 @@ def _group_counts(entry: tuple, qs: np.ndarray, qe: np.ndarray) -> np.ndarray:
     zero-length inputs) break that implication: inverted PROBES route
     through the exact candidate-mask kernel (:func:`_probe_spans`), and
     inverted BUILD rows live in their own (tiny) entry subset, mask-counted
-    separately and added — the regular subset keeps the fast path.
+    (:func:`_mask_cov`) separately and added — the regular subset keeps the fast path.
     """
     reg_starts, reg_ends_bs, reg_ends_sorted, inv_starts, inv_ends_bs = entry
     n = len(qs)
@@ -231,28 +289,100 @@ def _group_counts(entry: tuple, qs: np.ndarray, qe: np.ndarray) -> np.ndarray:
                 side="left",
             )
         if len(inv_starts):
-            counts[p_reg] += _mask_counts(inv_starts, inv_ends_bs,
-                                          qs[p_reg], qe[p_reg])
+            counts[p_reg] += _mask_cov(inv_starts, inv_ends_bs,
+                                       qs[p_reg], qe[p_reg])[0]
     if p_inv.any():
-        if len(reg_starts):
-            counts[p_inv] += _mask_counts(reg_starts, reg_ends_bs,
-                                          qs[p_inv], qe[p_inv])
-        if len(inv_starts):
-            counts[p_inv] += _mask_counts(inv_starts, inv_ends_bs,
-                                          qs[p_inv], qe[p_inv])
+        for ss, ee in ((reg_starts, reg_ends_bs), (inv_starts, inv_ends_bs)):
+            if len(ss):
+                counts[p_inv] += _mask_cov(ss, ee, qs[p_inv], qe[p_inv])[0]
     return counts
 
 
-def _mask_counts(
+def _with_prefix_sums(entry: tuple) -> tuple:
+    """Coverage entry from a count entry (:func:`_entry_from_sorted`): the
+    int64 prefix sums of the sorted starts and of the sorted ends, which
+    the clipped-base identity of :func:`_cov_counts` reads. Each probe task derives them once from the
+    shared broadcast: an O(n) pass is cheaper than shipping and
+    unpickling 16 more bytes per build row. Entry: ``(reg_starts_sorted,
+    reg_ends_by_start, reg_ends_sorted, prefix_ls, prefix_le_sorted,
+    inv_starts_sorted, inv_ends_by_start)``."""
+    reg_s, reg_e, e_sorted, inv_s, inv_e = entry
+    ps_ls = np.zeros(len(reg_s) + 1, dtype=np.int64)
+    np.cumsum(reg_s, dtype=np.int64, out=ps_ls[1:])
+    ps_le = np.zeros(len(e_sorted) + 1, dtype=np.int64)
+    np.cumsum(e_sorted, dtype=np.int64, out=ps_le[1:])
+    return (reg_s, reg_e, e_sorted, ps_ls, ps_le, inv_s, inv_e)
+
+
+def _mask_cov(
     starts_s: np.ndarray, ends_bs: np.ndarray, qs: np.ndarray, qe: np.ndarray
-) -> np.ndarray:
-    """Exact per-probe counts via the candidate-mask kernel (no overlap
-    implication assumed — handles inverted rows on either side)."""
+) -> tuple[np.ndarray, np.ndarray]:
+    """Exact per-probe (count, clipped-base sum) via the candidate-mask
+    kernel — the inverted-row path (no overlap implication assumed)."""
     runmax = np.maximum.accumulate(ends_bs)
-    _, probe_rep = _probe_spans(starts_s, ends_bs, runmax, qs, qe)
-    if probe_rep.size:
-        return np.bincount(probe_rep, minlength=len(qs))
-    return np.zeros(len(qs), dtype=np.int64)
+    cand, rep = _probe_spans(starts_s, ends_bs, runmax, qs, qe)
+    cnt = np.bincount(rep, minlength=len(qs)).astype(np.int64)
+    cov = np.zeros(len(qs), dtype=np.int64)
+    if cand.size:
+        clip = (
+            np.minimum(ends_bs[cand].astype(np.int64), qe[rep])
+            - np.maximum(starts_s[cand].astype(np.int64), qs[rep]) + 1
+        )
+        np.add.at(cov, rep, clip)
+    return cnt, cov
+
+
+def _cov_counts(
+    entry: tuple, qs: np.ndarray, qe: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-probe (overlap count, covered bases) against one key group.
+
+    Fast path (non-inverted): with ``A = {ls <= qe}``, ``B = {le < qs}``
+    (``B ⊆ A`` for any regular build row and regular probe), the overlap
+    set is ``A − B`` and::
+
+        count   = |A| − |B|
+        Σ min(le, qe) = Σ_{le<=qe} le + qe·(|A| − #{le<=qe}) − Σ_{le<qs} le
+        Σ max(ls, qs) = Σ_{qs<=ls<=qe} ls + qs·(#{ls<qs} − |B|)
+        covered = Σ min(le, qe) − Σ max(ls, qs) + count
+
+    (``{le <= qe} ⊆ A`` and ``{ls < qs} ⊇ B`` make every term a prefix
+    range of one of the two sort orders.) Inverted rows/probes go through
+    the exact candidate-mask kernel, as in the count kernel."""
+    reg_s, reg_e, e_sorted, ps_ls, ps_le, inv_s, inv_e = entry
+    n = len(qs)
+    cnt = np.zeros(n, dtype=np.int64)
+    cov = np.zeros(n, dtype=np.int64)
+    p_inv = qs > qe
+    p_reg = ~p_inv
+    if p_reg.any():
+        if len(reg_s):
+            a = qs[p_reg].astype(np.int64, copy=False)
+            b = qe[p_reg].astype(np.int64, copy=False)
+            # needles in each int32-compacted haystack's dtype, as in the
+            # count kernel: a mixed-dtype searchsorted copies the haystack
+            a_s, b_s = _as_dtype(a, reg_s.dtype), _as_dtype(b, reg_s.dtype)
+            a_e, b_e = _as_dtype(a, e_sorted.dtype), _as_dtype(b, e_sorted.dtype)
+            iA = np.searchsorted(reg_s, b_s, side="right")
+            iB = np.searchsorted(e_sorted, a_e, side="left")
+            c = iA - iB
+            i_le = np.searchsorted(e_sorted, b_e, side="right")
+            sum_min = ps_le[i_le] + b * (iA - i_le) - ps_le[iB]
+            i_lt = np.searchsorted(reg_s, a_s, side="left")
+            sum_max = (ps_ls[iA] - ps_ls[i_lt]) + a * (i_lt - iB)
+            cnt[p_reg] = c
+            cov[p_reg] = sum_min - sum_max + c
+        if len(inv_s):
+            c2, v2 = _mask_cov(inv_s, inv_e, qs[p_reg], qe[p_reg])
+            cnt[p_reg] += c2
+            cov[p_reg] += v2
+    if p_inv.any():
+        for ss, ee in ((reg_s, reg_e), (inv_s, inv_e)):
+            if len(ss):
+                c2, v2 = _mask_cov(ss, ee, qs[p_inv], qe[p_inv])
+                cnt[p_inv] += c2
+                cov[p_inv] += v2
+    return cnt, cov
 
 
 def _entry_from_sorted(starts_s: np.ndarray, ends_by_start: np.ndarray) -> tuple:

@@ -14,122 +14,32 @@ contribute their clipped length — bases under two reads count twice), the
 standard depth-of-coverage numerator. Union coverage (distinct covered
 bases) is a different operator.
 
-Scale shape: identical to count_overlaps — binned candidate join, partial
-aggregation on the probe id, left join back so zero-coverage rows survive.
+Plan: :func:`count_overlaps._per_row_overlaps`, the per-row aggregate
+count_overlaps and the semi/anti/mark filters share, asked for a second
+column of clipped bases.
 """
 
 from __future__ import annotations
 
-import numpy as np
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sequila_native_spark.operators.count_overlaps import _as_dtype, _index_probe
+from sequila_native_spark.operators.count_overlaps import (
+    _PID,
+    _overlap_pairs,
+    _per_row_overlaps,
+)
 from sequila_native_spark.operators.interval_join import (
     _LE,
     _LS,
     _RE,
     _RS,
-    BuildSideTooLargeError,
-    _arrow_keys,
-    _binned_pairs,
-    _probe_spans,
     _with_bounds,
+    resolve_bin_width,
 )
-from sequila_native_spark.operators.intervals import overlap_predicate, validate_sides
-from sequila_native_spark.session import SequilaConf, parse_algorithm
+from sequila_native_spark.operators.intervals import validate_sides
+from sequila_native_spark.session import SequilaConf
 from sequila_native_spark.util import stamp_row_id
-
-_PID = "__sq_probe_id"
-
-
-def _with_prefix_sums(entry: tuple) -> tuple:
-    """Coverage entry from a count entry (``count_overlaps.
-    _entry_from_sorted``): the int64 prefix sums of the sorted starts and
-    of the sorted ends, which the clipped-base identity of
-    :func:`_cov_counts` reads. Each probe task derives them once from the
-    shared broadcast: an O(n) pass is cheaper than shipping and
-    unpickling 16 more bytes per build row. Entry: ``(reg_starts_sorted,
-    reg_ends_by_start, reg_ends_sorted, prefix_ls, prefix_le_sorted,
-    inv_starts_sorted, inv_ends_by_start)``."""
-    reg_s, reg_e, e_sorted, inv_s, inv_e = entry
-    ps_ls = np.zeros(len(reg_s) + 1, dtype=np.int64)
-    np.cumsum(reg_s, dtype=np.int64, out=ps_ls[1:])
-    ps_le = np.zeros(len(e_sorted) + 1, dtype=np.int64)
-    np.cumsum(e_sorted, dtype=np.int64, out=ps_le[1:])
-    return (reg_s, reg_e, e_sorted, ps_ls, ps_le, inv_s, inv_e)
-
-
-def _mask_cov(
-    starts_s: np.ndarray, ends_bs: np.ndarray, qs: np.ndarray, qe: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Exact per-probe (count, clipped-base sum) via the candidate-mask
-    kernel — the inverted-row path (no overlap implication assumed)."""
-    runmax = np.maximum.accumulate(ends_bs)
-    cand, rep = _probe_spans(starts_s, ends_bs, runmax, qs, qe)
-    cnt = np.bincount(rep, minlength=len(qs)).astype(np.int64)
-    cov = np.zeros(len(qs), dtype=np.int64)
-    if cand.size:
-        clip = (
-            np.minimum(ends_bs[cand].astype(np.int64), qe[rep])
-            - np.maximum(starts_s[cand].astype(np.int64), qs[rep]) + 1
-        )
-        np.add.at(cov, rep, clip)
-    return cnt, cov
-
-
-def _cov_counts(
-    entry: tuple, qs: np.ndarray, qe: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-probe (overlap count, covered bases) against one key group.
-
-    Fast path (non-inverted): with ``A = {ls <= qe}``, ``B = {le < qs}``
-    (``B ⊆ A`` for any regular build row and regular probe), the overlap
-    set is ``A − B`` and::
-
-        count   = |A| − |B|
-        Σ min(le, qe) = Σ_{le<=qe} le + qe·(|A| − #{le<=qe}) − Σ_{le<qs} le
-        Σ max(ls, qs) = Σ_{qs<=ls<=qe} ls + qs·(#{ls<qs} − |B|)
-        covered = Σ min(le, qe) − Σ max(ls, qs) + count
-
-    (``{le <= qe} ⊆ A`` and ``{ls < qs} ⊇ B`` make every term a prefix
-    range of one of the two sort orders.) Inverted rows/probes go through
-    the exact candidate-mask kernel, as in the count kernel."""
-    reg_s, reg_e, e_sorted, ps_ls, ps_le, inv_s, inv_e = entry
-    n = len(qs)
-    cnt = np.zeros(n, dtype=np.int64)
-    cov = np.zeros(n, dtype=np.int64)
-    p_inv = qs > qe
-    p_reg = ~p_inv
-    if p_reg.any():
-        if len(reg_s):
-            a = qs[p_reg].astype(np.int64, copy=False)
-            b = qe[p_reg].astype(np.int64, copy=False)
-            # needles in each int32-compacted haystack's dtype, as in the
-            # count kernel: a mixed-dtype searchsorted copies the haystack
-            a_s, b_s = _as_dtype(a, reg_s.dtype), _as_dtype(b, reg_s.dtype)
-            a_e, b_e = _as_dtype(a, e_sorted.dtype), _as_dtype(b, e_sorted.dtype)
-            iA = np.searchsorted(reg_s, b_s, side="right")
-            iB = np.searchsorted(e_sorted, a_e, side="left")
-            c = iA - iB
-            i_le = np.searchsorted(e_sorted, b_e, side="right")
-            sum_min = ps_le[i_le] + b * (iA - i_le) - ps_le[iB]
-            i_lt = np.searchsorted(reg_s, a_s, side="left")
-            sum_max = (ps_ls[iA] - ps_ls[i_lt]) + a * (i_lt - iB)
-            cnt[p_reg] = c
-            cov[p_reg] = sum_min - sum_max + c
-        if len(inv_s):
-            c2, v2 = _mask_cov(inv_s, inv_e, qs[p_reg], qe[p_reg])
-            cnt[p_reg] += c2
-            cov[p_reg] += v2
-    if p_inv.any():
-        for ss, ee in ((reg_s, reg_e), (inv_s, inv_e)):
-            if len(ss):
-                c2, v2 = _mask_cov(ss, ee, qs[p_inv], qe[p_inv])
-                cnt[p_inv] += c2
-                cov[p_inv] += v2
-    return cnt, cov
 
 
 def coverage(
@@ -149,64 +59,16 @@ def coverage(
     check_bounds: bool | None = None,
 ) -> DataFrame:
     """Return ``right`` with overlap count and total clipped overlap length
-    against ``left`` within each equi-key group (0/0 when none)."""
-    spark = left.sparkSession
-    conf = SequilaConf.from_spark(spark)
-    algo = parse_algorithm(algorithm) if algorithm else conf.algorithm
-    width = bin_width if bin_width is not None else conf.bin_width
-    check = conf.check_int32_bounds if check_bounds is None else check_bounds
+    against ``left`` within each equi-key group (0/0 when none).
 
-    sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
-    for c in (count_col, cover_col):
-        if c in right.columns:
-            raise ValueError(f"output column {c!r} already exists on right side")
-    l_keys = [p[0] for p in sides.on]
-    r_keys = [p[1] for p in sides.on]
-    left = left.select(*dict.fromkeys([*l_keys, left_start, left_end]))
-    right_out_cols = list(right.columns)
-
-    lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict, check)
-
-    if algo == "index" and (sides.mixed_keys or not _arrow_keys(left, l_keys)):
-        # the kernel's dict lookup cannot coerce 1 = '1', and compares
-        # only Arrow keys it can hash the same on both sides
-        algo = "binning"
-    if algo == "index":
-        try:
-            # count_overlaps' probe on the same cached index build: over
-            # one input the two operators share one broadcast
-            return _index_probe(
-                lb, right, l_keys, r_keys, right_start, right_end, strict,
-                check, [count_col, cover_col],
-                lambda idx: {k: _with_prefix_sums(e) for k, e in idx.items()},
-                _cov_counts,
-            )
-        except BuildSideTooLargeError:
-            algo = "binning"  # accounted-memory fallback, never a blind collect
-
-    right = stamp_row_id(right, _PID)
-    rb = _with_bounds(right, right_start, right_end, _RS, _RE, strict, check)
-
-    if algo in ("naive",):
-        cond = overlap_predicate(lb[_LS], lb[_LE], rb[_RS], rb[_RE])
-        for lk, rk in zip(l_keys, r_keys):
-            cond = (lb[lk] == rb[rk]) & cond
-        pairs = rb.join(lb, cond, "inner")
-    else:
-        pairs = _binned_pairs(lb, rb, l_keys, r_keys, width)
-
-    clipped = (
-        F.least(F.col(_LE), F.col(_RE)) - F.greatest(F.col(_LS), F.col(_RS)) + 1
-    ).cast("bigint")
-    aggs = pairs.groupBy(_PID).agg(
-        F.count(F.lit(1)).alias(count_col),
-        F.sum(clipped).alias(cover_col),
-    )
-    return (
-        right.join(aggs, _PID, "left_outer")
-        .withColumn(count_col, F.coalesce(F.col(count_col), F.lit(0)))
-        .withColumn(cover_col, F.coalesce(F.col(cover_col), F.lit(0)))
-        .select(*right_out_cols, count_col, cover_col)
+    count_overlaps' per-row aggregate with a second, bigint column of
+    clipped bases: ``index`` probes the same cached count index with the
+    prefix-sum kernel; ``binning`` (and ``naive``) sum the clipped length
+    of each matched pair per probe row."""
+    return _per_row_overlaps(
+        left, right, on, left_start, left_end, right_start, right_end,
+        strict=strict, algorithm=algorithm, bin_width=bin_width,
+        check_bounds=check_bounds, count_col=count_col, cover_col=cover_col,
     )
 
 
@@ -233,9 +95,7 @@ def union_coverage(
     only bases past the running max of previous clipped ends. One window +
     one aggregation, both partitioned on the probe id (exchange reused).
     """
-    spark = left.sparkSession
-    conf = SequilaConf.from_spark(spark)
-    width = bin_width if bin_width is not None else conf.bin_width
+    conf = SequilaConf.from_spark(left.sparkSession)
     check = conf.check_int32_bounds if check_bounds is None else check_bounds
 
     sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
@@ -243,16 +103,23 @@ def union_coverage(
         raise ValueError(f"output column {cover_col!r} already exists on right side")
     l_keys = [p[0] for p in sides.on]
     r_keys = [p[1] for p in sides.on]
-    left = left.select(*dict.fromkeys([*l_keys, left_start, left_end]))
+    width = resolve_bin_width(
+        conf.bin_width if bin_width is None else bin_width,
+        left, left_start, left_end, right, right_start, right_end,
+    )
     right_out_cols = list(right.columns)
 
-    lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict, check)
+    lb = _with_bounds(
+        left.select(*dict.fromkeys([*l_keys, left_start, left_end])),
+        left_start, left_end, _LS, _LE, strict, check,
+    )
     right = stamp_row_id(right, _PID)
     rb = _with_bounds(right, right_start, right_end, _RS, _RE, strict, check)
 
-    pairs = _binned_pairs(lb, rb, l_keys, r_keys, width)
-    cs = F.greatest(F.col(_LS), F.col(_RS))
-    ce = F.least(F.col(_LE), F.col(_RE))
+    pairs = _overlap_pairs(lb, rb, l_keys, r_keys, width)
+    # in bigint: the clip of a full-range int32 interval overflows an int
+    cs = F.greatest(F.col(_LS), F.col(_RS)).cast("bigint")
+    ce = F.least(F.col(_LE), F.col(_RE)).cast("bigint")
     w = (
         Window.partitionBy(_PID)
         .orderBy(cs.asc(), ce.asc())
@@ -261,7 +128,7 @@ def union_coverage(
     prev_max = F.max(ce).over(w)
     new_bases = F.greatest(
         F.lit(0).cast("bigint"),
-        (ce - F.greatest(cs - 1, F.coalesce(prev_max, cs - 1))).cast("bigint"),
+        ce - F.greatest(cs - 1, F.coalesce(prev_max, cs - 1)),
     )
     aggs = (
         pairs.withColumn("__sq_new", new_bases)
@@ -443,11 +310,16 @@ def interval_jaccard(
     rb = merge_intervals(right, on or [], right_start, right_end,
                          check_bounds=check_bounds).drop("n_merged")
 
+    # lengths and clips in bigint: an int subtraction overflows on int32
+    # bounds more than 2^31 apart
+    def big(c: str):
+        return F.col(c).cast("bigint")
+
     len_a = la.groupBy(*keys).agg(
-        F.sum(F.col(left_end) - F.col(left_start) + 1).alias("__sq_len_a")
+        F.sum(big(left_end) - big(left_start) + 1).alias("__sq_len_a")
     )
     len_b = rb.groupBy(*keys).agg(
-        F.sum(F.col(right_end) - F.col(right_start) + 1).alias("__sq_len_b")
+        F.sum(big(right_end) - big(right_start) + 1).alias("__sq_len_b")
     )
 
     pairs = overlap_join(
@@ -458,8 +330,8 @@ def interval_jaccard(
     r_s = f"{right_start}_b" if right_start in la.columns else right_start
     r_e = f"{right_end}_b" if right_end in la.columns else right_end
     clipped = (
-        F.least(F.col(left_end), F.col(r_e))
-        - F.greatest(F.col(left_start), F.col(r_s)) + 1
+        F.least(big(left_end), big(r_e))
+        - F.greatest(big(left_start), big(r_s)) + 1
     )
     inter = pairs.groupBy(*keys).agg(F.sum(clipped).alias("__sq_inter"))
 

@@ -472,12 +472,12 @@ def _auto_bin_width(lb: DataFrame, rb: DataFrame) -> int:
     p = 0.95
     # one job for both sides: union the pruned length columns with a side
     # tag and aggregate per side
-    lens = lb.select(
-        F.lit(0).alias("__sq_side"), (F.col(_LE) - F.col(_LS) + 1).alias("__sq_len")
-    ).unionAll(
-        rb.select(
-            F.lit(1).alias("__sq_side"), (F.col(_RE) - F.col(_RS) + 1).alias("__sq_len")
-        )
+    def length(s: str, e: str) -> Column:
+        # bigint: int32 bounds more than 2^31 apart overflow an int length
+        return (F.col(e).cast("bigint") - F.col(s) + 1).alias("__sq_len")
+
+    lens = lb.select(F.lit(0).alias("__sq_side"), length(_LS, _LE)).unionAll(
+        rb.select(F.lit(1).alias("__sq_side"), length(_RS, _RE))
     )
     rows = (
         lens.groupBy("__sq_side")
@@ -775,9 +775,6 @@ def _binned_pairs(
 
     Returns the joined-and-filtered DataFrame with all columns of both sides.
     """
-    if width == "auto" or width is None:
-        width = _auto_bin_width(lb, rb)
-    width = int(width)
     l_bins = F.sequence(
         _bin_of(F.col(_LS), width),
         F.greatest(_bin_of(F.col(_LS), width), _bin_of(F.col(_LE), width)),

@@ -165,6 +165,10 @@ def fraction_predicate(
             )
         min_frac_right = min_frac_left
     conds = []
+    # bigint before subtracting: int32 bounds more than 2^31 apart overflow
+    l_start, l_end, r_start, r_end = (
+        c.cast("bigint") for c in (l_start, l_end, r_start, r_end)
+    )
     ov = (F.least(l_end, r_end) - F.greatest(l_start, r_start) + 1).cast("double")
     for frac, length in (
         (min_frac_left, l_end - l_start + 1),

@@ -37,7 +37,6 @@ from sequila_native_spark.operators.interval_join import (
     _RS,
     BuildSideTooLargeError,
     _arrow_keys,
-    _binned_pairs,
     _ints,
     _key_groups,
     _probe_spans,
@@ -46,9 +45,9 @@ from sequila_native_spark.operators.interval_join import (
     guarded_build_arrow,
     resolve_bin_width,
 )
+from sequila_native_spark.operators.count_overlaps import _overlap_pairs
 from sequila_native_spark.operators.intervals import (
     fraction_predicate,
-    overlap_predicate,
     validate_sides,
 )
 from sequila_native_spark.session import SequilaConf, parse_algorithm
@@ -340,11 +339,12 @@ def map_intervals(
     """
     if not aggs:
         raise ValueError("aggs must name at least one aggregate")
-    wants_frac = (
-        min_frac_left is not None or min_frac_right is not None
-        or reciprocal or either
+    frac = fraction_predicate(
+        F.col(_LS), F.col(_LE), F.col(_RS), F.col(_RE),
+        min_frac_left=min_frac_left, min_frac_right=min_frac_right,
+        reciprocal=reciprocal, either=either,
     )
-    if wants_frac and strict:
+    if frac is not None and strict:
         raise ValueError(
             "overlap fractions are defined on the closed input intervals; "
             "strict=True would shrink them — not supported together"
@@ -352,8 +352,6 @@ def map_intervals(
     spark = left.sparkSession
     conf = SequilaConf.from_spark(spark)
     algo = parse_algorithm(algorithm) if algorithm else conf.algorithm
-    if algo == "partitioned":
-        algo = "binning"
     width = bin_width if bin_width is not None else conf.bin_width
     check = conf.check_int32_bounds if check_bounds is None else check_bounds
 
@@ -414,17 +412,9 @@ def map_intervals(
             and _arrow_keys(left, l_keys)
         )
         if kernel_ok:
-            frac_args = None
-            if wants_frac:
-                # same argument validation as the pair plan's filter
-                fraction_predicate(
-                    F.lit(0), F.lit(0), F.lit(0), F.lit(0),
-                    min_frac_left=min_frac_left, min_frac_right=min_frac_right,
-                    reciprocal=reciprocal, either=either,
-                )
-                frac_args = (
-                    min_frac_left, min_frac_right, reciprocal, either
-                )
+            frac_args = None if frac is None else (
+                min_frac_left, min_frac_right, reciprocal, either
+            )
             try:
                 return _index_map(
                     left_stamped, lb, rb, l_keys, r_keys, aggs, value_cols,
@@ -432,28 +422,12 @@ def map_intervals(
                 )
             except BuildSideTooLargeError:
                 pass  # accounted-memory fallback: the binned pair join
-        algo = "binning"
 
-    if algo == "naive":
-        cond = overlap_predicate(lb[_LS], lb[_LE], rb[_RS], rb[_RE])
-        for lk, rk in zip(l_keys, r_keys):
-            cond = (lb[lk] == rb[rk]) & cond
-        pairs = lb.join(rb, cond, "inner")
-    else:
-        width = resolve_bin_width(
-            width, lb, left_start, left_end, rb, right_start, right_end
-        )
-        pairs = _binned_pairs(lb, rb, l_keys, r_keys, width)
-
-    if wants_frac:
-        pairs = pairs.where(
-            fraction_predicate(
-                F.col(_LS), F.col(_LE), F.col(_RS), F.col(_RE),
-                min_frac_left=min_frac_left, min_frac_right=min_frac_right,
-                reciprocal=reciprocal, either=either,
-            )
-        )
-
+    # naive pairs, or binned ones for every other algorithm (partitioned too)
+    width = None if algo == "naive" else resolve_bin_width(
+        width, left, left_start, left_end, right, right_start, right_end
+    )
+    pairs = _overlap_pairs(lb, rb, l_keys, r_keys, width, frac)
     grouped = pairs.groupBy(_AID).agg(*exprs)
     out = left_stamped.join(grouped, _AID, "left_outer")
     final_cols = list(left_out_cols)

@@ -226,23 +226,24 @@ def nearest_join(
             out = _partitioned_nearest(*args)
     if distance_col:
         shrink = 1 if strict else 0
-        le_n = F.col(left_end) - F.lit(shrink)
-        re_n = F.col(r_end) - F.lit(shrink)
+        ls, le, rs, re_ = (
+            F.col(c).cast("bigint") for c in (left_start, left_end, r_start, r_end)
+        )
         dist = (
             # null-padded rows keep a null distance (null comparisons would
             # otherwise fall through to the 0 branch)
-            F.when(F.col(left_start).isNull() | F.col(r_start).isNull(), F.lit(None))
-            .when(F.col(left_start) > re_n, F.col(left_start) - re_n)
-            .when(le_n < F.col(r_start), F.col(r_start) - le_n)
-            .otherwise(F.lit(0))
+            F.when(ls.isNull() | rs.isNull(), F.lit(None))
+            .otherwise(_distance_col(ls, le - shrink, rs, re_ - shrink))
         )
-        out = out.withColumn(distance_col, dist.cast("long"))
+        out = out.withColumn(distance_col, dist)
     return out
 
 
 def _distance_col(ls, le, rs, re):
     """Genomic gap distance on normalized closed intervals
-    (``interval_join.rs:938-946``); 0 when overlapping."""
+    (``interval_join.rs:938-946``); 0 when overlapping. In bigint: int32
+    bounds further apart than 2^31 overflow an int subtraction."""
+    ls, le, rs, re = (c.cast("bigint") for c in (ls, le, rs, re))
     return (
         F.when(ls > re, ls - re)
         .when(le < rs, rs - le)

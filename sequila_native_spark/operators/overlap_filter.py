@@ -12,9 +12,12 @@ declaration promises, as the two most common interval-filter shapes:
 - ``mark_by_overlap(df, regions)`` — keep ALL rows, adding a boolean mark
   column (the enum's LeftMark / ``EXISTS``-subquery shape).
 
-Scale shape: binned candidate join → distinct probe ids → Catalyst
-left-semi/left-anti join back. The pair set is never materialized wider
-than (id, id); at 100 TB this is two compact shuffles.
+All three are emission modes of one probe, as in the reference: each is
+``count_overlaps(regions, df)`` with an internal count column, then
+``count > 0``, ``count == 0`` or the mark ``count > 0``. So they run the
+count family's algorithms: ``index`` (the zero-shuffle Arrow probe of the
+cached count index), ``binning`` (binned pairs → per-id counts → left join
+back) and the ``naive`` oracle.
 """
 
 from __future__ import annotations
@@ -22,24 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sequila_native_spark.operators.interval_join import (
-    _LE,
-    _LS,
-    _RE,
-    _RS,
-    _binned_pairs,
-    _with_bounds,
-    resolve_bin_width,
-)
-from sequila_native_spark.util import stamp_row_id
-from sequila_native_spark.operators.intervals import (
-    fraction_predicate,
-    overlap_predicate,
-    validate_sides,
-)
-from sequila_native_spark.session import SequilaConf, parse_algorithm
+from sequila_native_spark.operators.count_overlaps import count_overlaps
 
-_PID = "__sq_probe_id"
+_N = "__sq_n_overlaps"
 
 
 def filter_by_overlap(
@@ -73,16 +61,19 @@ def filter_by_overlap(
     sides, ``either`` ORs the given fractions. Evaluated on the closed
     input intervals (incompatible with ``strict``). With ``negate=True``
     this is bedtools ``-v -f``: keep rows with NO qualifying overlap.
+
+    ``algorithm``: ``binning`` (default), ``index`` (a zero-shuffle Arrow
+    probe of the regions' broadcast count index; fractions, mixed key
+    families and date, timestamp or decimal keys run ``binning``) or
+    ``naive``.
     """
-    probe, matched_ids, out_cols = _probe_and_matched(
+    n = _overlap_counts(
         df, regions, on, df_start, df_end, regions_start, regions_end,
         strict=strict, algorithm=algorithm, bin_width=bin_width,
         min_frac_df=min_frac_df, min_frac_regions=min_frac_regions,
-        reciprocal=reciprocal, either=either,
-        check_bounds=check_bounds,
+        reciprocal=reciprocal, either=either, check_bounds=check_bounds,
     )
-    how = "left_anti" if negate else "left_semi"
-    return probe.join(matched_ids, _PID, how).select(*out_cols)
+    return n.where(F.col(_N) == 0 if negate else F.col(_N) > 0).drop(_N)
 
 
 def mark_by_overlap(
@@ -110,56 +101,27 @@ def mark_by_overlap(
     The reference's join-type enum declares a Mark join
     (``joins/utils.rs:496-521``, DataFusion's ``EXISTS``-subquery
     decorrelation shape) that its probe loop never emits; this supplies it.
-    Same scale shape as the semi/anti filters: the wide pair set is never
-    materialized — only (id) survives the candidate join, and the mark is a
-    left join against the distinct matched ids.
+    Same arguments and algorithms as :func:`filter_by_overlap`; the mark is
+    ``count > 0`` of the same per-row count.
     """
     if mark_col in df.columns:
         raise ValueError(f"output column {mark_col!r} already exists on df")
-    probe, matched_ids, out_cols = _probe_and_matched(
+    n = _overlap_counts(
         df, regions, on, df_start, df_end, regions_start, regions_end,
         strict=strict, algorithm=algorithm, bin_width=bin_width,
         min_frac_df=min_frac_df, min_frac_regions=min_frac_regions,
-        reciprocal=reciprocal, either=either,
-        check_bounds=check_bounds,
+        reciprocal=reciprocal, either=either, check_bounds=check_bounds,
     )
-    marked = probe.join(
-        matched_ids.withColumn(mark_col, F.lit(True)), _PID, "left"
-    )
-    return marked.select(
-        *out_cols, F.coalesce(F.col(mark_col), F.lit(False)).alias(mark_col)
-    )
+    return n.select(*df.columns, (F.col(_N) > 0).alias(mark_col))
 
 
-def _probe_and_matched(
-    df: DataFrame,
-    regions: DataFrame,
-    on,
-    df_start: str,
-    df_end: str,
-    regions_start: str,
-    regions_end: str,
-    *,
-    strict: bool,
-    algorithm: str | None,
-    bin_width: int | str | None,
-    min_frac_df: float | None = None,
-    min_frac_regions: float | None = None,
-    reciprocal: bool = False,
-    either: bool = False,
-    check_bounds: bool | None,
-):
-    """Shared semi/anti/mark machinery: stamp probe ids, build the binned
-    (or naive) candidate pair set, reduce it to the distinct matched ids."""
-    wants_frac = (
-        min_frac_df is not None or min_frac_regions is not None
-        or reciprocal or either
-    )
-    if wants_frac and strict:
-        raise ValueError(
-            "overlap fractions are defined on the closed input intervals; "
-            "strict=True would shrink them — not supported together"
-        )
+def _overlap_counts(
+    df, regions, on, df_start, df_end, regions_start, regions_end, *,
+    min_frac_df, min_frac_regions, reciprocal, **kw,
+) -> DataFrame:
+    """``df`` plus the count of overlapping ``regions`` rows, with the
+    filters' fraction arguments mapped onto count_overlaps' sides
+    (``regions`` is the left/build side, ``df`` the right/probe side)."""
     if reciprocal:
         if min_frac_df is None:
             raise ValueError("reciprocal=True requires min_frac_df (bedtools -r needs -f)")
@@ -169,48 +131,8 @@ def _probe_and_matched(
                 "do not also pass min_frac_regions"
             )
         min_frac_regions = min_frac_df
-    spark = df.sparkSession
-    conf = SequilaConf.from_spark(spark)
-    algo = parse_algorithm(algorithm) if algorithm else conf.algorithm
-    width = bin_width if bin_width is not None else conf.bin_width
-    check = conf.check_int32_bounds if check_bounds is None else check_bounds
-
-    # validate with df as the probe (right) side, regions as build (left)
-    sides = validate_sides(
-        regions, df, on, regions_start, regions_end, df_start, df_end
+    return count_overlaps(
+        regions, df, on, regions_start, regions_end, df_start, df_end,
+        count_col=_N, min_frac_left=min_frac_regions, min_frac_right=min_frac_df,
+        **kw,
     )
-    l_keys = [p[0] for p in sides.on]
-    r_keys = [p[1] for p in sides.on]
-    regions = regions.select(
-        *dict.fromkeys([*l_keys, regions_start, regions_end])
-    )
-    out_cols = list(df.columns)
-    if algo != "naive":
-        width = resolve_bin_width(
-            width, regions, regions_start, regions_end, df, df_start, df_end
-        )
-
-    lb = _with_bounds(regions, regions_start, regions_end, _LS, _LE, strict, check)
-    probe = stamp_row_id(df, _PID)
-    rb = _with_bounds(probe, df_start, df_end, _RS, _RE, strict, check)
-
-    if algo == "naive":
-        cond = overlap_predicate(lb[_LS], lb[_LE], rb[_RS], rb[_RE])
-        for lk, rk in zip(l_keys, r_keys):
-            cond = (lb[lk] == rb[rk]) & cond
-        pairs = rb.join(lb, cond, "inner")
-    else:
-        pairs = _binned_pairs(lb, rb, l_keys, r_keys, width)
-
-    if wants_frac:
-        # regions are the build/left side here, df the probe/right side
-        pairs = pairs.where(
-            fraction_predicate(
-                F.col(_LS), F.col(_LE), F.col(_RS), F.col(_RE),
-                min_frac_left=min_frac_regions, min_frac_right=min_frac_df,
-                either=either,
-            )
-        )
-
-    matched_ids = pairs.select(_PID).distinct()
-    return probe, matched_ids, out_cols

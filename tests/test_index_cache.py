@@ -24,6 +24,7 @@ from sequila_native_spark import (
     nearest_join,
     overlap_count_agg,
     overlap_join,
+    union_coverage,
 )
 from sequila_native_spark import util
 from sequila_native_spark.session import MAX_BROADCAST_BUILD_ROWS
@@ -111,6 +112,19 @@ def test_coverage_after_count_launches_no_eager_job(spark, tmp_path, probe):
     cnt, jobs = _eager_jobs(spark, lambda: _count(again, probe, "index"))
     assert jobs == 0
     assert rows_set(cnt) == rows_set(_count(again, probe, "naive"))
+
+
+@pytest.mark.parametrize("op", [
+    lambda reads, probe: _coverage(reads, probe, "binning"),
+    lambda reads, probe: union_coverage(reads, probe, "contig"),
+], ids=["coverage", "union_coverage"])
+def test_repeat_binning_call_launches_no_eager_job(spark, tmp_path, probe, op):
+    # the auto bin width resolves once, through the session width cache
+    reads = spark.read.parquet(_write(tmp_path / "w", _intervals(17, 300)))
+    _, first = _eager_jobs(spark, lambda: op(reads, probe))
+    assert first >= 1  # the width probe
+    _, again = _eager_jobs(spark, lambda: op(reads, probe))
+    assert again == 0
 
 
 def test_nearest_build_is_reused(spark, tmp_path, probe):

@@ -175,20 +175,39 @@ def test_map_intervals_validation(spark, ab):
         map_intervals(a, b, **_SPEC, aggs={"a_id": ("sum", "b_len")})
 
 
-@pytest.mark.parametrize("negate", [False, True])
-def test_filter_by_overlap_fraction(spark, ab, negate):
+def _filter_rows(ab, algorithm, **kw):
     a, b = ab
     kept = filter_by_overlap(
         a, b, on="contig", df_start="a_start", df_end="a_end",
         regions_start="b_start", regions_end="b_end",
-        min_frac_df=0.5, negate=negate,
+        min_frac_df=0.5, algorithm=algorithm, **kw,
     )
+    return {r["a_id"] for r in kept.collect()}
+
+
+@pytest.mark.parametrize("negate", [False, True])
+def test_filter_by_overlap_fraction(spark, ab, negate):
     qualifying = {i for i, _ in _brute_pairs(A_ROWS, B_ROWS, 0.5, None)}
     want = {
         i for i in range(len(A_ROWS))
         if (i in qualifying) != negate
     }
-    assert {r["a_id"] for r in kept.collect()} == want
+    for algorithm in ("binning", "index"):
+        assert _filter_rows(ab, algorithm, negate=negate) == want, algorithm
+
+
+def test_filter_by_overlap_reciprocal_fraction(spark, ab):
+    # bedtools -r: the df fraction applies to the region as well; A2's
+    # point is all of A2 but a tenth of B3, so it no longer qualifies
+    want = {i for i, _ in _brute_pairs(A_ROWS, B_ROWS, 0.5, 0.5)}
+    assert want != {i for i, _ in _brute_pairs(A_ROWS, B_ROWS, 0.5, None)}
+    for algorithm in ("binning", "index"):
+        assert _filter_rows(ab, algorithm, reciprocal=True) == want, algorithm
+    with pytest.raises(ValueError, match="requires min_frac_df"):
+        filter_by_overlap(
+            *ab, on="contig", df_start="a_start", df_end="a_end",
+            regions_start="b_start", regions_end="b_end", reciprocal=True,
+        )
 
 
 def test_count_overlaps_fraction(spark, ab):

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from sequila_native_spark import filter_by_overlap
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "binning"])
+@pytest.mark.parametrize("algorithm", ["naive", "binning", "index"])
 def test_semi_filter(spark, reads, targets, algorithm):
     kept = filter_by_overlap(
         reads, targets, on="contig",
@@ -26,7 +26,7 @@ def test_semi_filter(spark, reads, targets, algorithm):
     assert kept.columns == reads.columns
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "binning"])
+@pytest.mark.parametrize("algorithm", ["naive", "binning", "index"])
 def test_anti_filter(spark, reads, targets, algorithm):
     dropped = filter_by_overlap(
         reads, targets, on="contig",
@@ -62,7 +62,7 @@ def test_semi_keeps_duplicates(spark):
     assert filter_by_overlap(df, regions, on="contig", bin_width=64).count() == 2
 
 
-@pytest.mark.parametrize("algorithm", ["naive", "binning"])
+@pytest.mark.parametrize("algorithm", ["naive", "binning", "index"])
 def test_mark_join(spark, algorithm):
     from sequila_native_spark import mark_by_overlap
 

@@ -303,12 +303,34 @@ def test_map_intervals_consistent_with_count_overlaps(spark, tabs):
     assert got_m == got_c
 
 
+def _filter_ops():
+    """filter_by_overlap (semi, anti) and mark_by_overlap as operators on
+    (build=left, probe=right) with the count family's keyword names."""
+    from sequila_native_spark import filter_by_overlap, mark_by_overlap
+
+    def as_op(name, fn, **extra):
+        def op(left, right, on, left_start, left_end, right_start, right_end,
+               algorithm):
+            return fn(right, left, on, right_start, right_end, left_start,
+                      left_end, algorithm=algorithm, **extra)
+
+        op.__name__ = name
+        return op
+
+    return (
+        as_op("semi", filter_by_overlap),
+        as_op("anti", filter_by_overlap, negate=True),
+        as_op("mark", mark_by_overlap),
+    )
+
+
 @pytest.mark.parametrize("flip", [False, True], ids=["int_build", "string_build"])
 def test_mixed_key_families_agree_or_raise(spark, flip):
     # an int key against a string key: Spark's join coerces 1 = '1', the
     # index kernels' dict lookups cannot — so overlap_join, count_overlaps,
-    # coverage, map_intervals and overlap_count_agg must fall back to
-    # binning and agree with naive, and every nearest_join path must raise
+    # coverage, map_intervals, the semi/anti/mark filters and
+    # overlap_count_agg must fall back to binning and agree with naive, and
+    # every nearest_join path must raise
     from sequila_native_spark import (
         count_overlaps, coverage, map_intervals, overlap_count_agg,
     )
@@ -330,6 +352,7 @@ def test_mixed_key_families_agree_or_raise(spark, flip):
         (count_overlaps, {}),
         (coverage, {}),
         (map_intervals, dict(aggs={"n": ("count", None), "vs": ("sum", "v")})),
+        *((op, {}) for op in _filter_ops()),
     ):
         truth = rows_set(op(left, right, **kw, **extra, algorithm="naive"))
         assert any(r[-1] for r in truth), op.__name__  # 1 = '1' did match
@@ -390,16 +413,23 @@ def test_two_key_count_family_agrees_with_naive(spark, tabs):
     kw = dict(on=["c", "k"], left_start="s", left_end="e",
               right_start="s", right_end="e")
     aggs = {"n": ("count", None), "vs": ("sum", "v"), "vmax": ("max", "v")}
+    filters = _filter_ops()
     for op, extra in (
         (count_overlaps, {}),
         (coverage, {}),
         (map_intervals, dict(aggs=aggs)),
+        *((op, {}) for op in filters),
     ):
         out = op(left, right, **kw, **extra, algorithm="index")
         plan = out._jdf.queryExecution().analyzed().toString()
-        assert "MapInArrow" in plan, (op.__name__, plan)
+        # the Arrow probe, and no binned pair shuffle
+        assert "MapInArrow" in plan and "Generate explode" not in plan, (
+            op.__name__, plan)
         truth = rows_set(op(left, right, **kw, **extra, algorithm="naive"))
         assert rows_set(out) == truth, op.__name__
+        if op in filters:  # the count family's shuffle plan, filtered
+            binned = op(left, right, **kw, algorithm="binning")
+            assert rows_set(binned) == truth, op.__name__
 
     want = rows_set(
         overlap_join(left, right, **kw, algorithm="naive", rsuffix="_r")
@@ -432,6 +462,7 @@ def test_date_key_runs_binning(spark):
         (count_overlaps, {}),
         (coverage, {}),
         (map_intervals, dict(aggs={"n": ("count", None), "vs": ("sum", "v")})),
+        *((op, {}) for op in _filter_ops()),
     ):
         out = op(left, right, **kw, **extra, algorithm="index")
         plan = out._jdf.queryExecution().analyzed().toString()
