@@ -1035,10 +1035,21 @@ def window_join(
     if window < 0:
         raise ValueError(f"window must be non-negative, got {window}")
     # widen a copy's bounds only for the join predicate: temp columns carry
-    # the widened values, original columns pass through untouched
+    # the widened values, original columns pass through untouched. The
+    # arithmetic is bigint, and a widened bound past an int32 edge stops at
+    # it: every right bound lies inside the edges, so no pair changes, and
+    # a left bound already outside them still fails the int32 check.
+    w = F.lit(window).cast("bigint")
+    s, e = F.col(left_start), F.col(left_end)
     widened = left.withColumn(
-        "__sq_ws", F.col(left_start) - F.lit(window)
-    ).withColumn("__sq_we", F.col(left_end) + F.lit(window))
+        "__sq_ws",
+        F.when((s >= I32_MIN) & (s - w < I32_MIN), F.lit(I32_MIN).cast("bigint"))
+        .otherwise(s - w),
+    ).withColumn(
+        "__sq_we",
+        F.when((e <= I32_MAX) & (e + w > I32_MAX), F.lit(I32_MAX).cast("bigint"))
+        .otherwise(e + w),
+    )
     out = overlap_join(
         widened, right, on, "__sq_ws", "__sq_we", right_start, right_end,
         algorithm=algorithm, bin_width=bin_width, rsuffix=rsuffix,

@@ -54,8 +54,10 @@ def _runs(df: DataFrame, keys: list[str], extra_keys: list[str],
     prev_max = F.max(F.col(_LE)).over(
         w_order.rowsBetween(Window.unboundedPreceding, -1)
     )
+    # bigint: the reach past an end at the int32 edge is not an int32
     new_run = F.when(
-        prev_max.isNull() | (F.col(_LS) > prev_max + 1 + max_gap), 1
+        prev_max.isNull()
+        | (F.col(_LS) > prev_max.cast("bigint") + (1 + max_gap)), 1
     ).otherwise(0)
     runs = df.withColumn(
         "__sq_run",
@@ -146,7 +148,7 @@ def complement_intervals(
     return (
         merged.select(
             *keys,
-            (F.col(end) + 1).alias("__sq_gap_s"),
+            (F.col(end).cast("bigint") + 1).alias("__sq_gap_s"),
             (nxt - 1).alias("__sq_gap_e"),
         )
         .where(F.col("__sq_gap_e") >= F.col("__sq_gap_s"))

@@ -22,7 +22,11 @@ our ``index`` implementation.
 
 from __future__ import annotations
 
+import importlib.util
+import logging
 import math
+import os
+import site
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -52,6 +56,12 @@ DEFAULT_INDEX_AWAIT_DELAY_MS = 200
 # either way.
 COMPONENTS_DRIVER_MAX_EDGES = "spark.sequila.componentsDriverMaxEdges"
 DEFAULT_COMPONENTS_DRIVER_MAX_EDGES = 2_000_000
+
+# Core conf naming the module each Python worker daemon runs, and the
+# top-level shim (sequila_worker_daemon.py) that sequila_session points it
+# at: the same pyspark.daemon, without Spark's archives on sys.path.
+PYTHON_DAEMON_MODULE = "spark.python.daemon.module"
+WORKER_DAEMON = "sequila_worker_daemon"
 
 DEFAULT_ALGORITHM = "binning"
 # Engine default: derive the width from the data (geometric mean of the two
@@ -238,18 +248,82 @@ class SequilaConf:
         return width
 
 
+def worker_can_import(module_dir: str, pythonpath: str, cwd: str) -> bool:
+    """Whether a local Python worker can import a module from ``module_dir``.
+
+    A worker's ``sys.path`` holds its working directory (``python -m``
+    puts it first), its ``PYTHONPATH`` and its interpreter's
+    site-packages; the last is taken to be the driver's, as it is when
+    the workers run the driver's interpreter.
+    """
+    dirs = [*pythonpath.split(os.pathsep), cwd, *site.getsitepackages(),
+            site.getusersitepackages()]
+    real = os.path.realpath(module_dir)
+    return any(d and os.path.realpath(d) == real for d in dirs)
+
+
+def _install_worker_daemon(spark: SparkSession) -> None:
+    """Run a local session's Python workers through :data:`WORKER_DAEMON`.
+
+    Sets :data:`PYTHON_DAEMON_MODULE` on the live ``SparkConf``: Spark
+    reads it each time it starts a Python runner, so it also takes effect
+    on a session that is already running. Leaves the conf alone when it
+    is set already, when the session is not local (executors fix their
+    conf at launch) and when the workers could not import the shim, since
+    a daemon module the worker cannot import fails every Python UDF.
+    """
+    try:
+        sc = spark.sparkContext._jsc.sc()
+    except AttributeError:  # Spark Connect: no JVM SparkContext here
+        return
+    conf = sc.conf()
+    if conf.contains(PYTHON_DAEMON_MODULE) or not sc.isLocal():
+        return
+    spec = importlib.util.find_spec(WORKER_DAEMON)
+    if spec is None or not spec.origin:
+        return
+    system = spark.sparkContext._jvm.java.lang.System
+    # the worker's PYTHONPATH merges the executor env with the JVM's own
+    pythonpath = os.pathsep.join(
+        [conf.get("spark.executorEnv.PYTHONPATH", ""),
+         system.getenv("PYTHONPATH") or ""])
+    if not worker_can_import(os.path.dirname(spec.origin), pythonpath,
+                             system.getProperty("user.dir")):
+        return
+    conf.set(PYTHON_DAEMON_MODULE, WORKER_DAEMON)
+    logging.getLogger(__name__).info(
+        "set %s=%s: Python workers import pyspark without re-reading "
+        "pyspark.zip on every task", PYTHON_DAEMON_MODULE, WORKER_DAEMON)
+
+
 def sequila_session(
     spark: SparkSession | None = None,
     *,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Return a SparkSession tuned for sequila workloads.
+    """Return a SparkSession tuned for sequila workloads. On a local
+    session it also starts the Python workers through
+    ``sequila_worker_daemon``, which saves ~0.15 s per Python task. On a
+    cluster, pass ``--conf spark.python.daemon.module=sequila_worker_daemon``
+    at submit time when the package is installed on the executors.
 
     Equivalent of ``SessionContext::new_with_sequila``
     (session_context.rs:16-27): sets our conf defaults on an existing or new
     session. Arrow execution is enabled because the index paths move batches
     through pandas UDFs; AQE stays on so skewed equi-keys (one contig
     dominating) get runtime-split.
+
+    On a local session, new or already running, it sets
+    ``spark.python.daemon.module=sequila_worker_daemon`` on the live
+    ``SparkConf``; Spark reads it whenever it starts a Python runner. That
+    daemon drops Spark's ``pyspark.zip``, py4j zip and jar from each
+    Python worker's ``sys.path`` when the worker can import the same
+    pyspark version elsewhere: PySpark 4.1 re-reads every cached zip
+    archive on each task. It leaves the conf alone when it is already
+    set, and when the workers could not import the module: its directory
+    is not on the worker ``PYTHONPATH``, not site-packages and not the
+    JVM's working directory. Executors on a cluster fix their conf at
+    launch, so there it changes nothing; use the ``--conf`` line above.
     """
     if spark is None:
         builder = (
@@ -262,6 +336,7 @@ def sequila_session(
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     if shuffle_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    _install_worker_daemon(spark)
     # Defaults only if unset — never clobber user choices.
     for key, default in (
         (PREFER_INTERVAL_JOIN, "true"),

@@ -12,15 +12,19 @@ from __future__ import annotations
 from collections import Counter
 
 from sequila_native_spark import (
+    cluster_intervals,
+    complement_intervals,
     count_overlaps,
     coverage,
     filter_by_overlap,
     interval_jaccard,
     map_intervals,
     mark_by_overlap,
+    merge_intervals,
     nearest_join,
     overlap_join,
     union_coverage,
+    window_join,
 )
 from tests.conftest import rows_set
 
@@ -109,3 +113,62 @@ def test_union_coverage_and_jaccard_at_int32_edges(spark):
     n = WIDE[2] - WIDE[1] + 1
     got = rows_set(interval_jaccard(wide, wide, "contig"))
     assert got == Counter([("c", n, n, 1000)])
+
+
+def _runs(rows, max_gap=0):
+    """Merged runs ``[contig, start, end, n]``, as bedtools merge -d."""
+    runs = []
+    for c, s, e in sorted(rows):
+        if runs and runs[-1][0] == c and s <= runs[-1][2] + 1 + max_gap:
+            runs[-1][2] = max(runs[-1][2], e)
+            runs[-1][3] += 1
+        else:
+            runs.append([c, s, e, 1])
+    return runs
+
+
+# the reach past the last end (end + 1 + max_gap) is past int32
+TOP = [("c", 2147483000, I32_MAX), ("c", 2147483640, I32_MAX)]
+
+
+def test_merge_and_cluster_at_int32_edges(spark):
+    df = _frame(spark, TOP)
+    runs = _runs(TOP)
+    assert rows_set(merge_intervals(df, "contig")) == Counter(map(tuple, runs))
+    want = Counter(
+        (c, s, e, i + 1, rs, re)
+        for c, s, e in TOP
+        for i, (rc, rs, re, _) in enumerate(runs)
+        if rc == c and rs <= s and e <= re
+    )
+    assert rows_set(cluster_intervals(df, "contig")) == want
+
+
+def test_complement_at_int32_edges(spark):
+    for rows in ([FULL], [("c", 0, I32_MAX)], [("c", I32_MIN, 0), ("c", 9, I32_MAX)]):
+        runs = _runs(rows)
+        want = Counter(
+            (a[0], a[2] + 1, b[1] - 1)
+            for a, b in zip(runs, runs[1:])
+            if a[0] == b[0] and b[1] - 1 >= a[2] + 1
+        )
+        got = rows_set(complement_intervals(_frame(spark, rows), "contig"))
+        assert got == want, rows
+
+
+def test_window_join_at_int32_edges(spark):
+    window = 500
+    left = [("c", -2147483600, -2147483500), ("c", 2147483500, 2147483600)]
+    right = [
+        ("c", I32_MIN, I32_MIN), ("c", -2147483000, -2147482990),
+        ("c", I32_MAX, I32_MAX), ("c", 2147482900, 2147483000), ("c", 0, 5),
+    ]
+    want = Counter(
+        (*a, *b) for a in left for b in right
+        if b[1] <= a[2] + window and b[2] >= a[1] - window
+    )
+    assert len(want) == 4
+    lf, rf = _frame(spark, left), _frame(spark, right)
+    for algo in ("naive", "binning", "index"):
+        got = window_join(lf, rf, "contig", window=window, algorithm=algo)
+        assert rows_set(got) == want, algo
