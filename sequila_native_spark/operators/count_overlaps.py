@@ -101,7 +101,6 @@ def count_overlaps(
     min_frac_right: float | None = None,
     reciprocal: bool = False,
     either: bool = False,
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """Return ``right`` with ``count_col`` = number of overlapping ``left``
     intervals in the same equi-key group (0 when none).
@@ -116,7 +115,7 @@ def count_overlaps(
     return _per_row_overlaps(
         left, right, on, left_start, left_end, right_start, right_end,
         strict=strict, algorithm=algorithm, bin_width=bin_width,
-        check_bounds=check_bounds, count_col=count_col,
+        count_col=count_col,
         frac=dict(min_frac_left=min_frac_left, min_frac_right=min_frac_right,
                   reciprocal=reciprocal, either=either),
     )
@@ -134,7 +133,6 @@ def _per_row_overlaps(
     strict: bool,
     algorithm: str | None,
     bin_width: int | str | None,
-    check_bounds: bool | None,
     count_col: str,
     cover_col: str | None = None,
     frac: dict | None = None,
@@ -154,7 +152,6 @@ def _per_row_overlaps(
     """
     conf = SequilaConf.from_spark(left.sparkSession)
     algo = parse_algorithm(algorithm) if algorithm else conf.algorithm
-    check = conf.check_int32_bounds if check_bounds is None else check_bounds
     sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
     out_cols = [count_col] if cover_col is None else [count_col, cover_col]
     for c in out_cols:
@@ -177,7 +174,7 @@ def _per_row_overlaps(
     r_keys = [p[1] for p in sides.on]
     # only the left's key and bound columns are needed
     build = left.select(*dict.fromkeys([*l_keys, left_start, left_end]))
-    lb = _with_bounds(build, left_start, left_end, _LS, _LE, strict, check)
+    lb = _with_bounds(build, left_start, left_end, _LS, _LE, strict)
 
     # the kernels answer plain overlap, and their dict lookups can neither
     # coerce 1 = '1' nor hash keys outside the Arrow key types
@@ -192,7 +189,7 @@ def _per_row_overlaps(
         try:
             return _index_probe(
                 lb, right, l_keys, r_keys, right_start, right_end,
-                strict, check, out_cols, prepare, kernel,
+                strict, out_cols, prepare, kernel,
             )
         except BuildSideTooLargeError:
             pass  # accounted-memory fallback, never a blind collect
@@ -202,7 +199,7 @@ def _per_row_overlaps(
         left, left_start, left_end, right, right_start, right_end,
     )
     probe = stamp_row_id(right, _PID)
-    rb = _with_bounds(probe, right_start, right_end, _RS, _RE, strict, check)
+    rb = _with_bounds(probe, right_start, right_end, _RS, _RE, strict)
     aggs = [F.count(F.lit(1)).alias(count_col)]
     if cover_col is not None:
         # in bigint: int32 bounds further apart than 2^31 overflow an int
@@ -436,7 +433,7 @@ def _build_count_index(lb: DataFrame, l_keys) -> tuple[dict[tuple, tuple], int]:
 
 
 def _index_probe(
-    lb, right_orig, l_keys, r_keys, right_start, right_end, strict, check,
+    lb, right_orig, l_keys, r_keys, right_start, right_end, strict,
     out_cols: list[str], prepare, kernel,
 ):
     """Broadcast build arrays, streaming vectorized probe, zero shuffle:
@@ -449,7 +446,7 @@ def _index_probe(
     for one key group's probe rows. Needles keep the bound columns' int32
     dtype, which the kernels match to the build arrays (``_as_dtype``).
     """
-    rb = _with_bounds(right_orig, right_start, right_end, _RS, _RE, strict, check)
+    rb = _with_bounds(right_orig, right_start, right_end, _RS, _RE, strict)
     bc = _count_index(lb, l_keys)
     right_out_cols = list(right_orig.columns)
     out_schema = StructType(
@@ -492,7 +489,6 @@ def overlap_count_agg(
     *,
     strict: bool = False,
     alias: str = "n_pairs",
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """``overlap_join(left, right, ...).groupBy(keys).count()`` computed
     without emitting a single pair row.
@@ -514,9 +510,6 @@ def overlap_count_agg(
     exceeds the broadcast guard (accounted memory, never a blind collect),
     and for key types outside :func:`_arrow_keys`.
     """
-    spark = left.sparkSession
-    conf = SequilaConf.from_spark(spark)
-    check = conf.check_int32_bounds if check_bounds is None else check_bounds
     sides = validate_sides(
         left, right, on, left_start, left_end, right_start, right_end
     )
@@ -524,7 +517,7 @@ def overlap_count_agg(
     r_keys = [p[1] for p in sides.on]
     left_p = left.select(*dict.fromkeys([*l_keys, left_start, left_end]))
     right_p = right.select(*dict.fromkeys([*r_keys, right_start, right_end]))
-    lb = _with_bounds(left_p, left_start, left_end, _LS, _LE, strict, check)
+    lb = _with_bounds(left_p, left_start, left_end, _LS, _LE, strict)
 
     bc = None
     if not sides.mixed_keys and _arrow_keys(left_p, l_keys):
@@ -541,13 +534,12 @@ def overlap_count_agg(
             left_p, right_p, on=on,
             left_start=left_start, left_end=left_end,
             right_start=right_start, right_end=right_end,
-            strict=strict, algorithm="binning", check_bounds=check,
-            rsuffix="_r",
+            strict=strict, algorithm="binning", rsuffix="_r",
         )
         grouped = oj.groupBy(*l_keys) if l_keys else oj
         return grouped.agg(F.count(F.lit(1)).cast("long").alias(alias))
 
-    rb = _with_bounds(right_p, right_start, right_end, _RS, _RE, strict, check)
+    rb = _with_bounds(right_p, right_start, right_end, _RS, _RE, strict)
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from sequila_native_spark.util import ensure_parallel

@@ -56,7 +56,6 @@ def coverage(
     bin_width: int | str | None = None,
     count_col: str = "n_overlaps",
     cover_col: str = "bases_covered",
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """Return ``right`` with overlap count and total clipped overlap length
     against ``left`` within each equi-key group (0/0 when none).
@@ -68,7 +67,7 @@ def coverage(
     return _per_row_overlaps(
         left, right, on, left_start, left_end, right_start, right_end,
         strict=strict, algorithm=algorithm, bin_width=bin_width,
-        check_bounds=check_bounds, count_col=count_col, cover_col=cover_col,
+        count_col=count_col, cover_col=cover_col,
     )
 
 
@@ -84,7 +83,6 @@ def union_coverage(
     strict: bool = False,
     bin_width: int | str | None = None,
     cover_col: str = "bases_union",
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """Distinct covered bases per probe interval (breadth of coverage).
 
@@ -96,7 +94,6 @@ def union_coverage(
     one aggregation, both partitioned on the probe id (exchange reused).
     """
     conf = SequilaConf.from_spark(left.sparkSession)
-    check = conf.check_int32_bounds if check_bounds is None else check_bounds
 
     sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
     if cover_col in right.columns:
@@ -111,10 +108,10 @@ def union_coverage(
 
     lb = _with_bounds(
         left.select(*dict.fromkeys([*l_keys, left_start, left_end])),
-        left_start, left_end, _LS, _LE, strict, check,
+        left_start, left_end, _LS, _LE, strict,
     )
     right = stamp_row_id(right, _PID)
-    rb = _with_bounds(right, right_start, right_end, _RS, _RE, strict, check)
+    rb = _with_bounds(right, right_start, right_end, _RS, _RE, strict)
 
     pairs = _overlap_pairs(lb, rb, l_keys, r_keys, width)
     # in bigint: the clip of a full-range int32 interval overflows an int
@@ -225,7 +222,6 @@ def depth_histogram(
     chunk_width: int | None = DEFAULT_DEPTH_CHUNK_WIDTH,
     depth_col: str = "depth",
     bases_col: str = "n_bases",
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """Genome-wide depth-of-coverage histogram (bedtools ``genomecov``
     without the genome file): for each equi-key group, how many bases sit
@@ -250,14 +246,12 @@ def depth_histogram(
     ``chunk_width=None`` falls back to the one-window-per-key sweep.
     Output: keys + ``depth`` (bigint) + ``n_bases`` (bigint).
     """
-    conf = SequilaConf.from_spark(df.sparkSession)
-    check = conf.check_int32_bounds if check_bounds is None else check_bounds
     sides = validate_sides(df, df, on, start, end, start, end)
     keys = [p[0] for p in sides.on]
 
     b = _with_bounds(
         df.select(*dict.fromkeys([*keys, start, end])), start, end, _LS, _LE,
-        False, check,
+        False,
     ).na.drop(subset=[*keys, _LS, _LE])
     ev = b.select(
         *keys, F.col(_LS).cast("long").alias("__sq_pos"), F.lit(1).alias("__sq_d")
@@ -287,7 +281,6 @@ def interval_jaccard(
     right_end: str = "pos_end",
     *,
     bin_width: int | str | None = None,
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """bedtools ``jaccard`` per equi-key group: base-level
     ``|A∩B| / |A∪B|`` between two interval sets.
@@ -305,10 +298,8 @@ def interval_jaccard(
     from sequila_native_spark.operators.merge_intervals import merge_intervals
 
     keys = [on] if isinstance(on, str) else list(on or [])
-    la = merge_intervals(left, on or [], left_start, left_end,
-                         check_bounds=check_bounds).drop("n_merged")
-    rb = merge_intervals(right, on or [], right_start, right_end,
-                         check_bounds=check_bounds).drop("n_merged")
+    la = merge_intervals(left, on or [], left_start, left_end).drop("n_merged")
+    rb = merge_intervals(right, on or [], right_start, right_end).drop("n_merged")
 
     # lengths and clips in bigint: an int subtraction overflows on int32
     # bounds more than 2^31 apart
@@ -325,7 +316,6 @@ def interval_jaccard(
     pairs = overlap_join(
         la, rb, on or None, left_start, left_end, right_start, right_end,
         algorithm="binning", bin_width=bin_width, rsuffix="_b",
-        check_bounds=check_bounds,
     )
     r_s = f"{right_start}_b" if right_start in la.columns else right_start
     r_e = f"{right_end}_b" if right_end in la.columns else right_end
@@ -357,7 +347,6 @@ def multi_intersect(
     end: str = "pos_end",
     *,
     chunk_width: int | None = DEFAULT_DEPTH_CHUNK_WIDTH,
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """Multi-way interval intersection (bedtools ``multiinter``): partition
     each key's coordinate line into maximal segments with a constant set of
@@ -393,9 +382,7 @@ def multi_intersect(
 
     evs = []
     for i, f in enumerate(frames):
-        merged = merge_intervals(
-            f, on or [], start, end, check_bounds=check_bounds
-        )
+        merged = merge_intervals(f, on or [], start, end)
         bit = 1 << i
         evs.append(
             merged.select(

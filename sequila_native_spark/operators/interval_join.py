@@ -311,8 +311,8 @@ def _lex_sorted(starts: np.ndarray, ends: np.ndarray):
 
 def interval_index(lb: DataFrame, l_keys):
     """``(broadcast, rows)`` of ``lb``'s pair index, the build of
-    overlap_join's and nearest_join's ``index`` paths: over one unchanged
-    file input the two share one collect and broadcast.
+    overlap_join's, nearest_join's and map_intervals' ``index`` paths: over
+    one unchanged file input the first two share one collect and broadcast.
 
     The value is ``(index, payload)``. ``index`` maps each key tuple to its
     :func:`_lex_sorted` arrays ``(starts, ends, runmax, argmax_first,
@@ -407,7 +407,6 @@ def _with_bounds(
     s_tmp: str,
     e_tmp: str,
     strict: bool,
-    check_bounds: bool,
 ) -> DataFrame:
     """Attach normalized int32 bound columns (originals untouched).
 
@@ -419,29 +418,29 @@ def _with_bounds(
     """
     return df.selectExpr(
         "*",
-        _bound_sql(start, s_tmp, False, check_bounds),
-        _bound_sql(end, e_tmp, strict, check_bounds),
+        _bound_sql(start, s_tmp, False),
+        _bound_sql(end, e_tmp, strict),
     )
 
 
-def _bound_sql(col: str, name: str, shrink: bool, check: bool) -> str:
+def _bound_sql(col: str, name: str, shrink: bool) -> str:
     """SQL for one int32 bound column.
 
     Strict normalization (``intervals.rs:67-69``) shrinks the end by 1
     BEFORE the i32 check, in 64-bit: at end == I32_MIN the shrunk value
     must surface as the documented int32-bounds error, not an ANSI
-    overflow or a wrap to +I32_MAX. With ``check`` an out-of-range value
-    raises the reference's error (``Cast error: Can't cast value
-    2147483648 to type Int32``, ``interval_join.rs:1927-1968``) instead of
-    wrapping; ``raise_error`` keeps the check inside whole-stage codegen.
+    overflow or a wrap to +I32_MAX. The check is unconditional, as in the
+    reference: an out-of-range value always raises its error (``Cast
+    error: Can't cast value 2147483648 to type Int32``,
+    ``interval_join.rs:1927-1968``), whatever ``spark.sql.ansi.enabled``
+    says, so no bound can wrap into a wrong match; ``raise_error`` keeps
+    the check inside whole-stage codegen.
     The quote in "Can't" is ``chr(39)``, so the text does not depend on
     the parser's string-escape settings.
     """
     v = "CAST(`%s` AS BIGINT)" % col.replace("`", "``")
     if shrink:
         v = f"({v} - 1)"
-    if not check:
-        return f"CAST({v} AS INT) AS `{name}`"
     return (
         f"CASE WHEN {v} < {I32_MIN} OR {v} > {I32_MAX} THEN CAST(raise_error("
         f"concat('Cast error: Can', chr(39), 't cast value ', CAST({v} AS STRING), "
@@ -574,7 +573,6 @@ def overlap_join(
     algorithm: str | None = None,
     bin_width: int | None = None,
     rsuffix: str = "_r",
-    check_bounds: bool | None = None,
     metrics=None,
     min_frac_left: float | None = None,
     min_frac_right: float | None = None,
@@ -661,7 +659,6 @@ def overlap_join(
         return nearest_join(
             left, right, on, left_start, left_end, right_start, right_end,
             strict=shrink_l, algorithm=algo, rsuffix=rsuffix,
-            check_bounds=check_bounds,
         )
     if mode == "count_overlaps":
         raise ValueError(
@@ -670,7 +667,6 @@ def overlap_join(
             "sequila_native_spark.count_overlaps(...) operator instead"
         )
     width = bin_width if bin_width is not None else conf.bin_width
-    check = conf.check_int32_bounds if check_bounds is None else check_bounds
 
     sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
     if algo == "partitioned" or (algo == "index" and (
@@ -700,8 +696,8 @@ def overlap_join(
     # The public `strict` flag sets both; the condition parser sets each.
     shrink_l = strict if _shrink_left_end is None else _shrink_left_end
     shrink_r = strict if _shrink_right_end is None else _shrink_right_end
-    lb = _with_bounds(left, left_start, left_end, _LS, _LE, shrink_l, check)
-    rb = _with_bounds(right, r_start, r_end, _RS, _RE, shrink_r, check)
+    lb = _with_bounds(left, left_start, left_end, _LS, _LE, shrink_l)
+    rb = _with_bounds(right, r_start, r_end, _RS, _RE, shrink_r)
 
     def _frac_filter(out: DataFrame) -> DataFrame:
         # Fractions post-filter on the OUTPUT columns (strict is rejected
@@ -1022,7 +1018,6 @@ def window_join(
     algorithm: str | None = None,
     bin_width: int | None = None,
     rsuffix: str = "_r",
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """bedtools ``window``: pairs whose intervals come within ``window``
     bases of each other (overlap OR gap ≤ window).
@@ -1053,7 +1048,6 @@ def window_join(
     out = overlap_join(
         widened, right, on, "__sq_ws", "__sq_we", right_start, right_end,
         algorithm=algorithm, bin_width=bin_width, rsuffix=rsuffix,
-        check_bounds=check_bounds,
     )
     return out.drop("__sq_ws", "__sq_we")
 

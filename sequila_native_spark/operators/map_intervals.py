@@ -41,8 +41,7 @@ from sequila_native_spark.operators.interval_join import (
     _key_groups,
     _probe_spans,
     _with_bounds,
-    broadcast_build,
-    guarded_build_arrow,
+    interval_index,
     resolve_bin_width,
 )
 from sequila_native_spark.operators.count_overlaps import _overlap_pairs
@@ -89,9 +88,11 @@ def _np_frac_mask(
     IEEE-double expression (``overlap >= f * length`` with both operands
     cast to double), so the kept pair set is bit-identical to the join
     plan's filter. Caller guarantees at least one fraction is set and the
-    argument combination already validated."""
+    argument combination already validated. Bounds may arrive as int32:
+    the arithmetic runs in int64, where no int32 difference overflows."""
     if reciprocal:
         min_frac_right = min_frac_left
+    ls, le, rs, re = (a.astype(np.int64, copy=False) for a in (ls, le, rs, re))
     ov = (np.minimum(le, re) - np.maximum(ls, rs) + 1).astype(np.float64)
     conds = []
     for frac, length in (
@@ -105,25 +106,6 @@ def _np_frac_mask(
     for c in conds[1:]:
         out = (out | c) if either else (out & c)
     return out
-
-
-def _build_map_index(lb: DataFrame, l_keys: list[str]) -> tuple[dict, int]:
-    """Guarded single-job Arrow collect of the LEFT side into per-key
-    ``(starts_sorted, ends_by_start, runmax, row_ids_by_start)`` arrays —
-    the count kernel's build shape plus the stamped row id so per-batch
-    partials can be re-attached to left rows — and the rows collected.
-    Raises :class:`BuildSideTooLargeError` past ``maxBroadcastBuildRows``."""
-    tbl = guarded_build_arrow(lb)
-    # rows with null key/bounds can never match a pair (they are in no key
-    # group); the final left join still emits them with the null-group
-    # defaults
-    starts = _ints(tbl, _LS).astype(np.int64, copy=False)
-    ends = _ints(tbl, _LE).astype(np.int64, copy=False)
-    aids = _ints(tbl, _AID).astype(np.int64, copy=False)
-    return {
-        key: (starts[pos], ends[pos], np.maximum.accumulate(ends[pos]), aids[pos])
-        for key, pos in _key_groups(tbl, l_keys, (_LS, _LE), sort_by=starts)
-    }, tbl.num_rows
 
 
 def _index_map(
@@ -141,13 +123,13 @@ def _index_map(
     """Broadcast-index map kernel (guide §1.1/§2.4/§3.1/§4.2): aggregate the
     probe side's values per LEFT row without emitting a single pair row.
 
-    Build: the left (keys, bounds, row id) collected once (guarded) into
-    per-key sorted arrays. Probe: one ``mapInArrow`` pass over the right
-    side pruned to (key, bounds, referenced values); each batch enumerates
-    its exact matched pairs against the broadcast arrays
-    (:func:`_probe_spans` — the candidate-mask kernel, exact for inverted
-    rows on either side), applies the fraction mask, and emits ONE partial
-    row per touched left row: pair count, per-column sums (int64, exact;
+    Build: the left (keys, bounds, row id) through the shared pair index
+    (:func:`interval_index`), whose payload carries the row id. Probe: one
+    ``mapInArrow`` pass over the right side pruned to (key, bounds,
+    referenced values); each batch enumerates its exact matched pairs
+    against the broadcast arrays (:func:`_probe_spans` — the candidate-mask
+    kernel, exact for inverted rows on either side), applies the fraction
+    mask, and emits ONE partial row per touched left row: pair count, per-column sums (int64, exact;
     NULL when the batch saw no non-null value), mins, maxes. The final
     ``groupBy(left row id)`` recombines partials — count=Σ, sum=Σ, min=min,
     max=max, all associative — so the result equals the pair join +
@@ -156,9 +138,8 @@ def _index_map(
     """
     # the stamped row ids belong to one evaluation of the left side: the
     # frame is nondeterministic, so the session index cache never keeps it
-    build = lb.select(*dict.fromkeys([*l_keys, _LS, _LE, _AID]))
-    bc, _ = broadcast_build(
-        build, ("map", tuple(l_keys)), lambda: _build_map_index(build, l_keys)
+    bc, _ = interval_index(
+        lb.select(*dict.fromkeys([*l_keys, _LS, _LE, _AID])), l_keys
     )
 
     # (out_name, op, internal value alias or None) in aggs order
@@ -182,12 +163,14 @@ def _index_map(
     i64min, i64max = np.iinfo(np.int64).min, np.iinfo(np.int64).max
 
     def probe_arrow(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        idx_map = bc.value
+        idx_map, payload = bc.value
+        aid = _ints(payload, _AID)
         for batch in batches:
             if batch.num_rows == 0 or not idx_map:
                 continue
-            qs = _ints(batch, _RS).astype(np.int64, copy=False)
-            qe = _ints(batch, _RE).astype(np.int64, copy=False)
+            # needles keep the build arrays' dtype: a wider one would make
+            # searchsorted copy the haystack on every call
+            qs, qe = _ints(batch, _RS), _ints(batch, _RE)
             vals: dict[str, tuple[np.ndarray, np.ndarray]] = {}
             for a in val_names:
                 col = batch.column(batch.schema.get_field_index(a))
@@ -201,7 +184,7 @@ def _index_map(
             out_cols: dict[str, list] = {out: [] for out, _, _ in plan}
 
             def group(entry, pos):
-                starts, ends, runmax, aids = entry
+                starts, ends, runmax, _, row_idx = entry
                 cand, rep = _probe_spans(starts, ends, runmax, qs[pos], qe[pos])
                 if not cand.size:
                     return
@@ -216,7 +199,7 @@ def _index_map(
                 gpos = pos[rep]  # batch row index per pair
                 upos, inv = np.unique(cand, return_inverse=True)
                 m = len(upos)
-                out_aid.append(aids[upos])
+                out_aid.append(aid[row_idx[upos]])
                 for out, op, a in plan:
                     if op == "count":
                         out_cols[out].append(np.bincount(inv, minlength=m))
@@ -306,7 +289,6 @@ def map_intervals(
     min_frac_right: float | None = None,
     reciprocal: bool = False,
     either: bool = False,
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """Return every row of ``left`` plus one aggregate column per ``aggs``
     entry, computed over the overlapping ``right`` rows in its equi-key
@@ -353,7 +335,6 @@ def map_intervals(
     conf = SequilaConf.from_spark(spark)
     algo = parse_algorithm(algorithm) if algorithm else conf.algorithm
     width = bin_width if bin_width is not None else conf.bin_width
-    check = conf.check_int32_bounds if check_bounds is None else check_bounds
 
     sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
     l_keys = [p[0] for p in sides.on]
@@ -395,9 +376,9 @@ def map_intervals(
 
     lb = _with_bounds(
         left_stamped.select(*dict.fromkeys([*l_keys, left_start, left_end, _AID])),
-        left_start, left_end, _LS, _LE, strict, check,
+        left_start, left_end, _LS, _LE, strict,
     )
-    rb = _with_bounds(right_pruned, right_start, right_end, _RS, _RE, strict, check)
+    rb = _with_bounds(right_pruned, right_start, right_end, _RS, _RE, strict)
 
     if algo == "index":
         rtypes = dict(right.dtypes)

@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 
 from sequila_native_spark.operators.interval_join import _LE, _LS, _with_bounds
 from sequila_native_spark.operators.intervals import validate_sides
-from sequila_native_spark.session import SequilaConf
 
 _N = "__sq_n"
 _CHUNK = "__sq_chunk"
@@ -84,7 +83,6 @@ def merge_intervals(
     *,
     max_gap: int = 0,
     chunk_width: int | None = DEFAULT_CHUNK_WIDTH,
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """Return one row per merged run: keys, run ``start``/``end``, and
     ``n_merged`` (input intervals absorbed).
@@ -95,14 +93,12 @@ def merge_intervals(
     ``None`` forces the single-pass per-key sort (only sensible when key
     cardinality already exceeds the cluster's task slots).
     """
-    conf = SequilaConf.from_spark(df.sparkSession)
-    check = conf.check_int32_bounds if check_bounds is None else check_bounds
     # reuse two-sided validation with df on both sides (bounds + key checks)
     sides = validate_sides(df, df, on, start, end, start, end)
     keys = [p[0] for p in sides.on]
 
     b = _with_bounds(df.select(*dict.fromkeys([*keys, start, end])), start, end,
-                     _LS, _LE, False, check)
+                     _LS, _LE, False)
     if chunk_width is not None:
         if chunk_width <= 0:
             raise ValueError(f"chunk_width must be positive, got {chunk_width}")
@@ -128,7 +124,6 @@ def complement_intervals(
     end: str = "pos_end",
     *,
     chunk_width: int | None = DEFAULT_CHUNK_WIDTH,
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """Gaps between merged runs within each key's covered span — bedtools
     ``complement`` bounded by the data (no genome file): one row per maximal
@@ -139,9 +134,7 @@ def complement_intervals(
     magnitude smaller than the input, so the final per-key sort is over
     compacted runs only, same as merge's phase 2.
     """
-    merged = merge_intervals(
-        df, on, start, end, chunk_width=chunk_width, check_bounds=check_bounds
-    )
+    merged = merge_intervals(df, on, start, end, chunk_width=chunk_width)
     keys = [c for c in merged.columns if c not in (start, end, "n_merged")]
     w = Window.partitionBy(*keys).orderBy(F.col(start).asc())
     nxt = F.lead(F.col(start)).over(w)
@@ -170,7 +163,6 @@ def subtract_intervals(
     right_end: str = "pos_end",
     *,
     bin_width: int | None = None,
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """bedtools ``subtract``: remove from each LEFT interval every base
     covered by any RIGHT interval sharing its key; emit the remaining
@@ -209,7 +201,6 @@ def subtract_intervals(
     merged = merge_intervals(
         right.select(*dict.fromkeys([*r_keys, right_start, right_end])),
         list(r_keys) or None, right_start, right_end,
-        check_bounds=check_bounds,
     )
     covers_src = merged.select(
         *[F.col(k).alias(f"__sq_rk{i}") for i, k in enumerate(r_keys)],
@@ -225,7 +216,7 @@ def subtract_intervals(
         on=[(lk, f"__sq_rk{i}") for i, lk in enumerate(l_keys)] or None,
         left_start=left_start, left_end=left_end,
         right_start="__sq_cov_s", right_end="__sq_cov_e",
-        algorithm="binning", bin_width=bin_width, check_bounds=check_bounds,
+        algorithm="binning", bin_width=bin_width,
     )
     covers = pairs.groupBy(lid).agg(
         F.sort_array(
@@ -293,7 +284,6 @@ def make_windows(
     *,
     window: int,
     step: int | None = None,
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """bedtools ``makewindows``: tile each span with fixed-size windows.
 
@@ -312,13 +302,11 @@ def make_windows(
     step = window if step is None else step
     if step <= 0:
         raise ValueError(f"step must be positive, got {step}")
-    conf = SequilaConf.from_spark(spans.sparkSession)
-    check = conf.check_int32_bounds if check_bounds is None else check_bounds
     sides = validate_sides(spans, spans, on, start, end, start, end)
     keys = [p[0] for p in sides.on]
     b = _with_bounds(
         spans.select(*dict.fromkeys([*keys, start, end])), start, end,
-        _LS, _LE, False, check,
+        _LS, _LE, False,
     )
     n_wins = F.floor((F.col(_LE) - F.col(_LS)).cast("double") / F.lit(float(step)))
     wins = F.transform(
@@ -350,7 +338,6 @@ def cluster_intervals(
     *,
     max_gap: int = 0,
     cluster_col: str = "cluster_id",
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """bedtools ``cluster``: label every input row with the id of the merged
     run (cluster) it belongs to — rows whose intervals overlap (or sit
@@ -370,7 +357,7 @@ def cluster_intervals(
     keys = [p[0] for p in sides.on]
     runs = merge_intervals(
         df, list(keys) or None, start, end,
-        max_gap=max_gap, check_bounds=check_bounds,
+        max_gap=max_gap,
     )
     runs = runs.select(
         *[F.col(k).alias(f"__sq_ck{i}") for i, k in enumerate(keys)],
@@ -387,6 +374,6 @@ def cluster_intervals(
         on=[(k, f"__sq_ck{i}") for i, k in enumerate(keys)] or None,
         left_start=start, left_end=end,
         right_start="cluster_start", right_end="cluster_end",
-        algorithm="binning", check_bounds=check_bounds,
+        algorithm="binning",
     )
     return out.select(*df.columns, cluster_col, "cluster_start", "cluster_end")

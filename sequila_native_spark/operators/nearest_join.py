@@ -118,7 +118,6 @@ def nearest_join(
     strict: bool = False,
     algorithm: str | None = None,
     rsuffix: str = "_r",
-    check_bounds: bool | None = None,
     k: int | None = None,
     distance_col: str | None = None,
     ignore_overlaps: bool = False,
@@ -188,7 +187,6 @@ def nearest_join(
         # binning has no nearest analogue; partitioned is the distributed
         # equivalent (same shuffle-by-key distribution requirement)
         algo = "partitioned"
-    check = conf.check_int32_bounds if check_bounds is None else check_bounds
 
     sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
     if sides.mixed_keys:
@@ -207,8 +205,8 @@ def nearest_join(
     r_keys = [renames.get(p[1], p[1]) for p in sides.on]
     out_cols = [*left.columns, *right.columns]
 
-    lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict, check)
-    rb = _with_bounds(right, r_start, r_end, _RS, _RE, strict, check)
+    lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict)
+    rb = _with_bounds(right, r_start, r_end, _RS, _RE, strict)
 
     args = (lb, rb, l_keys, r_keys, out_cols, k, flags)
     if algo == "naive":

@@ -47,7 +47,6 @@ def filter_by_overlap(
     min_frac_regions: float | None = None,
     reciprocal: bool = False,
     either: bool = False,
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """Keep rows of ``df`` that overlap ≥1 ``regions`` interval in their
     equi-key group (``negate=True``: keep rows overlapping none).
@@ -71,7 +70,7 @@ def filter_by_overlap(
         df, regions, on, df_start, df_end, regions_start, regions_end,
         strict=strict, algorithm=algorithm, bin_width=bin_width,
         min_frac_df=min_frac_df, min_frac_regions=min_frac_regions,
-        reciprocal=reciprocal, either=either, check_bounds=check_bounds,
+        reciprocal=reciprocal, either=either,
     )
     return n.where(F.col(_N) == 0 if negate else F.col(_N) > 0).drop(_N)
 
@@ -93,7 +92,6 @@ def mark_by_overlap(
     min_frac_regions: float | None = None,
     reciprocal: bool = False,
     either: bool = False,
-    check_bounds: bool | None = None,
 ) -> DataFrame:
     """Keep ALL rows of ``df``, adding boolean ``mark_col`` = "this row
     overlaps ≥1 ``regions`` interval in its equi-key group".
@@ -110,7 +108,7 @@ def mark_by_overlap(
         df, regions, on, df_start, df_end, regions_start, regions_end,
         strict=strict, algorithm=algorithm, bin_width=bin_width,
         min_frac_df=min_frac_df, min_frac_regions=min_frac_regions,
-        reciprocal=reciprocal, either=either, check_bounds=check_bounds,
+        reciprocal=reciprocal, either=either,
     )
     return n.select(*df.columns, (F.col(_N) > 0).alias(mark_col))
 

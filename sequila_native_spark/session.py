@@ -14,6 +14,12 @@ to be set at session-build time, so :func:`sequila_session` works on an
 existing ``SparkSession`` too (the reference's embedded-library entry point,
 ``integration_test.rs:14-22``).
 
+Like the reference, which always casts bounds to Int32
+(``interval_join.rs:1661-1672``), the int32 bound check has no switch:
+every operator raises ``Cast error: Can't cast value … to type Int32`` on a
+bound outside int32, under ANSI mode or not, so no bound can wrap into a
+wrong answer.
+
 Algorithm-name parsing is case-insensitive like the reference's
 (``session_context.rs:85-104``); the reference's seven index flavors all
 produce identical join output (its tests assert this), so they all map onto
@@ -35,7 +41,6 @@ PREFER_INTERVAL_JOIN = "spark.sequila.preferIntervalJoin"
 INTERVAL_JOIN_ALGORITHM = "spark.sequila.intervalJoinAlgorithm"
 INTERVAL_JOIN_BIN_WIDTH = "spark.sequila.intervalJoinBinWidth"
 INTERVAL_JOIN_LOW_MEMORY = "spark.sequila.intervalJoinLowMemory"
-CHECK_INT32_BOUNDS = "spark.sequila.checkInt32Bounds"
 MAX_BROADCAST_BUILD_ROWS = "spark.sequila.maxBroadcastBuildRows"
 BINNED_JOIN_PARTITIONS = "spark.sequila.binnedJoinPartitions"
 NEAREST_K = "spark.sequila.nearestK"
@@ -166,7 +171,6 @@ class SequilaConf:
     join_mode: str = "overlap"  # "nearest"/"count_overlaps" via CoitreesNearest etc.
     bin_width: int | str = DEFAULT_BIN_WIDTH  # int or "auto" (p95 of lengths)
     low_memory: bool = False
-    check_int32_bounds: bool = True
     max_broadcast_build_rows: int = DEFAULT_MAX_BROADCAST_BUILD_ROWS
     binned_join_partitions: int | str = DEFAULT_BINNED_JOIN_PARTITIONS
     nearest_k: int = 1  # bedtools closest -k for the CoitreesNearest route
@@ -209,7 +213,6 @@ class SequilaConf:
             join_mode=join_mode,
             bin_width=raw_width,
             low_memory=_get(INTERVAL_JOIN_LOW_MEMORY, "false").lower() == "true",
-            check_int32_bounds=_get(CHECK_INT32_BOUNDS, "true").lower() == "true",
             max_broadcast_build_rows=int(
                 _get(MAX_BROADCAST_BUILD_ROWS, str(DEFAULT_MAX_BROADCAST_BUILD_ROWS))
             ),
@@ -343,7 +346,6 @@ def sequila_session(
         (INTERVAL_JOIN_ALGORITHM, DEFAULT_ALGORITHM),
         (INTERVAL_JOIN_BIN_WIDTH, str(DEFAULT_BIN_WIDTH)),
         (INTERVAL_JOIN_LOW_MEMORY, "false"),
-        (CHECK_INT32_BOUNDS, "true"),
         (MAX_BROADCAST_BUILD_ROWS, str(DEFAULT_MAX_BROADCAST_BUILD_ROWS)),
         (BINNED_JOIN_PARTITIONS, str(DEFAULT_BINNED_JOIN_PARTITIONS)),
     ):

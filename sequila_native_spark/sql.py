@@ -34,6 +34,7 @@ across executors like any equi-join.
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -144,6 +145,51 @@ def _bounds(ranges):
     return a_start, a_end, b_start, b_end
 
 
+class _JoinText(NamedTuple):
+    """A statement's two-relation interval join, split at its FROM clause."""
+
+    head: str  # "SELECT <list> " (FROM excluded)
+    rel1: str
+    a: str
+    rel2: str
+    b: str
+    tail: str  # from the first WHERE/GROUP BY/HAVING/ORDER BY/LIMIT on, or ""
+    comma: bool  # the "FROM t1 a, t2 b WHERE" phrasing
+    equi: list
+    ranges: list
+    residual: list
+    bounds: tuple  # (a_start, a_end, b_start, b_end)
+
+
+def _recognize_join(text: str) -> _JoinText | None:
+    """Recognize ``text`` (stripped, no trailing ``;``) as ``SELECT … FROM
+    t1 [AS] a JOIN t2 [AS] b ON <cond> [tail]`` or its comma phrasing, with
+    a condition of equi-keys plus the two range conjuncts; None otherwise.
+    Aliases default to the bare table names."""
+    if not re.match(r"SELECT\b", text, re.IGNORECASE):
+        return None
+    comma = False
+    m = _JOIN_FROM.search(text)
+    if not m:
+        m = _COMMA_FROM.search(text)
+        comma = True
+    if not m:
+        return None
+    rel1, a, rel2, b = m.groups()
+    a = a or rel1.split(".")[-1]
+    b = b or rel2.split(".")[-1]
+    rest = text[m.end():]
+    t = _TAIL.search(rest)
+    cond, tail = (rest[: t.start()], rest[t.start():]) if t else (rest, "")
+    parsed = _classify(cond.strip(), a, b)
+    if parsed is None:
+        return None
+    bounds = _bounds(parsed[1])
+    if bounds is None:
+        return None
+    return _JoinText(text[: m.start()], rel1, a, rel2, b, tail, comma, *parsed, bounds)
+
+
 def _expand_stars(select_list: str, a: str, b: str, a_cols, b_cols):
     items = _split_top_commas(select_list)
     out = []
@@ -166,40 +212,17 @@ def rewrite_interval_sql(
     text = sql.strip().rstrip(";")
     if re.search(r"\bUNION\b|\bLEFT\b|\bRIGHT\b|\bFULL\b|\bCROSS\b|/\*", text, re.IGNORECASE):
         return None
-    if not re.match(r"SELECT\b", text, re.IGNORECASE):
-        return None
     if len(re.findall(r"\bJOIN\b", text, re.IGNORECASE)) > 1:
         return None
     if len(re.findall(r"\bSELECT\b", text, re.IGNORECASE)) > 1:  # subqueries
         return None
-
-    comma = False
-    m = _JOIN_FROM.search(text)
-    if not m:
-        m = _COMMA_FROM.search(text)
-        comma = True
-    if not m:
+    j = _recognize_join(text)
+    if j is None or j.a == j.b:
         return None
-    rel1, a, rel2, b = m.groups()
-    a = a or rel1.split(".")[-1]
-    b = b or rel2.split(".")[-1]
-    if a == b:
-        return None
-
-    head = text[: m.start()]  # "SELECT <list> " (FROM excluded)
-    rest = text[m.end():]
-    t = _TAIL.search(rest)
-    cond, tail = (rest[: t.start()], rest[t.start():]) if t else (rest, "")
-    if comma and t and t.group(1).upper() == "WHERE":
+    if j.comma and j.tail[:5].upper() == "WHERE":
         return None  # two WHEREs can't happen; defensive
-    parsed = _classify(cond.strip(), a, b)
-    if parsed is None:
-        return None
-    equi, ranges, residual = parsed
-    bounds = _bounds(ranges)
-    if bounds is None:
-        return None
-    a_start, a_end, b_start, b_end = bounds
+    rel1, a, rel2, b, tail = j.rel1, j.a, j.rel2, j.b, j.tail
+    a_start, a_end, b_start, b_end = j.bounds
 
     conf = SequilaConf.from_spark(spark)
     if not conf.prefer_interval_join:
@@ -222,7 +245,7 @@ def rewrite_interval_sql(
     ):
         return None  # closed-interval + bin math is integer-only
 
-    sel = re.sub(r"^SELECT\s+", "", head.strip(), flags=re.IGNORECASE)
+    sel = re.sub(r"^SELECT\s+", "", j.head.strip(), flags=re.IGNORECASE)
     sel = _expand_stars(sel, a, b, list(sch1), list(sch2))
 
     def binned(rel: str, alias: str, s: str, e: str) -> str:
@@ -238,9 +261,9 @@ def rewrite_interval_sql(
         # first-common-bin: emit each qualifying pair exactly once
         f"{a}.{_BIN} = greatest({_bin_sql(f'{a}.{a_start}', width)}, "
         f"{_bin_sql(f'{b}.{b_start}', width)})",
-        *equi,
-        *[r[3] for r in ranges],
-        *residual,
+        *j.equi,
+        *[r[3] for r in j.ranges],
+        *j.residual,
     ]
     return (
         f"SELECT /*+ SHUFFLE_HASH({a}, {b}) */ {sel} "
@@ -264,27 +287,8 @@ def _nearest_from_sql(spark: SparkSession, sql: str) -> DataFrame | None:
     """
     from sequila_native_spark.operators.nearest_join import nearest_join
 
-    text = sql.strip().rstrip(";")
-    if not re.match(r"SELECT\b", text, re.IGNORECASE):
-        return None
-    m = _JOIN_FROM.search(text)
-    if not m:
-        m = _COMMA_FROM.search(text)
-    if not m:
-        return None
-    rel1, a, rel2, b = m.groups()
-    a = a or rel1.split(".")[-1]
-    b = b or rel2.split(".")[-1]
-    head = text[: m.start()]
-    rest = text[m.end():]
-    t = _TAIL.search(rest)
-    cond, tail = (rest[: t.start()], rest[t.start():]) if t else (rest, "")
-    parsed = _classify(cond.strip(), a, b)
-    if parsed is None:
-        return None
-    equi, ranges, residual = parsed
-    bounds = _bounds(ranges)
-    if bounds is None:
+    j = _recognize_join(sql.strip().rstrip(";"))
+    if j is None:
         return None
 
     def unsupported(why: str):
@@ -293,14 +297,14 @@ def _nearest_from_sql(spark: SparkSession, sql: str) -> DataFrame | None:
             f"sequila_native_spark.nearest_join(...) directly for this query"
         )
 
-    sel = re.sub(r"^SELECT\s+", "", head.strip(), flags=re.IGNORECASE).strip()
+    sel = re.sub(r"^SELECT\s+", "", j.head.strip(), flags=re.IGNORECASE).strip()
     if sel != "*":
         raise unsupported(f"only SELECT * is supported, got {sel!r}")
-    if residual:
-        raise unsupported(f"residual predicates {residual} are not supported")
-    if tail.strip():
-        raise unsupported(f"trailing clause {tail.strip()!r} is not supported")
-    strict_ops = {r[1] for r in ranges}
+    if j.residual:
+        raise unsupported(f"residual predicates {j.residual} are not supported")
+    if j.tail.strip():
+        raise unsupported(f"trailing clause {j.tail.strip()!r} is not supported")
+    strict_ops = {r[1] for r in j.ranges}
     if strict_ops == {"<", ">"}:
         strict = True
     elif strict_ops == {"<=", ">="}:
@@ -308,18 +312,17 @@ def _nearest_from_sql(spark: SparkSession, sql: str) -> DataFrame | None:
     else:
         raise unsupported("mixed strict/closed range conjuncts")
     on_keys = []
-    for conj in equi:
-        em = _CMP.match(conj)
-        q1, c1, _, q2, c2 = em.groups()
-        if q1 == b:
+    for conj in j.equi:
+        q1, c1, _, _, c2 = _CMP.match(conj).groups()
+        if q1 == j.b:
             c1, c2 = c2, c1
         if c1 != c2:
             raise unsupported(f"equi-key columns differ: {conj!r}")
         on_keys.append(c1)
-    a_start, a_end, b_start, b_end = bounds
+    a_start, a_end, b_start, b_end = j.bounds
     return nearest_join(
-        spark.table(rel1),
-        spark.table(rel2),
+        spark.table(j.rel1),
+        spark.table(j.rel2),
         on=on_keys or None,
         left_start=a_start,
         left_end=a_end,

@@ -136,11 +136,55 @@ def test_with_bounds_int32_error_text(spark, strict, start, end, value, column):
         Exception,
         match=rf"Cast error: Can't cast value {value} to type Int32 \(column {column}\)",
     ):
-        _with_bounds(df, "s", "e", _LS, _LE, strict, True).collect()
+        _with_bounds(df, "s", "e", _LS, _LE, strict).collect()
+
+
+@pytest.fixture
+def ansi_off_unchecked(spark):
+    """ANSI mode off, where a plain int cast wraps 2^31 to -2^31, plus the
+    retired ``spark.sequila.checkInt32Bounds=false``, which must be ignored
+    like any unknown key."""
+    keys = ("spark.sql.ansi.enabled", "spark.sequila.checkInt32Bounds")
+    before = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "false")
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("op, algorithm", [
+    (overlap_join, "naive"),
+    (overlap_join, "binning"),
+    (overlap_join, "index"),
+    (count_overlaps, "binning"),
+    (count_overlaps, "index"),
+    (nearest_join, "index"),
+    (nearest_join, "partitioned"),
+], ids=lambda v: getattr(v, "__name__", v))
+def test_out_of_range_bound_raises_with_ansi_off(
+    spark, ansi_off_unchecked, op, algorithm
+):
+    # wrapped, the build's end reads -2^31 and [5, 10] would match nothing
+    build = spark.createDataFrame(
+        [("c", 1, 2**31)], "contig string, pos_start int, pos_end long"
+    )
+    probe = spark.createDataFrame(
+        [("c", 5, 10)], "contig string, pos_start int, pos_end int"
+    )
+    with pytest.raises(
+        Exception, match=r"Cast error: Can't cast value 2147483648 to type Int32"
+    ):
+        op(build, probe, "contig", algorithm=algorithm).collect()
 
 
 @pytest.mark.parametrize("strict", [False, True])
 def test_with_bounds_in_range_values(spark, strict):
     df = spark.createDataFrame([(-(2**31), 2**31 - 1)], "s long, e long")
-    (row,) = _with_bounds(df, "s", "e", _LS, _LE, strict, True).collect()
+    (row,) = _with_bounds(df, "s", "e", _LS, _LE, strict).collect()
     assert (row[_LS], row[_LE]) == (-(2**31), 2**31 - 1 - strict)
