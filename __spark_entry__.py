@@ -222,7 +222,7 @@ def _skew_contig(key_col) -> F.Column:
 
 def q_overlap_count_skewed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship join under 50% single-key skew on BOTH sides. Proves the
-    binned join's claim (DESIGN.md): the explicit repartition on
+    binned join's claim (DESIGN.md): the hash exchange on
     ``(contig, bin)`` spreads a hot contig across its coordinate bins, so one
     dominant key cannot collapse the join onto one task the way a plain
     per-contig shuffle would.

@@ -86,6 +86,8 @@ from sequila_native_spark.session import (
 _LS, _LE = "__sq_ls", "__sq_le"
 _RS, _RE = "__sq_rs", "__sq_re"
 _LBIN, _RBIN = "__sq_lbin", "__sq_rbin"
+# Side qualifiers of the binned join.
+_QL, _QR = "__sq_l", "__sq_r"
 
 
 class BuildSideTooLargeError(RuntimeError):
@@ -423,7 +425,11 @@ def _with_bounds(
     )
 
 
-def _bound_sql(col: str, name: str, shrink: bool) -> str:
+def _quote(name: str) -> str:
+    return "`%s`" % name.replace("`", "``")
+
+
+def _bound_sql(col: str, name: str, shrink: bool, narrow: bool = False) -> str:
     """SQL for one int32 bound column.
 
     Strict normalization (``intervals.rs:67-69``) shrinks the end by 1
@@ -437,8 +443,16 @@ def _bound_sql(col: str, name: str, shrink: bool) -> str:
     the check inside whole-stage codegen.
     The quote in "Can't" is ``chr(39)``, so the text does not depend on
     the parser's string-escape settings.
+
+    ``narrow``: the column's type is int or narrower, so an unshrunk value
+    cannot leave int32 and gets a plain cast. Catalyst would fold the
+    check away, but only after analysing it: ~14 ms of ``spark.sql`` a
+    statement on a 4-vCPU host, which a one-row region query pays on
+    every request.
     """
-    v = "CAST(`%s` AS BIGINT)" % col.replace("`", "``")
+    if narrow and not shrink:
+        return f"CAST({_quote(col)} AS INT) AS `{name}`"
+    v = f"CAST({_quote(col)} AS BIGINT)"
     if shrink:
         v = f"({v} - 1)"
     return (
@@ -449,9 +463,65 @@ def _bound_sql(col: str, name: str, shrink: bool) -> str:
     )
 
 
-def _bin_of(col: Column, width: int) -> Column:
-    # floor division exact for |coord| < 2^31 (double mantissa is 53 bits)
-    return F.floor(col.cast("double") / F.lit(float(width))).cast("long")
+# The binned join (SURVEY.md §7 step 3), written once as SQL text: the
+# DataFrame operators (:func:`_binned_pairs`) and the SQL rewrite
+# (``sql.rewrite_interval_sql``) splice in the same fragments. Each side
+# holds its int32 bound columns (:func:`_bound_sql`) and one bin column
+# (:func:`_bins_sql`); the two sides' temp names differ, so
+# :func:`binned_on_sql` needs no qualifier.
+#
+# High key multiplicity (hundreds of rows per (key, bin) on both sides)
+# makes sort-merge emission the bottleneck once the small side outgrows the
+# broadcast threshold; a shuffled-hash build probes straight out of a hash
+# table instead. AQE still demotes to broadcast-hash at runtime when a side
+# turns out small.
+BINNED_HINT = "shuffle_hash"
+
+
+def _bin(col: str, width: int) -> str:
+    # floor division via double: exact for |coord| < 2^31 (53-bit mantissa)
+    return f"CAST(FLOOR(CAST({col} AS DOUBLE) / {float(width)}) AS BIGINT)"
+
+
+def _bins_sql(start: str, end: str, name: str, width: int) -> str:
+    """One row per ``width``-bin that ``[start, end]`` touches, as column
+    ``name``. ``sequence(bin(s), greatest(bin(s), bin(e)))`` guards
+    inverted intervals (start > end): they occupy their start bin only."""
+    b = _bin(start, width)
+    return f"explode(sequence({b}, greatest({b}, {_bin(end, width)}))) AS {name}"
+
+
+def binned_on_sql(equi: list[str], width: int) -> str:
+    """The binned join's condition: the equi-key conjuncts, the shared
+    bin, the exact overlap of the checked bounds, and the first common
+    bin. Two overlapping intervals share every bin of their overlap,
+    whose first bin is ``greatest(bin(ls), bin(rs))``; keeping only that
+    bin emits each pair exactly once, with no dedup shuffle."""
+    return " AND ".join([
+        *equi,
+        f"{_LBIN} = {_RBIN}",
+        f"{_LS} <= {_RE}",
+        f"{_LE} >= {_RS}",
+        f"{_LBIN} = greatest({_bin(_LS, width)}, {_bin(_RS, width)})",
+    ])
+
+
+def binned_side_sql(
+    rel: str, alias: str, start: str, end: str, shrink: bool, left: bool,
+    width: int, types: dict[str, str],
+) -> str:
+    """FROM-clause text for one side of the binned join over table
+    ``rel``: its rows with the checked bounds and the bin column, as
+    ``alias``. ``left`` picks the left side's temp names; ``types`` maps
+    ``rel``'s columns to their SQL type names."""
+    s, e, b = (_LS, _LE, _LBIN) if left else (_RS, _RE, _RBIN)
+    narrow = {"tinyint", "smallint", "int"}
+    return (
+        f"(SELECT *, {_bins_sql(s, e, b, width)} FROM (SELECT *, "
+        f"{_bound_sql(start, s, False, types[start] in narrow)}, "
+        f"{_bound_sql(end, e, shrink, types[end] in narrow)} "
+        f"FROM {rel})) {alias}"
+    )
 
 
 def _auto_bin_width(lb: DataFrame, rb: DataFrame) -> int:
@@ -504,11 +574,13 @@ def resolve_bin_width(
 ) -> int:
     """Resolve ``"auto"``/None to a concrete width via :func:`_auto_bin_width`.
 
-    The probe frames use ``try_cast`` (overflow → null, ignored by the
-    percentile): the width probe must not be the place an int32-overflow
-    error surfaces — that belongs to the join's own execution, lazily — and
-    a dropped value can only mis-tune the width of a plan that will error
-    before emitting rows anyway.
+    The probe frames use ``try_cast`` to bigint (a value past bigint →
+    null, ignored by the percentile): the width probe must not be the
+    place a bound error surfaces — that belongs to the join's own
+    execution, lazily. The probe is bigint, not int, because a strict end
+    of 2^31 shrinks into int32 and joins: dropped, the other side's short
+    lengths would set a width that explodes that interval into ~10^8
+    bins.
 
     Resolved widths memoize per session, keyed by the semantic hash of the
     two pruned bound plans — a statistics cache, like table stats: repeated
@@ -520,10 +592,12 @@ def resolve_bin_width(
     if width is not None and width != "auto":
         return int(width)
     lb0 = left.select(
-        F.col(ls).try_cast("int").alias(_LS), F.col(le).try_cast("int").alias(_LE)
+        F.col(ls).try_cast("bigint").alias(_LS),
+        F.col(le).try_cast("bigint").alias(_LE),
     )
     rb0 = right.select(
-        F.col(rs).try_cast("int").alias(_RS), F.col(re_).try_cast("int").alias(_RE)
+        F.col(rs).try_cast("bigint").alias(_RS),
+        F.col(re_).try_cast("bigint").alias(_RE),
     )
     cache = key = None
     try:
@@ -724,7 +798,9 @@ def overlap_join(
         )
 
     if algo == "binning":
-        return _frac_filter(_binning_join(lb, rb, l_keys, r_keys, width, out_cols))
+        return _frac_filter(
+            _binned_pairs(lb, rb, l_keys, r_keys, width).select(*out_cols)
+        )
 
     if algo == "index":
         try:
@@ -738,7 +814,7 @@ def overlap_join(
                 width, left, left_start, left_end, right, r_start, r_end
             )
             return _frac_filter(
-                _binning_join(lb, rb, l_keys, r_keys, width, out_cols)
+                _binned_pairs(lb, rb, l_keys, r_keys, width).select(*out_cols)
             )
 
     raise AssertionError(f"unreachable algorithm {algo}")
@@ -754,77 +830,27 @@ def _binned_pairs(
     l_keys: tuple[str, ...] | list[str],
     r_keys: list[str],
     width: int,
-    *,
-    boost_parts: bool = True,
-):
-    """Binned candidate join shared by overlap_join and count_overlaps.
+) -> DataFrame:
+    """Binned candidate join shared by overlap_join and count_overlaps:
+    every overlapping pair of bound-stamped rows in one equi-key group,
+    with all columns of both sides.
 
-    Each interval explodes into the coordinate bins it touches; a pair of
-    overlapping intervals shares every bin of the overlap region, whose first
-    bin is ``greatest(bin(ls), bin(rs))`` — keeping only that bin emits each
-    pair exactly once with no distinct/dedup shuffle (SURVEY.md §7 risk (c)).
-
-    ``sequence(bin(start), greatest(bin(start), bin(end)))`` guards against
-    inverted intervals (start > end) generating descending sequences; such
-    intervals occupy their start bin only and still match via the exact
-    filter in the common one-sided case.
-
-    Returns the joined-and-filtered DataFrame with all columns of both sides.
+    One ``selectExpr`` per side adds the bin column and one SQL condition
+    joins them (:func:`binned_on_sql`); the keys are qualified by side,
+    since a caller's two sides may share key names. The join's exchange is
+    the one EnsureRequirements inserts on ``(keys…, bin)``, so
+    ``spark.sql.shuffle.partitions`` and AQE size it, and two sides
+    bucketed by the equi-keys join with no exchange at all.
     """
-    l_bins = F.sequence(
-        _bin_of(F.col(_LS), width),
-        F.greatest(_bin_of(F.col(_LS), width), _bin_of(F.col(_LE), width)),
+    le = lb.selectExpr("*", _bins_sql(_LS, _LE, _LBIN, width))
+    re_ = rb.selectExpr("*", _bins_sql(_RS, _RE, _RBIN, width))
+    cond = binned_on_sql(
+        [f"{_QL}.{_quote(k)} = {_QR}.{_quote(rk)}" for k, rk in zip(l_keys, r_keys)],
+        width,
     )
-    r_bins = F.sequence(
-        _bin_of(F.col(_RS), width),
-        F.greatest(_bin_of(F.col(_RS), width), _bin_of(F.col(_RE), width)),
+    return le.alias(_QL).hint(BINNED_HINT).join(
+        re_.alias(_QR).hint(BINNED_HINT), F.expr(cond), "inner"
     )
-    le = lb.withColumn(_LBIN, F.explode(l_bins))
-    re_ = rb.withColumn(_RBIN, F.explode(r_bins))
-    # The binned join is pure-JVM emission-bound work: it wants many small
-    # tasks (multiple waves), while the session's shuffle.partitions may be
-    # tuned low for Arrow-UDF stages (one wave amortizes the fixed per-task
-    # Python worker cost). Pre-hash-partition both sides on the exact join
-    # keys at the binned width — EnsureRequirements sees the co-partitioning
-    # and adds no further exchange, so the join itself runs at n_parts with
-    # zero extra shuffles. n_parts=0 inherits the session width (old path).
-    conf = SequilaConf.from_spark(lb.sparkSession)
-    if not boost_parts and conf.binned_join_partitions == "auto":
-        # "auto" widens the shuffle for full-table pair emission; callers
-        # whose plan evaluates the join more than once over typically
-        # filtered sides (outer padding) inherit the session width instead —
-        # the task-count overhead there outweighs the wave gain. An explicit
-        # integer knob is always honored.
-        n_parts = 0
-    else:
-        n_parts = conf.resolve_binned_join_partitions(lb.sparkSession, (lb, rb))
-    if n_parts > 0:
-        le = le.repartition(n_parts, *[F.col(c) for c in [*l_keys, _LBIN]])
-        re_ = re_.repartition(n_parts, *[F.col(c) for c in [*r_keys, _RBIN]])
-    # n_parts == 0: no forced redistribution — EnsureRequirements inserts the
-    # join's exchange only where the child partitioning doesn't already
-    # satisfy it. This is the co-located path: both sides bucketed by the
-    # equi-keys (HashPartitioning(keys) satisfies the (keys…, bin)
-    # clustering) join with ZERO exchanges, and AQE skew-split stays
-    # available on any exchange that is inserted.
-    # High key multiplicity (hundreds of rows per (key, bin) on both sides)
-    # makes sort-merge emission the bottleneck once the small side outgrows
-    # the broadcast threshold; a shuffled-hash build probes straight out of a
-    # hash table instead. AQE still demotes to broadcast-hash at runtime when
-    # a side turns out small, so the local fast path is preserved.
-    le = le.hint("shuffle_hash")
-    re_ = re_.hint("shuffle_hash")
-
-    cond = le[_LBIN] == re_[_RBIN]
-    for k, rk in zip(l_keys, r_keys):
-        cond = (le[k] == re_[rk]) & cond
-
-    joined = le.join(re_, cond, "inner")
-    exact = overlap_predicate(le[_LS], le[_LE], re_[_RS], re_[_RE])
-    first_common_bin = le[_LBIN] == F.greatest(
-        _bin_of(le[_LS], width), _bin_of(re_[_RS], width)
-    )
-    return joined.where(exact & first_common_bin)
 
 
 _OIDL = "__sq_outer_id_l"
@@ -868,9 +894,7 @@ def _outer_overlap(
         # per-call resolve was a wasted two-table percentile job for the
         # index outers that never reach this branch)
         width = resolve_bin_width(width, lb2, _LS, _LE, rb2, _RS, _RE)
-        pairs = _binned_pairs(
-            lb2, rb2, l_keys, r_keys, width, boost_parts=False
-        ).select(*inner_cols)
+        pairs = _binned_pairs(lb2, rb2, l_keys, r_keys, width).select(*inner_cols)
 
     # `pairs` feeds the output AND each pad branch's matched-id set. The pad
     # branches re-evaluate the inner join — column-pruned to ids+keys+
@@ -913,18 +937,6 @@ def _outer_overlap(
     if stamp_r:
         out = out.unionByName(pad_unmatched(rb2, _OIDR, lb))
     return out
-
-
-def _binning_join(
-    lb: DataFrame,
-    rb: DataFrame,
-    l_keys: tuple[str, ...] | list[str],
-    r_keys: list[str],
-    width: int,
-    out_cols: list[str],
-) -> DataFrame:
-    """Pure-DataFrame binned range join (SURVEY.md §7 step 3)."""
-    return _binned_pairs(lb, rb, l_keys, r_keys, width).select(*out_cols)
 
 
 def _broadcast_index_join(

@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import importlib.util
 import logging
-import math
 import os
 import site
 from dataclasses import dataclass
@@ -42,7 +41,6 @@ INTERVAL_JOIN_ALGORITHM = "spark.sequila.intervalJoinAlgorithm"
 INTERVAL_JOIN_BIN_WIDTH = "spark.sequila.intervalJoinBinWidth"
 INTERVAL_JOIN_LOW_MEMORY = "spark.sequila.intervalJoinLowMemory"
 MAX_BROADCAST_BUILD_ROWS = "spark.sequila.maxBroadcastBuildRows"
-BINNED_JOIN_PARTITIONS = "spark.sequila.binnedJoinPartitions"
 NEAREST_K = "spark.sequila.nearestK"
 # Staleness-retry window for probes racing compact_index_table's two-RENAME
 # swap (util._await_index_table). The in-memory catalog swaps in
@@ -80,33 +78,6 @@ DEFAULT_FIXED_BIN_WIDTH = 5000
 # driver pandas at genomic row widths); <=0 disables the guard. The
 # reference's analogue is accounted build memory (interval_join.rs:624-660).
 DEFAULT_MAX_BROADCAST_BUILD_ROWS = 8_000_000
-# Partition count for the binned join's shuffle. "auto" =
-# max(spark.sql.shuffle.partitions, 4 * defaultParallelism,
-#     input_plan_bytes / 1MB) capped at 4096: the binned join is a pure-JVM
-# high-multiplicity equi-join whose emission cost dominates, so it wants
-# multiple waves of small tasks even when the session's shuffle.partitions is
-# tuned low for Arrow-UDF stages (which pay a fixed per-task worker cost and
-# want exactly one wave) — AND the count must track INPUT SIZE, not just
-# cluster width: at 50x driver scale, 128 fixed partitions measured 128s vs
-# 66s at 1024 (long emission tasks degrade superlinearly), and a
-# width-only auto would hit the same wall on a real 100 TB scan. The byte
-# estimate comes from Catalyst's optimized-plan stats (scan bytes propagated
-# through the operators), so no data pass is paid. 0 disables the explicit
-# repartition and inherits the session shuffle width.
-DEFAULT_BINNED_JOIN_PARTITIONS: int | str = "auto"
-# Width law: width = sqrt(total_pre_explode_bytes / 4096), i.e. optimal
-# bytes-per-task GROWS with total size rather than staying constant. Two
-# serialized single-session A/Bs at the scale-trend rows (r6) pinned it:
-# the 10x row (~240 MB est) wants ~240 parts (240: 13.1-14.5 s vs 128:
-# 20.3-22.2 s vs 480: 18-23 s) while the 50x row (~1.2 GB est) wants ~590
-# (590: 68-89 s vs 512: 79-103 s vs ~1180 [old 1MB-linear law]: 113 s vs
-# 2361: 83-116 s). A linear bytes/task target cannot fit both points;
-# sqrt(total/4096) gives 248 and 554 — both at the measured knee. The
-# shape makes sense for an emission-bound join: per-task fixed overhead
-# grows with width while per-task spill risk grows with total/width, and
-# the balance point moves as sqrt.
-BINNED_JOIN_WIDTH_SQ_BYTES = 4096
-BINNED_JOIN_MAX_PARTITIONS = 4096
 # Reference algorithm enum (session_context.rs:62-72) → our implementations.
 # All reference index flavors are output-equivalent; they differ only in the
 # native index data structure, which in Spark collapses to one numpy index.
@@ -172,7 +143,6 @@ class SequilaConf:
     bin_width: int | str = DEFAULT_BIN_WIDTH  # int or "auto" (p95 of lengths)
     low_memory: bool = False
     max_broadcast_build_rows: int = DEFAULT_MAX_BROADCAST_BUILD_ROWS
-    binned_join_partitions: int | str = DEFAULT_BINNED_JOIN_PARTITIONS
     nearest_k: int = 1  # bedtools closest -k for the CoitreesNearest route
 
     @classmethod
@@ -196,17 +166,6 @@ class SequilaConf:
                     f"{INTERVAL_JOIN_BIN_WIDTH} must be a positive integer or "
                     f"'auto', got {raw_width!r}"
                 ) from None
-        raw_parts = _get(
-            BINNED_JOIN_PARTITIONS, str(DEFAULT_BINNED_JOIN_PARTITIONS)
-        ).strip().lower()
-        if raw_parts != "auto":
-            try:
-                raw_parts = int(raw_parts)
-            except ValueError:
-                raise ValueError(
-                    f"{BINNED_JOIN_PARTITIONS} must be a non-negative integer "
-                    f"or 'auto', got {raw_parts!r}"
-                ) from None
         return cls(
             prefer_interval_join=prefer,
             algorithm=algorithm,
@@ -216,39 +175,8 @@ class SequilaConf:
             max_broadcast_build_rows=int(
                 _get(MAX_BROADCAST_BUILD_ROWS, str(DEFAULT_MAX_BROADCAST_BUILD_ROWS))
             ),
-            binned_join_partitions=raw_parts,
             nearest_k=int(_get(NEAREST_K, "1")),
         )
-
-    def resolve_binned_join_partitions(self, spark: SparkSession, frames=()) -> int:
-        """Concrete shuffle width for the binned join (0 = inherit session).
-
-        ``frames``: the (pre-explode) join inputs — their Catalyst
-        optimized-plan size estimates scale the width beyond the cluster
-        floor so per-task emission stays bounded as data grows (an explicit
-        integer knob bypasses all of this).
-        """
-        if self.binned_join_partitions != "auto":
-            return int(self.binned_join_partitions)
-        shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        width = max(shuffle, 4 * spark.sparkContext.defaultParallelism)
-        total = 0
-        for df in frames:
-            try:
-                b = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-            except Exception:
-                b = 0
-            if 0 < b < (1 << 50):  # huge sentinel = "unknown", skip
-                total += b
-        if total:
-            width = max(
-                width,
-                min(
-                    BINNED_JOIN_MAX_PARTITIONS,
-                    math.isqrt(total // BINNED_JOIN_WIDTH_SQ_BYTES),
-                ),
-            )
-        return width
 
 
 def worker_can_import(module_dir: str, pythonpath: str, cwd: str) -> bool:
@@ -347,7 +275,6 @@ def sequila_session(
         (INTERVAL_JOIN_BIN_WIDTH, str(DEFAULT_BIN_WIDTH)),
         (INTERVAL_JOIN_LOW_MEMORY, "false"),
         (MAX_BROADCAST_BUILD_ROWS, str(DEFAULT_MAX_BROADCAST_BUILD_ROWS)),
-        (BINNED_JOIN_PARTITIONS, str(DEFAULT_BINNED_JOIN_PARTITIONS)),
     ):
         if spark.conf.get(key, None) is None:
             spark.conf.set(key, default)

@@ -6,10 +6,13 @@ whose filter is the 2-conjunct range pattern into ``IntervalJoinExec``
 (``sequila_physical_planner.rs:27-101``, recognizer ``intervals.rs:30-232``).
 Catalyst is not extensible from Python, so this module does the equivalent one
 level up: recognize the pattern in the SQL *text* and rewrite the FROM clause
-into the binned equi-join (same plan `overlap_join(algorithm="binning")`
-produces — explode fixed-width bins, equi-join on ``(keys…, bin)``, exact
-filter, first-common-bin dedup), then hand the rewritten text to
-``spark.sql``. Everything else in the statement (projection, aggregates,
+into the binned equi-join (the SQL fragments `overlap_join(algorithm="binning")`
+is built from, in ``operators/interval_join.py`` — int32-checked bounds,
+fixed-width bins, equi-join on ``(keys…, bin)``, exact filter,
+first-common-bin dedup), then hand the rewritten text to ``spark.sql``.
+The checked bounds replace the statement's two range conjuncts, so a
+``bigint`` bound past int32 raises the reference's ``Cast error``, as the
+API does. Everything else in the statement (projection, aggregates,
 GROUP/ORDER/LIMIT, residual predicates) is untouched, so the full inherited
 SQL surface keeps working.
 
@@ -39,9 +42,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.interval_join import BINNED_HINT, binned_on_sql, binned_side_sql
 from .session import DEFAULT_FIXED_BIN_WIDTH, SequilaConf
-
-_BIN = "__sq_bin"
 
 # one comparison between the two relations: q1.c1 <op> q2.c2
 _CMP = re.compile(
@@ -61,12 +63,6 @@ _COMMA_FROM = re.compile(
 )
 _TAIL = re.compile(r"\b(WHERE|GROUP\s+BY|HAVING|ORDER\s+BY|LIMIT)\b", re.IGNORECASE)
 _BAIL = re.compile(r"\bOR\b|[()']", re.IGNORECASE)
-
-
-def _bin_sql(qual_col: str, width: int) -> str:
-    # mirrors operators/interval_join.py::_bin_of — floor division via double,
-    # exact for |coord| < 2^31 (53-bit mantissa)
-    return f"CAST(FLOOR(CAST({qual_col} AS DOUBLE) / {float(width)}) AS BIGINT)"
 
 
 def _split_top_commas(s: str) -> list[str]:
@@ -248,27 +244,14 @@ def rewrite_interval_sql(
     sel = re.sub(r"^SELECT\s+", "", j.head.strip(), flags=re.IGNORECASE)
     sel = _expand_stars(sel, a, b, list(sch1), list(sch2))
 
-    def binned(rel: str, alias: str, s: str, e: str) -> str:
-        bs, be = _bin_sql(f"{alias}.{s}", width), _bin_sql(f"{alias}.{e}", width)
-        # sequence(bin(s), greatest(bin(s), bin(e))) guards inverted intervals
-        return (
-            f"(SELECT {alias}.*, explode(sequence({bs}, greatest({bs}, {be}))) "
-            f"AS {_BIN} FROM {rel} {alias}) {alias}"
-        )
-
-    on = [
-        f"{a}.{_BIN} = {b}.{_BIN}",
-        # first-common-bin: emit each qualifying pair exactly once
-        f"{a}.{_BIN} = greatest({_bin_sql(f'{a}.{a_start}', width)}, "
-        f"{_bin_sql(f'{b}.{b_start}', width)})",
-        *j.equi,
-        *[r[3] for r in j.ranges],
-        *j.residual,
-    ]
+    # per-conjunct strictness (intervals.rs:67-69): a strict `a.e > b.s`
+    # shrinks a's end, a strict `a.s < b.e` shrinks b's end
+    ops = {r[1] for r in j.ranges}
+    on = [binned_on_sql(j.equi, width), *j.residual]
     return (
-        f"SELECT /*+ SHUFFLE_HASH({a}, {b}) */ {sel} "
-        f"FROM {binned(rel1, a, a_start, a_end)} "
-        f"JOIN {binned(rel2, b, b_start, b_end)} "
+        f"SELECT /*+ {BINNED_HINT}({a}, {b}) */ {sel} "
+        f"FROM {binned_side_sql(rel1, a, a_start, a_end, '>' in ops, True, width, sch1)} "
+        f"JOIN {binned_side_sql(rel2, b, b_start, b_end, '<' in ops, False, width, sch2)} "
         f"ON {' AND '.join(on)}{tail and ' ' + tail.strip()}"
     )
 
@@ -490,6 +473,16 @@ def _literal_comment_spans(sql: str) -> list[tuple[int, int]]:
         else:
             i += 1
     return spans
+
+
+def _blank_comments(sql: str) -> str:
+    """``sql`` with each comment replaced by spaces, so a comment cannot
+    hide a conjunct from the join recognizer. ``/*+ hints */`` stay: they
+    change the plan, and the rewrite leaves a hinted statement alone."""
+    for a, b in _literal_comment_spans(sql):
+        if sql[a] in "-/" and not sql.startswith("/*+", a):
+            sql = sql[:a] + " " * (b - a) + sql[b:]
+    return sql
 
 
 def expand_sequila_tvfs(spark: SparkSession, sql: str) -> str:
@@ -975,12 +968,13 @@ def sequila_sql(spark: SparkSession, sql: str, *, bin_width: int | None = None) 
     aggregate spec, e.g. ``'n=count;total=sum:score'``.
     """
     sql = expand_sequila_tvfs(spark, sql)
+    text = _blank_comments(sql)
     mode = SequilaConf.from_spark(spark).join_mode
     if mode == "nearest":
-        df = _nearest_from_sql(spark, sql)
+        df = _nearest_from_sql(spark, text)
         if df is not None:
             return df
-    rewritten = rewrite_interval_sql(spark, sql, bin_width=bin_width)
+    rewritten = rewrite_interval_sql(spark, text, bin_width=bin_width)
     if mode == "count_overlaps" and rewritten is not None:
         raise ValueError(
             "CoitreesCountOverlaps is broken and untested in the reference "

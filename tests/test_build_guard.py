@@ -25,6 +25,7 @@ from sequila_native_spark.operators.interval_join import (
     guarded_build_arrow,
 )
 from sequila_native_spark.session import MAX_BROADCAST_BUILD_ROWS
+from sequila_native_spark.sql import sequila_sql
 from tests.conftest import rows_set
 
 
@@ -181,6 +182,52 @@ def test_out_of_range_bound_raises_with_ansi_off(
         Exception, match=r"Cast error: Can't cast value 2147483648 to type Int32"
     ):
         op(build, probe, "contig", algorithm=algorithm).collect()
+
+
+@pytest.mark.parametrize("strict, end, raises", [
+    (False, 2**31, True),
+    (True, 2**31 + 1, True),  # a strict end shrinks by 1 before the check
+    (True, 2**31, False),  # ... so 2^31 - 1 fits
+])
+def test_sql_bound_check_matches_overlap_join(
+    spark, ansi_off_unchecked, strict, end, raises
+):
+    """``sequila_sql`` checks the same int32 bounds as ``overlap_join``:
+    with ANSI off both raise the reference's error on a ``bigint`` end
+    past int32, or both answer."""
+    build = spark.createDataFrame(
+        [("c", 1, end)], "contig string, pos_start int, pos_end long"
+    )
+    probe = spark.createDataFrame(
+        [("c", 5, 10)], "contig string, pos_start int, pos_end int"
+    )
+    build.createOrReplaceTempView("guard_build")
+    probe.createOrReplaceTempView("guard_probe")
+    lt, gt = ("<", ">") if strict else ("<=", ">=")
+    sql = (
+        "SELECT count(*) AS n FROM guard_build a JOIN guard_probe b "
+        f"ON a.contig = b.contig AND a.pos_start {lt} b.pos_end "
+        f"AND a.pos_end {gt} b.pos_start"
+    )
+    runs = {
+        "sequila_sql": lambda: sequila_sql(spark, sql).first()["n"],
+        "overlap_join": lambda: overlap_join(
+            build, probe, "contig", strict=strict
+        ).count(),
+    }
+    try:
+        for name, run in runs.items():
+            if raises:
+                with pytest.raises(Exception, match=(
+                    r"Cast error: Can't cast value 2147483648 to type Int32 "
+                    r"\(column __sq_le\)"
+                )):
+                    run()
+            else:
+                assert run() == 1, name
+    finally:
+        spark.catalog.dropTempView("guard_build")
+        spark.catalog.dropTempView("guard_probe")
 
 
 @pytest.mark.parametrize("strict", [False, True])

@@ -64,10 +64,10 @@ def test_small_side_broadcasts(spark):
 
 
 def test_bucketed_tables_join_without_exchange(spark, reads, targets, tmp_path):
-    """Co-located interval join: both sides bucketed by the equi-key and
-    binnedJoinPartitions=0 -> the binned join runs with ZERO exchanges
-    before it (HashPartitioning(contig) satisfies the (contig, bin)
-    clustering, and matching bucket counts make the sides co-partitioned).
+    """Co-located interval join: both sides bucketed by the equi-key ->
+    the binned join runs with ZERO exchanges before it
+    (HashPartitioning(contig) satisfies the (contig, bin) clustering, and
+    matching bucket counts make the sides co-partitioned).
     The 100 TB repeat-join story: pre-bucketed lakes skip both shuffles."""
     import uuid
 
@@ -82,7 +82,6 @@ def test_bucketed_tables_join_without_exchange(spark, reads, targets, tmp_path):
          .mode("overwrite").saveAsTable(lt))
         (targets.write.bucketBy(n_bkt, "contig").sortBy("contig")
          .mode("overwrite").saveAsTable(rt))
-        spark.conf.set("spark.sequila.binnedJoinPartitions", "0")
         # HashPartitioning(contig) covers a strict subset of the join keys
         # (contig, bin); Spark only accepts subset co-partitioning without a
         # shuffle when this knob is off (default on since 3.3)
@@ -97,61 +96,112 @@ def test_bucketed_tables_join_without_exchange(spark, reads, targets, tmp_path):
         assert join_pos >= 0, plan
         assert "Exchange" not in plan, plan
         # counts still correct vs the unbucketed plan
-        spark.conf.unset("spark.sequila.binnedJoinPartitions")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         want = overlap_join(reads, targets, on="contig", bin_width=1000).count()
         assert oj.count() == want
     finally:
-        spark.conf.unset("spark.sequila.binnedJoinPartitions")
         spark.conf.unset("spark.sql.requireAllClusterKeysForCoPartition")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         spark.sql(f"DROP TABLE IF EXISTS {lt}")
         spark.sql(f"DROP TABLE IF EXISTS {rt}")
 
 
-def test_binned_join_width_scales_with_input_size(spark):
-    """'auto' binned-join width = cluster floor for small inputs, scaled by
-    Catalyst's plan-size estimate for big ones, capped at 4096; an explicit
-    integer knob bypasses everything (round-4 scale fix: fixed width made
-    the 50x scale-trend row superlinear)."""
-    from pyspark.sql import functions as F
+_BINNED_SQL = (
+    "SELECT * FROM plan_reads a JOIN plan_targets b ON a.contig = b.contig "
+    "AND a.pos_start <= b.pos_end AND a.pos_end >= b.pos_start"
+)
 
-    import math
 
-    from sequila_native_spark.session import (
-        BINNED_JOIN_MAX_PARTITIONS,
-        BINNED_JOIN_WIDTH_SQ_BYTES,
-        SequilaConf,
-    )
+@pytest.fixture
+def plan_views(spark, reads, targets):
+    reads.createOrReplaceTempView("plan_reads")
+    targets.createOrReplaceTempView("plan_targets")
+    yield
+    spark.catalog.dropTempView("plan_reads")
+    spark.catalog.dropTempView("plan_targets")
 
-    conf = SequilaConf.from_spark(spark)
-    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    floor = max(shuffle, 4 * spark.sparkContext.defaultParallelism)
 
-    small = spark.range(10).select(F.col("id").cast("int").alias("s"))
-    assert conf.resolve_binned_join_partitions(spark, (small, small)) == floor
+@pytest.mark.parametrize("entry", ["sequila_sql", "overlap_join"])
+def test_binned_plan_is_one_shuffled_hash_join(spark, reads, targets, plan_views, entry):
+    """Both entry points plan the same binned join: one shuffled-hash join
+    on (contig, bin) whose two exchanges are the ones EnsureRequirements
+    inserts, with no forced repartition."""
+    import re
 
-    # ~200 MB estimate via a broadcast cross join (the scale-trend shape)
-    big = spark.range(2_000_000).crossJoin(
-        F.broadcast(spark.range(25).select(F.col("id").alias("rep")))
-    )
-    got = conf.resolve_binned_join_partitions(spark, (big,))
-    est = int(big._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    # fixture really is big: sqrt law exceeds the cluster floor
-    assert math.isqrt(est // BINNED_JOIN_WIDTH_SQ_BYTES) > floor
-    assert floor < got <= BINNED_JOIN_MAX_PARTITIONS
-    assert got == min(
-        BINNED_JOIN_MAX_PARTITIONS,
-        math.isqrt(est // BINNED_JOIN_WIDTH_SQ_BYTES),
-    )
+    from sequila_native_spark import sequila_sql
 
-    # explicit integer knob is honored verbatim
-    spark.conf.set("spark.sequila.binnedJoinPartitions", "7")
+    if entry == "sequila_sql":
+        df = sequila_sql(spark, _BINNED_SQL)
+    else:
+        df = overlap_join(reads, targets, on="contig", algorithm="binning",
+                          bin_width=5000)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    joins = re.findall(r"ShuffledHashJoin \[(\w+)#\d+, (\w+)#\d+L\], "
+                       r"\[(\w+)#\d+, (\w+)#\d+L\]", plan)
+    assert len(joins) == 1 and plan.count("ShuffledHashJoin") == 1, plan
+    assert joins[0][1::2] == ("__sq_lbin", "__sq_rbin"), plan
+    exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#\d+, (\w+)#\d+L, "
+                           r"\d+\), (\w+)", plan)
+    assert sorted(e[1:] for e in exchanges) == [
+        ("__sq_lbin", "ENSURE_REQUIREMENTS"), ("__sq_rbin", "ENSURE_REQUIREMENTS"),
+    ], plan
+    assert plan.count("Exchange") == 2, plan
+    assert "REPARTITION_BY_NUM" not in plan, plan
+
+
+def _round_trips(spark, build) -> list[str]:
+    """The py4j commands this thread sends while ``build`` runs; other
+    threads' commands are not the build's. The collector runs first and
+    is off meanwhile: it would release JVM objects of earlier calls inside
+    the count, at random."""
+    import gc
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == me:
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    gc.collect()
+    gc.disable()
+    client.send_command = counting
     try:
-        c2 = SequilaConf.from_spark(spark)
-        assert c2.resolve_binned_join_partitions(spark, (big,)) == 7
+        build()
     finally:
-        spark.conf.unset("spark.sequila.binnedJoinPartitions")
+        del client.send_command
+        gc.enable()
+    return sent
+
+
+def test_binned_join_build_round_trips(spark, reads, targets, plan_views):
+    """Building (not running) a binned join stays a few dozen py4j round
+    trips: the plan is SQL text, not a chain of Column-API calls (each of
+    which is a round trip plus PySpark's call-site capture). Measured on
+    PySpark 4.1.2: 86 for overlap_join(binning), 23 for sequila_sql; the
+    Column-API build made 683."""
+    from collections import Counter
+
+    from sequila_native_spark import sequila_sql
+
+    def api():
+        overlap_join(reads, targets, on="contig", algorithm="binning",
+                     bin_width=5000)
+
+    def sql():
+        sequila_sql(spark, _BINNED_SQL)
+
+    for build, bound in ((api, 120), (sql, 35)):
+        build()  # warm: first calls resolve and cache JVM classes
+        sent = _round_trips(spark, build)
+        heads = Counter(c.split("\n", 3)[2] if c.count("\n") > 2 else c
+                        for c in sent)
+        assert 0 < len(sent) <= bound, (build.__name__, len(sent),
+                                         heads.most_common(8))
 
 
 def test_session_scoped_cache_stable_key_and_cap(spark):

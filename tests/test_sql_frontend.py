@@ -78,7 +78,7 @@ def test_rewritten_plan_is_equi_join(spark):
     sql = RECOGNIZED[0]
     rewritten = rewrite_interval_sql(spark, sql)
     plan = spark.sql(rewritten)._jdf.queryExecution().executedPlan().toString()
-    assert "__sq_bin" in plan
+    assert "__sq_lbin" in plan and "__sq_rbin" in plan
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan
 
 
@@ -131,6 +131,33 @@ def test_non_integral_bounds_fall_back(spark):
         assert fast == slow
     finally:
         spark.catalog.dropTempView("sql_reads_f")
+
+
+@pytest.mark.parametrize("comment", ["/* c */", "-- c"])
+def test_nearest_mode_sees_through_comments(spark, comment):
+    """A comment after the last conjunct does not hide it from the
+    recognizer: under CoitreesNearest the statement keeps nearest
+    semantics instead of running as a plain overlap join."""
+    from sequila_native_spark import nearest_join
+
+    schema = "contig string, pos_start int, pos_end int"
+    a = spark.createDataFrame([("c", 1, 10), ("c", 100, 110)], schema)
+    b = spark.createDataFrame([("c", 20, 30)], schema)  # overlaps nothing
+    a.createOrReplaceTempView("near_a")
+    b.createOrReplaceTempView("near_b")
+    sql = (
+        "SELECT * FROM near_a a JOIN near_b b ON a.contig = b.contig "
+        f"AND a.pos_start <= b.pos_end AND a.pos_end >= b.pos_start {comment}"
+    )
+    want = sorted(map(tuple, nearest_join(a, b, on="contig").collect()))
+    assert len(want) == 1
+    spark.conf.set("spark.sequila.intervalJoinAlgorithm", "CoitreesNearest")
+    try:
+        assert sorted(map(tuple, sequila_sql(spark, sql).collect())) == want
+    finally:
+        spark.conf.unset("spark.sequila.intervalJoinAlgorithm")
+        spark.catalog.dropTempView("near_a")
+        spark.catalog.dropTempView("near_b")
 
 
 # ---------------------------------------------------------------------------
