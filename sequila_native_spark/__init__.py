@@ -77,7 +77,24 @@ from sequila_native_spark.util import (
     index_table_file_stats,
     maintain_index,
 )
-from sequila_native_spark import functions, plans, sources, streaming  # noqa: F401
+
+# Subpackages outside the interval surface load on first access (PEP 562):
+# importing the package for an interval join does not import them.
+_SUBPACKAGES = ("functions", "plans", "sources", "streaming")
+
+
+def __getattr__(name: str):
+    if name in _SUBPACKAGES:
+        import importlib
+
+        return importlib.import_module(f"{__name__}.{name}")
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+
+
+def __dir__() -> list[str]:
+    # the names an eager import showed: the lazy-load helpers are not API
+    return sorted({*globals(), *_SUBPACKAGES}
+                  - {"_SUBPACKAGES", "__getattr__", "__dir__"})
 
 __all__ = [
     "SequilaConf",

@@ -67,6 +67,7 @@ from sequila_native_spark.operators.interval_join import (
     _ints,
     _key_groups,
     _probe_spans,
+    _quote,
     _with_bounds,
     broadcast_build,
     compact_index_arrays,
@@ -153,9 +154,11 @@ def _per_row_overlaps(
     conf = SequilaConf.from_spark(left.sparkSession)
     algo = parse_algorithm(algorithm) if algorithm else conf.algorithm
     sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
+    # one schema read per input: the frame caches what validate_sides read
+    lschema, rschema = left.schema, right.schema
     out_cols = [count_col] if cover_col is None else [count_col, cover_col]
     for c in out_cols:
-        if c in right.columns:
+        if c in rschema.names:
             raise ValueError(f"output column {c!r} already exists on right side")
     # no Column call unless asked: the first one in a driver process pays
     # PySpark's call-site capture, which imports IPython when installed
@@ -172,14 +175,12 @@ def _per_row_overlaps(
         )
     l_keys = [p[0] for p in sides.on]
     r_keys = [p[1] for p in sides.on]
-    # only the left's key and bound columns are needed
-    build = left.select(*dict.fromkeys([*l_keys, left_start, left_end]))
-    lb = _with_bounds(build, left_start, left_end, _LS, _LE, strict)
+    lb = _count_build(left, lschema, l_keys, left_start, left_end, strict)
 
     # the kernels answer plain overlap, and their dict lookups can neither
     # coerce 1 = '1' nor hash keys outside the Arrow key types
     if (algo == "index" and frac_pred is None and not sides.mixed_keys
-            and _arrow_keys(build, l_keys)):
+            and _arrow_keys(lschema, l_keys)):
         if cover_col is None:
             prepare = dict
             kernel = lambda e, qs, qe: (_group_counts(e, qs, qe),)  # noqa: E731
@@ -188,8 +189,8 @@ def _per_row_overlaps(
             kernel = _cov_counts
         try:
             return _index_probe(
-                lb, right, l_keys, r_keys, right_start, right_end,
-                strict, out_cols, prepare, kernel,
+                lb, right, rschema, l_keys, r_keys, right_start, right_end,
+                strict, out_cols, prepare, kernel, conf,
             )
         except BuildSideTooLargeError:
             pass  # accounted-memory fallback, never a blind collect
@@ -199,20 +200,30 @@ def _per_row_overlaps(
         left, left_start, left_end, right, right_start, right_end,
     )
     probe = stamp_row_id(right, _PID)
-    rb = _with_bounds(probe, right_start, right_end, _RS, _RE, strict)
-    aggs = [F.count(F.lit(1)).alias(count_col)]
+    rb = _with_bounds(probe, right_start, right_end, _RS, _RE, strict, rschema)
+    aggs = [F.expr(f"count(1) AS {_quote(count_col)}")]
     if cover_col is not None:
         # in bigint: int32 bounds further apart than 2^31 overflow an int
-        le, re_, ls, rs = (F.col(c).cast("bigint") for c in (_LE, _RE, _LS, _RS))
-        aggs.append(
-            F.sum(F.least(le, re_) - F.greatest(ls, rs) + 1).alias(cover_col)
-        )
+        le, re_, ls, rs = (f"CAST({c} AS BIGINT)" for c in (_LE, _RE, _LS, _RS))
+        aggs.append(F.expr(
+            f"sum(least({le}, {re_}) - greatest({ls}, {rs}) + 1) AS {_quote(cover_col)}"
+        ))
     per_id = _overlap_pairs(lb, rb, l_keys, r_keys, width, frac_pred).groupBy(
         _PID
     ).agg(*aggs)
-    return probe.join(per_id, _PID, "left_outer").select(
-        *right.columns, *(F.coalesce(F.col(c), F.lit(0)).alias(c) for c in out_cols)
+    return probe.join(per_id, _PID, "left_outer").selectExpr(
+        *map(_quote, rschema.names),
+        *(f"coalesce({_quote(c)}, 0) AS {_quote(c)}" for c in out_cols),
     )
+
+
+def _count_build(left, lschema, l_keys, start, end, strict) -> DataFrame:
+    """The count index's build frame: ``left``'s keys and checked bounds,
+    nothing else. count_overlaps, coverage, the overlap filters and
+    overlap_count_agg build it alike, so over one input they share one
+    cached index."""
+    return _with_bounds(left, start, end, _LS, _LE, strict, lschema,
+                        [_quote(k) for k in dict.fromkeys(l_keys)])
 
 
 def _overlap_pairs(
@@ -403,17 +414,19 @@ def _entry_from_sorted(starts_s: np.ndarray, ends_by_start: np.ndarray) -> tuple
     return compact_index_arrays(reg_s, reg_e, np.sort(reg_e), inv_s, inv_e)
 
 
-def _count_index(lb: DataFrame, l_keys):
-    """Broadcast of ``lb``'s per-key count index. count_overlaps,
-    coverage and overlap_count_agg all probe it (coverage adds its prefix
-    sums per task), so over one input they share one cached build."""
+def _count_index(lb: DataFrame, l_keys, conf: SequilaConf):
+    """Broadcast of ``lb``'s per-key count index (``lb`` from
+    :func:`_count_build`). count_overlaps, coverage and overlap_count_agg
+    all probe it (coverage adds its prefix sums per task), so over one
+    input they share one cached build."""
+    cap = conf.max_broadcast_build_rows
     return broadcast_build(
         lb, ("overlap_count", tuple(l_keys)),
-        lambda: _build_count_index(lb, l_keys),
+        lambda: _build_count_index(lb, l_keys, cap), cap,
     )[0]
 
 
-def _build_count_index(lb: DataFrame, l_keys) -> tuple[dict[tuple, tuple], int]:
+def _build_count_index(lb: DataFrame, l_keys, cap: int) -> tuple[dict[tuple, tuple], int]:
     """Collect the build side (guarded, one job) into per-key index entries
     (:func:`_entry_from_sorted`). Returns the index and the number of rows
     collected.
@@ -423,7 +436,7 @@ def _build_count_index(lb: DataFrame, l_keys) -> tuple[dict[tuple, tuple], int]:
     7.5M-row build against the pandas collect and groupby: whole batches
     go to vectorized native code.
     """
-    tbl = guarded_build_arrow(lb)
+    tbl = guarded_build_arrow(lb, cap)
     starts, ends = _ints(tbl, _LS), _ints(tbl, _LE)
     index = {
         key: _entry_from_sorted(starts[pos], ends[pos])
@@ -433,8 +446,8 @@ def _build_count_index(lb: DataFrame, l_keys) -> tuple[dict[tuple, tuple], int]:
 
 
 def _index_probe(
-    lb, right_orig, l_keys, r_keys, right_start, right_end, strict,
-    out_cols: list[str], prepare, kernel,
+    lb, right, rschema, l_keys, r_keys, right_start, right_end, strict,
+    out_cols: list[str], prepare, kernel, conf: SequilaConf,
 ):
     """Broadcast build arrays, streaming vectorized probe, zero shuffle:
     the probe of count_overlaps and coverage.
@@ -445,12 +458,13 @@ def _index_probe(
     once; ``kernel(entry, qs, qe)`` returns one array per output column
     for one key group's probe rows. Needles keep the bound columns' int32
     dtype, which the kernels match to the build arrays (``_as_dtype``).
+    ``rschema`` is ``right``'s schema, which the output extends.
     """
-    rb = _with_bounds(right_orig, right_start, right_end, _RS, _RE, strict)
-    bc = _count_index(lb, l_keys)
-    right_out_cols = list(right_orig.columns)
+    rb = _with_bounds(right, right_start, right_end, _RS, _RE, strict, rschema)
+    bc = _count_index(lb, l_keys, conf)
+    right_out_cols = rschema.names
     out_schema = StructType(
-        list(right_orig.schema.fields)
+        list(rschema.fields)
         + [StructField(c, LongType(), False) for c in out_cols]
     )
 
@@ -473,9 +487,7 @@ def _index_probe(
                 names=[*right_out_cols, *out_cols],
             )
 
-    return rb.mapInArrow(probe_arrow, schema=out_schema).select(
-        *right_out_cols, *out_cols
-    )
+    return rb.mapInArrow(probe_arrow, schema=out_schema)
 
 
 def overlap_count_agg(
@@ -510,19 +522,19 @@ def overlap_count_agg(
     exceeds the broadcast guard (accounted memory, never a blind collect),
     and for key types outside :func:`_arrow_keys`.
     """
+    conf = SequilaConf.from_spark(left.sparkSession)
     sides = validate_sides(
         left, right, on, left_start, left_end, right_start, right_end
     )
+    lschema, rschema = left.schema, right.schema
     l_keys = [p[0] for p in sides.on]
     r_keys = [p[1] for p in sides.on]
-    left_p = left.select(*dict.fromkeys([*l_keys, left_start, left_end]))
-    right_p = right.select(*dict.fromkeys([*r_keys, right_start, right_end]))
-    lb = _with_bounds(left_p, left_start, left_end, _LS, _LE, strict)
+    lb = _count_build(left, lschema, l_keys, left_start, left_end, strict)
 
     bc = None
-    if not sides.mixed_keys and _arrow_keys(left_p, l_keys):
+    if not sides.mixed_keys and _arrow_keys(lschema, l_keys):
         try:
-            bc = _count_index(lb, l_keys)
+            bc = _count_index(lb, l_keys, conf)
         except BuildSideTooLargeError:
             pass
     if bc is None:
@@ -530,6 +542,8 @@ def overlap_count_agg(
         # join + groupBy — the exact expression this operator replaces
         from sequila_native_spark.operators.interval_join import overlap_join
 
+        left_p = left.select(*dict.fromkeys([*l_keys, left_start, left_end]))
+        right_p = right.select(*dict.fromkeys([*r_keys, right_start, right_end]))
         oj = overlap_join(
             left_p, right_p, on=on,
             left_start=left_start, left_end=left_end,
@@ -539,7 +553,8 @@ def overlap_count_agg(
         grouped = oj.groupBy(*l_keys) if l_keys else oj
         return grouped.agg(F.count(F.lit(1)).cast("long").alias(alias))
 
-    rb = _with_bounds(right_p, right_start, right_end, _RS, _RE, strict)
+    rb = _with_bounds(right, right_start, right_end, _RS, _RE, strict, rschema,
+                      [_quote(k) for k in dict.fromkeys(r_keys)])
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from sequila_native_spark.util import ensure_parallel
@@ -550,7 +565,7 @@ def overlap_count_agg(
     # 600k-row probe side). No-op when the scan already has enough splits.
     rb = ensure_parallel(rb, [*r_keys, _RS, _RE])
 
-    key_fields = list(left_p.select(*l_keys).schema.fields) if l_keys else []
+    key_fields = [lschema[k] for k in l_keys]
     out_schema = StructType(key_fields + [StructField(alias, LongType(), False)])
     out_pa_schema = to_arrow_schema(out_schema)
     key_types = [f.type for f in out_pa_schema][:-1]

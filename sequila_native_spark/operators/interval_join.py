@@ -57,7 +57,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -68,6 +68,8 @@ from pyspark.sql.types import (
     LongType,
     ShortType,
     StringType,
+    StructField,
+    StructType,
 )
 
 from sequila_native_spark.operators.intervals import (
@@ -132,8 +134,9 @@ def guarded_build_arrow(df: DataFrame, max_rows: int | None = None) -> pa.Table:
 
     Collects ``limit(max + 1)``, so at most max + 1 rows reach the driver
     whatever the true size, and raises :class:`BuildSideTooLargeError`
-    instead of returning when the build side exceeds
-    ``spark.sequila.maxBroadcastBuildRows`` (≤0 disables the guard).
+    instead of returning when the build side exceeds ``max_rows``, by
+    default ``spark.sequila.maxBroadcastBuildRows`` (≤0 disables the
+    guard).
     """
     if max_rows is None:
         max_rows = SequilaConf.from_spark(df.sparkSession).max_broadcast_build_rows
@@ -150,21 +153,20 @@ def guarded_build_arrow(df: DataFrame, max_rows: int | None = None) -> pa.Table:
 _ARROW_CONVERSION_CONFS = ("spark.sql.execution.arrow.useLargeVarTypes",)
 
 
-def broadcast_build(df: DataFrame, kind: tuple, build):
+def broadcast_build(df: DataFrame, kind: tuple, build, cap: int):
     """``(broadcast, rows)`` of the index ``build()`` makes from ``df``,
     built once per input: ``build()`` returns ``(index, rows)`` and
     collects through :func:`guarded_build_arrow`; its broadcast is served
     from the session index cache
     (:func:`~sequila_native_spark.util.cached_broadcast`) while ``df``'s
-    plan and input files are unchanged. A cached entry over the current row
-    cap raises like a fresh collect would, so lowering
-    ``spark.sequila.maxBroadcastBuildRows`` still forces the fallback."""
+    plan and input files are unchanged. A cached entry over ``cap``, the
+    call's ``spark.sequila.maxBroadcastBuildRows``, raises like a fresh
+    collect would, so lowering the cap still forces the fallback."""
     from sequila_native_spark.util import cached_broadcast
 
     spark = df.sparkSession
     conv = tuple(spark.conf.get(k, None) for k in _ARROW_CONVERSION_CONFS)
     bc, rows = cached_broadcast(df, (*kind, conv), build)
-    cap = SequilaConf.from_spark(spark).max_broadcast_build_rows
     if cap is not None and 0 < cap < rows:
         raise BuildSideTooLargeError(_too_large(cap))
     return bc, rows
@@ -206,17 +208,18 @@ _EMPTY_I64 = np.empty(0, dtype=np.int64)
 _I64_MIN = np.iinfo(np.int64).min
 
 
-def _arrow_keys(build: DataFrame, keys) -> bool:
-    """Index gate: every key is a string, integral, boolean or floating
-    column, whose Arrow value :func:`_key_groups` turns into the same
-    hashable python value on the build and the probe side.
+def _arrow_keys(schema: StructType, keys) -> bool:
+    """Index gate: every key of the build side's ``schema`` is a string,
+    integral, boolean or floating column, whose Arrow value
+    :func:`_key_groups` turns into the same hashable python value on the
+    build and the probe side.
     Timestamps/decimals/dates route to each operator's shuffle path, where
     Catalyst compares them. Callers route mixed-family key pairs
     (``IntervalSides.mixed_keys``) there first, so the build side's key
     types speak for the probe side's too."""
     simple = (StringType, IntegerType, LongType, ShortType, ByteType,
               BooleanType, FloatType, DoubleType)
-    return all(isinstance(build.schema[k].dataType, simple) for k in keys)
+    return all(isinstance(schema[k].dataType, simple) for k in keys)
 
 
 # The key of every NaN. Spark's join and grouping equality hold NaN = NaN,
@@ -239,46 +242,57 @@ def _key_groups(
     """Split the rows of an Arrow table or record batch into equi-key
     groups: yields ``(key tuple, row positions)``.
 
-    Each key column is dictionary-encoded and the codes are combined into
-    one group code, so grouping is one integer sort, with no per-row python
-    objects. A row with a null in any key or ``bounds`` column is in no
-    group (SQL equality never matches null). Floating keys are compared as
-    Spark compares them (:func:`_canonical_floats`, :data:`_NAN_KEY`).
-    Positions ascend within a group, or follow the int32 values of
-    ``sort_by`` when given.
+    Each key column is dictionary-encoded and its int32 codes are read in
+    place; two or more keys combine into one int64 group code. A row with
+    a null in any key or ``bounds`` column is in no group (SQL equality
+    never matches null); columns without nulls are not masked. Floating
+    keys are compared as Spark compares them (:func:`_canonical_floats`,
+    :data:`_NAN_KEY`). Positions ascend within a group, or follow
+    ``sort_by`` with ties in ascending position when given.
     """
-    ok = np.ones(data.num_rows, dtype=bool)
+    ok = None  # rows with no null key or bound; None while that is all rows
+
+    def keep(col: pa.Array) -> None:
+        nonlocal ok
+        if col.null_count:
+            valid = pc.is_valid(col).to_numpy(zero_copy_only=False)
+            ok = valid if ok is None else ok & valid
+
     for b in bounds:
-        ok &= pc.is_valid(_column(data, b)).to_numpy(zero_copy_only=False)
-    code = np.zeros(data.num_rows, dtype=np.int64)
+        keep(_column(data, b))
+    code = None
     card = 1
     dicts = []
     for k in keys:
         col = _column(data, k)
         floating = pa.types.is_floating(col.type)
         enc = pc.dictionary_encode(_canonical_floats(col) if floating else col)
-        codes = pc.fill_null(enc.indices, -1).to_numpy(zero_copy_only=False)
-        ok &= codes >= 0
+        idx = enc.indices
+        keep(idx)
+        if idx.null_count:  # those rows are in no group: any code will do
+            idx = pc.fill_null(idx, 0)
+        codes = idx.to_numpy(zero_copy_only=False)
         values = enc.dictionary.to_pylist()
         if floating:
             values = [_NAN_KEY if v != v else v for v in values]
         dicts.append((values, codes))
-        code = code * len(values) + codes
         card *= len(values)
+        code = codes if code is None else code.astype(np.int64) * len(values) + codes
         if card >= 1 << 31:  # renumber densely: codes stay below 2^31
             code = np.unique(code, return_inverse=True)[1].astype(np.int64)
             card = data.num_rows
-    pos = np.flatnonzero(ok)
+    pos = np.arange(data.num_rows) if ok is None else np.flatnonzero(ok)
     if not pos.size:
         return
+    if code is None:  # no keys: one group
+        code = np.zeros(data.num_rows, dtype=np.int8)
+    grp_code = code if ok is None else code[pos]
     if sort_by is None:
-        pos = pos[np.argsort(code[pos], kind="stable")]
+        order = np.argsort(grp_code, kind="stable")
     else:
-        # one int64 sort key: the group code above the int32 value
-        pos = pos[np.argsort(
-            (code[pos] << 32) | (sort_by[pos].astype(np.int64) - I32_MIN)
-        )]
-    runs = np.flatnonzero(np.diff(code[pos])) + 1
+        order = np.lexsort((sort_by if ok is None else sort_by[pos], grp_code))
+    pos, grp_code = pos[order], grp_code[order]
+    runs = np.flatnonzero(grp_code[1:] != grp_code[:-1]) + 1
     for grp in np.split(pos, runs):
         first = grp[0]
         yield tuple(v[c[first]] for v, c in dicts), grp
@@ -290,8 +304,12 @@ def _column(data, name: str) -> pa.Array:
 
 
 def _ints(data, name: str) -> np.ndarray:
-    """A bound column as numpy, nulls as 0 (null rows are in no group)."""
-    return pc.fill_null(_column(data, name), 0).to_numpy(zero_copy_only=False)
+    """A bound column as numpy, nulls as 0 (null rows are in no group):
+    read in place, read-only, when it has no nulls."""
+    col = _column(data, name)
+    if col.null_count:
+        col = pc.fill_null(col, 0)
+    return col.to_numpy(zero_copy_only=False)
 
 
 def _lex_sorted(starts: np.ndarray, ends: np.ndarray):
@@ -311,10 +329,11 @@ def _lex_sorted(starts: np.ndarray, ends: np.ndarray):
     return starts, ends, runmax, argmax_first, order
 
 
-def interval_index(lb: DataFrame, l_keys):
+def interval_index(lb: DataFrame, l_keys, conf: SequilaConf):
     """``(broadcast, rows)`` of ``lb``'s pair index, the build of
     overlap_join's, nearest_join's and map_intervals' ``index`` paths: over
     one unchanged file input the first two share one collect and broadcast.
+    ``conf`` is the calling operator's.
 
     The value is ``(index, payload)``. ``index`` maps each key tuple to its
     :func:`_lex_sorted` arrays ``(starts, ends, runmax, argmax_first,
@@ -323,14 +342,15 @@ def interval_index(lb: DataFrame, l_keys):
     Arrow record batch. Lex order is start order, so :func:`_probe_spans`
     reads the arrays the nearest kernels read.
     """
+    cap = conf.max_broadcast_build_rows
     return broadcast_build(
         lb, ("interval", tuple(l_keys)),
-        lambda: _build_interval_index(lb, l_keys),
+        lambda: _build_interval_index(lb, l_keys, cap), cap,
     )
 
 
-def _build_interval_index(lb: DataFrame, l_keys) -> tuple[tuple, int]:
-    tbl = guarded_build_arrow(lb)
+def _build_interval_index(lb: DataFrame, l_keys, cap: int) -> tuple[tuple, int]:
+    tbl = guarded_build_arrow(lb, cap)
     names = [c for c in tbl.column_names if c not in (_LS, _LE)]
     payload = pa.RecordBatch.from_arrays(
         [_column(tbl, c) for c in names], names=names
@@ -365,25 +385,25 @@ def _emit(build: pa.RecordBatch, probe: pa.RecordBatch, b_idx, p_idx,
         )
 
 
-def _max_batch(spark) -> int:
-    return 100_000 if SequilaConf.from_spark(spark).low_memory else 1_000_000
+def _max_batch(conf: SequilaConf) -> int:
+    return 100_000 if conf.low_memory else 1_000_000
 
 
-def _disambiguate(
-    left: DataFrame, right: DataFrame, rsuffix: str
-) -> tuple[DataFrame, dict[str, str]]:
-    """Suffix right-side columns that collide with left-side names.
+def _renames(lcols, rcols, rsuffix: str) -> dict[str, str]:
+    """New names for the right-side columns that collide with left-side
+    names: ``rsuffix`` appended.
 
     DataFusion emits duplicate column names in the joined schema
     (``integration_test.rs:50-55`` goldens show two ``contig`` columns);
     Spark allows that too but it makes the result unusable downstream, so we
-    rename like pandas' ``join(rsuffix=...)``.
+    rename like pandas' ``join(rsuffix=...)``. Callers apply the mapping
+    in the projection that adds the right side's bounds
+    (:func:`_with_bounds`, :func:`_renamed_sql`).
     """
-    lcols = set(left.columns)
-    rcols = set(right.columns)
+    lset, rset = set(lcols), set(rcols)
     mapping: dict[str, str] = {}
-    for c in right.columns:
-        if c in lcols:
+    for c in rcols:
+        if c in lset:
             if not rsuffix:
                 raise ValueError(
                     f"column {c!r} exists on both sides; pass rsuffix= to rename"
@@ -393,13 +413,33 @@ def _disambiguate(
         # a suffixed name that already exists would silently shadow a
         # column (the index path's left/right column split drops the right
         # side's data without an error); fail loudly instead
-        if new in lcols or new in rcols:
+        if new in lset or new in rset:
             raise ValueError(
                 f"suffixed name {new!r} (for shared column {old!r}) "
                 f"collides with an existing column; pass a different rsuffix"
             )
-        right = right.withColumnRenamed(old, new)
-    return right, mapping
+    return mapping
+
+
+def _renamed_sql(cols, renames: dict[str, str]) -> list[str]:
+    """A select list of ``cols`` with ``renames`` applied."""
+    return [
+        f"{_quote(c)} AS {_quote(renames[c])}" if c in renames else _quote(c)
+        for c in cols
+    ]
+
+
+def _renamed_fields(schema: StructType, renames: dict[str, str]) -> list:
+    """``schema``'s fields with ``renames`` applied."""
+    return [
+        StructField(renames[f.name], f.dataType, f.nullable, f.metadata)
+        if f.name in renames else f
+        for f in schema.fields
+    ]
+
+
+# SQL type names of the bound columns that cannot leave int32 unshrunk
+_NARROW = frozenset({"tinyint", "smallint", "int"})
 
 
 def _with_bounds(
@@ -409,19 +449,25 @@ def _with_bounds(
     s_tmp: str,
     e_tmp: str,
     strict: bool,
+    schema: StructType | None = None,
+    cols: list[str] | tuple[str, ...] = ("*",),
 ) -> DataFrame:
     """Attach normalized int32 bound columns (originals untouched).
 
     The reference casts bounds to Int32 inside the exec via an injected
     ``CastExpr`` (``interval_join.rs:1661-1672``); output columns keep their
-    declared types. We mirror that with temp columns, both built in one
-    ``selectExpr``: each Column-API call pays PySpark's call-site capture,
-    and the chained form cost ~2.5x more driver time per side.
+    declared types. We mirror that with temp columns, built in one
+    ``selectExpr`` beside ``cols`` (a SQL select list, all columns by
+    default): each Column-API call pays PySpark's call-site capture, and
+    the chained form cost ~2.5x more driver time per side. ``schema`` is
+    ``df``'s, when the caller has read it already; an int, smallint or
+    tinyint bound that is not shrunk gets :func:`_bound_sql`'s plain cast.
     """
+    types = {f.name: f.dataType.simpleString() for f in (schema or df.schema).fields}
     return df.selectExpr(
-        "*",
-        _bound_sql(start, s_tmp, False),
-        _bound_sql(end, e_tmp, strict),
+        *cols,
+        _bound_sql(start, s_tmp, False, types.get(start) in _NARROW),
+        _bound_sql(end, e_tmp, strict, types.get(end) in _NARROW),
     )
 
 
@@ -515,11 +561,10 @@ def binned_side_sql(
     ``alias``. ``left`` picks the left side's temp names; ``types`` maps
     ``rel``'s columns to their SQL type names."""
     s, e, b = (_LS, _LE, _LBIN) if left else (_RS, _RE, _RBIN)
-    narrow = {"tinyint", "smallint", "int"}
     return (
         f"(SELECT *, {_bins_sql(s, e, b, width)} FROM (SELECT *, "
-        f"{_bound_sql(start, s, False, types[start] in narrow)}, "
-        f"{_bound_sql(end, e, shrink, types[end] in narrow)} "
+        f"{_bound_sql(start, s, False, types[start] in _NARROW)}, "
+        f"{_bound_sql(end, e, shrink, types[end] in _NARROW)} "
         f"FROM {rel})) {alias}"
     )
 
@@ -540,17 +585,16 @@ def _auto_bin_width(lb: DataFrame, rb: DataFrame) -> int:
     """
     p = 0.95
     # one job for both sides: union the pruned length columns with a side
-    # tag and aggregate per side
-    def length(s: str, e: str) -> Column:
-        # bigint: int32 bounds more than 2^31 apart overflow an int length
-        return (F.col(e).cast("bigint") - F.col(s) + 1).alias("__sq_len")
-
-    lens = lb.select(F.lit(0).alias("__sq_side"), length(_LS, _LE)).unionAll(
-        rb.select(F.lit(1).alias("__sq_side"), length(_RS, _RE))
-    )
+    # tag and aggregate per side; lengths in bigint, since int32 bounds
+    # more than 2^31 apart overflow an int length
+    lens = lb.selectExpr(
+        "0 AS __sq_side", f"CAST({_LE} AS BIGINT) - {_LS} + 1 AS __sq_len"
+    ).unionAll(rb.selectExpr(
+        "1 AS __sq_side", f"CAST({_RE} AS BIGINT) - {_RS} + 1 AS __sq_len"
+    ))
     rows = (
         lens.groupBy("__sq_side")
-        .agg(F.percentile_approx("__sq_len", p).alias("w"))
+        .agg(F.expr(f"percentile_approx(__sq_len, {p}) AS w"))
         .collect()
     )
     widths = sorted(
@@ -583,34 +627,32 @@ def resolve_bin_width(
     bins.
 
     Resolved widths memoize per session, keyed by the semantic hash of the
-    two pruned bound plans — a statistics cache, like table stats: repeated
-    joins over the same (or structurally identical) inputs skip the probe
-    job. Data rewritten *under* an unchanged plan can serve a stale width —
-    that only mis-tunes performance, never correctness; clear with
+    two input plans and the bound column names — a statistics cache, like
+    table stats: repeated joins over the same (or structurally identical)
+    inputs skip the probe job, and a hit builds no probe frame. Data
+    rewritten *under* an unchanged plan can serve a stale width — that only
+    mis-tunes performance, never correctness; clear with
     :func:`clear_bin_width_cache`.
     """
     if width is not None and width != "auto":
         return int(width)
-    lb0 = left.select(
-        F.col(ls).try_cast("bigint").alias(_LS),
-        F.col(le).try_cast("bigint").alias(_LE),
-    )
-    rb0 = right.select(
-        F.col(rs).try_cast("bigint").alias(_RS),
-        F.col(re_).try_cast("bigint").alias(_RE),
-    )
     cache = key = None
     try:
         key = (
-            lb0._jdf.queryExecution().analyzed().semanticHash(),
-            rb0._jdf.queryExecution().analyzed().semanticHash(),
+            left._jdf.queryExecution().analyzed().semanticHash(), ls, le,
+            right._jdf.queryExecution().analyzed().semanticHash(), rs, re_,
         )
         cache = _width_cache(left.sparkSession)
     except Exception:  # Connect or API drift: just skip memoization
         pass
     if cache is not None and key in cache:
         return cache[key]
-    w = _auto_bin_width(lb0, rb0)
+
+    def probe(df: DataFrame, s: str, e: str, s_tmp: str, e_tmp: str) -> DataFrame:
+        return df.selectExpr(f"try_cast({_quote(s)} AS BIGINT) AS {s_tmp}",
+                             f"try_cast({_quote(e)} AS BIGINT) AS {e_tmp}")
+
+    w = _auto_bin_width(probe(left, ls, le, _LS, _LE), probe(right, rs, re_, _RS, _RE))
     if cache is not None:
         cache[key] = w
     return w
@@ -743,8 +785,10 @@ def overlap_join(
     width = bin_width if bin_width is not None else conf.bin_width
 
     sides = validate_sides(left, right, on, left_start, left_end, right_start, right_end)
+    # one schema read per input: the frame caches what validate_sides read
+    lschema, rschema = left.schema, right.schema
     if algo == "partitioned" or (algo == "index" and (
-        sides.mixed_keys or not _arrow_keys(left, [p[0] for p in sides.on])
+        sides.mixed_keys or not _arrow_keys(lschema, [p[0] for p in sides.on])
     )):
         # binning is the shuffle path; the index kernel's key lookups
         # cannot coerce 1 = '1' or compare date, timestamp or decimal keys
@@ -757,21 +801,24 @@ def overlap_join(
         width = resolve_bin_width(
             width, left, left_start, left_end, right, right_start, right_end
         )
-    right, renames = _disambiguate(left, right, rsuffix)
+    renames = _renames(lschema.names, rschema.names, rsuffix)
     r_start = renames.get(right_start, right_start)
     r_end = renames.get(right_end, right_end)
     l_keys = [p[0] for p in sides.on]
     r_keys = [renames.get(p[1], p[1]) for p in sides.on]
-
-    out_cols = [*left.columns, *right.columns]
+    left_fields = list(lschema.fields)
+    right_fields = _renamed_fields(rschema, renames)
+    out_cols = [f.name for f in (*left_fields, *right_fields)]
 
     # Per-conjunct strict normalization (intervals.rs:67-69): strictness of
     # `le > rs` shrinks the LEFT end, strictness of `ls < re` the RIGHT end.
     # The public `strict` flag sets both; the condition parser sets each.
     shrink_l = strict if _shrink_left_end is None else _shrink_left_end
     shrink_r = strict if _shrink_right_end is None else _shrink_right_end
-    lb = _with_bounds(left, left_start, left_end, _LS, _LE, shrink_l)
-    rb = _with_bounds(right, r_start, r_end, _RS, _RE, shrink_r)
+    lb = _with_bounds(left, left_start, left_end, _LS, _LE, shrink_l, lschema)
+    # the right side's renames ride in the projection that adds its bounds
+    rb = _with_bounds(right, right_start, right_end, _RS, _RE, shrink_r, rschema,
+                      _renamed_sql(rschema.names, renames))
 
     def _frac_filter(out: DataFrame) -> DataFrame:
         # Fractions post-filter on the OUTPUT columns (strict is rejected
@@ -794,27 +841,29 @@ def overlap_join(
 
     if how != "inner":
         return _outer_overlap(
-            lb, rb, l_keys, r_keys, out_cols, how, algo, width, metrics
+            lb, rb, l_keys, r_keys, left_fields, right_fields, how, algo,
+            width, conf, metrics,
         )
 
+    out_sql = [_quote(c) for c in out_cols]
     if algo == "binning":
         return _frac_filter(
-            _binned_pairs(lb, rb, l_keys, r_keys, width).select(*out_cols)
+            _binned_pairs(lb, rb, l_keys, r_keys, width).selectExpr(*out_sql)
         )
 
     if algo == "index":
         try:
-            return _frac_filter(
-                _broadcast_index_join(lb, rb, l_keys, r_keys, out_cols, metrics)
-            )
+            return _frac_filter(_broadcast_index_join(
+                lb, rb, l_keys, r_keys, left_fields, right_fields, conf, metrics
+            ))
         except BuildSideTooLargeError:
             # reference intent: accounted memory, never a blind collect
             # (interval_join.rs:624-660) — fall back to the distributed path
             width = resolve_bin_width(
-                width, left, left_start, left_end, right, r_start, r_end
+                width, left, left_start, left_end, right, right_start, right_end
             )
             return _frac_filter(
-                _binned_pairs(lb, rb, l_keys, r_keys, width).select(*out_cols)
+                _binned_pairs(lb, rb, l_keys, r_keys, width).selectExpr(*out_sql)
             )
 
     raise AssertionError(f"unreachable algorithm {algo}")
@@ -862,10 +911,12 @@ def _outer_overlap(
     rb: DataFrame,
     l_keys: tuple[str, ...] | list[str],
     r_keys: list[str],
-    out_cols: list[str],
+    left_fields: list,
+    right_fields: list,
     how: str,
     algo: str,
     width,
+    conf: SequilaConf,
     metrics=None,
 ) -> DataFrame:
     """Left/right/full-outer emission over any accelerated inner algorithm.
@@ -876,17 +927,25 @@ def _outer_overlap(
     left-anti union (the shape the judge prescribed) — the pad branch
     shuffles only (id) + the preserved side, so it scales like the semi/anti
     filter. Rows with null keys/bounds never match and surface null-padded.
+    ``left_fields`` and ``right_fields`` are the output columns of each side.
     """
     stamp_l = how in ("left", "full")
     stamp_r = how in ("right", "full")
     lb2 = stamp_row_id(lb, _OIDL) if stamp_l else lb
     rb2 = stamp_row_id(rb, _OIDR) if stamp_r else rb
     id_cols = ([_OIDL] if stamp_l else []) + ([_OIDR] if stamp_r else [])
+    out_cols = [f.name for f in (*left_fields, *right_fields)]
 
     inner_cols = [*out_cols, *id_cols]
     if algo == "index":
+        def ids(stamped: bool, name: str) -> list:
+            return [StructField(name, LongType(), False)] if stamped else []
+
         try:
-            pairs = _broadcast_index_join(lb2, rb2, l_keys, r_keys, inner_cols, metrics)
+            pairs = _broadcast_index_join(
+                lb2, rb2, l_keys, r_keys, [*left_fields, *ids(stamp_l, _OIDL)],
+                [*right_fields, *ids(stamp_r, _OIDR)], conf, metrics,
+            )
         except BuildSideTooLargeError:
             algo = "binning"
     if algo == "binning":
@@ -921,21 +980,23 @@ def _outer_overlap(
 
     out = pairs.select(*out_cols)
 
-    def pad_unmatched(preserved: DataFrame, oid: str, other: DataFrame) -> DataFrame:
+    def pad_unmatched(preserved: DataFrame, oid: str, kept: list, other: list) -> DataFrame:
         matched = ids_src.select(oid).distinct()
         unmatched = preserved.join(matched, oid, "left_anti")
+        names = {f.name for f in kept}
+        types = {f.name: f.dataType for f in other}
         return unmatched.select(
             *[
-                F.col(c) if c in preserved.columns
-                else F.lit(None).cast(other.schema[c].dataType).alias(c)
+                F.col(c) if c in names
+                else F.lit(None).cast(types[c]).alias(c)
                 for c in out_cols
             ]
         )
 
     if stamp_l:
-        out = out.unionByName(pad_unmatched(lb2, _OIDL, rb))
+        out = out.unionByName(pad_unmatched(lb2, _OIDL, left_fields, right_fields))
     if stamp_r:
-        out = out.unionByName(pad_unmatched(rb2, _OIDR, lb))
+        out = out.unionByName(pad_unmatched(rb2, _OIDR, right_fields, left_fields))
     return out
 
 
@@ -944,7 +1005,9 @@ def _broadcast_index_join(
     rb: DataFrame,
     l_keys: tuple[str, ...] | list[str],
     r_keys: list[str],
-    out_cols: list[str],
+    left_fields: list,
+    right_fields: list,
+    conf: SequilaConf,
     metrics=None,
 ) -> DataFrame:
     """CollectLeft-style broadcast index + ``mapInArrow`` probe.
@@ -961,25 +1024,21 @@ def _broadcast_index_join(
     partition shares the one broadcast build, the analogue of the
     reference's ``OnceAsync`` shared build (``joins/utils.rs:73-107``).
     Build payload is gathered with ``take`` on the collected Arrow rows.
+    The output holds ``left_fields`` (``lb``'s columns but its bounds) and
+    then ``right_fields`` (columns of ``rb``).
     """
     import time as _time
 
-    spark = lb.sparkSession
-    max_batch = _max_batch(spark)
-    left_cols = [c for c in out_cols if c in lb.columns]
-    right_cols = [c for c in out_cols if c not in lb.columns]
+    max_batch = _max_batch(conf)
+    left_cols = [f.name for f in left_fields]
+    right_cols = [f.name for f in right_fields]
 
     build_t0 = _time.time()
-    bc, rows = interval_index(lb, l_keys)
+    bc, rows = interval_index(lb, l_keys, conf)
     if metrics is not None:
         metrics.record_build(rows, build_t0)
 
-    from pyspark.sql.types import StructType
-
-    out_schema = StructType(
-        list(lb.select(*left_cols).schema.fields)
-        + list(rb.select(*right_cols).schema.fields)
-    )
+    out_schema = StructType([*left_fields, *right_fields])
     names = [*left_cols, *right_cols]
     rk_list = list(r_keys)
     rb = _ensure_parallel(rb, [])  # round-robin: probe-side parallelism, no skew
@@ -1014,7 +1073,7 @@ def _broadcast_index_join(
                 np.concatenate(probe_take), names, max_batch,
             )
 
-    return rb.mapInArrow(probe, schema=out_schema).select(*out_cols)
+    return rb.mapInArrow(probe, schema=out_schema)
 
 
 def window_join(

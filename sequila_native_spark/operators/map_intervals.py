@@ -119,6 +119,7 @@ def _index_map(
     fills: list[tuple[str, "Column | None"]],
     left_out_cols: list[str],
     frac_args: tuple | None,
+    conf: SequilaConf,
 ) -> DataFrame:
     """Broadcast-index map kernel (guide §1.1/§2.4/§3.1/§4.2): aggregate the
     probe side's values per LEFT row without emitting a single pair row.
@@ -139,7 +140,7 @@ def _index_map(
     # the stamped row ids belong to one evaluation of the left side: the
     # frame is nondeterministic, so the session index cache never keeps it
     bc, _ = interval_index(
-        lb.select(*dict.fromkeys([*l_keys, _LS, _LE, _AID])), l_keys
+        lb.select(*dict.fromkeys([*l_keys, _LS, _LE, _AID])), l_keys, conf
     )
 
     # (out_name, op, internal value alias or None) in aggs order
@@ -390,7 +391,7 @@ def map_intervals(
             )
             # mixed key families: only the binned join coerces 1 = '1'
             and not sides.mixed_keys
-            and _arrow_keys(left, l_keys)
+            and _arrow_keys(left.schema, l_keys)
         )
         if kernel_ok:
             frac_args = None if frac is None else (
@@ -399,7 +400,7 @@ def map_intervals(
             try:
                 return _index_map(
                     left_stamped, lb, rb, l_keys, r_keys, aggs, value_cols,
-                    fills, left_out_cols, frac_args,
+                    fills, left_out_cols, frac_args, conf,
                 )
             except BuildSideTooLargeError:
                 pass  # accounted-memory fallback: the binned pair join

@@ -87,13 +87,16 @@ from sequila_native_spark.operators.interval_join import (
     _RS,
     BuildSideTooLargeError,
     _arrow_keys,
-    _disambiguate,
     _emit,
     _ints,
     _key_groups,
     _lex_index,
     _max_batch,
     _probe_spans,
+    _quote,
+    _renamed_fields,
+    _renamed_sql,
+    _renames,
     _with_bounds,
     interval_index,
 )
@@ -136,10 +139,11 @@ def nearest_join(
 
     ``distance_col`` appends the genomic gap distance (bedtools
     ``closest -d``: 0 for overlap, else the gap; null for null-padded rows).
-    It is derived from the output bound columns post-join, so every
-    algorithm path shares one definition. Note it reflects the *normalized*
-    bounds when ``strict=True`` (strictness shrinks an end by 1 before
-    distance, matching the join's own semantics).
+    It is derived from the output bound columns post-join
+    (:func:`_distance_sql`), so every algorithm path shares one
+    definition. Note it reflects the *normalized* bounds when
+    ``strict=True`` (strictness shrinks an end by 1 before distance,
+    matching the join's own semantics).
 
     ``ignore_overlaps`` / ``ignore_upstream`` / ``ignore_downstream``
     (bedtools ``closest -io/-iu/-id``; strand-agnostic — upstream = lower
@@ -198,58 +202,65 @@ def nearest_join(
             "types of different families; cast one side so both keys "
             "have the same type"
         )
-    right, renames = _disambiguate(left, right, rsuffix)
+    # one schema read per input: the frame caches what validate_sides read
+    lschema, rschema = left.schema, right.schema
+    renames = _renames(lschema.names, rschema.names, rsuffix)
     r_start = renames.get(right_start, right_start)
     r_end = renames.get(right_end, right_end)
     l_keys = [p[0] for p in sides.on]
     r_keys = [renames.get(p[1], p[1]) for p in sides.on]
-    out_cols = [*left.columns, *right.columns]
 
-    lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict)
-    rb = _with_bounds(right, r_start, r_end, _RS, _RE, strict)
+    lb = _with_bounds(left, left_start, left_end, _LS, _LE, strict, lschema)
+    # the right side's renames ride in the projection that adds its bounds
+    rb = _with_bounds(right, right_start, right_end, _RS, _RE, strict, rschema,
+                      _renamed_sql(rschema.names, renames))
 
-    args = (lb, rb, l_keys, r_keys, out_cols, k, flags)
+    args = (lb, rb, l_keys, r_keys, list(lschema.fields),
+            _renamed_fields(rschema, renames), k, flags)
     if algo == "naive":
         out = _naive_nearest(*args)
-    elif l_keys and (algo == "partitioned" or not _arrow_keys(left, l_keys)):
+    elif l_keys and (algo == "partitioned" or not _arrow_keys(lschema, l_keys)):
         # date, timestamp and decimal keys: the index kernel's lookups
         # cannot compare them, the keyed shuffle path's groupBy can
-        out = _partitioned_nearest(*args)
+        out = _partitioned_nearest(*args, conf=conf)
     else:
         # keyless calls try the index first: their cogroup is one group
         # unless the build is over the cap and split into chunks
         try:
-            out = _index_nearest(*args)
+            out = _index_nearest(*args, conf=conf)
         except BuildSideTooLargeError:
-            out = _partitioned_nearest(*args)
+            out = _partitioned_nearest(*args, conf=conf)
     if distance_col:
-        shrink = 1 if strict else 0
-        ls, le, rs, re_ = (
-            F.col(c).cast("bigint") for c in (left_start, left_end, r_start, r_end)
-        )
-        dist = (
-            # null-padded rows keep a null distance (null comparisons would
-            # otherwise fall through to the 0 branch)
-            F.when(ls.isNull() | rs.isNull(), F.lit(None))
-            .otherwise(_distance_col(ls, le - shrink, rs, re_ - shrink))
-        )
-        out = out.withColumn(distance_col, dist)
+        out = out.withColumn(distance_col, F.expr(
+            _distance_sql(left_start, left_end, r_start, r_end, strict)
+        ))
     return out
 
 
-def _distance_col(ls, le, rs, re):
-    """Genomic gap distance on normalized closed intervals
-    (``interval_join.rs:938-946``); 0 when overlapping. In bigint: int32
+def _distance_sql(ls: str, le: str, rs: str, re: str, shrink: bool = False) -> str:
+    """Genomic gap distance between the intervals of columns ``[ls, le]``
+    and ``[rs, re]`` (``interval_join.rs:938-946``), as SQL: 0 when they
+    overlap, null when either start is null (a null-padded row). ``shrink``
+    ends them 1 earlier, as strict normalization does. In bigint: int32
     bounds further apart than 2^31 overflow an int subtraction."""
-    ls, le, rs, re = (c.cast("bigint") for c in (ls, le, rs, re))
+    ls, rs = (f"CAST({_quote(c)} AS BIGINT)" for c in (ls, rs))
+    le, re = (
+        f"(CAST({_quote(c)} AS BIGINT) - 1)" if shrink else f"CAST({_quote(c)} AS BIGINT)"
+        for c in (le, re)
+    )
     return (
-        F.when(ls > re, ls - re)
-        .when(le < rs, rs - le)
-        .otherwise(F.lit(0))
+        f"CASE WHEN {ls} IS NULL OR {rs} IS NULL THEN NULL "
+        f"WHEN {ls} > {re} THEN {ls} - {re} WHEN {le} < {rs} THEN {rs} - {le} "
+        f"ELSE 0 END"
     )
 
 
-def _naive_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
+def _names(fields) -> list[str]:
+    return [f.name for f in fields]
+
+
+def _naive_nearest(lb, rb, l_keys, r_keys, left_fields, right_fields, k=1, flags=None):
+    out_cols = _names([*left_fields, *right_fields])
     probe = rb.withColumn(_PID, F.monotonically_increasing_id())
     # a null bound on either side never matches (the kernels skip such rows);
     # without this the distance expression reads a null comparison as 0
@@ -274,7 +285,7 @@ def _naive_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
             allowed = allowed | (lb[_LS] > probe[_RE])
         cond = cond & allowed
     joined = probe.join(lb, cond, "left_outer")
-    dist = _distance_col(lb[_LS], lb[_LE], probe[_RS], probe[_RE])
+    dist = F.expr(_distance_sql(_LS, _LE, _RS, _RE))
     w = Window.partitionBy(_PID).orderBy(
         dist.asc_nulls_last(), lb[_LS].asc_nulls_last(), lb[_LE].asc_nulls_last()
     )
@@ -489,13 +500,12 @@ def _nearest_take_topk(
     return top, topd < _I64_MAX
 
 
-def _nearest_out_schema(lb, rb, left_cols, right_cols) -> StructType:
+def _nearest_out_schema(left_fields, right_fields) -> StructType:
     # left fields forced nullable: probe groups with no build rows emit
     # null-left padding (integration_test.rs:385-394)
     return StructType(
-        [StructField(f.name, f.dataType, True)
-         for f in lb.select(*left_cols).schema.fields]
-        + list(rb.select(*right_cols).schema.fields)
+        [StructField(f.name, f.dataType, True) for f in left_fields]
+        + list(right_fields)
     )
 
 
@@ -553,7 +563,8 @@ def _group_key(col, dtype, other):
     return col.cast(LongType()) if isinstance(dtype, IntegralType) else col
 
 
-def _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
+def _partitioned_nearest(lb, rb, l_keys, r_keys, left_fields, right_fields,
+                         k=1, flags=None, *, conf: SequilaConf):
     """Cogroup nearest: the Partitioned-mode analogue.
 
     Keyed: shuffles both sides once on the equi-keys; each group runs the
@@ -567,8 +578,8 @@ def _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
     under one probe id; per probe id the ``k`` least ``(distance, start,
     end)`` candidates win, or one null-left row when no chunk has one.
     """
-    left_cols = [c for c in out_cols if c in lb.columns]
-    right_cols = [c for c in out_cols if c not in lb.columns]
+    left_cols, right_cols = _names(left_fields), _names(right_fields)
+    out_cols = [*left_cols, *right_cols]
     spark = lb.sparkSession
     if l_keys:
         for c in l_keys:
@@ -578,7 +589,7 @@ def _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
         l_group = [_group_key(lb[a], lt[a], rt[b]) for a, b in zip(l_keys, r_keys)]
         r_group = [_group_key(rb[b], rt[b], lt[a]) for a, b in zip(l_keys, r_keys)]
     else:
-        cap = SequilaConf.from_spark(spark).max_broadcast_build_rows
+        cap = conf.max_broadcast_build_rows
         if cap and cap > 0 and rb.limit(cap + 1).count() > cap:
             raise BuildSideTooLargeError(
                 f"nearest_join without equi-keys over a build side above "
@@ -604,17 +615,21 @@ def _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
         right = probe.select(right_cols).take(p_idx)
         return pa.Table.from_arrays([*left.columns, *right.columns], names=names)
 
+    lf = {f.name: f for f in lb.schema.fields}
+    rf = {f.name: f for f in rb.schema.fields}
+    out_schema = _nearest_out_schema([lf[c] for c in left_cols],
+                                     [rf[c] for c in right_cols])
     out = (
         lb.groupBy(*l_group)
         .cogroup(rb.groupBy(*r_group))
-        .applyInArrow(nearest_group, schema=_nearest_out_schema(lb, rb, left_cols, right_cols))
+        .applyInArrow(nearest_group, schema=out_schema)
     )
     if not l_keys:
         ls, le = F.col(_LS), F.col(_LE)
         # null-left rows rank last, so one ranks first only when no chunk
-        # had a candidate (their distance would read 0)
+        # had a candidate
         rank = F.row_number().over(Window.partitionBy(_PID).orderBy(
-            ls.isNull(), _distance_col(ls, le, F.col(_RS), F.col(_RE)), ls, le,
+            ls.isNull(), F.expr(_distance_sql(_LS, _LE, _RS, _RE)), ls, le,
         ))
         out = out.withColumn("__sq_rn", rank).where(
             (F.col("__sq_rn") <= k) & (ls.isNotNull() | (F.col("__sq_rn") == 1))
@@ -622,16 +637,16 @@ def _partitioned_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
     return out.select(*out_cols)
 
 
-def _index_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
-    left_cols = [c for c in out_cols if c in lb.columns]
-    right_cols = [c for c in out_cols if c not in lb.columns]
+def _index_nearest(lb, rb, l_keys, r_keys, left_fields, right_fields,
+                   k=1, flags=None, *, conf: SequilaConf):
+    left_cols, right_cols = _names(left_fields), _names(right_fields)
     # overlap_join's index over the same build frame: k and the ignore_*
     # flags act in the probe, so one entry serves every call over lb
-    bc, _ = interval_index(lb, l_keys)
-    out_schema = _nearest_out_schema(lb, rb, left_cols, right_cols)
+    bc, _ = interval_index(lb, l_keys, conf)
+    out_schema = _nearest_out_schema(left_fields, right_fields)
     names = [*left_cols, *right_cols]
     rk_list = list(r_keys)
-    max_batch = _max_batch(lb.sparkSession)
+    max_batch = _max_batch(conf)
 
     def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         idx_map, build = bc.value
@@ -645,4 +660,4 @@ def _index_nearest(lb, rb, l_keys, r_keys, out_cols, k=1, flags=None):
 
     # round-robin split of a single-partition probe scan: mapInArrow gets
     # real parallelism; every task shares the one broadcast build
-    return ensure_parallel(rb, []).mapInArrow(probe, schema=out_schema).select(*out_cols)
+    return ensure_parallel(rb, []).mapInArrow(probe, schema=out_schema)

@@ -23,9 +23,9 @@ back) and the ``naive`` oracle.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from sequila_native_spark.operators.count_overlaps import count_overlaps
+from sequila_native_spark.operators.interval_join import _quote
 
 _N = "__sq_n_overlaps"
 
@@ -72,7 +72,8 @@ def filter_by_overlap(
         min_frac_df=min_frac_df, min_frac_regions=min_frac_regions,
         reciprocal=reciprocal, either=either,
     )
-    return n.where(F.col(_N) == 0 if negate else F.col(_N) > 0).drop(_N)
+    # SQL text, not Column calls: no call-site capture on the driver
+    return n.where(f"{_N} = 0" if negate else f"{_N} > 0").drop(_N)
 
 
 def mark_by_overlap(
@@ -110,7 +111,7 @@ def mark_by_overlap(
         min_frac_df=min_frac_df, min_frac_regions=min_frac_regions,
         reciprocal=reciprocal, either=either,
     )
-    return n.select(*df.columns, (F.col(_N) > 0).alias(mark_col))
+    return n.selectExpr(*map(_quote, df.columns), f"{_N} > 0 AS {_quote(mark_col)}")
 
 
 def _overlap_counts(

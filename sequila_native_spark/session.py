@@ -255,6 +255,16 @@ def sequila_session(
     is not on the worker ``PYTHONPATH``, not site-packages and not the
     JVM's working directory. Executors on a cluster fix their conf at
     launch, so there it changes nothing; use the ``--conf`` line above.
+
+    PySpark's call-site capture, which each Column-API call pays on the
+    driver (a stack walk, and ``import IPython`` when it is installed),
+    can only be switched off when the session is built:
+    ``spark.python.sql.dataFrameDebugging.enabled`` is a static conf, so
+    setting it here on a running session raises
+    ``CANNOT_MODIFY_STATIC_CONFIG``; set it with
+    ``SparkSession.builder.config`` before the session starts. The
+    ``index`` and binning paths build their plans from SQL text and make
+    no such call either way.
     """
     if spark is None:
         builder = (

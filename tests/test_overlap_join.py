@@ -255,6 +255,54 @@ def test_outer_rejects_bad_how(spark, reads, targets):
         overlap_join(reads, targets, on="contig", how="cross")
 
 
+def _failed_work(spark, since_ms: int) -> str:
+    """The failed jobs, stages and SQL executions in the status store that
+    were submitted at or after ``since_ms`` (JVM clock), with their failure
+    reasons: what an action's exception alone may not name (a job
+    cancelled because "the corresponding SQL query has failed")."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # the store is fed asynchronously
+
+    def jlist(*items):
+        out = jvm.java.util.ArrayList()
+        for item in items:
+            out.add(item)
+        return out
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def opt(o):
+        return o.get() if o.isDefined() else None
+
+    def since(date):
+        return date.isDefined() and date.get().getTime() >= since_ms
+
+    store = jsc.statusStore()
+    lines = [
+        f"job {j.jobId()} ({j.name()}), stages {seq(j.stageIds())}"
+        for j in seq(store.jobsList(jlist(jvm.org.apache.spark.JobExecutionStatus.FAILED)))
+        if since(j.submissionTime())
+    ]
+    stages = store.stageList(
+        jlist(jvm.org.apache.spark.status.api.v1.StageStatus.FAILED), False, False,
+        sc._gateway.new_array(jvm.double, 0), jlist(),
+    )
+    lines += [
+        f"stage {st.stageId()}.{st.attemptId()} ({st.name()}): "
+        f"{opt(st.failureReason())}"
+        for st in seq(stages) if since(st.submissionTime())
+    ]
+    lines += [
+        f"SQL execution {e.executionId()}: {e.errorMessage().get()}"
+        for e in seq(spark._jsparkSession.sharedState().statusStore().executionsList())
+        if e.submissionTime() >= since_ms and e.errorMessage().isDefined()
+    ]
+    return "\n".join(lines) or "no failed job, stage or SQL execution in the status store"
+
+
 @pytest.mark.parametrize("algorithm", ALGORITHMS)
 def test_full_outer_pads_both_sides(spark, algorithm):
     build = spark.createDataFrame(
@@ -271,7 +319,13 @@ def test_full_outer_pads_both_sides(spark, algorithm):
         right_start="start", right_end="end",
         how="full", algorithm=algorithm, bin_width=10,
     )
-    got = rows_set(out)
+    # this action failed once, its job cancelled for a failed SQL query
+    # whose error was lost: a failure now reports what the store recorded
+    since_ms = spark.sparkContext._jvm.System.currentTimeMillis()
+    try:
+        got = rows_set(out)
+    except Exception as e:
+        raise AssertionError(f"{e}\n{_failed_work(spark, since_ms)}") from e
     assert got == {
         ("c1", 1, 5, "c1", 3, 4): 1,
         ("c1", 100, 200, None, None, None): 1,

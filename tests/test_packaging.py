@@ -165,3 +165,27 @@ def test_api_doc_matches_generator(tmp_path):
     assert out.read_text() == (REPO / "docs" / "API.md").read_text(), (
         "docs/API.md is stale: run PYTHONPATH=. python tools/gen_api_docs.py"
     )
+
+
+def test_import_loads_subpackages_on_first_use():
+    """A fresh interpreter's ``import sequila_native_spark`` loads no
+    ``functions`` submodule and no IPython; each public name of the
+    package and of ``functions`` still resolves, and ``dir()`` lists it."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import sequila_native_spark as sq\n"
+        "early = [m for m in sys.modules if m.startswith('sequila_native_spark.functions')]\n"
+        "assert not early and 'IPython' not in sys.modules, early\n"
+        "from sequila_native_spark import functions as fn\n"
+        "for mod in (sq, fn):\n"
+        "    assert set(mod.__all__) <= set(dir(mod)), mod\n"
+        "    for name in mod.__all__:\n"
+        "        getattr(mod, name)\n"
+        "assert {'functions', 'plans', 'sources', 'streaming'} <= set(dir(sq))\n"
+        "assert sq.plans.__name__ == 'sequila_native_spark.plans'\n"
+        "assert 'IPython' not in sys.modules\n"
+    )
+    subprocess.run([sys.executable, "-c", code], cwd=REPO, check=True)

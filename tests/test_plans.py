@@ -178,30 +178,142 @@ def _round_trips(spark, build) -> list[str]:
     return sent
 
 
+def _assert_round_trips(spark, builds) -> None:
+    """Each ``(build, bound)``: after one warm call, which resolves and
+    caches JVM classes and fills the session's memos, ``build`` makes at
+    most ``bound`` py4j round trips."""
+    from collections import Counter
+
+    for build, bound in builds:
+        build()
+        sent = _round_trips(spark, build)
+        heads = Counter(c.split("\n", 3)[2] if c.count("\n") > 2 else c
+                        for c in sent)
+        assert 0 < len(sent) <= bound, (build.__name__, len(sent),
+                                         heads.most_common(8))
+
+
 def test_binned_join_build_round_trips(spark, reads, targets, plan_views):
     """Building (not running) a binned join stays a few dozen py4j round
     trips: the plan is SQL text, not a chain of Column-API calls (each of
     which is a round trip plus PySpark's call-site capture). Measured on
-    PySpark 4.1.2: 86 for overlap_join(binning), 23 for sequila_sql; the
-    Column-API build made 683."""
-    from collections import Counter
-
+    PySpark 4.1.2 over these fixtures: 65 for overlap_join(binning) at
+    width 5000, 74 at the ``auto`` width with a warm width memo (249 when
+    its probe frames were built with Column calls before the memo
+    lookup), 23 for sequila_sql; the Column-API build made 683."""
     from sequila_native_spark import sequila_sql
 
     def api():
         overlap_join(reads, targets, on="contig", algorithm="binning",
                      bin_width=5000)
 
+    def api_auto():
+        overlap_join(reads, targets, on="contig", algorithm="binning",
+                     bin_width="auto")
+
     def sql():
         sequila_sql(spark, _BINNED_SQL)
 
-    for build, bound in ((api, 120), (sql, 35)):
-        build()  # warm: first calls resolve and cache JVM classes
-        sent = _round_trips(spark, build)
-        heads = Counter(c.split("\n", 3)[2] if c.count("\n") > 2 else c
-                        for c in sent)
-        assert 0 < len(sent) <= bound, (build.__name__, len(sent),
-                                         heads.most_common(8))
+    _assert_round_trips(spark, ((api, 120), (api_auto, 120), (sql, 35)))
+
+
+@pytest.fixture(scope="module")
+def file_sides(spark, reads, targets, tmp_path_factory):
+    """``reads`` and ``targets`` read back from parquet: file inputs, whose
+    index builds the session cache keeps, so a repeat call runs no job."""
+    root = tmp_path_factory.mktemp("index_sides")
+    reads.write.parquet(str(root / "reads"))
+    targets.write.parquet(str(root / "targets"))
+    return spark.read.parquet(str(root / "reads")), spark.read.parquet(str(root / "targets"))
+
+
+def _index_builds(file_sides) -> dict:
+    from sequila_native_spark import (
+        count_overlaps,
+        coverage,
+        filter_by_overlap,
+        nearest_join,
+    )
+
+    r, t = file_sides
+    return {
+        "count_overlaps": lambda: count_overlaps(r, t, "contig", algorithm="index"),
+        "coverage": lambda: coverage(r, t, "contig", algorithm="index"),
+        "filter_by_overlap": lambda: filter_by_overlap(t, r, "contig", algorithm="index"),
+        "nearest_join": lambda: nearest_join(t, r, "contig", algorithm="index",
+                                             distance_col="dist"),
+        "overlap_join_auto": lambda: overlap_join(r, t, "contig", algorithm="binning",
+                                                  bin_width="auto"),
+    }
+
+
+def test_index_call_builds_make_no_call_site_capture(spark, file_sides, monkeypatch):
+    """The index and binning calls build their plans from SQL text: no
+    PySpark Column-API call, so no call-site capture, which walks the
+    stack and imports IPython when it is installed. Every call counts,
+    the first too, whose build collects and whose ``auto`` width runs its
+    percentile job."""
+    import pyspark.errors.utils as perr
+
+    from sequila_native_spark.operators.interval_join import clear_bin_width_cache
+    from sequila_native_spark.util import clear_index_cache
+
+    captured = []
+    real = perr._capture_call_site
+
+    def spy(depth):
+        captured.append(depth)
+        return real(depth)
+
+    monkeypatch.setattr(perr, "_capture_call_site", spy)
+    # the spy sees captures: a Column call makes one
+    file_sides[0].select(F.col("pos_start") + 1)
+    assert captured, "call-site capture is off in this session"
+    clear_index_cache(spark)
+    clear_bin_width_cache(spark)
+    for name, build in _index_builds(file_sides).items():
+        del captured[:]
+        for _ in range(2):
+            build()
+        assert not captured, (name, len(captured))
+
+
+def test_index_call_build_round_trips(spark, file_sides):
+    """An index call's driver work: one schema read per input, one conf
+    read and SQL text. Measured on PySpark 4.1.2 over these fixtures with
+    a warm index cache: count_overlaps 83, coverage 83, nearest_join with
+    ``distance_col`` 99; with Column calls and a schema and conf read per
+    helper, 129, 133 and 464 (nearest_join's 24 call-site captures made
+    about half of those). The bounds leave about 30% headroom."""
+    builds = _index_builds(file_sides)
+    _assert_round_trips(spark, (
+        (builds["count_overlaps"], 112),
+        (builds["coverage"], 112),
+        (builds["nearest_join"], 134),
+    ))
+
+
+@pytest.mark.parametrize("bounds, strict, checked", [
+    ("int", False, False),
+    ("bigint", False, True),
+    ("int", True, True),
+])
+def test_index_probe_bound_check_only_where_a_bound_can_leave_int32(
+    spark, reads, targets, bounds, strict, checked
+):
+    """The probe side's int32 bound columns: an int bound gets a plain
+    cast, since no value of it can leave int32; a bigint bound, or an end
+    that strict normalization shrinks, keeps the ``raise_error`` check."""
+    from sequila_native_spark import count_overlaps
+
+    def typed(df):
+        return df.selectExpr("contig", f"CAST(pos_start AS {bounds}) AS pos_start",
+                             f"CAST(pos_end AS {bounds}) AS pos_end")
+
+    out = count_overlaps(typed(reads), typed(targets), "contig", algorithm="index",
+                         strict=strict)
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert ("raise_error" in plan) is checked, plan
 
 
 def test_session_scoped_cache_stable_key_and_cap(spark):
